@@ -88,7 +88,7 @@ object ProfileLexScale {
       .filter(col("doc_id") % 7 === 3 && col("doc_id") >= 5).select("doc_id")
     time("tombstone_write") { Retrieval.lexTombstone(delIds, cpath, "t0") }
     time("bm25_served_tomb") {
-      val (tf, df, st) = Retrieval.lexIndexServeDel(spark, cpath)
+      val (tf, df, st) = Retrieval.lexIndexServe(spark, cpath)
       TextOps.bm25RankedFrom(tf, df, st, TextOps.queryTerms(spark, d)).count()
     }
     spark.stop()

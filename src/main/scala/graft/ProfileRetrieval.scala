@@ -118,7 +118,7 @@ object ProfileRetrieval {
       .filter(col("doc_id") % 7 === 3 && col("doc_id") >= 5).select("doc_id")
     time("tombstone_write") { Retrieval.lexTombstone(delIds, path, "t0") }
     time("bm25_served_tomb") {
-      val (tf, df, st) = Retrieval.lexIndexServeDel(spark, path)
+      val (tf, df, st) = Retrieval.lexIndexServe(spark, path)
       TextOps.bm25RankedFrom(tf, df, st, TextOps.queryTerms(spark, d)).count()
     }
     // round-15: the fully artifact-served entry's economics (q133's shape).
@@ -134,7 +134,7 @@ object ProfileRetrieval {
         .write.mode("overwrite").parquet(lpath)
     }
     time("retrieval_served_full") {
-      val (tf, df, st) = Retrieval.lexIndexServeDel(spark, path)
+      val (tf, df, st) = Retrieval.lexIndexServe(spark, path)
       Retrieval.collapseRankFrom(
         TextOps.bm25ScoredFrom(tf, df, st, TextOps.queryTerms(spark, d)),
         spark.read.parquet(lpath)).count()

@@ -79,7 +79,7 @@ object ProfileServeScale {
 
     def qt = TextOps.queryTermsOf(docs)
     def lexArm() = {
-      val (tf, df, stats) = Retrieval.lexIndexServeDel(spark, s"$root/lex")
+      val (tf, df, stats) = Retrieval.lexIndexServe(spark, s"$root/lex")
       (tf, df, stats)
     }
     time("q133_serve") {

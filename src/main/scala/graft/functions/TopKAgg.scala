@@ -46,8 +46,7 @@ case class TopKAgg(
       StructField("id", LongType, nullable = false))), containsNull = false)
   override def prettyName: String = "graft_topk"
 
-  override def createAggregationBuffer(): TopKAgg.Buffer =
-    new TopKAgg.Buffer(new Array[Double](k), new Array[Long](k), 0)
+  override def createAggregationBuffer(): TopKAgg.Buffer = TopKAgg.newBuffer(k, 0)
 
   // true if (s1, i1) ranks strictly higher than (s2, i2); Double.compare is
   // the IEEE total order (NaN greatest), matching DESC sort in both engines
@@ -60,6 +59,7 @@ case class TopKAgg(
     var p =
       if (buf.n < k) {
         // append at the tail (array kept sorted best-first)
+        if (buf.n == buf.scores.length) buf.grow(k)
         val pos = buf.n
         buf.n += 1
         buf.scores(pos) = s; buf.ids(pos) = i
@@ -108,7 +108,7 @@ case class TopKAgg(
   override def deserialize(bytes: Array[Byte]): TopKAgg.Buffer = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt
-    val buf = new TopKAgg.Buffer(new Array[Double](k), new Array[Long](k), n)
+    val buf = TopKAgg.newBuffer(k, n)
     var j = 0
     while (j < n) { buf.scores(j) = bb.getDouble; buf.ids(j) = bb.getLong; j += 1 }
     buf
@@ -124,8 +124,24 @@ case class TopKAgg(
 }
 
 object TopKAgg {
-  /** Sorted best-first fixed arrays; n = live entries. */
-  final class Buffer(val scores: Array[Double], val ids: Array[Long], var n: Int)
+  /** Sorted best-first arrays; n = live entries. Capacity starts small
+    * and doubles up to k, so an "unbounded" k (Int.MaxValue: every
+    * candidate, ranked) costs memory for the rows a group actually has. */
+  final class Buffer(var scores: Array[Double], var ids: Array[Long], var n: Int) {
+    def grow(k: Int): Unit = {
+      val cap = math.min(k.toLong, math.max(1L, scores.length * 2L)).toInt
+      scores = java.util.Arrays.copyOf(scores, cap)
+      ids = java.util.Arrays.copyOf(ids, cap)
+    }
+  }
+
+  private val InitialCapacity = 16
+
+  /** An empty-slotted buffer able to hold `n` entries without growing. */
+  private def newBuffer(k: Int, n: Int): Buffer = {
+    val cap = math.max(n, math.min(k, InitialCapacity))
+    new Buffer(new Array[Double](cap), new Array[Long](cap), n)
+  }
 
   /** Register `graft_topk(score, id, k)` in the session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

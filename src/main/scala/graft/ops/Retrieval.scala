@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Tables
 
 /** The hybrid-retrieval family: the serving patterns a RAG / eval-harness
@@ -228,13 +229,9 @@ object Retrieval {
     // is rebuilt from the distinct (doc_id, dl) carried on the tf rows —
     // the compactor's exact rebuild identity (every doc yields ≥ 1 posting
     // row, dl is per-doc constant), so all three files are value-identical
-    // to lexIndexOf's. The null-w coalesce makes that invariant total: a
-    // null token array (null text upstream) explodes to ZERO tf rows and
-    // would silently undercount n_docs/tot_dl relative to a docs-side
-    // count; array('') is exactly what `split` yields for empty text, so
-    // null and empty text index identically (r19 ADVICE).
-    val tf = TextOps.termCounts(
-      docs.withColumn("w", coalesce(col("w"), array(lit(""))))).cache()
+    // to lexIndexOf's. TextOps.indexTokens is the null policy both
+    // builders share: a null token array would explode to ZERO tf rows.
+    val tf = TextOps.termCounts(TextOps.indexTokens(docs)).cache()
     tf.write.mode("overwrite").parquet(s"$path/$seg/tf")
     tf.groupBy("term").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$path/$seg/df")
@@ -250,20 +247,33 @@ object Retrieval {
     tf.unpersist(blocking = false)
   }
 
+  /** Declared schemas of the three files of a lexical-index segment, in
+    * the column order [[lexIndexSegment]] writes them (the compactor
+    * writes the same columns). Serving and compaction read under these,
+    * so opening an artifact launches no footer-reading schema-inference
+    * job per file set; OperatorSpec compares each with the schema of the
+    * file its writer produces, so drift fails loudly. */
+  private[graft] val LexTfSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("dl", LongType),
+    StructField("term", StringType), StructField("tf", LongType)))
+  private[graft] val LexDfSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType)))
+  private[graft] val LexStatsSchema: StructType = StructType(Seq(
+    StructField("n_docs", LongType), StructField("tot_dl", LongType),
+    StructField("avgdl", DoubleType)))
+
+  /** One file set (`tf`, `df` or `stats`) across `segs`, read under its
+    * declared schema. */
+  private def readSegFiles(s: SparkSession, segs: Seq[String], file: String,
+      schema: StructType): DataFrame =
+    s.read.schema(schema).parquet(segs.map(sg => s"$sg/$file"): _*)
+
   /** Fold freshly-arrived documents into a persisted lexical-index
     * artifact: write them as a new immutable segment. Cost is O(fresh) —
     * tokenize + count the fresh docs only; base postings are untouched. */
   def lexIndexAppend(s: SparkSession, path: String, freshDocs: DataFrame, seg: String): Unit =
     lexIndexSegment(freshDocs, path, seg)
 
-  /** Open a segmented lexical-index artifact for serving: postings are
-    * the union of segment scans (a glob read — no merge needed, `doc_id`
-    * spaces are disjoint by the append contract); the dictionary and
-    * corpus stats fold across segments by EXACT ADDITIVE merges
-    * (vocab-sized agg + a one-row agg — the only serve-time work, and the
-    * reason `stats` persists `tot_dl`: Σ of segment long-sums ≡ the
-    * single-pass sums, so merged df/avgdl are bit-identical to a full
-    * rebuild's). */
   /** Enumerate the segments of a lexical-index artifact — one driver-side
     * metadata list rather than a glob: deterministic order, and no
     * spurious streaming-sink probe warnings on the unexpanded pattern.
@@ -283,22 +293,59 @@ object Retrieval {
     segs
   }
 
+  /** Open a segmented lexical-index artifact for serving, with its
+    * tombstones applied. Postings are the union of segment scans (`doc_id`
+    * spaces are disjoint by the append contract); the dictionary and
+    * corpus stats fold across segments by EXACT ADDITIVE merges (the
+    * reason `stats` persists `tot_dl`: Σ of segment long-sums ≡ the
+    * single-pass sums, so merged df/avgdl are bit-identical to a full
+    * rebuild's).
+    *
+    * Deletes stay exact under the same algebra, because the deleted docs'
+    * own tf rows are still in the segments: tf' = tf ⟕̸ del (anti join);
+    * df' = Σ over (segment df rows ∪ one (term, −1) per deleted posting),
+    * dropping terms at 0; stats' = Σ over (segment stats rows ∪ one
+    * (−1, −dl) per deleted doc), with avgdl re-derived from the corrected
+    * longs — bit-identical to a rebuild over the remaining corpus (the
+    * q126 oracle pins exactly that). Each correction is ONE aggregate over
+    * a union, not a fold + a delta aggregate + a join. Tombstone doc_ids
+    * need not all exist in the index, and duplicates are inert: the
+    * delete set only feeds semi/anti joins.
+    *
+    * A root that carries tombstones is ALWAYS served corrected: ignoring
+    * the tombstones dir would RESURRECT deleted docs — the one
+    * inconsistency the delete contract cannot survive. Every file is read
+    * under its declared schema, so building these frames runs no Spark
+    * job. */
   def lexIndexServe(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) = {
-    // A root that carries tombstones MUST be served with the delete
-    // corrections: silently ignoring the tombstones dir would RESURRECT
-    // deleted docs — the one inconsistency the delete contract cannot
-    // survive (the compactor's no-resurrection guard, applied to serving).
-    val tombRoot = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val tfs = tombRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (tfs.exists(tombRoot)) return lexIndexServeDel(s, path)
-    val segs = lexSegments(s, path)
-    val tf = s.read.parquet(segs.map(_ + "/tf"): _*)
-    val df = s.read.parquet(segs.map(_ + "/df"): _*)
-      .groupBy("term").agg(sum(col("df")).as("df"))
-    val stats = s.read.parquet(segs.map(_ + "/stats"): _*)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    lexFold(s, lexSegments(s, path), lexTombstoneUnion(s, ArtifactSwap.tombDirs(fs, path)))
+  }
+
+  /** [[lexIndexServe]]'s frames over EXPLICIT segments and delete set —
+    * also the compactor's merge. */
+  private def lexFold(s: SparkSession, segs: Seq[String], dead: Option[DataFrame])
+      : (DataFrame, DataFrame, DataFrame) = {
+    val tf0 = readSegFiles(s, segs, "tf", LexTfSchema)
+    val df0 = readSegFiles(s, segs, "df", LexDfSchema)
+    val st0 = readSegFiles(s, segs, "stats", LexStatsSchema).select("n_docs", "tot_dl")
+    val (tf, dfRows, statRows) = dead match {
+      case None => (tf0, df0, st0)
+      case Some(del) =>
+        val tfDel = tf0.join(del, Seq("doc_id"), "left_semi")
+        (tf0.join(del, Seq("doc_id"), "left_anti"),
+          df0.unionByName(tfDel.select(col("term"), lit(-1L).as("df"))),
+          st0.unionByName(tfDel.select("doc_id", "dl").distinct()
+            .select(lit(-1L).as("n_docs"), (-col("dl")).as("tot_dl"))))
+    }
+    // df > 0 only bites with deletes: segment df rows are ≥ 1. Likewise
+    // n_docs reaches 0 only when every doc is deleted: avgdl is then null
+    val df = dfRows.groupBy("term").agg(sum(col("df")).as("df")).filter(col("df") > 0)
+    val stats = statRows
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
-      .select(col("n_docs"), col("tot_dl"),
-        (col("tot_dl").cast("double") / col("n_docs")).as("avgdl"))
+      .select(col("n_docs"), col("tot_dl"), when(col("n_docs") > 0,
+        col("tot_dl").cast("double") / col("n_docs")).as("avgdl"))
     (tf, df, stats)
   }
 
@@ -316,12 +363,10 @@ object Retrieval {
     * is one segment again, with the artifact's history cost reset to
     * O(corpus) once instead of O(appends) forever.
     *
-    * TOMBSTONES ARE APPLIED PHYSICALLY (the real LSM merge): deleted
-    * docs' tf/pp rows are dropped, df/stats are REBUILT from the
-    * surviving postings (exact — every doc carries ≥ 1 posting row under
-    * the tokenizer, so distinct (doc_id, dl) recovers n_docs/tot_dl, and
-    * per-term doc counts recover df including the drop-at-zero), and the
-    * compacted root carries NO tombstones dir. Merely not copying the
+    * TOMBSTONES ARE APPLIED PHYSICALLY (the real LSM merge): the merged
+    * files ARE the corrected serve frames ([[lexIndexServe]]'s fold —
+    * deleted docs' tf/pp rows dropped, df/stats corrected exactly), and
+    * the compacted root carries NO tombstones dir. Merely not copying the
     * tombstones while concat-folding postings would RESURRECT deleted
     * docs — the one inconsistency the delete contract cannot survive. */
   def lexIndexCompact(s: SparkSession, path: String, outPath: String): Unit = {
@@ -351,26 +396,8 @@ object Retrieval {
     val withPp = segs.filter(sg => fs.exists(new org.apache.hadoop.fs.Path(s"$sg/pp")))
     require(withPp.isEmpty || withPp.size == segs.size,
       s"mixed positional artifact: ${withPp.size}/${segs.size} segments carry pp")
-    val tf0 = s.read.parquet(segs.map(_ + "/tf"): _*)
-    val (tf, df, stats) =
-      if (tombs.isEmpty) {
-        val df = s.read.parquet(segs.map(_ + "/df"): _*)
-          .groupBy("term").agg(sum(col("df")).as("df"))
-        val stats = s.read.parquet(segs.map(_ + "/stats"): _*)
-          .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
-          .select(col("n_docs"), col("tot_dl"),
-            (col("tot_dl").cast("double") / col("n_docs")).as("avgdl"))
-        (tf0, df, stats)
-      } else {
-        val del = s.read.parquet(tombs: _*).select("doc_id").distinct()
-        val tf1 = tf0.join(del, Seq("doc_id"), "left_anti")
-        val df1 = tf1.groupBy("term").agg(count(lit(1)).as("df"))
-        val stats1 = tf1.select("doc_id", "dl").distinct()
-          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
-          .select(col("n_docs"), col("tot_dl"),
-            (col("tot_dl").cast("double") / col("n_docs")).as("avgdl"))
-        (tf1, df1, stats1)
-      }
+    val del = lexTombstoneUnion(s, tombs)
+    val (tf, df, stats) = lexFold(s, segs, del)
     tf.write.mode("overwrite").parquet(s"$outPath/seg0/tf")
     df.write.mode("overwrite").parquet(s"$outPath/seg0/df")
     stats.write.mode("overwrite").parquet(s"$outPath/seg0/stats")
@@ -379,10 +406,7 @@ object Retrieval {
     // algebra. Mixed artifacts failed loud above, before any write.
     if (withPp.nonEmpty) {
       val pp0 = s.read.parquet(segs.map(_ + "/pp"): _*)
-      val pp =
-        if (tombs.isEmpty) pp0
-        else pp0.join(s.read.parquet(tombs: _*).select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")
+      val pp = del.map(pp0.join(_, Seq("doc_id"), "left_anti")).getOrElse(pp0)
       pp.write.mode("overwrite").parquet(s"$outPath/seg0/pp")
     }
   }
@@ -1419,57 +1443,27 @@ object Retrieval {
     * its own tiny immutable write, so deletes compose with concurrent
     * serves and appends exactly like segments do. */
   def lexTombstone(ids: DataFrame, path: String, name: String): Unit =
-    ids.select(col("doc_id")).write.mode("overwrite")
-      .parquet(s"$path/tombstones/$name")
+    lexTombRows(ids).write.mode("overwrite").parquet(s"$path/tombstones/$name")
 
-  /** Serve a segmented lexical index WITH tombstones applied — and the
-    * reason deletes stay EXACT under the additive algebra: the deleted
-    * docs' own tf rows are still in the segments, so every correction is
-    * computable from the artifact itself: tf' = tf ⟕̸ del (anti join),
-    * df' = df − per-term deleted-doc counts (dropping terms at 0),
-    * stats' = (n_docs − |del|, tot_dl − Σ dl_del) with avgdl re-derived
-    * from the corrected longs — bit-identical to a rebuild over the
-    * remaining corpus (the q126 oracle pins exactly that). No tombstones
-    * dir → the plain [[lexIndexServe]] frames. Tombstone doc_ids need not
-    * all exist in the index (idempotent; duplicates deduped). */
-  def lexIndexServeDel(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) = {
-    val segs = lexSegments(s, path)
-    val tf0 = s.read.parquet(segs.map(_ + "/tf"): _*)
-    val df0 = s.read.parquet(segs.map(_ + "/df"): _*)
-      .groupBy("term").agg(sum(col("df")).as("df"))
-    val rawStats = s.read.parquet(segs.map(_ + "/stats"): _*)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
-    val root = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // all three return paths carry (n_docs, tot_dl, avgdl) — the same stats
-    // schema as [[lexIndexServe]], so callers can substitute the del-served
-    // frames wherever the additive tot_dl contract is consumed
-    if (!fs.exists(root))
-      return (tf0, df0,
-        rawStats.select(col("n_docs"), col("tot_dl"),
-          (col("tot_dl").cast("double") / col("n_docs")).as("avgdl")))
-    val tombs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.toString).sorted
-    if (tombs.isEmpty)
-      return (tf0, df0,
-        rawStats.select(col("n_docs"), col("tot_dl"),
-          (col("tot_dl").cast("double") / col("n_docs")).as("avgdl")))
-    val del = s.read.parquet(tombs.toSeq: _*).select("doc_id").distinct()
-    val tfDel = tf0.join(del, Seq("doc_id"), "left_semi")
-    val tf1 = tf0.join(del, Seq("doc_id"), "left_anti")
-    val dfc = tfDel.groupBy("term").agg(count(lit(1)).as("dcnt"))
-    val df1 = df0.join(dfc, Seq("term"), "left")
-      .select(col("term"), (col("df") - coalesce(col("dcnt"), lit(0L))).as("df"))
-      .filter(col("df") > 0)
-    val dstat = tfDel.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_del"),
-        coalesce(sum(col("dl")), lit(0L)).as("dl_del"))
-    val stats1 = rawStats.crossJoin(broadcast(dstat))
-      .select((col("n_docs") - col("n_del")).as("n_docs"),
-        (col("tot_dl") - col("dl_del")).as("tot_dl"))
-      .select(col("n_docs"), col("tot_dl"),
-        (col("tot_dl").cast("double") / col("n_docs")).as("avgdl"))
-    (tf1, df1, stats1)
-  }
+  /** Declared schema of a lexical tombstone file; [[lexTombRows]] is what
+    * every tombstone writer emits. */
+  private[graft] val LexTombSchema: StructType =
+    StructType(Seq(StructField("doc_id", LongType)))
+
+  private[graft] def lexTombRows(ids: DataFrame): DataFrame =
+    ids.select(col("doc_id").cast(LongType).as("doc_id"))
+
+  /** The union of the given tombstone files under [[LexTombSchema]], or
+    * None when there are none. Not deduplicated: its consumers are semi
+    * and anti joins, where a duplicate id is inert. */
+  private def lexTombstoneUnion(s: SparkSession, tombs: Seq[String]): Option[DataFrame] =
+    if (tombs.isEmpty) None else Some(s.read.schema(LexTombSchema).parquet(tombs: _*))
+
+  /** [[lexIndexServe]] under its former delete-aware name, which the
+    * perfbench client still calls: every lexical serve applies the root's
+    * tombstones. */
+  def lexIndexServeDel(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) =
+    lexIndexServe(s, path)
 
   /** The q126 delete set: every non-query doc with doc_id ≡ 3 (mod 7) —
     * deterministic, ~14% of the corpus, never a query doc (so the eval
@@ -1481,7 +1475,7 @@ object Retrieval {
   /** q126: TOMBSTONE DELETES in the lexical LSM — the delete half of the
     * q115 append contract (an index you can only add to is not an index):
     * build seg0 over the full corpus, tombstone the delete set, and rank
-    * the eval queries from [[lexIndexServeDel]]'s corrected frames under
+    * the eval queries from [[lexIndexServe]]'s corrected frames under
     * the oracle of a FULL REBUILD OVER THE REMAINING CORPUS — any drift
     * in the anti-join, the df decrement (including the drop-at-zero), or
     * the recorrected avgdl longs breaks the hash. Segments stay
@@ -1493,7 +1487,7 @@ object Retrieval {
     val docs = TextOps.tokenizedDocs(s, d)
     lexIndexSegment(docs, path, "seg0")
     lexTombstone(tombstoneIds(docs), path, "t0")
-    val (tf, df, stats) = lexIndexServeDel(s, path)
+    val (tf, df, stats) = lexIndexServe(s, path)
     TextOps.bm25RankedFrom(tf, df, stats, TextOps.queryTermsOf(docs))
       .orderBy("query_id", "rnk")
   }
@@ -1512,7 +1506,7 @@ object Retrieval {
     * artifacts, with NO corpus-linear kernel at serve time. Build phase
     * (eager, the q113/q115 convention): one lexical segment over the full
     * corpus, the q126 tombstone set, and the q53 cluster-label artifact.
-    * Serve phase: [[lexIndexServeDel]]'s corrected tf/df/stats →
+    * Serve phase: [[lexIndexServe]]'s corrected tf/df/stats →
     * [[TextOps.bm25ScoredFrom]] → [[collapseRankFrom]] over the
     * round-tripped label rows. This is the steady-state RAG shape q128
     * still fell short of (its scoring arm re-tokenized the corpus — the
@@ -1541,7 +1535,7 @@ object Retrieval {
         lexTombstone(tombstoneIds(docs), path, "t0")
       },
       () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(clPath))
-    val (tf, df, stats) = lexIndexServeDel(s, path)
+    val (tf, df, stats) = lexIndexServe(s, path)
     collapseRankFrom(
       TextOps.bm25ScoredFrom(tf, df, stats, TextOps.queryTermsOf(docs)),
       s.read.parquet(clPath))
@@ -1586,7 +1580,7 @@ object Retrieval {
     * convention — the bench prices the build; the serve marginal is the
     * BASELINE.md round-15 economics rows. */
   def q138RagServed(s: SparkSession, d: String): DataFrame = {
-    val root = s"${Similarity.knnGraphServePath(d)}/ragserve"
+    val root = q138Root(d)
     val docs = TextOps.tokenizedDocs(s, d)
     val (emb, subs, seedsPq) = Similarity.pqParts(s, d)
     val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
@@ -1606,19 +1600,34 @@ object Retrieval {
         cents.write.mode("overwrite").parquet(s"$root/ivf/cents")
         books.write.mode("overwrite").parquet(s"$root/ivf/books")
         codeTable.write.mode("overwrite").parquet(s"$root/ivf/codes")
-        emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= Similarity.AdcQueries)
-          .select("vec_id").write.mode("overwrite").parquet(s"$root/ivf/tombstones/t0")
+        Similarity.ivfTombRows(emb.filter(col("vec_id") % 7 === 3 &&
+          col("vec_id") >= Similarity.AdcQueries))
+          .write.mode("overwrite").parquet(s"$root/ivf/tombstones/t0")
       },
       () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(s"$root/clusters"))
-    val (tf, df, stats) = lexIndexServeDel(s, s"$root/lex")
-    val lex = TextOps.bm25RankedFrom(tf, df, stats, TextOps.queryTermsOf(docs))
+    q138Serve(s, d)
+  }
+
+  private def q138Root(d: String): String = s"${Similarity.knnGraphServePath(d)}/ragserve"
+
+  /** q138's serve frame over its ALREADY-BUILT artifacts — split out so
+    * PlanSpec can price one serve request apart from the build. */
+  private[graft] def q138Serve(s: SparkSession, d: String): DataFrame =
+    ragServeFrom(s, d, q138Root(d))
+
+  /** The hybrid serve over the artifact families under `root` (lexical
+    * segments + tombstones, IVF-PQ trio + tombstones, cluster labels):
+    * BM25 from the tombstone-corrected segments and IVF-PQ ADC over the
+    * live codes for the eval queries, RRF-fused, collapsed one doc per
+    * cluster. Shared by q138 and q147. */
+  private def ragServeFrom(s: SparkSession, d: String, root: String): DataFrame = {
+    val (tf, df, stats) = lexIndexServe(s, s"$root/lex")
+    val lex = TextOps.bm25RankedFrom(tf, df, stats, TextOps.queryTerms(s, d))
       .select(col("query_id"), col("doc_id"), col("rnk").as("lex_rnk"))
-    val live = s.read.parquet(s"$root/ivf/codes")
-      .join(s.read.parquet(s"$root/ivf/tombstones/t0").select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti")
     val sem = Similarity.ivfPqSearchFrom(s.read.parquet(s"$root/ivf/cents"),
-        s.read.parquet(s"$root/ivf/books"), live,
-        emb.filter(col("vec_id") < TextOps.Bm25NQueries).select("vec_id", "e"),
+        s.read.parquet(s"$root/ivf/books"), Similarity.liveCodes(s, s"$root/ivf"),
+        Similarity.embWithNorm(s, d)
+          .filter(col("vec_id") < TextOps.Bm25NQueries).select("vec_id", "e"),
         k = SemK)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rn").as("sem_rnk"))
     collapseRankFrom(
@@ -1698,8 +1707,9 @@ object Retrieval {
         cents.write.mode("overwrite").parquet(s"$root/ivf/cents")
         books.write.mode("overwrite").parquet(s"$root/ivf/books")
         codeTable.write.mode("overwrite").parquet(s"$root/ivf/codes")
-        emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= Similarity.AdcQueries)
-          .select("vec_id").write.mode("overwrite").parquet(s"$root/ivf/tombstones/t0")
+        Similarity.ivfTombRows(emb.filter(col("vec_id") % 7 === 3 &&
+          col("vec_id") >= Similarity.AdcQueries))
+          .write.mode("overwrite").parquet(s"$root/ivf/tombstones/t0")
       },
       () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(s"$root/clusters"),
       () => Similarity.embWithNorm(s, d).select("vec_id", "e", "nrm")
@@ -1758,26 +1768,9 @@ object Retrieval {
     * leaf, so the entry's final plan cannot witness the upstream artifact
     * walk; PlanSpec asserts it on this frame instead (the entry composes
     * exactly this value). Callers must have run the build phase first. */
-  private[graft] def q147Fused(s: SparkSession, d: String): DataFrame = {
-    val root = s"${Similarity.knnGraphServePath(d)}/ragfull"
-    val docs = TextOps.tokenizedDocs(s, d)
-    val (tf, df, stats) = lexIndexServeDel(s, s"$root/lex")
-    val lex = TextOps.bm25RankedFrom(tf, df, stats, TextOps.queryTermsOf(docs))
-      .select(col("query_id"), col("doc_id"), col("rnk").as("lex_rnk"))
-    val live = s.read.parquet(s"$root/ivf/codes")
-      .join(s.read.parquet(s"$root/ivf/tombstones/t0").select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti")
-    val sem = Similarity.ivfPqSearchFrom(s.read.parquet(s"$root/ivf/cents"),
-        s.read.parquet(s"$root/ivf/books"), live,
-        Similarity.embWithNorm(s, d)
-          .filter(col("vec_id") < TextOps.Bm25NQueries).select("vec_id", "e"),
-        k = SemK)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rn").as("sem_rnk"))
-    collapseRankFrom(
-      rrfScores(lex, sem).select(col("query_id"), col("doc_id"),
-        col("rrf").as("score")),
-      s.read.parquet(s"$root/clusters"))
-  }
+  private[graft] def q147Fused(s: SparkSession, d: String): DataFrame =
+    ragServeFrom(s, d, s"${Similarity.knnGraphServePath(d)}/ragfull")
+
 
   lazy val q147Sql: String =
     s"""WITH RECURSIVE ${Dedup.clusterCtesBody},

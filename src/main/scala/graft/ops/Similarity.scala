@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 
 /** Similarity search over the embedding column (`Array[Float]`, dim 64).
@@ -423,15 +424,7 @@ object Similarity {
     val cand = probes.join(index, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sim", round(expr("graft_dot(eq, en)") / (col("nq") * col("nn")), 6))
-    // n_cand as a partial+final count joined back AFTER the rank filter —
-    // a count(*) OVER (PARTITION BY query_id) here would funnel every
-    // candidate row per query through one task AND block the
-    // WindowGroupLimit pruning the rank<=k filter otherwise gets
-    val nCand = cand.groupBy("query_id").agg(count(lit(1)).as("n_cand"))
-    val ivfK = cand
-      .withColumn("rn", row_number().over(wk))
-      .filter(col("rn") <= IvfK)
-      .join(broadcast(nCand), Seq("query_id"))
+    val ivfK = topkWithCount(cand, col("cos_sim"), IvfK)
       .select("query_id", "neighbor_id", "n_cand")
     // exact brute-force top-k on the same probe subset
     val q = emb.filter(col("vec_id") < IvfNQueries)
@@ -734,7 +727,9 @@ object Similarity {
     * sharing an id with a corpus vector excludes itself (the catalog
     * convention). Same shapes as q74: LUT build is map-side under the two
     * broadcasts, the candidate gate is a broadcast equi join on cell, and
-    * the only hash exchanges are on query_id (top-k + the n_cand agg). */
+    * top-k + n_cand are ONE bounded aggregate ([[adcTopkWithCount]]), so
+    * the candidate subtree runs once and its only hash exchange is that
+    * aggregate's, on query_id. */
   def ivfPqSearchFrom(cents: DataFrame, books: DataFrame, codeTable: DataFrame,
       queries: DataFrame, nprobe: Int = IvfNProbe, k: Int = AdcK,
       probeTap: DataFrame => DataFrame = identity,
@@ -748,17 +743,10 @@ object Similarity {
       .withColumn("lut", expr(pqLutExpr))
       .withColumn("pcell", explode(expr(probeCellsExpr(nprobe))))
       .select(col("vec_id").as("query_id"), col("lut"), col("pcell").as("cell")))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_fixed"), col("neighbor_id"))
     val cand = candTap(index.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc_fixed", expr(adcSumExpr)))
-    val nCand = cand.groupBy("query_id").agg(count(lit(1)).as("n_cand"))
-    cand
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .join(broadcast(nCand), Seq("query_id"))
-      .select("query_id", "neighbor_id", "adc_fixed", "n_cand", "rn")
-      .orderBy("query_id", "rn")
+    adcTopkWithCount(cand, k).orderBy("query_id", "rn")
   }
 
   /** ANN serving observability: `Dataset.observe` counters piggybacked on
@@ -772,10 +760,9 @@ object Similarity {
     * zero extra passes.
     *
     * observedCleanMetrics's documented contract — each observed subtree
-    * executes exactly once — needs care here because `cand` feeds both the
-    * n_cand aggregate and the top-k window: the observed path persists the
-    * observed cand frame, so the accumulator fires during cache population
-    * and both consumers read the materialized rows. */
+    * executes exactly once — holds without a cache: `cand` feeds exactly
+    * one consumer, the single top-k+count aggregate, so the observed
+    * candidate stream is scanned once (OperatorSpec pins the counts). */
   def observedServeMetrics(s: SparkSession, d: String): Map[String, Long] = {
     import org.apache.spark.sql.Observation
     val (emb, subs, seedsPq) = pqParts(s, d)
@@ -783,17 +770,12 @@ object Similarity {
     val probed = Observation()
     val scored = Observation()
     val served = Observation()
-    var cached: DataFrame = null
-    val out = ivfPqSearchFrom(cents, books, codeTable,
+    ivfPqSearchFrom(cents, books, codeTable,
         emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"),
         probeTap = _.observe(probed, count(lit(1)).as("cells")),
-        candTap = { c =>
-          cached = c.observe(scored, count(lit(1)).as("cands")).persist()
-          cached
-        })
+        candTap = _.observe(scored, count(lit(1)).as("cands")))
       .observe(served, count(lit(1)).as("rows"))
-    try out.write.format("noop").mode("overwrite").save()
-    finally if (cached != null) cached.unpersist(false)
+      .write.format("noop").mode("overwrite").save()
     Map(
       "cells_probed" -> probed.get("cells").asInstanceOf[Long],
       "candidates_scored" -> scored.get("cands").asInstanceOf[Long],
@@ -959,9 +941,7 @@ object Similarity {
     * the query's RESIDUAL against that cell's centroid gets its own LUT
     * (nprobe tiny LUTs per query, still map-side); candidates via the
     * broadcast equi-join on cell; the only hash exchange is the per-query
-    * top-k. n_cand is a partial+final count broadcast-joined back AFTER
-    * the rank filter (a count(*) OVER would funnel every candidate row
-    * per query through one task and block WindowGroupLimit pruning). */
+    * top-k+count aggregate ([[adcTopkWithCount]], q74's shape). */
   def residualSearchFrom(cents: DataFrame, books: DataFrame, codeTable: DataFrame,
       queries: DataFrame, nprobe: Int = IvfNProbe, k: Int = AdcK): DataFrame = {
     val cc = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
@@ -977,17 +957,10 @@ object Similarity {
       .withColumn("e", expr("zip_with(e, _p.cce, (x, y) -> x - y)"))
       .withColumn("lut", expr(pqLutExpr))
       .select(col("vec_id").as("query_id"), col("_p.cent_id").as("cell"), col("lut"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_fixed"), col("neighbor_id"))
     val cand = index.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc_fixed", expr(adcSumExpr))
-    val nCand = cand.groupBy("query_id").agg(count(lit(1)).as("n_cand"))
-    cand
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .join(broadcast(nCand), Seq("query_id"))
-      .select("query_id", "neighbor_id", "adc_fixed", "n_cand", "rn")
-      .orderBy("query_id", "rn")
+    adcTopkWithCount(cand, k).orderBy("query_id", "rn")
   }
 
   /** Overlapped artifact-trio build (guide §2.6, [[Par]] scaladoc): write
@@ -1006,10 +979,19 @@ object Similarity {
       () => books.write.mode("overwrite").parquet(s"$root/books"),
       () => codes.write.mode("overwrite").parquet(s"$root/codes"))
     val tw: Seq[() => Unit] = tombs.map { case (n, df) =>
-      () => df.write.mode("overwrite").parquet(s"$root/tombstones/$n")
+      () => ivfTombRows(df).write.mode("overwrite").parquet(s"$root/tombstones/$n")
     }
     Par.jobs(trio ++ tw: _*)
   }
+
+  /** Declared schema of an IVF-PQ tombstone file (`tombstones/<name>`,
+    * deleted vec_ids): [[tombstoneUnion]] reads under it, and the
+    * engine's tombstone writers emit [[ivfTombRows]]. */
+  private[graft] val IvfTombSchema: StructType =
+    StructType(Seq(StructField("vec_id", LongType)))
+
+  private[graft] def ivfTombRows(ids: DataFrame): DataFrame =
+    ids.select(col("vec_id").cast(LongType).as("vec_id"))
 
   /** Variant marker: a residual-encoded artifact root carries this empty
     * file so the geometry-changing policies can refuse it (see
@@ -1141,8 +1123,7 @@ object Similarity {
     codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
     if (copyAux) {
       books.write.mode("overwrite").parquet(s"$outRoot/books")
-      tombstoneUnion(s, root).foreach(
-        _.write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
+      copyTombstones(s, root, outRoot)
       markResidual(s, outRoot)
     }
     val out = hotCells.map { c =>
@@ -1205,8 +1186,7 @@ object Similarity {
     survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
     if (copyAux) {
       books.write.mode("overwrite").parquet(s"$outRoot/books")
-      tombstoneUnion(s, root).foreach(
-        _.write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
+      copyTombstones(s, root, outRoot)
       markResidual(s, outRoot)
     }
     members.unpersist(false)
@@ -1537,8 +1517,8 @@ object Similarity {
     * At 100 TB: one map-side pass encodes cell + int8 codes per corpus
     * vector under the one-row centroid broadcast (the [[ivfPqAppend]]
     * shape); the candidate gate is a broadcast equi join on cell; the only
-    * candidate-path exchanges are the query_id top-k + n_cand agg, and the
-    * rank<=k filter prunes map-side (WindowGroupLimit, PlanSpec). The index
+    * candidate-path exchange is the query_id top-k+count aggregate, which
+    * keeps ≤ k pairs per query map-side (PlanSpec). The index
     * row is cell + 64 bytes + 2 scalars — no embedding ever shuffles. */
   /** q58's encoder verbatim (incl. the ±127 max-element special case) —
     * shared by the SQ8 build, append, and serve paths so they can never
@@ -1590,7 +1570,6 @@ object Similarity {
       .withColumn("pcell", explode(expr(probeCellsExpr(nprobe))))
       .select(col("vec_id").as("query_id"), col("qc").as("cq"),
         col("max_abs").as("maxq"), col("nrm").as("nq"), col("pcell").as("cell"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim8").desc, col("neighbor_id"))
     val cand = index.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("idot", expr(
@@ -1598,13 +1577,8 @@ object Similarity {
           "0L, (acc, x) -> acc + x)"))
       .withColumn("sim8", expr(
         "round(((CAST(idot AS DOUBLE) * (maxq / 127.0D)) * (maxn / 127.0D)) / (nq * nn), 6)"))
-    // n_cand partial+final, joined back after the rank filter (q74 shape)
-    val nCand = cand.groupBy("query_id").agg(count(lit(1)).as("n_cand"))
-    cand
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .join(broadcast(nCand), Seq("query_id"))
-      .select("query_id", "neighbor_id", "sim8", "n_cand", "rn")
+    topkWithCount(cand, col("sim8"), k)
+      .withColumnRenamed("score", "sim8")
       .orderBy("query_id", "rn")
   }
 
@@ -1758,9 +1732,9 @@ object Similarity {
     * cell exchanges and that nothing else shuffles). Rows carry dim-64
     * embeddings (512 B) through that one shuffle — at this dimensionality
     * cheaper than per-query LUTs (8 KB each); at high dim you'd rank on PQ
-    * codes instead (q73/q74 machinery). `n_cand` joins back co-partitioned
-    * on query_id, NOT broadcast — with n_queries = n_corpus a broadcast
-    * would be corpus-sized (the one place the q74 shape doesn't transfer).
+    * codes instead (q73/q74 machinery). `n_cand` is counted inside the
+    * same bounded top-k aggregate ([[topkWithCount]]), so no corpus-sized
+    * count frame is ever joined back.
     *
     * Candidate volume is Σ_cell |cell|·|probes(cell)| ≈ n²·nprobe/nlist —
     * inherently quadratic-over-nlist (that IS the kNN-graph cost); nlist
@@ -1769,8 +1743,9 @@ object Similarity {
     * Hashability: same fixed-point coarse train as q74/q78, exact IEEE
     * cosine rounded 6dp, neighbor_id ties — deterministic cross-engine.
     *
-    * SESSION-CONF NOTE (applies to q82/q84/q94/[[knnGraphArtifact]] — every
-    * caller of the top-k kernel): building these queries raises
+    * SESSION-CONF NOTE (applies to q82/q84/q94/[[knnGraphArtifact]] and
+    * every IVF search through [[topkWithCount]] — every caller of the
+    * top-k kernel): building these queries raises
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` from
     * Spark's default 128 to 4,000,000 FOR THE SESSION (SQLConf is read at
     * planning, so a narrower scope is impossible for a lazily-executed
@@ -1849,28 +1824,47 @@ object Similarity {
     if (s.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128") == "128")
       s.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
 
-  def q82KnnGraph(s: SparkSession, d: String): DataFrame = {
-    // ONE partial+final aggregate computes the bounded top-k (graft_topk —
-    // q51's TypedImperativeAggregate; (cos_sim desc, neighbor_id asc) is
-    // exactly its total order) AND n_cand per query. The previous
-    // window+count+join-back formulation executed the Σ|cell| candidate
-    // kernel TWICE (rank subtree + count subtree) and pushed every
-    // candidate row through a per-partition sort — at 100k vectors that
-    // was 27 of q82's 35 anchor seconds. Now each candidate row is
-    // touched once, map-side, and the only candidate-keyed exchange
-    // carries ≤ k pairs + one count per query. */
+  /** Per-query bounded top-k AND candidate count in ONE partial+final
+    * aggregate — the shape every IVF search and the kNN graph share.
+    * graft_topk (q51's TypedImperativeAggregate) ranks by (score desc,
+    * neighbor_id asc), exactly the total order of the window it replaces,
+    * and count(1) rides in the same pass. The window+count+join-back
+    * formulation executed the candidate subtree TWICE (rank subtree + count
+    * subtree) and pushed every candidate row through a per-partition sort
+    * — at 100k vectors that was 27 of q82's 35 anchor seconds. Here each
+    * candidate row is touched once, map-side, and the only candidate-keyed
+    * exchange carries ≤ k pairs + one count per query.
+    * Output: (query_id, neighbor_id, score, n_cand, rn), rn 1-based. */
+  private def topkWithCount(cand: DataFrame, score: Column, k: Int): DataFrame = {
+    val s = cand.sparkSession
     graft.functions.TopKAgg.register(s)
     raiseTopkFallback(s)
-    knnCand(s, d)
+    cand.withColumn("_score", score)
       .groupBy("query_id")
-      .agg(expr(s"graft_topk(cos_sim, neighbor_id, $AdcK)").as("tk"),
+      .agg(expr(s"graft_topk(_score, neighbor_id, $k)").as("tk"),
         count(lit(1)).as("n_cand"))
       .select(col("query_id"), posexplode(col("tk")).as(Seq("rn0", "p")), col("n_cand"))
       .select(col("query_id"), col("p.id").as("neighbor_id"),
-        col("p.score").as("cos_sim"), col("n_cand"),
+        col("p.score").as("score"), col("n_cand"),
         (col("rn0") + 1).cast("long").as("rn"))
-      .orderBy("query_id", "rn")
   }
+
+  /** [[topkWithCount]] for the ADC order (adc_fixed asc, neighbor_id asc):
+    * the descending score is CAST(-adc_fixed AS DOUBLE) — the long is
+    * negated first, so no -0.0 appears — and the mapping is EXACT and
+    * order-preserving because |adc_fixed| < 2^53 (a sum of M = 8 LUT terms
+    * floor(‖q_m − c‖²·10⁶); reaching 2^53 would take squared subspace
+    * distances near 10⁹). adc_fixed comes back as the negated long.
+    * Output: (query_id, neighbor_id, adc_fixed, n_cand, rn). */
+  private def adcTopkWithCount(cand: DataFrame, k: Int): DataFrame =
+    topkWithCount(cand, (-col("adc_fixed")).cast("double"), k)
+      .select(col("query_id"), col("neighbor_id"),
+        (-col("score").cast("long")).as("adc_fixed"), col("n_cand"), col("rn"))
+
+  def q82KnnGraph(s: SparkSession, d: String): DataFrame =
+    topkWithCount(knnCand(s, d), col("cos_sim"), AdcK)
+      .withColumnRenamed("score", "cos_sim")
+      .orderBy("query_id", "rn")
 
   /** Bounded top-k edge aggregation over any (query_id, neighbor_id,
     * cos_sim) candidate frame — the one shape shared by the self-contained
@@ -3287,10 +3281,8 @@ object Similarity {
     writeIvfArtifacts(root, cents, books, codeTable,
       "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= AdcQueries)
         .select("vec_id"))
-    val del = tombstoneUnion(s, root).get
-    val live = s.read.parquet(s"$root/codes").join(del, Seq("vec_id"), "left_anti")
     ivfPqSearchFrom(s.read.parquet(s"$root/cents"), s.read.parquet(s"$root/books"),
-      live, emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"))
+      liveCodes(s, root), emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"))
   }
 
   /** Physical reclamation for a tombstoned IVF-PQ artifact — the vector
@@ -3308,12 +3300,7 @@ object Similarity {
       "compaction is copy-on-write: outRoot must be a new artifact root")
     s.read.parquet(s"$root/cents").write.mode("overwrite").parquet(s"$outRoot/cents")
     s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
-    val codes = s.read.parquet(s"$root/codes")
-    val live = tombstoneUnion(s, root) match {
-      case Some(del) => codes.join(del, Seq("vec_id"), "left_anti")
-      case None => codes
-    }
-    live.write.mode("overwrite").parquet(s"$outRoot/codes")
+    liveCodes(s, root).write.mode("overwrite").parquet(s"$outRoot/codes")
   }
 
   /** Tombstone-file count under an IVF-PQ artifact root (0 when none) —
@@ -3325,18 +3312,34 @@ object Similarity {
     else fs.listStatus(tombRoot).count(_.isDirectory)
   }
 
-  /** The deduplicated union of an IVF-PQ root's tombstone files as a
-    * (vec_id) frame, or None when the root carries no tombstones — the
-    * ONE definition of "the delete set" shared by serving (q127/q136),
-    * compaction, and the split (previously four copy-pasted list/sort/
-    * distinct blocks — a tombstone-layout change now lands in one place). */
+  /** The union of an IVF-PQ root's tombstone files as a (vec_id) frame,
+    * or None when the root carries no tombstones — the ONE definition of
+    * "the delete set" shared by serving (q127/q136/q138), compaction, and
+    * the split. The files are read under the declared [[IvfTombSchema]],
+    * so opening the set launches no footer-reading job. NOT deduplicated:
+    * every serving and compaction consumer is an anti (or semi) join, where
+    * a duplicate id cannot change the result; a consumer that writes or
+    * counts the rows dedups itself ([[copyTombstones]]). */
   private[graft] def tombstoneUnion(s: SparkSession, root: String): Option[DataFrame] = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val tombs = ArtifactSwap.tombDirs(fs, root)
     if (tombs.isEmpty) None
-    else Some(s.read.parquet(tombs: _*).select("vec_id").distinct())
+    else Some(s.read.schema(IvfTombSchema).parquet(tombs: _*))
   }
+
+  /** The code table of an IVF-PQ root minus its tombstoned vectors. */
+  private[graft] def liveCodes(s: SparkSession, root: String): DataFrame = {
+    val codes = s.read.parquet(s"$root/codes")
+    tombstoneUnion(s, root)
+      .map(del => codes.join(del, Seq("vec_id"), "left_anti")).getOrElse(codes)
+  }
+
+  /** Carry `root`'s delete set into `outRoot` as ONE deduplicated
+    * tombstone file — the split/merge rewrites' aux copy. */
+  private def copyTombstones(s: SparkSession, root: String, outRoot: String): Unit =
+    tombstoneUnion(s, root).foreach(
+      _.distinct().write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
 
   /** Finish a COMMITTED ivf compaction swap — idempotent from any crash
     * point. Codes retirement is gated on the promote still pending (after
@@ -3619,8 +3622,7 @@ object Similarity {
     codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
     if (copyAux) {
       s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
-      tombstoneUnion(s, root).foreach(
-        _.write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
+      copyTombstones(s, root, outRoot)
     }
     val out = hotCells.map { c =>
       c -> ((subCountRows.getOrElse((c, 0L), 0L), subCountRows.getOrElse((c, 1L), 0L)))
@@ -3880,8 +3882,7 @@ object Similarity {
     survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
     if (copyAux) {
       s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
-      tombstoneUnion(s, root).foreach(
-        _.write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
+      copyTombstones(s, root, outRoot)
     }
   }
 
@@ -4711,12 +4712,9 @@ object Similarity {
     writeIvfArtifacts(root, cents, books, codeTable,
       "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= AdcQueries)
         .select("vec_id"))
-    val del = tombstoneUnion(s, root).get
     val keep = Tables.spread(s, Tables.embeddings(s, d), "vec_id")
       .filter(col("label") % 3 === 0).select("vec_id")
-    val live = s.read.parquet(s"$root/codes")
-      .join(del, Seq("vec_id"), "left_anti")
-      .join(keep, Seq("vec_id"), "left_semi")
+    val live = liveCodes(s, root).join(keep, Seq("vec_id"), "left_semi")
     ivfPqSearchFrom(s.read.parquet(s"$root/cents"), s.read.parquet(s"$root/books"),
       live, emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"))
   }

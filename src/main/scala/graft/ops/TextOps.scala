@@ -852,15 +852,25 @@ object TextOps {
     * sum (long arithmetic), so a merged avgdl = CAST(Σtot_dl AS DOUBLE) /
     * Σn_docs is bit-identical to the single-pass build's. */
   private[graft] def lexIndexOf(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val d = indexTokens(docs)
     // Per-doc term frequency via the shared O(L log L) sorted-run counter
     // ([[termCounts]] — map-side, the token stream never shuffles)
-    val tf = termCounts(docs)
+    val tf = termCounts(d)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = docs.agg(count(lit(1)).as("n_docs"),
+    val stats = d.agg(count(lit(1)).as("n_docs"),
       sum(size(col("w")).cast("long")).as("tot_dl"),
       (sum(size(col("w")).cast("long")).cast("double") / count(lit(1))).as("avgdl"))
     (tf, df, stats)
   }
+
+  /** The ONE null-text policy of the lexical-index builders (this
+    * single-pass one and the segment writer, Retrieval.lexIndexSegment): a
+    * null token array indexes as array('') — exactly what `split` yields
+    * for empty text. Left null, it would explode to ZERO tf rows while a
+    * docs-side count still counted the doc, so the two builders would
+    * disagree on tf, df and tot_dl. */
+  private[graft] def indexTokens(docs: DataFrame): DataFrame =
+    docs.withColumn("w", coalesce(col("w"), array(lit(""))))
 
   private[graft] def tokenizedDocs(s: SparkSession, d: String): DataFrame =
     Tables.spread(s, Tables.documents(s, d), "doc_id")

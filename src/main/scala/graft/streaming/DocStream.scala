@@ -418,7 +418,7 @@ object DocStream {
     * doc_ids lands as its OWN tiny tombstone file (never a rewrite of
     * segments or of earlier tombstones), so deletes from the stream
     * compose with concurrent serves and appends; the serve-time
-    * corrections ([[graft.ops.Retrieval.lexIndexServeDel]]) are additive
+    * corrections ([[graft.ops.Retrieval.lexIndexServe]]) are additive
     * over the union of tombstone files, so streamed deletes ≡ one batch
     * delete bit-for-bit for any batching (DocStreamSpec). Physical
     * reclamation stays the compaction's job (q126's no-resurrection
@@ -430,7 +430,7 @@ object DocStream {
     * committed swap's TombManifest would be deleted by a recovery re-run,
     * destroying a fresh unapplied tombstone and resurrecting its deletes. */
   def tombstoneBatch(s: SparkSession, path: String, ids: DataFrame, name: String): Unit =
-    ids.select(col("doc_id")).write.mode("errorifexists")
+    graft.ops.Retrieval.lexTombRows(ids).write.mode("errorifexists")
       .parquet(s"$path/tombstones/$name")
 
   /** Fold a fresh-document micro-batch into the persisted near-dup CLUSTER

@@ -220,7 +220,7 @@ object VecStream {
     // swap's TombManifest would be deleted by a recovery re-run (crash
     // between tombstone retirement and scratch cleanup), destroying a
     // fresh unapplied tombstone and resurrecting its deletes.
-    ids.select(col("vec_id")).write.mode("errorifexists")
+    Similarity.ivfTombRows(ids).write.mode("errorifexists")
       .parquet(s"$root/tombstones/$name")
     if (maxTombstones > 0)
       graft.ops.Similarity.maybeCompactIvf(ids.sparkSession, root, maxTombstones)

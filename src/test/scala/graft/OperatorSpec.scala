@@ -2470,7 +2470,10 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   test("q115 append algebra: segment-folded index frames are bit-identical to a single-pass rebuild") {
     import graft.ops.{Retrieval, TextOps}
     val dir = java.nio.file.Files.createTempDirectory("graft_lexappend_spec").toString
-    val docs = TextOps.tokenizedDocs(spark, sf)
+    // one null-text doc past the cut (it lands in seg1): both builders
+    // must apply the same null policy, or tf, df and tot_dl drift apart
+    val docs = TextOps.tokenizedDocs(spark, sf).unionByName(spark.range(900001L, 900002L)
+      .select(col("id").as("doc_id"), lit(null).cast("array<string>").as("w")))
     val cut = graft.Tables.documents(spark, sf)
       .agg(org.apache.spark.sql.functions.max("doc_id")).head().getLong(0) * 4 / 5
     Retrieval.lexIndexSegment(docs.filter(s"doc_id <= $cut"), dir, "seg0")
@@ -2893,6 +2896,60 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val (ctf, cdf, cst) = Retrieval.lexIndexServe(spark, out)
     assert(rank(ctf, cdf, cst) == served,
       "compacted artifact resurrected or lost deleted docs")
+  }
+
+  test("tombstoned lexical serve: 3 segments + 2 tombstone batches ≡ rebuild, zero jobs to open, declared schemas match the written files") {
+    import graft.ops.{Retrieval, TextOps}
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_lexdel_spec").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_lexdel_out").toString + "/c"
+    // "solo" occurs only in doc 4, so deleting doc 4 drops its df to 0
+    val docs = Seq(1L -> "alpha beta gamma", 2L -> "beta beta delta", 3L -> "gamma alpha",
+        4L -> "solo alpha beta", 5L -> "delta delta delta", 6L -> "alpha",
+        7L -> "beta gamma delta alpha", 8L -> "gamma gamma", 9L -> "epsilon beta")
+      .toDF("doc_id", "text").select(col("doc_id"), split(col("text"), " ").as("w"))
+    (0 until 3).foreach { m =>
+      Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 3 === m), dir, s"seg$m")
+    }
+    // doc 4 is deleted by BOTH batches; 999 is not in the index
+    Retrieval.lexTombstone(Seq(4L, 7L).toDF("doc_id"), dir, "t0")
+    Retrieval.lexTombstone(Seq(4L, 2L, 999L).toDF("doc_id"), dir, "t1")
+    val ((tf, df, st), opened) =
+      JobCounter(spark.sparkContext)(Retrieval.lexIndexServeDel(spark, dir))
+    assert(opened.jobs == 0,
+      s"building the serve frames ran ${opened.jobs} Spark jobs — a segment or tombstone read lost its declared schema")
+    val (rtf, rdf, rst) = TextOps.lexIndexOf(docs.filter(!col("doc_id").isin(2L, 4L, 7L)))
+    assert(tf.collect().toSet == rtf.collect().toSet, "postings drift from the rebuild")
+    val served = df.collect().toSet
+    assert(served == rdf.collect().toSet, "df correction drifts from the rebuild")
+    assert(!served.exists(_.getString(0) == "solo"), "a term whose df reached 0 must be dropped")
+    val Seq(s1) = st.collect().toSeq
+    val Seq(r1) = rst.collect().toSeq
+    assert(s1.getLong(0) == r1.getLong(0) && s1.getLong(1) == r1.getLong(1) &&
+      java.lang.Double.doubleToLongBits(s1.getDouble(2)) ==
+        java.lang.Double.doubleToLongBits(r1.getDouble(2)),
+      s"stats $s1 != rebuild $r1 — avgdl must be BIT-identical")
+    // every declared schema equals the schema its writer produces — the
+    // segment build, the compactor and both tombstone writers
+    Retrieval.lexIndexCompact(spark, dir, out)
+    for (root <- Seq(s"$dir/seg0", s"$out/seg0"); (file, declared) <- Seq(
+        "tf" -> Retrieval.LexTfSchema, "df" -> Retrieval.LexDfSchema,
+        "stats" -> Retrieval.LexStatsSchema))
+      assert(spark.read.parquet(s"$root/$file").schema == declared, s"$root/$file drifted")
+    graft.streaming.DocStream.tombstoneBatch(spark, dir, Seq(5).toDF("doc_id"), "d0")
+    Seq("t0", "d0").foreach(t => assert(
+      spark.read.parquet(s"$dir/tombstones/$t").schema == Retrieval.LexTombSchema, t))
+    val ivf = java.nio.file.Files.createTempDirectory("graft_ivftomb_schema").toString
+    graft.streaming.VecStream.tombstoneBatch(Seq(3).toDF("vec_id"), ivf, "d0")
+    assert(spark.read.parquet(s"$ivf/tombstones/d0").schema == Similarity.IvfTombSchema)
+    // deleting EVERY doc leaves an empty index: avgdl is null, not a
+    // division by zero, and the compactor still merges it
+    Retrieval.lexTombstone(docs.select("doc_id"), dir, "t2")
+    val Seq(empty) = Retrieval.lexIndexServe(spark, dir)._3.collect().toSeq
+    assert(empty.getLong(0) == 0L && empty.getLong(1) == 0L && empty.isNullAt(2), empty.toString)
+    Retrieval.lexIndexCompact(spark, dir, out + "_empty")
+    assert(spark.read.parquet(s"${out}_empty/seg0/tf").count() == 0L)
   }
 
   test("q130: yield accounting reconciles with the q108 group labels and raw corpus totals") {

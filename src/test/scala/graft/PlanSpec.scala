@@ -32,6 +32,30 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     "Arguments: hashpartitioning\\((\\w+)#[^\\n]*ENSURE_REQUIREMENTS".r
       .findAllMatchIn(p).map(_.group(1)).toSeq
 
+  /** Physical nodes named exactly `op` in a formatted plan — counted on
+    * the numbered `(n) op` detail headers, so `Window` never matches
+    * `WindowGroupLimit`. */
+  private def nodes(p: String, op: String): Int =
+    s"(?m)^\\(\\d+\\) $op( \\[|$$)".r.findAllIn(p).length
+
+  private val FallbackThreshold = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+  /** Plan an IVF search built from a session at Spark's default
+    * sort-fallback threshold, and pin the ONE top-k+count pass every IVF
+    * search ranks through (Similarity.topkWithCount): the graft_topk
+    * partial aggregate runs map-side as an ObjectHashAggregate, and
+    * building the search raised the threshold — at the default 128 every
+    * candidate row would funnel through a per-partition sort. */
+  private def topkPassPlan(df: => org.apache.spark.sql.DataFrame): String = {
+    spark.conf.unset(FallbackThreshold)
+    val p = plan(df)
+    assert(p.contains("partial_graft_topk"), p)
+    assert(p.contains("ObjectHashAggregate"), p)
+    assert(spark.conf.get(FallbackThreshold) == "4000000",
+      "the IVF search left the sort-fallback threshold at Spark's default")
+    p
+  }
+
   test("q01: filter is pushed to the parquet scan and columns are pruned") {
     val p = plan(Relational.q01ScanProject(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,45.0)]"), p)
@@ -297,20 +321,20 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
 
   test("q74 IVF-PQ: candidate join is a broadcast equi join on cell, top-k is the only hash exchange") {
     import graft.ops.Similarity
-    val p = plan(Similarity.q74IvfPqTopk(spark, sf))
+    val p = topkPassPlan(Similarity.q74IvfPqTopk(spark, sf))
     assert(!p.contains("SortMergeJoin"), p)
     // the cell gate must be an equi hash join with the (query, cell, LUT)
     // side broadcast — the corpus-code side streams through map-side
     assert(p.contains("BroadcastHashJoin"), p)
-    // candidate-path exchanges are query_id only (top-k + the n_cand agg);
-    // the rest are the (cell)/(m, cell)-keyed training aggs — tiny rows
+    // the ONE candidate-path exchange is the query_id top-k+count agg
+    // (n_cand rides in it, so the candidate subtree runs once); the rest
+    // are the (cell)/(m, cell)-keyed training aggs — tiny rows
     val ks = shuffleKeys(p)
-    assert(ks.count(_ == "query_id") == 2, ks.toString)
+    assert(ks.count(_ == "query_id") == 1, ks.toString)
     assert(ks.toSet.subsetOf(Set("cell", "m", "query_id")), ks.toString)
-    // with n_cand as a partial+final agg (not a full-partition window) the
-    // rank<=k filter pushes into the window as a group-limit, so map tasks
-    // emit ≤k candidate rows per query instead of everything
-    assert(p.contains("WindowGroupLimit"), p)
+    // no window sorts the candidate stream: map tasks keep ≤k (score, id)
+    // pairs per query inside the partial aggregate
+    assert(!p.contains("Window"), p)
   }
 
   test("q74 append (incremental ingest) is pure map-side: two broadcast rows, no shuffle") {
@@ -339,44 +363,44 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
 
   test("q75 residual IVF-PQ keeps q74's shapes: broadcast cell gate, sole query_id exchange") {
     import graft.ops.Similarity
-    val p = plan(Similarity.q75IvfPqResidual(spark, sf))
+    val p = topkPassPlan(Similarity.q75IvfPqResidual(spark, sf))
     assert(!p.contains("SortMergeJoin"), p)
     assert(p.contains("BroadcastHashJoin"), p)
     val ks = shuffleKeys(p)
-    assert(ks.count(_ == "query_id") == 2, ks.toString)
+    assert(ks.count(_ == "query_id") == 1, ks.toString)
     assert(ks.toSet.subsetOf(Set("cell", "m", "query_id")), ks.toString)
-    // same group-limit claim as q74: n_cand must not regress the window
-    assert(p.contains("WindowGroupLimit"), p)
+    // same single top-k+count pass as q74: no window over the candidates
+    assert(!p.contains("Window"), p)
   }
 
   test("q77 OPQ keeps q74's shapes; the only extra exchange is the 64-row mean agg") {
     import graft.ops.Similarity
-    val p = plan(Similarity.q77OpqIvfPq(spark, sf))
+    val p = topkPassPlan(Similarity.q77OpqIvfPq(spark, sf))
     assert(!p.contains("SortMergeJoin"), p)
     assert(p.contains("BroadcastHashJoin"), p)
-    assert(p.contains("WindowGroupLimit"), p)
+    assert(!p.contains("Window"), p)
     // q74's exchange keys plus the rotation's dim-keyed fixed-point mean
     // (i — 64 rows out, corpus-size-independent); nothing may shuffle an
     // embedding-carrying row
     val ks = shuffleKeys(p)
-    assert(ks.count(_ == "query_id") == 2, ks.toString)
+    assert(ks.count(_ == "query_id") == 1, ks.toString)
     assert(ks.contains("i"), ks.toString)
     assert(ks.toSet.subsetOf(Set("cell", "m", "query_id", "i")), ks.toString)
   }
 
   test("q78 SQ8-IVF keeps q74's shapes: broadcast cell gate, query_id-only candidate exchanges") {
     import graft.ops.Similarity
-    val p = plan(Similarity.q78Sq8Ivf(spark, sf))
+    val p = topkPassPlan(Similarity.q78Sq8Ivf(spark, sf))
     assert(!p.contains("SortMergeJoin"), p)
     // the cell gate is an equi hash join with the (query, codes) side
     // broadcast; the int8 code table streams through map-side
     assert(p.contains("BroadcastHashJoin"), p)
     val ks = shuffleKeys(p)
-    assert(ks.count(_ == "query_id") == 2, ks.toString)
+    assert(ks.count(_ == "query_id") == 1, ks.toString)
     // coarse-train aggs are (cell[, i])-keyed — tiny fixed-size rows; no
     // exchange may ever carry an embedding-bearing candidate row
     assert(ks.toSet.subsetOf(Set("cell", "query_id")), ks.toString)
-    assert(p.contains("WindowGroupLimit"), p)
+    assert(!p.contains("Window"), p)
   }
 
   test("q80 bucketed join: zero exchange on the join key — only the 5-row rollup shuffles") {
@@ -423,10 +447,9 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
 
   test("q82 kNN graph: co-partitioned cell join — both corpus sides shuffle by cell, nothing broadcasts a corpus side") {
     import graft.ops.Similarity
-    val p = plan(Similarity.q82KnnGraph(spark, sf))
+    val p = topkPassPlan(Similarity.q82KnnGraph(spark, sf))
     // queries = corpus, so the candidate join must be a shuffled merge join
-    // on cell (one shuffle per side), not a broadcast — and n_cand joins
-    // back co-partitioned on query_id for the same reason
+    // on cell (one shuffle per side), not a broadcast
     assert(p.contains("SortMergeJoin"), p)
     // exact key SET: every shuffle is on cell (pair join + coarse-train
     // aggs) or query_id (the one bounded top-k+count agg), never an
@@ -434,18 +457,9 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     val ks = shuffleKeys(p)
     assert(ks.toSet == Set("cell", "query_id"), ks.toString)
     // top-k + n_cand are ONE partial+final ObjectHashAggregate pass over
-    // the candidate stream — no window sort of Σ|cell| candidate rows, no
-    // second execution of the kernel for the count (each candidate row is
-    // touched exactly once, map-side)
+    // the candidate stream (topkPassPlan) — no window sort of Σ|cell|
+    // candidate rows, no second execution of the kernel for the count
     assert(!p.contains("Window"), p)
-    assert(p.contains("ObjectHashAggregate"), p)
-    // the partial agg must not sort-fall-back after 128 query_id groups:
-    // building the graph raises the ObjectHashAggregate threshold (the
-    // measured −27% at the 100k anchor), unless an operator already set it
-    assert(spark.conf.get(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "4000000",
-      "kNN-graph build left the sort-fallback threshold at a default that " +
-        "sorts every candidate row")
   }
 
   test("q83 semdedup: co-partitioned cell pair join; drop-resolution is a partial+final agg, not a window") {
@@ -671,26 +685,33 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
 
   test("q79 recall eval: approximate side keeps q74's keys, exact side never all-pairs shuffles") {
     import graft.ops.Similarity
-    val p = plan(Similarity.q79AnnRecall(spark, sf))
+    val p = topkPassPlan(Similarity.q79AnnRecall(spark, sf))
     // the brute-force ground truth broadcasts the fixed query panel over
     // the corpus — a shuffled all-pairs join would be the 100-TB killer
     val ks = shuffleKeys(p)
     assert(ks.toSet.subsetOf(Set("cell", "m", "query_id")), ks.toString)
+    // the approximate side is q74's single top-k+count pass, so the one
+    // Window left is the exact side's brute-force rank; query_id exchanges:
+    // one for the approximate top-k, three on the exact side and the join
+    assert(nodes(p, "Window") == 1, p)
+    assert(ks.count(_ == "query_id") == 4, ks.toString)
   }
 
   test("q86 refine: shortlist+queries broadcast onto the corpus, query_id-only candidate exchanges") {
     import graft.ops.Similarity
-    val p = plan(Similarity.q86AdcRefine(spark, sf))
+    val p = topkPassPlan(Similarity.q86AdcRefine(spark, sf))
     assert(!p.contains("SortMergeJoin"), p)
     // the refine join must stream the corpus embeddings map-side under the
     // broadcast shortlist — a shuffled refine join moves every embedding
     assert(p.contains("BroadcastHashJoin"), p)
-    // q74's two query_id exchanges (shortlist top-k + n_cand) + the final
+    // q74's one query_id exchange (the shortlist top-k pass) + the final
     // exact-rank top-k; everything else is the tiny training aggs
     val ks = shuffleKeys(p)
-    assert(ks.count(_ == "query_id") == 3, ks.toString)
+    assert(ks.count(_ == "query_id") == 2, ks.toString)
     assert(ks.toSet.subsetOf(Set("cell", "m", "query_id")), ks.toString)
-    // both rank filters prune map-side
+    // the shortlist has no window; the exact re-rank's is the only one,
+    // and its rank filter prunes map-side
+    assert(nodes(p, "Window") == 1, p)
     assert(p.contains("WindowGroupLimit"), p)
   }
 
@@ -1480,6 +1501,23 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       "expected a scan over the vector tombstone file")
     assert(scans.exists(_.contains("ragserve/clusters")),
       "expected a scan over the cluster-label artifact")
+  }
+
+  test("q138 serve request stays within its stage budget, and the lexical delete correction plans without a job") {
+    import graft.ops.Retrieval
+    Retrieval.q138RagServed(spark, sf) // builds the artifacts
+    val (df, planned) = JobCounter(spark.sparkContext)(Retrieval.q138Serve(spark, sf))
+    // the only planning-time jobs left are schema inference on the six
+    // undeclared reads (documents, embeddings, cents, books, codes,
+    // clusters): the lexical segments and both tombstone sets declare theirs
+    assert(planned.jobs <= 6, s"planning the serve ran ${planned.jobs} jobs")
+    val (_, served) = JobCounter(spark.sparkContext)(df.collect())
+    // 37 stages when the IVF top-k and n_cand were a window plus a
+    // joined-back count (the candidate subtree ran twice) and each delete
+    // correction was a fold + a delta agg + a join; 26 with one top-k+count
+    // pass and one aggregate per correction. A serve plan that grows back
+    // fails here.
+    assert(served.stages <= 26, s"one q138 serve ran ${served.stages} stages (budget 26)")
   }
 
   test("q147 complete RAG serve: artifact-only walk incl. positions and vectors; the only RDD leaf is the eval-sized MMR checkpoint") {
