@@ -66,6 +66,9 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.ui.enabled", "false")
+      // keep repeated plan shapes' generated classes resident (the default
+      // 100-entry cache evicts within one catalog pass)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

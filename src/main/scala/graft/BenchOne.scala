@@ -16,7 +16,8 @@ object BenchOne {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (i <- 1 to runs) {
       // drop plan-keyed cache entries from the previous run: otherwise a

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's deterministic testdata tables (TESTDATA.md).
   *
@@ -9,6 +10,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * but as a single multi-path-capable `spark.read.parquet` — Spark's
   * `InMemoryFileIndex` replaces the reference's driver-side blob loop, so at
   * 100 TB the listing is distributed and the scan parallelises per row-group.
+  *
+  * Schema memo: inferring a parquet schema launches a footer-reading Spark
+  * job while the plan is built, and a catalog call that reads four tables
+  * paid four of them on every call. [[load]] infers once per (qualified
+  * path, file length, modification time, values of [[SchemaConfs]]) and
+  * passes the remembered `StructType` to every later read of the same key,
+  * so a warm read plans with no job. A rewritten file changes its length or
+  * mtime, and a flipped conversion conf changes the key, so neither can be
+  * served a stale schema. Only single-file paths are memoised: a file
+  * inside a directory can change without the directory's mtime changing,
+  * so a directory (e.g. a Spark-written `documents.parquet`) infers on
+  * every read. The memo holds at most [[MemoCap]] schemas (it is cleared
+  * when full), and the footer job runs outside any lock: `Par.jobs`
+  * threads load concurrently, and two of them racing on one cold key both
+  * infer the same schema. No schema is declared instead because
+  * `events.ts` has arrived in two encodings (see [[events]]).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -25,8 +42,45 @@ object Tables {
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
       org.apache.spark.sql.functions.col(key))
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The parquet schema-conversion confs: each changes the schema that one
+    * footer infers to, so their values are part of the memo key. */
+  private val SchemaConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private final case class SchemaKey(path: String, len: Long, mtime: Long,
+      confs: Seq[Option[String]])
+
+  private val MemoCap = 64
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]
+
+  /** The memo key of a single-file path; None for a directory or a missing
+    * path (Spark's own read reports the latter). */
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      if (!st.isFile) None
+      else Some(SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime,
+        SchemaConfs.map(spark.conf.getOption)))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) => Option(schemaMemo.get(key)) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          if (schemaMemo.size >= MemoCap) schemaMemo.clear()
+          schemaMemo.put(key, df.schema)
+          df
+      }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -15,6 +15,7 @@ object Verify {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

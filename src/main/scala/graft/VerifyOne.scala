@@ -17,7 +17,8 @@ object VerifyOne {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries(name)(spark, sfDir).coalesce(1)

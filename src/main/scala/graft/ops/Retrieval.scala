@@ -677,9 +677,9 @@ object Retrieval {
     // cache-lifecycle hazard over mutable artifact paths (the r19 mmr bug)
     // that a collect cannot have. Arithmetic is IDENTICAL IEEE ops on the
     // SAME collected values — floor((rel − maxsim)·500000) to BIGINT,
-    // argmax by (score DESC, doc_id) — so selections are bit-equal to the
-    // chained-rounds form (OperatorSpec's independent greedy differential
-    // pins it).
+    // argmax by (score DESC, doc_id), round 1 by raw (rel DESC, doc_id) —
+    // so selections are bit-equal to the oracle's chained-rounds form
+    // (OperatorSpec's independent greedy differential pins it).
     val candRows = cand.select("query_id", "doc_id", "rel").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val simRows = pairsim.collect()
@@ -690,20 +690,22 @@ object Retrieval {
       val rel = cs.map(c => c._2 -> c._3).toMap
       var selected = Vector.empty[Long]
       for (i <- 1 to MmrSelK) {
-        // round 1: argmax (rel DESC, doc ASC), mmr = floor(rel·500000);
-        // later rounds: only candidates with a sim row to ≥ 1 selected doc
-        // participate (the chained form's inner maxsim join), score =
-        // floor((rel − max sim)·500000), argmax (score DESC, doc ASC)
-        val scored: Seq[(Long, Long)] =
-          if (i == 1) rel.toSeq.map { case (d, rv) =>
-            d -> math.floor(rv * 500000.0).toLong }
-          else (rel.keySet -- selected).toSeq.flatMap { d =>
+        // round 1: argmax by RAW (rel DESC, doc ASC) — the oracle's s1 order,
+        // so two rels that floor to one score still pick the higher rel —
+        // emitting mmr = floor(rel·500000); later rounds: only candidates
+        // with a sim row to ≥ 1 selected doc participate (the chained form's
+        // inner maxsim join), score = floor((rel − max sim)·500000), argmax
+        // (score DESC, doc ASC)
+        val pick: Option[(Long, Long)] =
+          if (i == 1) {
+            val (d, rv) = rel.minBy { case (d, rv) => (-rv, d) }
+            Some(d -> math.floor(rv * 500000.0).toLong)
+          } else (rel.keySet -- selected).toSeq.flatMap { d =>
             val sims = selected.flatMap(sd => simRows.get((q, d, sd)))
             if (sims.isEmpty) None
             else Some(d -> math.floor((rel(d) - sims.max) * 500000.0).toLong)
-          }
-        if (scored.nonEmpty) {
-          val (doc, score) = scored.minBy { case (d, sc) => (-sc, d) }
+          }.minByOption { case (d, sc) => (-sc, d) }
+        pick.foreach { case (doc, score) =>
           selected :+= doc
           out += ((q, i.toLong, doc, score))
         }

@@ -23,6 +23,20 @@ import org.apache.spark.sql.types._
   *    the raw string index (v2:106), which would mis-order '10' < '9'.
   *  - Single directory-scan + `dropDuplicates` replaces the per-file
   *    union loop (v2:62-65); Spark's InMemoryFileIndex distributes listing.
+  *
+  * Single partition, decided at plan time: each of the three sources (the
+  * raw NFL frame, the raw elections frame, the election-date list) is
+  * `coalesce(1)`-ed where the stage takes it. `CoalesceExec(1)` reports
+  * `SinglePartition`, which satisfies every downstream `dropDuplicates`,
+  * `partitionBy` window, global window and the final sort, so the plan has
+  * no shuffle: 4 Spark jobs (3 broadcasts and the result) instead of 11.
+  * The bound: the inputs are one CSV of Washington games per election-year
+  * NFL season and one row per candidate per election (108 game rows in 12
+  * files and 29 election rows in the fixtures; a century of either stays
+  * in the low thousands), and AQE already ran every one of the removed
+  * shuffles as a single partition.
+  * Inputs that outgrow one task belong on the keyed, distributed variants
+  * (`Relational.q15AsofJoin`).
   */
 object RedskinsPipeline {
 
@@ -73,7 +87,7 @@ object RedskinsPipeline {
   /** NFL half (v2:67-114): format, filter postseason, home-team inference by
     * per-game rank, winner via max_by window, Washington-home filter. */
   def nflStage(raw: DataFrame): DataFrame = {
-    val formatted = raw
+    val formatted = raw.coalesce(1)
       .withColumn("day_month", regexp_extract(col("date"), dateRegex, 0))
       .filter(length(col("date")) < 10)
       .withColumn("game_date", to_date(concat(col("day_month"), lit("/"), col("year")), "M/d/yyyy"))
@@ -96,13 +110,13 @@ object RedskinsPipeline {
     * equi-join on year-trunc), per-candidate windows, challenger derivation,
     * winner aggregation, incumbent lags. */
   def elecStage(raw: DataFrame, elecDates: DataFrame): DataFrame = {
-    val formatted = raw
+    val formatted = raw.coalesce(1)
       .withColumn("year", to_date(col("year"), "yyyy"))
       .withColumn("popular_votes", translate(col("popular_votes"), ",", "").cast(LongType))
       .where(col("year") >= lit(Date.valueOf("1972-01-01")))
     // J1: attach the real election date (small side broadcast)
     val withDates = formatted.join(
-      broadcast(elecDates.select("elec_date").distinct()),
+      broadcast(elecDates.select("elec_date").coalesce(1).distinct()),
       date_trunc("year", col("year")) === date_trunc("year", col("elec_date")), "left")
 
     val wDate = Window.partitionBy("elec_date")

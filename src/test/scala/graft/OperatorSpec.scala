@@ -2451,12 +2451,15 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       var selected = Vector.empty[(Long, Long)] // (doc, mmr)
       for (_ <- 1 to 5) {
         val pool = rel.keySet -- selected.map(_._1)
-        val scored = pool.toSeq.map { doc =>
-          val maxsim = if (selected.isEmpty) 0.0
-            else selected.map(s => cos(emb(doc), emb(s._1))).max
+        // round 1 ranks the RAW rel (the oracle's s1 order), later rounds
+        // the floored score
+        selected :+= (if (selected.isEmpty) {
+          val doc = pool.minBy(doc => (-rel(doc), doc))
+          doc -> math.floor(rel(doc) * 500000.0).toLong
+        } else pool.toSeq.map { doc =>
+          val maxsim = selected.map(s => cos(emb(doc), emb(s._1))).max
           doc -> math.floor((rel(doc) - maxsim) * 500000.0).toLong
-        }
-        selected :+= scored.minBy { case (doc, sc) => (-sc, doc) }
+        }.minBy { case (doc, sc) => (-sc, doc) })
       }
       selected.zipWithIndex.map { case ((doc, sc), i) => (q, i + 1L, doc, sc) }
     }.toSet
@@ -2465,6 +2468,23 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
         r.getAs[Long]("doc_id"), r.getAs[Long]("mmr"))).toSet
     assert(got == expected, s"greedy recursion diverges: " +
       s"missing=${(expected -- got).take(3)} extra=${(got -- expected).take(3)}")
+  }
+
+  test("mmr round 1 picks the higher raw rel when two rels floor to one score") {
+    import graft.ops.Retrieval
+    val session = spark
+    import session.implicits._
+    graft.functions.VectorFunctions.register(spark)
+    // both rels floor to 250000 at the 500000 scale; the lower rel has the
+    // lower doc_id, so a floored-score argmax with a doc_id tiebreak picks
+    // doc 1 while the oracle's s1 (raw rel DESC, doc_id) picks doc 2
+    val cand = Seq((0L, 1L, 0.5000001), (0L, 2L, 0.5000015)).toDF("query_id", "doc_id", "rel")
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("vec_id", "e")
+      .withColumn("nrm", sqrt(expr("graft_dot(e, e)")))
+    val got = Retrieval.mmrSelect(cand, vecs).orderBy("sel_rnk").collect()
+      .map(r => (r.getAs[Long]("sel_rnk"), r.getAs[Long]("doc_id"), r.getAs[Long]("mmr"))).toSeq
+    // round 2: the orthogonal doc 1 scores floor((0.5000001 − 0)·500000)
+    assert(got == Seq((1L, 2L, 250000L), (2L, 1L, 250000L)), got.toString)
   }
 
   test("q115 append algebra: segment-folded index frames are bit-identical to a single-pass rebuild") {

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AsOf, Dedup, Relational}
 
@@ -54,6 +55,55 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     assert(spark.conf.get(FallbackThreshold) == "4000000",
       "the IVF search left the sort-fallback threshold at Spark's default")
     p
+  }
+
+  // Tables.load's schema memo: a warm read of a single-file table plans
+  // with no Spark job, and no change that can alter the inferred schema (a
+  // rewritten file, a flipped conversion conf, a directory's contents) is
+  // ever served a remembered one
+  private def planJobs(body: => Unit): Int = JobCounter(spark.sparkContext)(body)._2.jobs
+
+  test("Tables schema memo: a second load of a single-file table plans with no Spark job") {
+    val first = Tables.orders(spark, sf)
+    val (second, counts) = JobCounter(spark.sparkContext)(Tables.orders(spark, sf))
+    assert(counts.jobs == 0, counts.toString)
+    assert(second.schema == first.schema)
+    assert(second.count() == first.count())
+  }
+
+  test("Tables schema memo: rewriting a single-file table makes the next load infer its new schema") {
+    val dir = Files.createTempDirectory("graft_tables_memo")
+    val t = dir.resolve("t.parquet")
+    Files.copy(Paths.get(s"$sf/region.parquet"), t)
+    assert(Tables.load(spark, dir.toString, "t").schema ==
+      spark.read.parquet(s"$sf/region.parquet").schema)
+    assert(planJobs(Tables.load(spark, dir.toString, "t")) == 0)
+    Files.copy(Paths.get(s"$sf/nation.parquet"), t, StandardCopyOption.REPLACE_EXISTING)
+    val (reread, counts) = JobCounter(spark.sparkContext)(Tables.load(spark, dir.toString, "t"))
+    assert(counts.jobs >= 1, "the rewritten file was served the remembered schema")
+    assert(reread.schema == spark.read.parquet(s"$sf/nation.parquet").schema)
+    assert(reread.count() == spark.read.parquet(s"$sf/nation.parquet").count())
+  }
+
+  test("Tables schema memo: flipping nanosAsLong changes the memo key") {
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.get(conf)
+    Tables.events(spark, sf)
+    assert(planJobs(Tables.events(spark, sf)) == 0)
+    try {
+      spark.conf.set(conf, (!before.toBoolean).toString)
+      assert(planJobs(Tables.events(spark, sf)) >= 1,
+        "a read under the other nanosAsLong value reused the remembered schema")
+    } finally spark.conf.set(conf, before)
+    assert(planJobs(Tables.events(spark, sf)) == 0)
+  }
+
+  test("Tables schema memo: a directory path infers on every read") {
+    val dir = Files.createTempDirectory("graft_tables_memo_dir").toString
+    spark.range(5).toDF("id").write.parquet(s"$dir/d.parquet")
+    Tables.load(spark, dir, "d")
+    assert(planJobs(Tables.load(spark, dir, "d")) >= 1)
+    assert(planJobs(Tables.load(spark, dir, "d")) >= 1)
   }
 
   test("q01: filter is pushed to the parquet scan and columns are pruned") {
@@ -414,6 +464,40 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     val ks = shuffleKeys(p)
     assert(!ks.contains("l_orderkey") && !ks.contains("o_orderkey"), ks.toString)
     assert(ks.toSet.subsetOf(Set("o_orderpriority")), ks.toString)
+  }
+
+  test("redskins pipeline: no shuffle anywhere, ≤ 4 jobs, the golden shape and content") {
+    import graft.pipeline.RedskinsPipeline
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val fixtures = getClass.getResource("/fixtures").getPath
+    val df = RedskinsPipeline.run(
+      RedskinsPipeline.loadNflCsv(spark, s"$fixtures/nfl"),
+      RedskinsPipeline.loadElectionsCsv(spark, s"$fixtures/elections/elections.csv"),
+      RedskinsPipeline.electionDaysDf(spark, 1976, 2020))
+    val (rows, counts) = JobCounter(spark.sparkContext)(df.collect())
+    // the three single-partition sources satisfy every dropDuplicates,
+    // window and sort requirement: the 3 broadcasts plus the result
+    assert(counts.jobs <= 4, counts.toString)
+    def nodes(pl: SparkPlan): Seq[SparkPlan] = pl.flatMap {
+      case q: QueryStageExec => nodes(q.plan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case n => Seq(n)
+    }
+    val shuffles = nodes(df.queryExecution.executedPlan).collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.isEmpty, df.queryExecution.executedPlan.toString)
+    val wrong = rows.filterNot(_.getAs[Boolean]("prediction_results"))
+      .map(_.getAs[java.sql.Date]("elec_date").toString.take(4)).toSet
+    assert(rows.length == 12 && wrong == Set("2012", "2016") &&
+      rows.forall(_.getAs[String]("team") == "Washington"), rows.mkString("\n"))
+    // SHA-256 over the rows in output order, fields rendered with toString:
+    // the golden parquet's content, pinned here where that file is absent
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    rows.foreach(r => md.update((r.toSeq.map(String.valueOf).mkString("\u0001") + "\n")
+      .getBytes("UTF-8")))
+    assert(md.digest().map("%02x".format(_)).mkString ==
+      "92e7ab8b48fc4d011cbb9496667c36d4baa413702d65e7db2f0412bc92ff02a5")
   }
 
   test("q81 partition prune: only the 2 selected source directories are read, zero shuffle") {

@@ -14,6 +14,10 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // Spark's generated-class cache defaults to 100 entries (segmented,
+      // so it evicts earlier); one catalog round compiles ~250 classes, so
+      // every repeated plan shape recompiled. 1000 keeps them resident.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // reclaim unreferenced localCheckpoint/shuffle blocks MID-SUITE: the
       // default periodic-GC interval (30 min) outlives the whole run, so
       // checkpoint blocks from the funnel/MMR/cluster specs piled up until
