@@ -733,7 +733,7 @@ object MultimodalOps {
     val fs = new org.apache.hadoop.fs.Path(artifactPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(artifactPath))
-    graft.ops.ArtifactSwap.writeManifest(fs, artifactPath, "phash_layout",
+    graft.ops.Similarity.writeLines(fs, s"$artifactPath/phash_layout",
       Seq(s"layout=${chosen}x${64 / chosen}", s"mass_4x16=$mass4",
         s"mass_2x32=$mass2", s"sampled_wide_recall_ppm=$recallPpm"))
     chosen

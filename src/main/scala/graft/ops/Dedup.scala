@@ -168,7 +168,7 @@ object Dedup {
     * number. Same semantics as [[jaccardPairs]] when under budget
     * (OperatorSpec pins row-for-row identity); past the budget it refuses
     * LOUDLY with the measured mass and the prescriptions (the
-    * maybeSplitIvf refusal discipline applied to the dedup family):
+    * split step's refusal discipline applied to the dedup family):
     * collapse exact dups first (q42), go incremental (q129 — never
     * regenerates existing×existing), or raise the budget knowingly.
     * The guard is IN-PLAN (round-17 verdict's top demand — the eager
@@ -696,8 +696,7 @@ object Dedup {
 
   /** Segment list — the [[graft.ops.Retrieval.lexSegments]] convention:
     * a driver-side metadata listing of `seg*` dirs only, so an in-flight
-    * append's `_temporary` staging (and the compactor's `__compacting`
-    * scratch) is never read as data. */
+    * append's `_temporary` staging is never read as data. */
   private def containmentSegments(s: SparkSession, path: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -714,7 +713,7 @@ object Dedup {
     containmentSegments(s, path).map(s.read.parquet(_)).reduce(_ unionByName _)
 
   /** Segment count (0 when the root doesn't exist) — the size-tier input
-    * to [[maybeCompactContainment]]. */
+    * to [[maybeCompactContainmentVersioned]]. */
   def containmentSegmentCount(s: SparkSession, path: String): Int = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -724,73 +723,29 @@ object Dedup {
   }
 
   /** SIZE-TIERED COMPACTION for the containment-index artifact — the
-    * [[graft.ops.Retrieval.maybeCompactLex]] policy applied to the
-    * round-18 gap (containment segments never compacted: a year of daily
-    * appends is 365 segments, and the serve-side full-token explode plus
-    * per-segment listing grow with segment count). At ≤ `maxSegments`
-    * this is a metadata-only no-op (one driver listing). Past the tier it
-    * rewrites the SEGMENT UNION into one merged segment copy-on-write
-    * under `__compacting` (invisible to [[containmentSegments]]' `seg*`
-    * filter) and SWAPS under the [[ArtifactSwap]] commit protocol:
-    * retirement is manifest-precise (only the segments this call merged —
-    * a segment appended between the listing and a crash's recovery
-    * survives), the swap is committed by a marker written only after the
-    * scratch is complete, and [[recoverCompactContainment]] finishes a
-    * committed swap idempotently or discards an uncommitted scratch.
-    * The persisted RANK TABLE is untouched — df ranks are build-time
-    * constants of the artifact, so merged rows are byte-identical rows
-    * and serve-after ≡ serve-before exactly (OperatorSpec pins it).
-    * Single-writer maintenance between batches, the lexical cadence.
-    * Returns true iff a compaction (or a committed-swap recovery) ran. */
-  def maybeCompactContainment(s: SparkSession, path: String,
+    * [[graft.ops.Retrieval.maybeCompactLexVersioned]] policy applied to
+    * the round-18 gap (containment segments never compacted: a year of
+    * daily appends is 365 segments, and the serve-side full-token explode
+    * plus per-segment listing grow with segment count). At ≤ `maxSegments`
+    * segments under the published root of `base` this is a metadata-only
+    * no-op. Past the tier it stages the SEGMENT UNION as one merged
+    * segment beside the unchanged RANK TABLE in the next version and
+    * publishes it through [[RootPointer.maintain]]. df ranks are
+    * build-time constants of the artifact, so merged rows are
+    * byte-identical rows and serve-after ≡ serve-before exactly
+    * (OperatorSpec pins it). Call it between ingest batches (one writer
+    * per base). Returns true iff a compaction published. */
+  def maybeCompactContainmentVersioned(s: SparkSession, base: String,
       maxSegments: Int): Boolean = {
     require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$path/__compacting"
-    if (recoverCompactContainment(s, path)) return true
-    if (containmentSegmentCount(s, path) <= maxSegments) return false
-    val retireSegs = containmentSegments(s, path)
-    // the captured list IS the merge input (not re-listed inside), so the
-    // manifested set ≡ the merged set by construction
-    s.read.parquet(retireSegs: _*).select("doc_id", "hs", "nsh")
-      .write.mode("overwrite").parquet(s"$scratch/seg0")
-    ArtifactSwap.writeManifest(fs, scratch, ArtifactSwap.SegManifest, retireSegs)
-    ArtifactSwap.commit(fs, scratch)
-    finishContainSwap(fs, path, scratch)
-    true
-  }
-
-  /** Finish a COMMITTED containment compaction swap — idempotent from any
-    * crash point. Retirement runs only while the promote is still pending:
-    * the manifest names the OLD `$path/seg0`, and after the promote that
-    * same name IS the merged segment (the finishLexSwap argument). */
-  private def finishContainSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, scratch: String): Unit = {
-    val scratchSeg = new org.apache.hadoop.fs.Path(s"$scratch/seg0")
-    if (fs.exists(scratchSeg)) {
-      ArtifactSwap.retire(fs,
-        ArtifactSwap.readManifest(fs, scratch, ArtifactSwap.SegManifest))
-      fs.rename(scratchSeg, new org.apache.hadoop.fs.Path(s"$path/seg0"))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-  }
-
-  /** Crash recovery for [[maybeCompactContainment]]: a committed scratch
-    * finishes (idempotently), an uncommitted one is discarded — the live
-    * segments are untouched by construction in that window. Returns true
-    * iff a committed swap was finished. */
-  private[graft] def recoverCompactContainment(s: SparkSession,
-      path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$path/__compacting"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(scratch))) false
-    else if (ArtifactSwap.committed(fs, scratch)) {
-      finishContainSwap(fs, path, scratch); true
-    } else {
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true); false
-    }
+    RootPointer.maintain(s, base) { (cur, out) =>
+      containmentSegmentCount(s, cur) > maxSegments && {
+        s.read.parquet(containmentSegments(s, cur): _*).select("doc_id", "hs", "nsh")
+          .write.mode("overwrite").parquet(s"$out/seg0")
+        s.read.parquet(s"$cur/rank").write.mode("overwrite").parquet(s"$out/rank")
+        true
+      }
+    }.head
   }
 
   /** "Is any FRESH doc an excerpt of anything in the artifact (fresh

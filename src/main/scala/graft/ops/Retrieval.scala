@@ -320,7 +320,7 @@ object Retrieval {
   def lexIndexServe(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    lexFold(s, lexSegments(s, path), lexTombstoneUnion(s, ArtifactSwap.tombDirs(fs, path)))
+    lexFold(s, lexSegments(s, path), lexTombstoneUnion(s, Similarity.tombDirs(fs, path)))
   }
 
   /** [[lexIndexServe]]'s frames over EXPLICIT segments and delete set —
@@ -351,14 +351,13 @@ object Retrieval {
 
   /** LSM COMPACTION for the segmented lexical index: merge every segment
     * under `path` into a single `seg0` at `outPath` (copy-on-write — a new
-    * root, never an in-place rewrite of segments a concurrent serve may be
-    * reading; retiring the old root is the caller's swap step, the
-    * [[graft.streaming.VecStream.graphAppend]] convention). The merge is
-    * EXACT by the same additivity the serve-time fold relies on: postings
-    * are disjoint per-doc rows (concat), df and n_docs/tot_dl are long
-    * sums — so compacted ≡ segmented bit-for-bit (OperatorSpec gates the
-    * ranked output through a 10-segment round trip). This is what makes
-    * the LSM shape honest at a daily append cadence: without it the
+    * root, never a rewrite of segments a concurrent serve may be reading;
+    * [[maybeCompactLexVersioned]] stages it as the next version). The merge
+    * is EXACT by the same additivity the serve-time fold relies on:
+    * postings are disjoint per-doc rows (concat), df and n_docs/tot_dl are
+    * long sums — so compacted ≡ segmented bit-for-bit (OperatorSpec gates
+    * the ranked output through a 10-segment round trip). This is what
+    * makes the LSM shape honest at a daily append cadence: without it the
     * serve-time df fold grows linear in segment count; after it the fold
     * is one segment again, with the artifact's history cost reset to
     * O(corpus) once instead of O(appends) forever.
@@ -370,25 +369,11 @@ object Retrieval {
     * tombstones while concat-folding postings would RESURRECT deleted
     * docs — the one inconsistency the delete contract cannot survive. */
   def lexIndexCompact(s: SparkSession, path: String, outPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    lexIndexCompactFrom(s, path, outPath,
-      lexSegments(s, path), ArtifactSwap.tombDirs(fs, path))
-  }
-
-  /** [[lexIndexCompact]] under EXPLICIT segment/tombstone listings — the
-    * policy seam: [[maybeCompactLex]] manifests the lists it will retire
-    * and passes THE SAME lists here, so the merged set and the manifested
-    * set are identical by construction (two independent listings relied on
-    * the single-writer contract to agree; a segment or tombstone landing
-    * between them would have been merged but never retired — duplicate
-    * docs served from both the merged seg0 and the surviving old dir). */
-  private[graft] def lexIndexCompactFrom(s: SparkSession, path: String,
-      outPath: String, segs: Seq[String], tombs: Seq[String]): Unit = {
     require(outPath != path,
       "compaction is copy-on-write: outPath must be a new artifact root")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val segs = lexSegments(s, path)
     // validate the mixed-positional invariant BEFORE the first write: a
     // rejected compaction must leave NO artifact at outPath — a partial
     // seg0 (tf/df/stats but no pp) would be served position-less by
@@ -396,7 +381,7 @@ object Retrieval {
     val withPp = segs.filter(sg => fs.exists(new org.apache.hadoop.fs.Path(s"$sg/pp")))
     require(withPp.isEmpty || withPp.size == segs.size,
       s"mixed positional artifact: ${withPp.size}/${segs.size} segments carry pp")
-    val del = lexTombstoneUnion(s, tombs)
+    val del = lexTombstoneUnion(s, Similarity.tombDirs(fs, path))
     val (tf, df, stats) = lexFold(s, segs, del)
     tf.write.mode("overwrite").parquet(s"$outPath/seg0/tf")
     df.write.mode("overwrite").parquet(s"$outPath/seg0/df")
@@ -412,7 +397,7 @@ object Retrieval {
   }
 
   /** Segment count of a lexical-index artifact (0 when the root doesn't
-    * exist yet) — the size-tier input to [[maybeCompactLex]]. */
+    * exist yet) — the size-tier input to [[maybeCompactLexVersioned]]. */
   def lexSegmentCount(s: SparkSession, path: String): Int = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -426,129 +411,21 @@ object Retrieval {
     * long-running ingest degrades until an operator intervenes (the
     * measured cost: +75% serve latency at 10 segments, BASELINE.md
     * round-13/14 rows — this threshold check is that row turned into
-    * code). Counts `seg*` dirs under `path`; at ≤ `maxSegments` it is a
-    * metadata-only no-op (one driver-side listing per batch — the steady-
-    * state cost of self-maintenance). Past the threshold it compacts
-    * copy-on-write into a scratch root under the artifact (`__compacting`,
-    * invisible to [[lexSegments]]' `seg*` filter), then SWAPS: old
-    * segments and the physically-applied tombstones are retired and the
-    * merged seg0 is renamed in. The swap is the SINGLE-WRITER maintenance
-    * step of the LSM cadence (call between micro-batches, the
-    * [[graft.streaming.DocStream.lexAppendBatch]] wiring) — frames served
-    * BEFORE the swap keep reading the old segment files they resolved;
+    * code). Counts `seg*` dirs under the published root of `base`; at
+    * ≤ `maxSegments` it is a metadata-only no-op. Past the threshold it
+    * compacts the published root into the next version and publishes it
+    * through [[RootPointer.maintain]]: readers resolve a published,
+    * immutable root per serve and never observe the compaction, and
     * serve-after ≡ serve-before bit-for-bit by the compactor's exact
     * additive merge (gated in DocStreamSpec through a forced multi-batch
-    * drain). NEW serves must not START mid-swap: the in-place swap assumes
-    * the serving process coordinates with the maintenance window (the
-    * single-writer, single-serving-process deployment this policy
-    * targets); a multi-process serving fleet should roll roots forward
-    * copy-on-write instead (the [[graft.streaming.DocStream
-    * .clusterAppendBatch]] convention). Crash safety is the
-    * [[ArtifactSwap]] commit protocol: the swap is committed by a marker
-    * written only after the scratch is complete, retirement is manifest-
-    * precise (ONLY the segments the compactor merged and ONLY the
-    * tombstones it applied — a segment appended or a tombstone written
-    * after the crash survives recovery), and [[recoverCompactLex]]
-    * finishes a committed swap idempotently or discards an uncommitted
-    * scratch. Returns true iff a compaction ran. */
-  def maybeCompactLex(s: SparkSession, path: String, maxSegments: Int): Boolean = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$path/__compacting"
-    if (recoverCompactLex(s, path)) return true
-    if (lexSegmentCount(s, path) <= maxSegments) return false
-    // manifests BEFORE compacting: segments are single-writer (this call
-    // sits in the append stream's foreachBatch), and tombstones listed now
-    // are a SUBSET of what the compactor applies (append-only between the
-    // listings) — retiring a subset is safe, a superset is not
-    val retireSegs = lexSegments(s, path)
-    val appliedTombs = ArtifactSwap.tombDirs(fs, path)
-    // the captured lists ARE the compactor's inputs (not re-listed inside)
-    // — manifested set ≡ merged set by construction
-    lexIndexCompactFrom(s, path, scratch, retireSegs, appliedTombs)
-    ArtifactSwap.writeManifest(fs, scratch, ArtifactSwap.SegManifest, retireSegs)
-    ArtifactSwap.writeManifest(fs, scratch, ArtifactSwap.TombManifest, appliedTombs)
-    ArtifactSwap.commit(fs, scratch)
-    finishLexSwap(fs, path, scratch)
-    true
-  }
-
-  /** The FLEET form of [[maybeCompactLex]] — compaction through the
-    * [[RootPointer]] protocol (see [[graft.ops.Similarity
-    * .maybeMaintainIvfVersioned]], the same clone → maintain-unpublished →
-    * publish shape): readers resolve a published, immutable root per
-    * serve and can never observe the swap. Returns true iff a compaction
-    * ran (and therefore a new version published). */
+    * drain). Call it between ingest batches — the one-writer-per-base
+    * contract. Returns true iff a compaction published. */
   def maybeCompactLexVersioned(s: SparkSession, base: String,
       maxSegments: Int): Boolean = {
-    RootPointer.cleanStaging(s, base)
-    val cur = RootPointer.resolve(s, base)
-    val next = RootPointer.nextVersion(s, base)
-    val staging = s"$base/$next"
-    RootPointer.copyDir(s, cur, staging)
-    new org.apache.hadoop.fs.Path(staging).getFileSystem(
-      s.sparkContext.hadoopConfiguration).delete(
-      new org.apache.hadoop.fs.Path(s"$staging/${RootPointer.Complete}"), true)
-    val acted = maybeCompactLex(s, staging, maxSegments)
-    if (acted) RootPointer.publish(s, base, next)
-    else RootPointer.cleanStaging(s, base)
-    acted
-  }
-
-  /** Finish a COMMITTED lex compaction swap — idempotent from any crash
-    * point: re-deletes manifest remnants, promotes scratch/seg0 if it is
-    * still in the scratch. */
-  private def finishLexSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, scratch: String): Unit = {
-    val scratchSeg = new org.apache.hadoop.fs.Path(s"$scratch/seg0")
-    // seg retirement ONLY while the promote is still pending: the manifest
-    // contains the OLD "$path/seg0" — after the promote that same name IS
-    // the merged segment, and a recovery re-run that retired it again
-    // would destroy the only copy
-    if (fs.exists(scratchSeg)) {
-      ArtifactSwap.retire(fs,
-        ArtifactSwap.readManifest(fs, scratch, ArtifactSwap.SegManifest))
-      require(fs.rename(scratchSeg, new org.apache.hadoop.fs.Path(s"$path/seg0")),
-        s"compaction swap failed: could not promote $scratch/seg0 into $path")
-    }
-    // tombstone retirement is idempotent on either side of the promote:
-    // the manifest lists only APPLIED tombstones
-    ArtifactSwap.retire(fs,
-      ArtifactSwap.readManifest(fs, scratch, ArtifactSwap.TombManifest))
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-  }
-
-  /** Finish or discard an interrupted lex compaction swap (callable on its
-    * own — [[graft.streaming.DocStream.lexAppendBatch]] runs it BEFORE
-    * appending, so a post-crash batch can never be confused with, or
-    * destroyed by, the unfinished swap's retirement). Returns true iff a
-    * committed swap was finished. */
-  private[graft] def recoverCompactLex(s: SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$path/__compacting"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(scratch))) return false
-    if (ArtifactSwap.committed(fs, scratch)) {
-      finishLexSwap(fs, path, scratch)
-      true
-    } else if (lexSegmentCount(s, path) == 0 &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$scratch/seg0"))) {
-      // MIGRATION fallback: a swap crashed under the pre-marker protocol
-      // left the scratch seg0 as the only copy with every live segment
-      // already retired — finish it under the legacy semantics instead of
-      // destroying the sole copy as "uncommitted"
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$scratch/seg0"),
-        new org.apache.hadoop.fs.Path(s"$path/seg0")),
-        s"legacy compaction recovery failed: could not promote $scratch/seg0 into $path")
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      true
-    } else {
-      // uncommitted: the live inputs are untouched by construction
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      false
-    }
+    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
+    RootPointer.maintain(s, base) { (cur, out) =>
+      lexSegmentCount(s, cur) > maxSegments && { lexIndexCompact(s, cur, out); true }
+    }.head
   }
 
   /** q113: BM25 SERVED FROM THE PERSISTED LEXICAL-INDEX ARTIFACT — q101's
@@ -1735,11 +1612,11 @@ object Retrieval {
     * versioned maintenance → grace retirement → resolve) under EXACTLY
     * q95's oracle. Build: a two-segment lexical artifact (q115's 4/5 cut)
     * staged into the next version dir and published; then
-    * [[maybeCompactLexVersioned]] acts (2 segments > the tier), cloning
-    * into a NEW published version; then the grace window retires all but
-    * the last two roots. Serve: [[RootPointer.resolve]] once, rank from
-    * whatever root the pointer names. The gate composes three identities:
-    * the pointer must name the COMPACTED clone (a stale resolve would
+    * [[maybeCompactLexVersioned]] acts (2 segments > the tier), staging
+    * the compaction as a NEW published version; then the grace window
+    * retires all but the last two roots. Serve: [[RootPointer.resolve]]
+    * once, rank from whatever root the pointer names. The gate composes
+    * three identities: the pointer must name the COMPACTED version (a stale resolve would
     * still hash-match only because compaction is exact — so the spec-side
     * pointer tests pin freshness), compaction ≡ segmented fold ≡ full
     * rebuild (the q115/compactor identities), and resolution must never
@@ -1834,7 +1711,7 @@ object Retrieval {
     ("q138_rag_served", q138RagServed _, Some(q138Sql)),
     ("q147_rag_full", q147RagFull _, Some(q147Sql)),
     // the pointer lifecycle closes under q95's oracle: the resolved root
-    // is the compacted clone, and compacted ≡ segmented ≡ rebuild
+    // is the compacted version, and compacted ≡ segmented ≡ rebuild
     ("q148_versioned_served", q148VersionedServed _, Some(TextOps.q95Sql)),
   )
 }

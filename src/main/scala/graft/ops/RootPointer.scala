@@ -1,28 +1,32 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
-/** VERSIONED-ROOT SERVING POINTER — the mechanism that makes the
-  * single-writer / many-readers contract enforceable instead of
-  * documented: the in-place maintenance swaps ([[graft.ops.Similarity
-  * .maybeMaintainIvf]], [[graft.ops.Retrieval.maybeCompactLex]]) assume
-  * one serving process coordinating the maintenance window; a FLEET of
-  * readers cannot coordinate, so maintenance must roll roots forward
-  * copy-on-write and flip a pointer. This object is that pointer.
+/** VERSIONED-ROOT SERVING POINTER — the one crash-safe protocol by which
+  * an artifact changes: a writer stages a complete new version, then
+  * publishes it. Readers resolve a published root per serve and never
+  * observe a version being built.
   *
   * Layout under a `base` directory:
   * {{{
-  *   base/v00001/...        # a complete artifact root (immutable once published)
+  *   base/v00001/...        # a complete artifact root (published, immutable)
   *   base/v00001/_ROOT_COMPLETE
-  *   base/v00002/...        # the next root being staged (no marker yet)
+  *   base/v00002/...        # a maintenance step's output (no marker yet)
+  *   base/v00003/...        # the next chained step's output, read from v00002
   *   base/_CURRENT          # tiny file naming the published version
   * }}}
   *
-  * WRITER protocol (single maintenance writer, the policies' contract):
+  * WRITER protocol (one writer per base, in sequence):
   *  1. stage the full artifact into `base/v<next>`;
   *  2. [[publish]] — writes `_ROOT_COMPLETE` into the version dir, THEN
   *     updates `_CURRENT`.
+  * Every maintenance action (compaction, split, merge) runs through
+  * [[maintain]], which chains copy-on-write steps through unpublished
+  * versions and publishes only the last. A crash anywhere before the
+  * publish leaves unmarked dirs that the next window's [[cleanStaging]]
+  * deletes; there is nothing to recover.
+  *
   * READER protocol: [[resolve]] once per serve, then read only under the
   * resolved root. A reader can NEVER observe an incomplete root:
   *  - the pointer is only ever updated AFTER the completeness marker, so
@@ -31,15 +35,11 @@ import org.apache.spark.sql.SparkSession
   *    a tiny create-overwrite), [[resolve]] falls back to the NEWEST
   *    version carrying `_ROOT_COMPLETE`, which is either the old current
   *    (marker order) or the new one — both complete;
-  *  - published roots are IMMUTABLE: maintenance never touches them, so
-  *    a serve that resolved v1 keeps reading consistent files even while
-  *    v2 publishes and after the pointer flips (retirement is the only
-  *    mutation, and it honors a grace window — [[retireOld]]).
-  *
-  * The price of reader isolation is one artifact copy per maintenance
-  * window (the clone the versioned policies stage into) — the documented
-  * fleet trade; the in-place policies remain the single-process economy
-  * path. */
+  *  - published roots are never rewritten: ingest only ADDS new immutable
+  *    files to the current root (segments, tombstone dirs, appended code
+  *    parts), so a serve that resolved v1 keeps reading consistent files
+  *    while v2 publishes and after the pointer flips (retirement honors a
+  *    grace window — [[retireOld]]). */
 object RootPointer {
   val Pointer = "_CURRENT"
   val Complete = "_ROOT_COMPLETE"
@@ -142,14 +142,68 @@ object RootPointer {
     victims.sorted
   }
 
-  /** Recursive dir copy (Hadoop FileUtil) — the clone step of a versioned
-    * maintenance pass. */
-  private[graft] def copyDir(s: SparkSession, src: String, dst: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val sp = new Path(src); val dp = new Path(dst)
-    val fs = sp.getFileSystem(conf)
-    require(fs.exists(sp), s"copyDir: missing source $src")
-    require(org.apache.hadoop.fs.FileUtil.copy(fs, sp, fs, dp, false, conf),
-      s"copyDir: failed $src -> $dst")
+  /** ONE MAINTENANCE WINDOW over `base`. Each step is a copy-on-write
+    * kernel `(prev, out) => acted`: it reads the previous root and, when
+    * its tier fires, writes a complete new root into the fresh unpublished
+    * version `out` (returning false leaves nothing — a partial `out` is
+    * deleted). Steps chain in order, each reading the last acting step's
+    * output, starting from the resolved current root. The window then
+    * publishes the last acting step's version, or nothing, and deletes
+    * the intermediate versions.
+    *
+    * Root-level plain files the acting step did not write (the
+    * `_VARIANT_RESIDUAL` marker) carry into its version; directories are
+    * the kernel's to write.
+    *
+    * Contract: one writer per base, in sequence. Ingest between windows
+    * only adds files to the current root, so the window compares that
+    * root's file listing before publishing: a file that appeared (or
+    * vanished) during the window — a concurrent delete or append the
+    * staged version never saw — makes the publish REFUSE with an
+    * IllegalStateException instead of silently dropping (or resurrecting)
+    * rows. Any failure leaves the current root serving and no staging.
+    * Returns each step's acted flag. */
+  private[graft] def maintain(s: SparkSession, base: String)(
+      steps: ((String, String) => Boolean)*): Seq[Boolean] = {
+    val fs = fsOf(s, base)
+    cleanStaging(s, base)
+    val cur = resolve(s, base)
+    val before = listing(fs, cur)
+    try {
+      var prev = cur
+      val acted = steps.map { step =>
+        val out = s"$base/${nextVersion(s, base)}"
+        val did = step(prev, out)
+        if (did) { carryFiles(s, fs, prev, out); prev = out }
+        else fs.delete(new Path(out), true)
+        did
+      }
+      if (prev != cur) {
+        if (listing(fs, cur) != before)
+          throw new IllegalStateException(
+            s"$cur changed during the maintenance window (one writer per base): " +
+              "refusing to publish a version that does not contain the change")
+        publish(s, base, new Path(prev).getName)
+      }
+      acted
+    } finally cleanStaging(s, base) // intermediates, or everything on failure
   }
+
+  /** (relative path, length) of every file under `root`. */
+  private def listing(fs: FileSystem, root: String): Set[(String, Long)] = {
+    val it = fs.listFiles(new Path(root), true)
+    val prefix = fs.makeQualified(new Path(root)).toString
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(st => (st.getPath.toString.stripPrefix(prefix), st.getLen)).toSet
+  }
+
+  private def carryFiles(s: SparkSession, fs: FileSystem, prev: String,
+      out: String): Unit =
+    fs.listStatus(new Path(prev))
+      .filter(st => st.isFile && st.getPath.getName != Complete)
+      .map(st => (st.getPath, new Path(out, st.getPath.getName)))
+      .filter { case (_, dst) => !fs.exists(dst) }
+      .foreach { case (src, dst) =>
+        FileUtil.copy(fs, src, fs, dst, false, s.sparkContext.hadoopConfiguration)
+      }
 }

@@ -1036,17 +1036,10 @@ object Similarity {
     * re-encoding split/merge audit to 0, and the PLAIN split applied to
     * the same content audits > 0 (the corruption the refusal rail
     * exists to prevent, made visible). */
-  def residualAuditMismatches(s: SparkSession, root: String, emb: DataFrame): Long =
-    residualAuditMismatchesAt(s, s"$root/cents", s"$root/books", s"$root/codes", emb)
-
-  /** The audit with each artifact path explicit — the policy route audits
-    * its SCRATCH (cents/codes staged, books still at the live root)
-    * BEFORE committing the swap, so a re-encode bug can never publish. */
-  private[graft] def residualAuditMismatchesAt(s: SparkSession, centsPath: String,
-      booksPath: String, codesPath: String, emb: DataFrame): Long = {
-    val cents = s.read.parquet(centsPath)
-    val books = s.read.parquet(booksPath)
-    val codes = s.read.parquet(codesPath)
+  def residualAuditMismatches(s: SparkSession, root: String, emb: DataFrame): Long = {
+    val cents = s.read.parquet(s"$root/cents")
+    val books = s.read.parquet(s"$root/books")
+    val codes = s.read.parquet(s"$root/codes")
     val routedRaw = codes.select("vec_id", "cell")
       .join(emb.select("vec_id", "e"), Seq("vec_id"))
     val expect = residualEncode(books, residualAgainstRouted(cents, routedRaw))
@@ -1058,7 +1051,7 @@ object Similarity {
   /** RE-ENCODING CELL SPLIT for residual artifacts — the capability
     * behind the variant rail: identical routing algebra to
     * [[ivfCellSplitArtifact]] (same [[localTwoMeans]] kernel, hot-cell
-    * choice, cents-first write order, coverage requires), plus the step
+    * choice, coverage requires), plus the step
     * the plain split doesn't need — EVERY member of a split cell
     * re-encodes its residual against its new routed centroid under the
     * FROZEN books (sub-0 members too: the parent centroid moved).
@@ -1072,7 +1065,7 @@ object Similarity {
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val hotCells = occ.sortBy { case (c, n) => (-n, c) }.take(splitCells).map(_._1)
-    splitResidualCore(s, root, outRoot, emb, hotCells, occ, copyAux = true)
+    splitResidualCore(s, root, outRoot, emb, hotCells, occ)
     ()
   }
 
@@ -1082,8 +1075,7 @@ object Similarity {
     * centroid under the FROZEN books. Returns per-hot-cell (kept, moved)
     * counts for the policy's no-progress guard. */
   private def splitResidualCore(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, hotCells: Seq[Long], occ: Seq[(Long, Long)],
-      copyAux: Boolean): Map[Long, (Long, Long)] = {
+      emb: DataFrame, hotCells: Seq[Long], occ: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
     require(outRoot != root,
       "cell split is copy-on-write: outRoot must be a new artifact root")
     import s.implicits._
@@ -1119,13 +1111,11 @@ object Similarity {
       moved.join(members.select("vec_id", "e"), Seq("vec_id"))))
     val codesOut = codes.filter(!col("cell").isin(hotCells: _*))
       .unionByName(reenc.select(codes.columns.map(col): _*))
-    centsOut.write.mode("overwrite").parquet(s"$outRoot/cents") // FIRST (contract)
+    centsOut.write.mode("overwrite").parquet(s"$outRoot/cents")
     codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
-    if (copyAux) {
-      books.write.mode("overwrite").parquet(s"$outRoot/books")
-      copyTombstones(s, root, outRoot)
-      markResidual(s, outRoot)
-    }
+    books.write.mode("overwrite").parquet(s"$outRoot/books")
+    copyTombstones(s, root, outRoot)
+    markResidual(s, outRoot)
     val out = hotCells.map { c =>
       c -> ((subCountRows.getOrElse((c, 0L), 0L), subCountRows.getOrElse((c, 1L), 0L)))
     }.toMap
@@ -1143,18 +1133,16 @@ object Similarity {
       "plain artifact: use ivfCellMergeArtifact (codes are routing-independent there)")
     val occ = mergeOccupancy(s, root)
     val coldCells = occ.sortBy { case (c, n) => (n, c) }.take(mergeCells).map(_._1)
-    mergeResidualCore(s, root, outRoot, emb, coldCells, occ, copyAux = true)
+    mergeResidualCore(s, root, outRoot, emb, coldCells, occ)
     coldCells
   }
 
   /** The residual merge body, parameterized for the policy path (the
     * [[mergeCore]] convention): survivors' centroids are untouched, so
     * ONLY the moved members re-encode (against their nearest surviving
-    * centroid) under the FROZEN books. Same codes-before-cents write
-    * order as the plain merge — the [[finishMergeSwap]] contract. */
+    * centroid) under the FROZEN books. */
   private def mergeResidualCore(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, coldCells: Seq[Long], occ: Seq[(Long, Long)],
-      copyAux: Boolean): Unit = {
+      emb: DataFrame, coldCells: Seq[Long], occ: Seq[(Long, Long)]): Unit = {
     require(outRoot != root,
       "cell merge is copy-on-write: outRoot must be a new artifact root")
     if (coldCells.isEmpty) return
@@ -1182,41 +1170,42 @@ object Similarity {
       moved.join(members.select("vec_id", "e"), Seq("vec_id"))))
     val codesOut = codes.filter(!col("cell").isin(coldCells: _*))
       .unionByName(reenc.select(codes.columns.map(col): _*))
-    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes") // FIRST (contract)
+    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
     survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
-    if (copyAux) {
-      books.write.mode("overwrite").parquet(s"$outRoot/books")
-      copyTombstones(s, root, outRoot)
-      markResidual(s, outRoot)
-    }
+    books.write.mode("overwrite").parquet(s"$outRoot/books")
+    copyTombstones(s, root, outRoot)
+    markResidual(s, outRoot)
     members.unpersist(false)
   }
 
   // --------------------------------------------------------------- q160
   /** q160: THE RESIDUAL ARTIFACT SERVED WITH DELETES COMPACTED,
     * ORACLE-GATED — the q127 lifecycle applied to the residual family:
-    * build the residual trio ([[residualParts]]), persist, mark the root
-    * as residual-encoded, plant the q127 delete set as two tombstone
-    * batches, COMPACT (routing- and code-INDEPENDENT — the only
-    * maintenance policy that is exact for residual codes, since it only
-    * drops rows), and serve from the compacted artifacts with NO delete
-    * logic on the serve path. Oracle: q75's chain minus the deleted ids
-    * (q160Sql) — identical results require the compaction to have
-    * dropped exactly the tombstoned rows and NOTHING else, and the
-    * persisted cents/books/codes to round-trip bit-exactly. The
-    * geometry-changing policies refuse this root by marker
-    * (OperatorSpec pins the refusal + the append differential). */
+    * build the residual trio ([[residualParts]]) into a version dir, mark
+    * it residual-encoded, plant the q127 delete set as two tombstone
+    * batches, publish, COMPACT through the versioned policy (the split
+    * tier at 100% cannot fire and the merge tier is off, so compaction —
+    * routing- and code-INDEPENDENT, it only drops rows — is the one step
+    * that acts), and serve from the resolved compacted root with NO
+    * delete logic on the serve path. Oracle: q75's chain minus the
+    * deleted ids (q160Sql) — identical results require the compaction to
+    * have dropped exactly the tombstoned rows and NOTHING else, and the
+    * persisted cents/books/codes to round-trip bit-exactly. */
   def q160ResidualServed(s: SparkSession, d: String): DataFrame = {
-    val root = s"${knnGraphServePath(d)}/ivfresid"
+    val base = s"${knnGraphServePath(d)}/ivfresid"
     val (cents, books, codes) = residualPartsCached(s, d)
     val emb = embWithNorm(s, d).select("vec_id", "e")
     val dels = emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= AdcQueries)
       .select("vec_id")
-    writeIvfArtifacts(root, cents, books, codes,
+    val v = RootPointer.nextVersion(s, base)
+    writeIvfArtifacts(s"$base/$v", cents, books, codes,
       "t0" -> dels.filter(col("vec_id") % 2 === 0),
       "t1" -> dels.filter(col("vec_id") % 2 =!= 0))
-    markResidual(s, root)
-    maybeCompactIvf(s, root, maxTombstones = 1)
+    markResidual(s, s"$base/$v")
+    RootPointer.publish(s, base, v)
+    maybeMaintainIvfVersioned(s, base, emb, maxTombstones = 1, maxSharePpm = 1000000L)
+    RootPointer.retireOld(s, base, keep = 2)
+    val root = RootPointer.resolve(s, base)
     residualSearchFrom(s.read.parquet(s"$root/cents"),
       s.read.parquet(s"$root/books"), s.read.parquet(s"$root/codes"),
       emb.filter(col("vec_id") < AdcQueries))
@@ -1233,7 +1222,7 @@ object Similarity {
     * deterministically) — the policy now ROUTES to the re-encoding merge
     * core ([[mergeResidualCore]]: moved members re-encode against their
     * nearest surviving centroid under the FROZEN books), AUDITS the staged
-    * artifact against the residual invariant before the swap commits,
+    * version against the residual invariant before it can publish,
     * publishes through [[RootPointer]], and retires the old root after
     * grace. Serve is [[residualSearchFrom]] at production nprobe from
     * whatever resolve returns.
@@ -1275,8 +1264,8 @@ object Similarity {
     * (every cell is over-tier, so the [[SplitHotCells]] hottest cells
     * split deterministically through [[splitResidualCore]] — moved AND
     * kept members re-encode against their new routed centroids under the
-    * FROZEN books), audit the staged scratch against the residual
-    * invariant before the swap commits, publish through [[RootPointer]],
+    * FROZEN books), audit the staged version against the residual
+    * invariant before it can publish, publish through [[RootPointer]],
     * retire after grace, and serve from whatever resolve returns.
     *
     * The split's driver-local 2-means is NOT SQL-expressible, so the
@@ -1289,7 +1278,7 @@ object Similarity {
     * (a dropped, duplicated, or unreachable row after the rewrite, a
     * corrupted publish/resolve, a wrong id) while the re-encode
     * arithmetic — which full-probe refine deliberately ranks past — is
-    * gated by the pre-swap audit inside [[maybeSplitIvf]] (a staged
+    * gated by the pre-publish audit inside [[splitStep]] (a staged
     * re-encode bug throws, never publishes) plus the OperatorSpec
     * served ≡ direct-core differential at production nprobe. */
   def q165ResidualSplitServed(s: SparkSession, d: String): DataFrame = {
@@ -3304,7 +3293,7 @@ object Similarity {
   }
 
   /** Tombstone-file count under an IVF-PQ artifact root (0 when none) —
-    * the size-tier input to [[maybeCompactIvf]]. */
+    * the size-tier input to [[maybeMaintainIvfVersioned]]'s compaction. */
   def ivfTombstoneCount(s: SparkSession, root: String): Int = {
     val tombRoot = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     val fs = tombRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -3323,9 +3312,18 @@ object Similarity {
   private[graft] def tombstoneUnion(s: SparkSession, root: String): Option[DataFrame] = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tombs = ArtifactSwap.tombDirs(fs, root)
+    val tombs = tombDirs(fs, root)
     if (tombs.isEmpty) None
     else Some(s.read.schema(IvfTombSchema).parquet(tombs: _*))
+  }
+
+  /** The tombstone dirs under an artifact root (lexical or IVF), sorted. */
+  private[graft] def tombDirs(fs: org.apache.hadoop.fs.FileSystem,
+      root: String): Seq[String] = {
+    val tomb = new org.apache.hadoop.fs.Path(s"$root/tombstones")
+    if (!fs.exists(tomb)) Seq.empty
+    else fs.listStatus(tomb).filter(_.isDirectory)
+      .map(_.getPath.toString).sorted.toSeq
   }
 
   /** The code table of an IVF-PQ root minus its tombstoned vectors. */
@@ -3340,175 +3338,6 @@ object Similarity {
   private def copyTombstones(s: SparkSession, root: String, outRoot: String): Unit =
     tombstoneUnion(s, root).foreach(
       _.distinct().write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
-
-  /** Finish a COMMITTED ivf compaction swap — idempotent from any crash
-    * point. Codes retirement is gated on the promote still pending (after
-    * the rename, `$root/codes` IS the compacted table — a re-run that
-    * deleted it again would destroy the only copy); the delete also
-    * covers a PARTIALLY-deleted live dir (fs.delete of a parquet dir is
-    * not atomic on a local filesystem — pre-marker recovery treated the
-    * remnant as intact and recompacted from it, silently losing the
-    * already-deleted part files' vectors). Tombstone retirement is
-    * manifest-precise: only the files the compactor applied are deleted,
-    * so a tombstone written concurrently by the delete stream between the
-    * compactor's listing and the retire survives unapplied-but-intact
-    * instead of being destroyed (destroying it would resurrect its docs). */
-  private def finishIvfCompactSwap(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, scratch: String): Unit = {
-    val scratchCodes = new org.apache.hadoop.fs.Path(s"$scratch/codes")
-    val codesPath = new org.apache.hadoop.fs.Path(s"$root/codes")
-    if (fs.exists(scratchCodes)) {
-      fs.delete(codesPath, true)
-      require(fs.rename(scratchCodes, codesPath),
-        s"compaction swap failed: could not promote $scratch/codes into $root")
-    }
-    ArtifactSwap.retire(fs,
-      ArtifactSwap.readManifest(fs, scratch, ArtifactSwap.TombManifest))
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-  }
-
-  /** Finish or discard an interrupted COMPACTION swap (the recovery half
-    * of [[maybeCompactIvf]], callable on its own — the [[ArtifactSwap]]
-    * commit protocol). Any artifact writer (appends included) must run
-    * this BEFORE touching `codes`: an append into the missing-codes
-    * window would both recreate the dir a later recovery replaces (losing
-    * the batch) and shadow the recovery condition. Returns true iff a
-    * committed swap was finished. */
-  private[graft] def recoverCompactIvf(s: SparkSession, root: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$root/__compacting"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(scratch))) return false
-    if (ArtifactSwap.committed(fs, scratch)) {
-      finishIvfCompactSwap(fs, root, scratch)
-      true
-    } else if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/codes")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$scratch/codes/_SUCCESS"))) {
-      // MIGRATION fallback: a swap crashed under the pre-marker protocol
-      // (no _COMMIT was ever written) can still hold the only copy —
-      // missing live codes + complete scratch codes is that state; finish
-      // it under the legacy semantics (whole-dir tombstone retirement —
-      // the legacy compactor applied everything it listed) instead of
-      // destroying the sole copy as "uncommitted"
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$scratch/codes"),
-        new org.apache.hadoop.fs.Path(s"$root/codes")),
-        s"legacy compaction recovery failed: could not promote $scratch/codes into $root")
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/tombstones"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      true
-    } else {
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      false
-    }
-  }
-
-  /** Finish a COMMITTED split swap — idempotent from any crash point:
-    * each half (cents, then codes) retires-and-promotes only while its
-    * scratch copy is still present (after a rename, the live name IS the
-    * new artifact — re-deleting it on a recovery re-run would destroy the
-    * only copy), and the delete covers partially-deleted live dirs
-    * (fs.delete is not atomic on a local filesystem). Promote order is
-    * cents first: new cents + old codes serve consistently (every old
-    * cell id still exists; the new sub-cell is merely empty until codes
-    * promote), whereas new codes + old cents would route rows to a
-    * centroid that doesn't exist — rows silently unreachable. */
-  private def finishSplitSwap(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, scratch: String): Unit = {
-    val scratchCents = new org.apache.hadoop.fs.Path(s"$scratch/cents")
-    val centsPath = new org.apache.hadoop.fs.Path(s"$root/cents")
-    if (fs.exists(scratchCents)) {
-      fs.delete(centsPath, true)
-      require(fs.rename(scratchCents, centsPath),
-        s"split swap failed: could not promote $scratch/cents into $root")
-    }
-    val scratchCodes = new org.apache.hadoop.fs.Path(s"$scratch/codes")
-    val codesPath = new org.apache.hadoop.fs.Path(s"$root/codes")
-    if (fs.exists(scratchCodes)) {
-      fs.delete(codesPath, true)
-      require(fs.rename(scratchCodes, codesPath),
-        s"split swap failed: could not promote $scratch/codes into $root")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-  }
-
-  /** Finish or discard an interrupted SPLIT swap (the recovery half of
-    * [[maybeSplitIvf]], callable on its own — the [[ArtifactSwap]] commit
-    * protocol). Returns true iff a committed swap was finished. */
-  private[graft] def recoverSplitIvf(s: SparkSession, root: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$root/__splitting"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(scratch))) return false
-    if (ArtifactSwap.committed(fs, scratch)) {
-      finishSplitSwap(fs, root, scratch)
-      true
-    } else {
-      // MIGRATION fallback (pre-marker protocol — no _COMMIT was ever
-      // written): the legacy write order (cents before codes) still
-      // identifies a mid-swap crash — live cents missing with a complete
-      // scratch, or scratch cents already renamed away with complete
-      // scratch codes. Finish those instead of destroying the only copy.
-      val scOk = fs.exists(new org.apache.hadoop.fs.Path(s"$scratch/cents/_SUCCESS"))
-      val sdOk = fs.exists(new org.apache.hadoop.fs.Path(s"$scratch/codes/_SUCCESS"))
-      val centsMissing = !fs.exists(new org.apache.hadoop.fs.Path(s"$root/cents"))
-      if ((sdOk && scOk && centsMissing) || (sdOk && !scOk)) {
-        finishSplitSwap(fs, root, scratch)
-        true
-      } else {
-        // genuinely uncommitted: the live artifact is untouched by
-        // construction — discard; the next policy call re-evaluates
-        // occupancy and re-splits if needed
-        fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-        false
-      }
-    }
-  }
-
-  /** SIZE-TIERED RECLAMATION POLICY for the IVF-PQ artifact — the vector
-    * mirror of [[graft.ops.Retrieval.maybeCompactLex]]: [[ivfCodesCompact]]
-    * runs only when called, so a long-running delete stream grows one
-    * tombstone file per batch forever (the serve-side anti-join unions all
-    * of them) until an operator intervenes. Counts tombstone files; at
-    * ≤ `maxTombstones` it is a metadata-only no-op. Past the threshold it
-    * compacts copy-on-write into a scratch root under the artifact, then
-    * SWAPS: the live code table replaces `codes` and the tombstones dir is
-    * retired (cents/books are untouched — the frozen-quantizer contract
-    * means compaction never rewrites either). Single-writer maintenance
-    * step, run between micro-batches ([[graft.streaming.VecStream
-    * .tombstoneBatch]]'s wiring); serve-after ≡ tombstoned-serve-before by
-    * the compactor's contract (the anti-join was the only thing the
-    * tombstones changed). Frames served BEFORE the swap keep reading the
-    * files they resolved; NEW serves must not START mid-swap — the
-    * in-place swap assumes a single serving process coordinating the
-    * maintenance window (a multi-process fleet should roll roots forward
-    * copy-on-write instead, the clusterAppendBatch convention). Crash
-    * safety is the [[ArtifactSwap]] commit protocol (see
-    * [[recoverCompactIvf]]). Returns true iff a compaction ran. */
-  def maybeCompactIvf(s: SparkSession, root: String, maxTombstones: Int): Boolean = {
-    require(maxTombstones >= 1, s"maxTombstones must be >= 1, got $maxTombstones")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$root/__compacting"
-    // crash recovery BEFORE the tier check (the maybeCompactLex contract)
-    // — ALL the policies' recoveries, because each only recognizes its own
-    // scratch: an interrupted SPLIT or MERGE swap leaves codes missing,
-    // and this policy's own compactor would throw PATH_NOT_FOUND on every
-    // retry before a later sibling-policy call could ever heal it.
-    recoverSplitIvf(s, root)
-    recoverMergeIvf(s, root)
-    if (recoverCompactIvf(s, root)) return true
-    if (ivfTombstoneCount(s, root) <= maxTombstones) return false
-    // manifest BEFORE compacting: tombstones listed now are a SUBSET of
-    // what the compactor applies (append-only between the listings) —
-    // retiring a subset is safe, a wildcard delete of the tombstones dir
-    // would destroy a concurrently-written UNAPPLIED tombstone
-    val appliedTombs = ArtifactSwap.tombDirs(fs, root)
-    ivfCodesCompact(s, root, scratch)
-    ArtifactSwap.writeManifest(fs, scratch, ArtifactSwap.TombManifest, appliedTombs)
-    ArtifactSwap.commit(fs, scratch)
-    finishIvfCompactSwap(fs, root, scratch)
-    true
-  }
 
   /** ARTIFACT-LEVEL HOT-CELL SPLIT — q141's maintenance action applied to
     * the persisted q74-family index (cents/books/codes under `root`),
@@ -3533,11 +3362,6 @@ object Similarity {
     * written). Tombstones, if present, transfer as their deduplicated
     * union (delete semantics are routing-independent — vec_id keyed).
     *
-    * WRITE ORDER CONTRACT: cents is written to `outRoot` BEFORE codes —
-    * [[maybeSplitIvf]]'s crash recovery depends on it (a complete scratch
-    * codes with missing scratch cents can only mean the cents rename
-    * already happened).
-    *
     * The exactness gate (OperatorSpec): FULL-PROBE serving from the split
     * artifact ≡ full-probe serving pre-split bit-for-bit — a split changes
     * only WHERE rows are routed, never what the index contains — plus
@@ -3552,19 +3376,17 @@ object Similarity {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val hotCells = occ.sortBy { case (c, n) => (-n, c) }
       .take(splitCells).map(_._1)
-    splitCore(s, root, outRoot, emb, hotCells, occ, copyAux = true)
+    splitCore(s, root, outRoot, emb, hotCells, occ)
     ()
   }
 
   /** The split body, parameterized for the policy path: `occ` is the
     * occupancy the caller already computed (the policy's tier check reads
     * it anyway — recomputing would scan the corpus-sized codes table
-    * twice), and `copyAux = false` skips the books/tombstones copies the
-    * policy swap would delete unread (it promotes only cents and codes;
-    * books/tombstones stay in place at `root`). */
+    * twice). Returns per-hot-cell (kept, moved) counts for the policy's
+    * no-progress guard. */
   private def splitCore(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, hotCells: Seq[Long], occ: Seq[(Long, Long)],
-      copyAux: Boolean): Map[Long, (Long, Long)] = {
+      emb: DataFrame, hotCells: Seq[Long], occ: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
     require(outRoot != root,
       "cell split is copy-on-write: outRoot must be a new artifact root")
     import s.implicits._
@@ -3595,7 +3417,7 @@ object Similarity {
     // per-hot-cell (kept, moved) counts — a tiny agg over the CACHED hot
     // members (never the corpus): gates which centroid rows are written
     // below, and the policy's progress test reads them instead of
-    // re-scanning the corpus-sized scratch codes table
+    // re-scanning the corpus-sized staged codes table
     val subCountRows = finalLocal.groupBy("cell", "sub").count().collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val newIdExpr = hotCells.foldLeft(lit(-1L)) { (acc, c) =>
@@ -3618,12 +3440,10 @@ object Similarity {
     val codesOut = codes.filter(!col("cell").isin(hotCells: _*))
       .unionByName(codes.filter(col("cell").isin(hotCells: _*))
         .drop("cell").join(moved, Seq("vec_id")))
-    centsOut.write.mode("overwrite").parquet(s"$outRoot/cents") // FIRST (contract)
+    centsOut.write.mode("overwrite").parquet(s"$outRoot/cents")
     codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
-    if (copyAux) {
-      s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
-      copyTombstones(s, root, outRoot)
-    }
+    s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
+    copyTombstones(s, root, outRoot)
     val out = hotCells.map { c =>
       c -> ((subCountRows.getOrElse((c, 0L), 0L), subCountRows.getOrElse((c, 1L), 0L)))
     }.toMap
@@ -3631,45 +3451,18 @@ object Similarity {
     out
   }
 
-  /** SHARE-TIERED SPLIT POLICY for the IVF-PQ artifact — the q132→q141
-    * audit→maintain loop wired the way [[maybeCompactIvf]] wires
-    * reclamation: the occupancy check is one nlist-row agg; at max cell
-    * share ≤ `maxSharePpm` (ppm of corpus rows, the q132 unit) it is a
-    * no-op. Past the tier it splits copy-on-write into a scratch root and
-    * SWAPS — cents first, then codes. The ORDER is the crash-safety
-    * argument: new cents + old codes serve consistently (every old cell id
-    * still exists; the new sub-cell is merely empty until codes promote),
-    * whereas new codes + old cents would route rows to a centroid that
-    * doesn't exist — rows silently unreachable. Combined with
-    * [[ivfCellSplitArtifact]]'s scratch write order (cents before codes),
-    * every crash window recovers unambiguously:
-    *  - scratch codes complete + live cents missing → finish both renames;
-    *  - scratch codes complete + scratch cents GONE → the cents rename
-    *    already happened → finish the codes half (covers both the
-    *    codes-retired and codes-not-yet-retired windows);
-    *  - anything else → stale partial scratch beside an intact artifact —
-    *    discard it.
-    * A crash between the cents and codes promotes that recovery resolves
-    * by discarding leaves new cents + old codes: consistent and servable;
-    * the next policy call re-evaluates the (unchanged) occupancy and
-    * re-splits. Occupancy counts PHYSICAL code rows — compact tombstones
-    * first ([[maybeCompactIvf]]) if deletes are in flight. Single-writer
-    * maintenance, run between micro-batches. Returns true iff a split (or
-    * a crash recovery) ran. */
-  def maybeSplitIvf(s: SparkSession, root: String, emb: DataFrame,
-      maxSharePpm: Long, splitCells: Int = SplitHotCells): Boolean = {
-    require(maxSharePpm >= 1 && maxSharePpm <= 1000000,
-      s"maxSharePpm must be in [1, 1000000], got $maxSharePpm")
-    val fs = new org.apache.hadoop.fs.Path(root)
+  /** SHARE-TIERED SPLIT STEP of [[maybeMaintainIvfVersioned]] — the
+    * q132→q141 audit→maintain loop: the occupancy check is one nlist-row
+    * agg over `cur`; at max cell share ≤ `maxSharePpm` (ppm of corpus
+    * rows, the q132 unit) it is a no-op. Past the tier it splits the
+    * over-tier cells copy-on-write into `out`. Occupancy counts PHYSICAL
+    * code rows, which is why the window compacts first. Returns true iff
+    * a split was staged. */
+  private def splitStep(s: SparkSession, base: String, cur: String, out: String,
+      emb: DataFrame, maxSharePpm: Long): Boolean = {
+    val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$root/__splitting"
-    val scratchPath = new org.apache.hadoop.fs.Path(scratch)
-    // ALL recoveries first — another policy's interrupted swap leaves
-    // codes missing, which would wedge this one's occupancy read forever
-    recoverCompactIvf(s, root)
-    recoverMergeIvf(s, root)
-    if (recoverSplitIvf(s, root)) return true
-    val occ = s.read.parquet(s"$root/codes").groupBy("cell")
+    val occ = s.read.parquet(s"$cur/codes").groupBy("cell")
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val total = occ.map(_._2).sum
@@ -3680,64 +3473,80 @@ object Similarity {
     // grow the cell count forever without touching the problem
     val hotCells = occ
       .filter { case (_, n) => n * 1000000L / total > maxSharePpm }
-      .sortBy { case (c, n) => (-n, c) }.take(splitCells).map(_._1)
+      .sortBy { case (c, n) => (-n, c) }.take(SplitHotCells).map(_._1)
     if (hotCells.isEmpty) return false
-    // REFUSAL MEMO: an irreducible hot set (identical-vector lists — the
-    // 2-means can't separate them) would otherwise re-run the full split
-    // attempt (2-means + corpus-sized codes rewrite into scratch) on EVERY
-    // policy call while the tier stays exceeded. The memo records the
-    // refused (cell, count) signature; while occupancy is unchanged the
-    // attempt is skipped for free. Appends and compactions change a
-    // PHYSICAL count and re-arm the attempt; a delete alone only writes a
-    // tombstone file (physical occupancy — the memo signature — is
-    // unchanged), so deletes re-arm only once compacted. That staleness
-    // is benign: a tombstoned identical-vector list is still irreducible
-    // until its rows actually leave the codes table.
+    // REFUSAL MEMO (beside the pointer — it outlives versions): an
+    // irreducible hot set (identical-vector lists — the 2-means can't
+    // separate them) would otherwise re-run the full split attempt
+    // (2-means + corpus-sized codes rewrite) on EVERY window while the tier
+    // stays exceeded. The memo records the refused (cell, count)
+    // signature; while occupancy is unchanged the attempt is skipped for
+    // free. Appends and compactions change a PHYSICAL count and re-arm the
+    // attempt; a delete alone only writes a tombstone file, so deletes
+    // re-arm only once compacted. That staleness is benign: a tombstoned
+    // identical-vector list is still irreducible until its rows actually
+    // leave the codes table.
+    val memo = s"$base/$SplitRefusedMemo"
     val sig = hotCells.map(c => s"$c:${occ.toMap.apply(c)}")
-    if (ArtifactSwap.readManifest(fs, root, SplitRefusedMemo) == sig) return false
-    // variant dispatch AFTER the tier decision (round-17 verdict #2: the
-    // policy used to refuse a residual root here — correct-by-refusal but
-    // a residual deployment had no policy-driven rebalance): a residual
-    // root routes to the re-encoding split core, and the scratch is
-    // AUDITED against the residual invariant before the swap can commit
-    val residual = isResidualRoot(s, root)
+    if (readLines(fs, memo) == sig) return false
+    // a residual root routes to the re-encoding split core, and the staged
+    // version is AUDITED against the residual invariant before it can
+    // publish
+    val residual = isResidualRoot(s, cur)
     val subCounts =
-      if (residual) splitResidualCore(s, root, scratch, emb, hotCells, occ, copyAux = false)
-      else splitCore(s, root, scratch, emb, hotCells, occ, copyAux = false)
+      if (residual) splitResidualCore(s, cur, out, emb, hotCells, occ)
+      else splitCore(s, cur, out, emb, hotCells, occ)
     // NO-PROGRESS GUARD, per split cell: a cell actually split iff BOTH
     // halves are non-empty (all-in-one-half means the 2-means was
     // degenerate for that cell — e.g. identical vectors, coinciding
-    // seeds). If NO hot cell split, swapping would change nothing and the
-    // tier would re-fire forever; refuse, memoize, and leave the artifact
-    // untouched. A partial split (some cells real, some degenerate) lands:
-    // occupancy changes, so the next call re-evaluates honestly.
+    // seeds). If NO hot cell split, publishing would change nothing and
+    // the tier would re-fire forever; refuse and memoize. A partial split
+    // (some cells real, some degenerate) lands: occupancy changes, so the
+    // next call re-evaluates honestly.
     if (!subCounts.values.exists { case (keep, move) => keep > 0 && move > 0 }) {
-      fs.delete(scratchPath, true)
-      ArtifactSwap.writeManifest(fs, root, SplitRefusedMemo, sig)
-      return false // irreducible hot set: the tier is the wrong lever here
+      writeLines(fs, memo, sig)
+      return false
     }
-    if (residual) {
-      // pre-commit audit: every staged code row must equal the frozen-book
-      // encode of its vector's residual against its ROUTED (staged)
-      // centroid — a re-encode bug dies HERE, never as a published root
-      val bad = residualAuditMismatchesAt(s, s"$scratch/cents",
-        s"$root/books", s"$scratch/codes", emb)
-      if (bad != 0L) {
-        fs.delete(scratchPath, true)
-        throw new IllegalStateException(
-          s"residual split scratch failed the invariant audit: $bad rows' " +
-            "codes are not the frozen-book encode of x - c(routed cell); " +
-            "scratch discarded, live artifact untouched")
-      }
-    }
-    ArtifactSwap.commit(fs, scratch)
-    finishSplitSwap(fs, root, scratch)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$SplitRefusedMemo"), true)
+    if (residual) auditStaged(s, out, emb, "split")
+    fs.delete(new org.apache.hadoop.fs.Path(memo), true)
     true
   }
 
-  /** Name of the split policy's refusal memo file under the artifact root. */
-  private val SplitRefusedMemo = "__split_refused"
+  /** Name of the split step's refusal memo, beside the base's pointer. */
+  private val SplitRefusedMemo = "_SPLIT_REFUSED"
+
+  /** Pre-publish audit of a staged residual rebalance: every staged code
+    * row must equal the frozen-book encode of its vector's residual
+    * against its ROUTED (staged) centroid — a re-encode bug dies HERE
+    * (the window then discards the staging), never as a published root. */
+  private def auditStaged(s: SparkSession, out: String, emb: DataFrame,
+      action: String): Unit = {
+    val bad = residualAuditMismatches(s, out, emb)
+    if (bad != 0L) throw new IllegalStateException(
+      s"residual $action staging failed the invariant audit: $bad rows' " +
+        "codes are not the frozen-book encode of x - c(routed cell); " +
+        "staging discarded, published root untouched")
+  }
+
+  /** A small line-list file (memo or manifest): empty when absent. */
+  private[graft] def readLines(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!fs.exists(p)) Seq.empty
+    else {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map(_.trim).filter(_.nonEmpty).toList
+      finally in.close()
+    }
+  }
+
+  private[graft] def writeLines(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, lines: Seq[String]): Unit = {
+    val o = fs.create(new org.apache.hadoop.fs.Path(path), true)
+    try o.write(lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally o.close()
+  }
 
   /** q142: THE SPLIT ARTIFACT SERVED, ORACLE-GATED — the catalog face of
     * [[ivfCellSplitArtifact]]: build the q74-family artifacts, split the
@@ -3771,7 +3580,7 @@ object Similarity {
 
   /** How many of the coldest cells q144 merges (the bottom-m mirror of
     * [[SplitHotCells]] — deterministic, always exercises the machinery;
-    * the production knob is [[maybeMergeIvf]]'s share tier). */
+    * the production knob is [[maybeMaintainIvfVersioned]]'s floor tier). */
   private val MergeColdCells = 2
 
   /** ARTIFACT-LEVEL UNDERFULL-CELL MERGE — the INVERSE of the q141/q142
@@ -3809,7 +3618,7 @@ object Similarity {
     require(!isResidualRoot(s, root), residualRefusal("merging"))
     val occ = mergeOccupancy(s, root)
     val cold = occ.sortBy { case (c, n) => (n, c) }.take(mergeCells).map(_._1)
-    mergeCore(s, root, outRoot, emb, cold, occ, copyAux = true)
+    mergeCore(s, root, outRoot, emb, cold, occ)
     cold
   }
 
@@ -3828,17 +3637,9 @@ object Similarity {
 
   /** The merge body, parameterized for the policy path (the [[splitCore]]
     * convention): `occ` is the full-universe occupancy the caller already
-    * computed; `copyAux = false` skips the books/tombstones copies the
-    * policy swap leaves in place at `root`. Writes codes BEFORE cents —
-    * the crash-recovery contract is the MIRROR of the split's ([[
-    * finishMergeSwap]]): new codes + old cents serve consistently (every
-    * code row routes to a surviving id that old cents still lists; the
-    * merged-away centroid is merely dead weight until cents promotes),
-    * whereas new cents + old codes would route the cold rows to centroids
-    * that no longer exist — rows silently unreachable. */
+    * computed. */
   private def mergeCore(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, coldCells: Seq[Long], occ: Seq[(Long, Long)],
-      copyAux: Boolean): Unit = {
+      emb: DataFrame, coldCells: Seq[Long], occ: Seq[(Long, Long)]): Unit = {
     require(outRoot != root,
       "cell merge is copy-on-write: outRoot must be a new artifact root")
     if (coldCells.isEmpty) return
@@ -3878,115 +3679,35 @@ object Similarity {
       }
     val codesOut = codes.filter(!col("cell").isin(coldCells: _*))
       .unionByName(movedOut)
-    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes") // FIRST (contract)
+    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
     survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
-    if (copyAux) {
-      s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
-      copyTombstones(s, root, outRoot)
-    }
+    s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
+    copyTombstones(s, root, outRoot)
   }
 
-  /** Finish a COMMITTED merge swap — idempotent from any crash point, each
-    * half gated on its scratch copy still being present (after a rename
-    * the live name IS the new artifact; re-deleting it would destroy the
-    * only copy), deletes covering partially-deleted live dirs. Promote
-    * order is codes first — the MIRROR of [[finishSplitSwap]]'s argument:
-    * new codes + old cents serve consistently (the merged-away centroid is
-    * merely empty until cents promotes; every code row's cell survives in
-    * old cents), whereas new cents + old codes would leave the cold rows
-    * routed to centroids that no longer exist — silently unreachable. */
-  private def finishMergeSwap(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, scratch: String): Unit = {
-    val scratchCodes = new org.apache.hadoop.fs.Path(s"$scratch/codes")
-    val codesPath = new org.apache.hadoop.fs.Path(s"$root/codes")
-    if (fs.exists(scratchCodes)) {
-      fs.delete(codesPath, true)
-      require(fs.rename(scratchCodes, codesPath),
-        s"merge swap failed: could not promote $scratch/codes into $root")
-    }
-    val scratchCents = new org.apache.hadoop.fs.Path(s"$scratch/cents")
-    val centsPath = new org.apache.hadoop.fs.Path(s"$root/cents")
-    if (fs.exists(scratchCents)) {
-      fs.delete(centsPath, true)
-      require(fs.rename(scratchCents, centsPath),
-        s"merge swap failed: could not promote $scratch/cents into $root")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-  }
-
-  /** Finish or discard an interrupted MERGE swap — the [[ArtifactSwap]]
-    * commit protocol, no legacy fallback (the merge never shipped under
-    * the pre-marker heuristic). Returns true iff a committed swap was
-    * finished. */
-  private[graft] def recoverMergeIvf(s: SparkSession, root: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$root/__merging"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(scratch))) return false
-    if (ArtifactSwap.committed(fs, scratch)) {
-      finishMergeSwap(fs, root, scratch)
-      true
-    } else {
-      // uncommitted: the live artifact is untouched by construction
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      false
-    }
-  }
-
-  /** SHARE-TIERED MERGE POLICY — the reclamation half of the q132→q141
-    * audit→maintain loop the split left open: cells whose LIVE share falls
-    * below `minSharePpm` (ppm of corpus rows, the q132 unit; EMPTY cells
-    * — share 0 — first) fold into their nearest surviving centroids,
-    * coldest-first, at most `mergeCells` per call (bounded maintenance
-    * slices, the SplitHotCells convention). Copy-on-write into a scratch
-    * root, commit marker, then SWAP — codes first, then cents (see
-    * [[finishMergeSwap]] for why the order is the split's mirror). A crash
-    * between the promotes that recovery resolves by finishing leaves new
-    * codes + old cents: consistent and servable. Occupancy counts PHYSICAL
-    * code rows — compact tombstones first ([[maybeCompactIvf]]) if deletes
-    * are in flight, or a mostly-dead list reads hotter than it is. No
-    * refusal memo is needed (the split's degenerate case has no analogue:
-    * a merge of a nonempty cold set always changes occupancy, and an
-    * all-cold index refuses loudly below). Single-writer maintenance, run
-    * between micro-batches. Returns true iff a merge (or an interrupted-
-    * merge recovery) ran. */
-  def maybeMergeIvf(s: SparkSession, root: String, emb: DataFrame,
-      minSharePpm: Long, mergeCells: Int = MergeColdCells): Boolean = {
-    require(minSharePpm >= 1 && minSharePpm <= 1000000,
-      s"minSharePpm must be in [1, 1000000], got $minSharePpm")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val scratch = s"$root/__merging"
-    // ALL recoveries first (the cross-policy healing contract): another
-    // policy's interrupted swap leaves codes or cents missing, which would
-    // wedge this one's occupancy read forever
-    recoverCompactIvf(s, root)
-    recoverSplitIvf(s, root)
-    if (recoverMergeIvf(s, root)) return true
-    val occ = mergeOccupancy(s, root)
+  /** SHARE-TIERED MERGE STEP of [[maybeMaintainIvfVersioned]] — the
+    * reclamation half of the q132→q141 audit→maintain loop: cells whose
+    * share of `cur`'s rows falls below `minSharePpm` (EMPTY cells — share
+    * 0 — first) fold into their nearest surviving centroids, coldest-first,
+    * at most [[MergeColdCells]] per window (bounded maintenance slices).
+    * No refusal memo is needed (the split's degenerate case has no
+    * analogue: a merge of a nonempty cold set always changes occupancy,
+    * and an all-cold index is refused below). Returns true iff a merge was
+    * staged. */
+  private def mergeStep(s: SparkSession, cur: String, out: String,
+      emb: DataFrame, minSharePpm: Long): Boolean = {
+    val occ = mergeOccupancy(s, cur)
     val total = occ.map(_._2).sum
     if (total == 0L) return false
     val cold = occ
       .filter { case (_, n) => n * 1000000L / total < minSharePpm }
-      .sortBy { case (c, n) => (n, c) }.take(mergeCells).map(_._1)
+      .sortBy { case (c, n) => (n, c) }.take(MergeColdCells).map(_._1)
     if (cold.isEmpty) return false
     if (cold.size == occ.size) return false // all-cold: merge is the wrong lever
-    // variant dispatch (round-17 verdict #2): a residual root routes to
-    // the re-encoding merge core, audited before the swap commits
-    if (isResidualRoot(s, root)) {
-      mergeResidualCore(s, root, scratch, emb, cold, occ, copyAux = false)
-      val bad = residualAuditMismatchesAt(s, s"$scratch/cents",
-        s"$root/books", s"$scratch/codes", emb)
-      if (bad != 0L) {
-        fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-        throw new IllegalStateException(
-          s"residual merge scratch failed the invariant audit: $bad rows' " +
-            "codes are not the frozen-book encode of x - c(routed cell); " +
-            "scratch discarded, live artifact untouched")
-      }
-    } else mergeCore(s, root, scratch, emb, cold, occ, copyAux = false)
-    ArtifactSwap.commit(fs, scratch)
-    finishMergeSwap(fs, root, scratch)
+    if (isResidualRoot(s, cur)) {
+      mergeResidualCore(s, cur, out, emb, cold, occ)
+      auditStaged(s, out, emb, "merge")
+    } else mergeCore(s, cur, out, emb, cold, occ)
     true
   }
 
@@ -4024,24 +3745,24 @@ object Similarity {
     * build the q74-family artifacts INTO a version dir, plant the q127
     * delete set as tombstones, publish through the [[RootPointer]]
     * protocol, then run the versioned maintenance window — resolve,
-    * CLONE into the next unpublished version, compact/split/merge the
-    * clone in place (tombstone tier 0 forces the compactor to ACT, so a
-    * publish always happens; the split tier stays live), publish, retire
-    * the old root after grace — and serve top-k from whatever
-    * [[RootPointer.resolve]] returns.
+    * stage the compaction as the next version (two tombstone files over
+    * the smallest tier force the compactor to ACT, so a publish always
+    * happens; the split tier stays live), publish, retire the old root
+    * after grace — and serve top-k from whatever [[RootPointer.resolve]]
+    * returns.
     *
     * Oracle: q127's EXACTLY — compaction must make the plain serve (no
     * delete logic anywhere on the serve path) IDENTICAL to the old
     * root's tombstoned serve at the SAME nprobe, so the gate catches
     * resurrection (a compaction that copies segments but drops
-    * tombstones), any clone/publish corruption, and a resolve that lands
+    * tombstones), any staging/publish corruption, and a resolve that lands
     * on an incomplete root. The split tier is deliberately set AT 100% (a cell cannot strictly exceed it)
     * (geometry-PRESERVING window): q127's oracle models nprobe-bounded
     * probing over the original k-means cells, so only the
     * routing-invariant policy (compaction) may act here — the
     * geometry-changing policies have their own full-probe gates
-    * (q142/q144), and PolicySpec covers their composition. OperatorSpec
-    * adds the mid-swap reader claim: a frame planned against the
+    * (q142/q144), and OperatorSpec covers their composition. OperatorSpec
+    * adds the mid-window reader claim: a frame planned against the
     * PRE-maintenance resolve still serves identical rows AFTER
     * maintenance publishes and retirement runs (published roots are
     * immutable; grace keeps them). */
@@ -4067,70 +3788,43 @@ object Similarity {
       emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"))
   }
 
-  /** The COMBINED maintenance pass a long-running index actually runs:
-    * reclamation BEFORE rebalance — compaction first, so the split's and
-    * merge's occupancy counts LIVE rows (uncompacted tombstones inflate a
-    * cell's physical share: a hot-looking dead list could split, a
-    * mostly-dead list could dodge its merge). Then split, then merge —
-    * rebalance both ways in one quiet window; a split never produces an
-    * under-floor half the same pass folds back (the 2-means halves a cell
-    * ABOVE the split tier, and policy tiers satisfy floor ≪ ceiling/2 —
-    * the PolicySpec round-trip pins a planted skew surviving the
-    * composition). One call per quiet window (between micro-batches); each
-    * third is individually crash-safe, and because each policy's entry
-    * ALSO runs the others' recoveries (an interrupted swap leaves codes or
-    * cents missing — an unhealed sibling would throw PATH_NOT_FOUND on
-    * every retry and wedge the artifact until the right policy happened to
-    * run), any crash inside any third is healed by the next call to
-    * anything. Returns (compacted, split — true also when an interrupted
-    * split swap was finished, merged). */
-  /** The FLEET form of [[maybeMaintainIvf]] — maintenance through the
-    * [[RootPointer]] versioned-root protocol, so a fleet of readers never
-    * coordinates with (or even notices) a maintenance window: resolve the
-    * current published root, CLONE it into the next version dir, run the
-    * in-place policy composition on the UNPUBLISHED clone (single-writer
-    * by construction — nobody can resolve it before the marker), and
-    * publish the clone iff any policy acted; otherwise delete it. Crashed
-    * stagings (no completeness marker) are cleaned first; published roots
-    * are immutable, so a reader that resolved pre-flip keeps serving
-    * consistent files, and [[RootPointer.retireOld]] reclaims them after
-    * the caller's grace window. The clone costs one artifact copy per
-    * ACTING maintenance window — the documented reader-isolation trade
-    * (object stores copy server-side; the in-place policies remain the
-    * single-process economy path). Returns the policy triple. */
+  /** VERSIONED IVF MAINTENANCE — the combined pass a long-running index
+    * runs, as ONE [[RootPointer.maintain]] window over `base`, so a fleet
+    * of readers never coordinates with (or even notices) it. Three
+    * chained copy-on-write steps, each reading the previous acting step's
+    * version:
+    *  1. compaction ([[ivfCodesCompact]]) when the published root carries
+    *     more than `maxTombstones` tombstone files — reclamation BEFORE
+    *     rebalance, so the split's and merge's occupancy counts LIVE rows
+    *     (uncompacted tombstones inflate a cell's physical share: a
+    *     hot-looking dead list could split, a mostly-dead list could dodge
+    *     its merge);
+    *  2. the split ([[splitStep]]) past the `maxSharePpm` ceiling;
+    *  3. the merge ([[mergeStep]]) below the `minSharePpm` floor (0 = off).
+    * A split never produces an under-floor half the same pass folds back
+    * (the 2-means halves a cell ABOVE the split tier, and policy tiers
+    * satisfy floor ≪ ceiling/2 — the OperatorSpec composition case pins a
+    * planted skew surviving the pass). Compaction and appends are exact on
+    * a residual root; its split and merge take the re-encoding cores and
+    * audit the staged version before it can publish. The last acting
+    * step's version publishes; published roots stay immutable, and
+    * [[RootPointer.retireOld]] reclaims them after the caller's grace
+    * window. Call it between ingest batches (one writer per base).
+    * Returns (compacted, split, merged). */
   def maybeMaintainIvfVersioned(s: SparkSession, base: String, emb: DataFrame,
       maxTombstones: Int, maxSharePpm: Long,
       minSharePpm: Long = 0L): (Boolean, Boolean, Boolean) = {
-    RootPointer.cleanStaging(s, base)
-    val cur = RootPointer.resolve(s, base)
-    val next = RootPointer.nextVersion(s, base)
-    val staging = s"$base/$next"
-    RootPointer.copyDir(s, cur, staging)
-    // the clone carries the published root's completeness marker — strip
-    // it so a crash mid-maintenance can never be resolved as published
-    new org.apache.hadoop.fs.Path(staging).getFileSystem(
-      s.sparkContext.hadoopConfiguration).delete(
-      new org.apache.hadoop.fs.Path(s"$staging/${RootPointer.Complete}"), true)
-    val out @ (c, sp, m) = maybeMaintainIvf(s, staging, emb,
-      maxTombstones, maxSharePpm, minSharePpm)
-    if (c || sp || m) RootPointer.publish(s, base, next)
-    else RootPointer.cleanStaging(s, base)
-    out
-  }
-
-  def maybeMaintainIvf(s: SparkSession, root: String, emb: DataFrame,
-      maxTombstones: Int, maxSharePpm: Long,
-      minSharePpm: Long = 0L): (Boolean, Boolean, Boolean) = {
-    // heal any interrupted swap before the compactor reads codes — each
-    // policy's internal recovery handles the others' scratches too, but
-    // running them explicitly first makes the composition's first artifact
-    // read safe regardless of which policy crashed last time
-    val healedSplit = recoverSplitIvf(s, root)
-    recoverMergeIvf(s, root)
-    val compacted = maybeCompactIvf(s, root, maxTombstones)
-    val split = maybeSplitIvf(s, root, emb, maxSharePpm)
-    val merged = minSharePpm > 0L && maybeMergeIvf(s, root, emb, minSharePpm)
-    (compacted, healedSplit || split, merged)
+    require(maxTombstones >= 1, s"maxTombstones must be >= 1, got $maxTombstones")
+    require(maxSharePpm >= 1 && maxSharePpm <= 1000000,
+      s"maxSharePpm must be in [1, 1000000], got $maxSharePpm")
+    require(minSharePpm >= 0 && minSharePpm <= 1000000,
+      s"minSharePpm must be in [0, 1000000], got $minSharePpm")
+    val Seq(compacted, split, merged) = RootPointer.maintain(s, base)(
+      (cur, out) => ivfTombstoneCount(s, cur) > maxTombstones &&
+        { ivfCodesCompact(s, cur, out); true },
+      (cur, out) => splitStep(s, base, cur, out, emb, maxSharePpm),
+      (cur, out) => minSharePpm > 0L && mergeStep(s, cur, out, emb, minSharePpm))
+    (compacted, split, merged)
   }
 
   lazy val q127Sql: String =
@@ -5161,7 +4855,7 @@ object Similarity {
     ("q163_residual_rebalance", q163ResidualRebalanceServed _, Some(q163Sql)),
     // split tier through the versioned policy; full-probe + exact refine
     // closes under the brute-force oracle (geometry-blind by design — the
-    // re-encode is gated by the pre-swap audit + the OperatorSpec
+    // re-encode is gated by the pre-publish audit + the OperatorSpec
     // served ≡ direct-core differential)
     ("q165_residual_split", q165ResidualSplitServed _, Some(q165Sql)),
     ("q77_opq_ivfpq", q77OpqIvfPq _, Some(q77Sql)),

@@ -1609,7 +1609,7 @@ object TextOps {
     }
   }
 
-  /** OOV-TRIGGERED TOKENIZER RETRAIN — the `maybeMaintainIvf` refusal/
+  /** OOV-TRIGGERED TOKENIZER RETRAIN — the `maybeMaintainIvfVersioned` refusal/
     * tier pattern applied to the vocabulary artifact, closing the drift
     * loop q156 + the streaming monitor only OBSERVED: measure the
     * batch's fallback share under the RESOLVED vocab (the q145 kernel's

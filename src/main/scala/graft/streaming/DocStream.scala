@@ -390,27 +390,12 @@ object DocStream {
     * (DocStreamSpec): the q115 additivity identity (postings are per-doc
     * rows, df/n_docs/tot_dl are sums) gives exactness with no
     * approximation, and each segment is immutable so a concurrent serve
-    * never sees a torn write. `maxSegments > 0` makes the fold
-    * SELF-MAINTAINING: after each append the size-tiered policy
-    * ([[graft.ops.Retrieval.maybeCompactLex]]) counts segments and — past
-    * the threshold — compacts and swaps in place, so a long-running ingest
-    * never degrades toward the measured +75%-at-10-segments serve cost
-    * without an operator in the loop. The check is one driver-side
-    * listing per batch; the swap runs inside this foreachBatch call, i.e.
-    * between micro-batches — exactly the single-writer window the policy's
-    * contract requires. Default 0 keeps the manual cadence (stream
-    * appends, compact off-peak). */
-  def lexAppendBatch(s: SparkSession, path: String, batch: DataFrame, seg: String,
-      maxSegments: Int = 0): Unit = {
-    // heal any interrupted compaction swap BEFORE appending: with the
-    // manifest-precise retirement a post-crash segment would survive
-    // recovery anyway, but recovering first keeps the invariant simple —
-    // a batch never lands inside a half-finished swap
-    graft.ops.Retrieval.recoverCompactLex(s, path)
+    * never sees a torn write. On a versioned base, append into the
+    * resolved root and run [[graft.ops.Retrieval.maybeCompactLexVersioned]]
+    * between batches to keep the segment count under a tier. */
+  def lexAppendBatch(s: SparkSession, path: String, batch: DataFrame, seg: String): Unit =
     graft.ops.Retrieval.lexIndexAppend(s, path,
       batch.select(col("doc_id"), split(col("text"), " ").as("w")), seg)
-    if (maxSegments > 0) graft.ops.Retrieval.maybeCompactLex(s, path, maxSegments)
-  }
 
   /** Fold a DELETE micro-batch into the segmented lexical index — the
     * streaming half of the q126 tombstone contract, and the same
@@ -422,13 +407,8 @@ object DocStream {
     * over the union of tombstone files, so streamed deletes ≡ one batch
     * delete bit-for-bit for any batching (DocStreamSpec). Physical
     * reclamation stays the compaction's job (q126's no-resurrection
-    * contract).
-    *
-    * Batch tombstone files are written errorifexists (the VecStream
-    * convention): immutable files with provably unique names are what the
-    * compaction's manifest-precise retirement assumes — a reused name in a
-    * committed swap's TombManifest would be deleted by a recovery re-run,
-    * destroying a fresh unapplied tombstone and resurrecting its deletes. */
+    * contract). Batch tombstone files are written errorifexists: a
+    * published root only ever gains files, never has one rewritten. */
   def tombstoneBatch(s: SparkSession, path: String, ids: DataFrame, name: String): Unit =
     graft.ops.Retrieval.lexTombRows(ids).write.mode("errorifexists")
       .parquet(s"$path/tombstones/$name")

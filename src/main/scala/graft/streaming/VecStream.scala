@@ -203,75 +203,31 @@ object VecStream {
     * [[graft.streaming.DocStream.tombstoneBatch]]: each batch of deleted
     * vec_ids lands as its own tiny immutable tombstone file under the
     * artifact root (cents/books/codes never rewritten, the frozen-
-    * quantizer contract), the serve-side anti-join folds over the
-    * tombstone-file union, and physical reclamation stays
-    * [[graft.ops.Similarity.ivfCodesCompact]]'s job. */
-  /** `maxTombstones > 0` wires in the size-tiered reclamation policy
-    * ([[graft.ops.Similarity.maybeCompactIvf]]) so a long-running delete
-    * stream self-maintains — the serve-side anti-join's tombstone union
-    * stays bounded instead of growing one file per batch forever; the
-    * swap runs inside this foreachBatch call (the single-writer window),
-    * mirroring [[graft.streaming.DocStream.lexAppendBatch]]'s wiring. */
-  def tombstoneBatch(ids: DataFrame, root: String, name: String,
-      maxTombstones: Int = 0): Unit = {
-    // errorifexists: tombstone files are IMMUTABLE and names provably
-    // unique — the manifest-precise retirement assumes it. An overwrite
-    // would invite name reuse, and a reused name appearing in a committed
-    // swap's TombManifest would be deleted by a recovery re-run (crash
-    // between tombstone retirement and scratch cleanup), destroying a
-    // fresh unapplied tombstone and resurrecting its deletes.
+    * quantizer contract; errorifexists — a published root only ever gains
+    * files), the serve-side anti-join folds over the tombstone-file
+    * union, and physical reclamation is the compaction step of
+    * [[graft.ops.Similarity.maybeMaintainIvfVersioned]], run between
+    * batches. */
+  def tombstoneBatch(ids: DataFrame, root: String, name: String): Unit =
     Similarity.ivfTombRows(ids).write.mode("errorifexists")
       .parquet(s"$root/tombstones/$name")
-    if (maxTombstones > 0)
-      graft.ops.Similarity.maybeCompactIvf(ids.sparkSession, root, maxTombstones)
-  }
 
   /** foreachBatch INGEST for the persisted IVF-PQ artifact: assign+encode
     * the fresh batch under the frozen cents/books (read back from the
     * artifact root per batch — KBs, never a training lineage) and APPEND
-    * the code rows to `root/codes`. `maxSharePpm > 0` wires in the
-    * share-tiered split policy ([[graft.ops.Similarity.maybeSplitIvf]]) so
-    * a long-running SKEWED ingest self-maintains — the hottest list splits
-    * before it dominates probe latency — completing the artifact
-    * lifecycle's streaming surfaces (append here, delete/compact in
-    * [[tombstoneBatch]]). The split's copy-on-write swap runs inside this
-    * foreachBatch call (the single-writer window), mirroring the
-    * compaction wiring; `embAll` supplies the raw vectors the local
-    * 2-means needs for hot-cell members (9-byte codes are lossy — they
-    * can't re-cluster), so it must cover every vec_id routed to a hot
-    * cell: the original corpus plus all appended batches. Because a split
-    * is routing-only (full-probe serving is bit-identical before and
-    * after — the q142 gate), ANY interleaving of appends and splits serves
-    * the same results as policy-free appends.
-    *
-    * `minSharePpm > 0` additionally wires the floor-share MERGE policy
-    * ([[graft.ops.Similarity.maybeMergeIvf]]) after the split, so a
-    * long-running DRIFTING ingest self-maintains in both directions —
-    * lists the corpus has moved away from fold back into their neighbors
-    * instead of wasting nlist forever (the q132 empty-cell finding). Like
-    * the split, a merge is routing-only, so any interleaving with appends
-    * serves the same results as policy-free appends (the q144 gate). */
-  def indexAppendBatch(freshVecs: DataFrame, root: String,
-      embAll: DataFrame, maxSharePpm: Long = 0L,
-      minSharePpm: Long = 0L): Unit = {
+    * the code rows to `root/codes` (new part files beside the old ones).
+    * Rebalancing a skewed or drifting ingest is
+    * [[graft.ops.Similarity.maybeMaintainIvfVersioned]]'s split and merge
+    * steps, run between batches on the versioned base: both are
+    * routing-only, so ANY interleaving of appends and rebalances serves
+    * the same full-probe results as policy-free appends (the q142/q144
+    * gates; DocStreamSpec drains both). */
+  def indexAppendBatch(freshVecs: DataFrame, root: String): Unit = {
     val s = freshVecs.sparkSession
-    // heal ANY interrupted maintenance swap BEFORE touching the artifact:
-    // appending into the missing-codes crash window would recreate the
-    // codes dir that recovery then deletes — silently losing this batch —
-    // and the missing-cents window would throw below before recovery ever
-    // ran. Recovery-first also covers roots maintained by tombstoneBatch's
-    // compaction wiring.
-    graft.ops.Similarity.recoverSplitIvf(s, root)
-    graft.ops.Similarity.recoverMergeIvf(s, root)
-    graft.ops.Similarity.recoverCompactIvf(s, root)
     val pc = s.read.parquet(s"$root/cents")
     val pb = s.read.parquet(s"$root/books")
     Similarity.ivfPqAppend(pc, pb,
       freshVecs.select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
       .write.mode("append").parquet(s"$root/codes")
-    if (maxSharePpm > 0)
-      graft.ops.Similarity.maybeSplitIvf(s, root, embAll, maxSharePpm)
-    if (minSharePpm > 0)
-      graft.ops.Similarity.maybeMergeIvf(s, root, embAll, minSharePpm)
   }
 }

@@ -3344,9 +3344,9 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // the decision and its evidence are in the artifact
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val m = graft.ops.ArtifactSwap.readManifest(fs, s"$dir/adv", "phash_layout")
+    val m = Similarity.readLines(fs, s"$dir/adv/phash_layout")
     assert(m.exists(_ == "layout=4x16") && m.exists(_.startsWith("mass_4x16=")), m.toString)
-    val m2 = graft.ops.ArtifactSwap.readManifest(fs, s"$dir/real", "phash_layout")
+    val m2 = Similarity.readLines(fs, s"$dir/real/phash_layout")
     assert(m2.exists(_ == "layout=2x32") &&
       m2.exists(l => l.startsWith("sampled_wide_recall_ppm=") &&
         l.split("=")(1).toLong >= 900000L), m2.toString)
@@ -3570,8 +3570,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
         emb.filter(col("vec_id") < Similarity.AdcQueries).select("vec_id", "e"))
     }
     val before = serveTomb(rootA).collect().map(_.toString).sorted.toSeq
-    // the maintenance window: clone -> compact the UNPUBLISHED clone ->
-    // publish -> retire old roots outside the grace window
+    // the maintenance window: stage the compaction as an unpublished
+    // version -> publish -> retire old roots outside the grace window
     val acted = Similarity.maybeMaintainIvfVersioned(s, base,
       emb.select("vec_id", "e"), maxTombstones = 1, maxSharePpm = 1000000L)
     assert(acted._1, "compaction must act on the planted tombstones")
@@ -3584,9 +3584,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // logic) equals reader A's tombstoned serve — the compaction invariant
     val rootB = RootPointer.resolve(s, base)
     assert(rootB != rootA, "maintenance must have published a new version")
-    // manifest-precise retirement deletes the APPLIED tombstone files
-    // (an empty dir may remain — a concurrent unapplied tombstone must
-    // survive, so no wildcard dir delete): the live union must be empty
+    // the compacted version applied every tombstone physically and
+    // carries none forward
     assert(Similarity.tombstoneUnion(s, rootB).isEmpty,
       "compaction must retire the applied tombstones from the new root")
     val served = Similarity.ivfPqSearchFrom(s.read.parquet(s"$rootB/cents"),
@@ -3601,25 +3600,29 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val s = spark
     val (cents, books, codes) = Similarity.residualParts(s, sf)
     val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
-    // (a) the IN-PLACE policy routes: a residual-marked root SPLITS and
-    // MERGES through maybeSplitIvf/maybeMergeIvf (the round-17 refusal is
-    // replaced by the re-encoding route), and the artifact satisfies the
-    // residual invariant afterwards
+    // (a) the policy routes: a residual-marked root SPLITS and MERGES
+    // through the versioned window (the round-17 refusal is replaced by
+    // the re-encoding route), and each published root satisfies the
+    // residual invariant
     val dir = java.nio.file.Files.createTempDirectory("graft_respol").toString
-    cents.write.mode("overwrite").parquet(s"$dir/cents")
-    books.write.mode("overwrite").parquet(s"$dir/books")
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
-    Similarity.markResidual(s, dir)
-    assert(Similarity.maybeSplitIvf(s, dir, emb, maxSharePpm = 1),
+    cents.write.mode("overwrite").parquet(s"$dir/v00001/cents")
+    books.write.mode("overwrite").parquet(s"$dir/v00001/books")
+    codes.write.mode("overwrite").parquet(s"$dir/v00001/codes")
+    Similarity.markResidual(s, s"$dir/v00001")
+    RootPointer.publish(s, dir, "v00001")
+    assert(Similarity.maybeMaintainIvfVersioned(s, dir, emb,
+      maxTombstones = 1, maxSharePpm = 1L)._2,
       "the split policy must ACT on a residual root (re-encoding route)")
-    assert(Similarity.residualAuditMismatches(s, dir, emb) == 0L,
+    assert(Similarity.residualAuditMismatches(s, RootPointer.resolve(s, dir), emb) == 0L,
       "post-split residual artifact must satisfy the invariant")
-    assert(Similarity.maybeMergeIvf(s, dir, emb, minSharePpm = 1000000L),
+    assert(Similarity.maybeMaintainIvfVersioned(s, dir, emb,
+      maxTombstones = 1, maxSharePpm = 1000000L, minSharePpm = 1000000L)._3,
       "the merge policy must ACT on a residual root (re-encoding route)")
-    assert(Similarity.residualAuditMismatches(s, dir, emb) == 0L,
+    assert(Similarity.residualAuditMismatches(s, RootPointer.resolve(s, dir), emb) == 0L,
       "post-merge residual artifact must satisfy the invariant")
     // (b) the VERSIONED window (q163's shape): reader isolation across the
-    // publish, marker carried by the clone, invariant on the new root
+    // publish, marker carried into the staged version, invariant on the
+    // new root
     val base = java.nio.file.Files.createTempDirectory("graft_resver").toString
     val v1 = RootPointer.nextVersion(s, base)
     cents.write.mode("overwrite").parquet(s"$base/$v1/cents")
@@ -3643,7 +3646,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val rootB = RootPointer.resolve(s, base)
     assert(rootB != rootA, "maintenance must have published a new version")
     assert(Similarity.isResidualRoot(s, rootB),
-      "the clone must carry the _VARIANT_RESIDUAL marker")
+      "the staged version must carry the _VARIANT_RESIDUAL marker")
     assert(Similarity.residualAuditMismatches(s, rootB, emb) == 0L,
       "the published rebalanced root must satisfy the residual invariant")
     assert(serve(rootB).nonEmpty, "rebalanced serve must return rows")
@@ -3659,17 +3662,19 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
         s.read.parquet(s"$root/cents"), s.read.parquet(s"$root/books"),
         s.read.parquet(s"$root/codes"), queries)
       .collect().map(_.toString).sorted.toSeq
-    // (a) direct core: the same trio in a plain root, split in place
+    // (a) direct core: the same trio in a plain root, split by the kernel
+    // (at 1 ppm every cell is over the tier, so the policy picks the same
+    // two hottest cells the kernel does)
     val dir = java.nio.file.Files.createTempDirectory("graft_ressplit_d").toString
     cents.write.mode("overwrite").parquet(s"$dir/cents")
     books.write.mode("overwrite").parquet(s"$dir/books")
     codes.write.mode("overwrite").parquet(s"$dir/codes")
     Similarity.markResidual(s, dir)
-    assert(Similarity.maybeSplitIvf(s, dir, emb, maxSharePpm = 1),
-      "the 1-ppm split tier must act on the residual root")
-    val direct = serve(dir)
+    Similarity.ivfCellSplitResidual(s, dir, s"$dir/split", emb)
+    val direct = serve(s"$dir/split")
     // (b) the versioned window (q165's shape): publish, arm the split
-    // tier, pre-swap audit inside, publish the clone, reader isolation
+    // tier, pre-publish audit inside, publish the staged version, reader
+    // isolation
     val base = java.nio.file.Files.createTempDirectory("graft_ressplit_v").toString
     val v1 = RootPointer.nextVersion(s, base)
     cents.write.mode("overwrite").parquet(s"$base/$v1/cents")
@@ -3688,7 +3693,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val rootB = RootPointer.resolve(s, base)
     assert(rootB != rootA, "maintenance must have published a new version")
     assert(Similarity.isResidualRoot(s, rootB),
-      "the clone must carry the _VARIANT_RESIDUAL marker")
+      "the staged version must carry the _VARIANT_RESIDUAL marker")
     assert(Similarity.residualAuditMismatches(s, rootB, emb) == 0L,
       "the published split root must satisfy the residual invariant")
     // the differential the catalog's geometry-blind oracle can't pin:
@@ -3752,57 +3757,48 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("containment compaction: serve identical across the size-tiered swap; crash windows recover") {
+    import graft.ops.RootPointer
     val s = spark
     val all = Tables.documents(s, sf).select("doc_id", "text")
     val fresh = all.filter(col("doc_id") % 5 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_contcomp").toString
-    val root = s"$dir/c"
-    Dedup.containmentArtifactBuild(s, root, all.filter(col("doc_id") % 5 =!= 0))
+    val base = java.nio.file.Files.createTempDirectory("graft_contcomp").toString + "/c"
+    val v1 = s"$base/v00001"
+    Dedup.containmentArtifactBuild(s, v1, all.filter(col("doc_id") % 5 =!= 0))
     // three daily-append-style batches → 4 segments
     Seq(1, 2, 3).foreach(i =>
-      Dedup.containmentAppend(s, root,
+      Dedup.containmentAppend(s, v1,
         fresh.filter(col("doc_id") % 3 === (i - 1)), s"seg$i"))
-    assert(Dedup.containmentSegmentCount(s, root) == 4)
-    val before = Dedup.containmentServeFresh(s, root, fresh, 0.8)
+    RootPointer.publish(s, base, "v00001")
+    assert(Dedup.containmentSegmentCount(s, v1) == 4)
+    def serve(root: String) = Dedup.containmentServeFresh(s, root, fresh, 0.8)
       .collect().map(_.toString).sorted.toSeq
+    val before = serve(RootPointer.resolve(s, base))
     assert(before.nonEmpty, "vacuous: no served pairs before compaction")
-    // under the tier: metadata-only no-op
-    assert(!Dedup.maybeCompactContainment(s, root, maxSegments = 4))
-    // over the tier: the swap runs; rows are byte-identical, so serve is too
-    assert(Dedup.maybeCompactContainment(s, root, maxSegments = 1))
-    assert(Dedup.containmentSegmentCount(s, root) == 1,
-      "compaction must merge all segments into one")
-    val after = Dedup.containmentServeFresh(s, root, fresh, 0.8)
-      .collect().map(_.toString).sorted.toSeq
-    assert(after == before, "serve must be identical across the swap")
-    // crash window 1: an UNCOMMITTED scratch (no marker) is discarded and
-    // the live segments are untouched
-    val fs = new org.apache.hadoop.fs.Path(root)
+    // under the tier: metadata-only no-op, nothing staged
+    assert(!Dedup.maybeCompactContainmentVersioned(s, base, maxSegments = 4))
+    assert(RootPointer.resolve(s, base) == v1 && RootPointer.cleanStaging(s, base).isEmpty)
+    // crash window: a version staged by a window that died before its
+    // publish (a complete merged segment, no marker) is never resolved —
+    // readers keep the published 4-segment root
+    val hfs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/__compacting/seg0"))
-    assert(!Dedup.recoverCompactContainment(s, root))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/__compacting")))
-    assert(Dedup.containmentServeFresh(s, root, fresh, 0.8)
-      .collect().map(_.toString).sorted.toSeq == before)
-    // crash window 2: a COMMITTED scratch finishes idempotently — stage a
-    // real compaction's scratch by hand in a fresh two-segment artifact,
-    // "crash" before the finish, and recover
-    val root2 = s"$dir/c2"
-    Dedup.containmentArtifactBuild(s, root2, all.filter(col("doc_id") % 5 =!= 0))
-    Dedup.containmentAppend(s, root2, fresh, "seg1")
-    val before2 = Dedup.containmentServeFresh(s, root2, fresh, 0.8)
-      .collect().map(_.toString).sorted.toSeq
-    val retire = Seq(s"$root2/seg0", s"$root2/seg1")
-    s.read.parquet(retire: _*).select("doc_id", "hs", "nsh")
-      .write.mode("overwrite").parquet(s"$root2/__compacting/seg0")
-    graft.ops.ArtifactSwap.writeManifest(fs, s"$root2/__compacting",
-      graft.ops.ArtifactSwap.SegManifest, retire)
-    graft.ops.ArtifactSwap.commit(fs, s"$root2/__compacting")
-    assert(Dedup.recoverCompactContainment(s, root2),
-      "a committed scratch must finish on recovery")
-    assert(Dedup.containmentSegmentCount(s, root2) == 1)
-    assert(Dedup.containmentServeFresh(s, root2, fresh, 0.8)
-      .collect().map(_.toString).sorted.toSeq == before2)
+    s.read.parquet((0 to 3).map(i => s"$v1/seg$i"): _*)
+      .write.parquet(s"$base/v00002/seg0")
+    assert(RootPointer.resolve(s, base) == v1, "an unpublished staging must never resolve")
+    assert(serve(RootPointer.resolve(s, base)) == before)
+    // over the tier: the next window cleans the remnant, stages the merged
+    // segment beside the rank table, and publishes; rows are
+    // byte-identical, so serve is too
+    assert(Dedup.maybeCompactContainmentVersioned(s, base, maxSegments = 1))
+    val cur = RootPointer.resolve(s, base)
+    assert(cur != v1 && Dedup.containmentSegmentCount(s, cur) == 1,
+      "compaction must publish one merged segment")
+    assert(hfs.exists(new org.apache.hadoop.fs.Path(s"$cur/rank")),
+      "the rank table must carry into the compacted version")
+    assert(serve(cur) == before, "serve must be identical across the publish")
+    assert(Dedup.containmentSegmentCount(s, v1) == 4 && serve(v1) == before,
+      "the published old root must stay immutable")
+    assert(RootPointer.cleanStaging(s, base).isEmpty, "no staging may remain")
   }
 
   test("reliable-checkpoint mode: funnel and cluster kernels produce identical results to local mode") {
@@ -4156,8 +4152,11 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("compaction swap crash recovery: an interrupted retire-then-promote window is finished, a stale scratch is discarded") {
+    // a compaction is a staged version plus a publish: a crash at any point
+    // before the publish leaves the published root untouched and an
+    // unmarked version dir that the next window deletes
     val s = spark
-    import graft.ops.{Retrieval, TextOps}
+    import graft.ops.{Retrieval, RootPointer, TextOps}
     val docs = TextOps.tokenizedDocs(s, sf)
     val qt = TextOps.queryTerms(s, sf)
     def rank(path: String) = {
@@ -4165,79 +4164,52 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       TextOps.bm25RankedFrom(tf, df, st, qt).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     }
-    import graft.ops.ArtifactSwap
-    def commitAsPolicy(fs: org.apache.hadoop.fs.FileSystem, art: String): Unit = {
-      // what maybeCompactLex writes between the compactor and the retire
-      ArtifactSwap.writeManifest(fs, s"$art/__compacting", ArtifactSwap.SegManifest,
-        Retrieval.lexSegments(s, art))
-      ArtifactSwap.writeManifest(fs, s"$art/__compacting", ArtifactSwap.TombManifest,
-        ArtifactSwap.tombDirs(fs, art))
-      ArtifactSwap.commit(fs, s"$art/__compacting")
+    def twoSegBase(name: String, mod: Int): String = {
+      val base = java.nio.file.Files.createTempDirectory(name).toString + "/idx"
+      Retrieval.lexIndexSegment(docs.filter(col("doc_id") % mod === 0), s"$base/v00001", "seg0")
+      Retrieval.lexIndexSegment(docs.filter(col("doc_id") % mod === 1), s"$base/v00001", "seg1")
+      RootPointer.publish(s, base, "v00001")
+      base
     }
-    // CASE 1 — crash AFTER the commit, all old segments retired, promote
-    // pending: the scratch holds the only copy; the next policy call must
-    // finish the swap, not delete it
-    val art = java.nio.file.Files.createTempDirectory("lex_crash").toString + "/idx"
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 0), art, "seg0")
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 1), art, "seg1")
-    val expected = rank(art)
-    val fs = new org.apache.hadoop.fs.Path(art)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Retrieval.lexIndexCompact(s, art, s"$art/__compacting")
-    commitAsPolicy(fs, art)
-    Seq("seg0", "seg1").foreach(g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$art/$g"), true))
-    assert(Retrieval.maybeCompactLex(s, art, 4),
-      "recovery path must report a completed compaction")
-    assert(Retrieval.lexSegmentCount(s, art) == 1 &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$art/__compacting")))
-    assert(rank(art) == expected, "recovered artifact must serve bit-for-bit")
-    // CASE 1b — crash MID-retire (only seg0 deleted): pre-marker recovery
-    // used a "do any segments survive?" heuristic, saw seg1, discarded the
-    // scratch — the only complete copy — and silently served a partial
-    // corpus; the commit marker makes this window recoverable
-    val art1b = java.nio.file.Files.createTempDirectory("lex_crash1b").toString + "/idx"
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 0), art1b, "seg0")
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 1), art1b, "seg1")
-    val fs1b = new org.apache.hadoop.fs.Path(art1b)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Retrieval.lexIndexCompact(s, art1b, s"$art1b/__compacting")
-    commitAsPolicy(fs1b, art1b)
-    fs1b.delete(new org.apache.hadoop.fs.Path(s"$art1b/seg0"), true)
-    assert(Retrieval.recoverCompactLex(s, art1b),
-      "a committed swap interrupted mid-retire must be finished")
-    assert(Retrieval.lexSegmentCount(s, art1b) == 1)
-    assert(rank(art1b) == expected,
-      "mid-retire recovery must serve the FULL corpus, not the survivor segment")
-    // CASE 1c — a segment appended AFTER the crash survives recovery
-    // (manifest-precise retirement; a delete-all-seg* loop would wipe it)
-    val art1c = java.nio.file.Files.createTempDirectory("lex_crash1c").toString + "/idx"
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 3 === 0), art1c, "seg0")
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 3 === 1), art1c, "seg1")
-    val fs1c = new org.apache.hadoop.fs.Path(art1c)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Retrieval.lexIndexCompact(s, art1c, s"$art1c/__compacting")
-    commitAsPolicy(fs1c, art1c)
-    Seq("seg0", "seg1").foreach(g =>
-      fs1c.delete(new org.apache.hadoop.fs.Path(s"$art1c/$g"), true))
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 3 === 2), art1c, "seg2")
-    assert(Retrieval.recoverCompactLex(s, art1c))
-    assert(Retrieval.lexSegmentCount(s, art1c) == 2,
-      "the post-crash segment must survive recovery beside the promoted merge")
-    assert(rank(art1c) == expected, "all three thirds must serve after recovery")
-    // CASE 2 — crash BEFORE the commit (segments intact, partial scratch):
-    // the stale scratch is discarded and the tier check proceeds normally
-    val art2 = java.nio.file.Files.createTempDirectory("lex_crash2").toString + "/idx"
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 0), art2, "seg0")
-    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 1), art2, "seg1")
+    // CASE 1 — crash AFTER the compaction was fully staged, BEFORE the
+    // publish: readers keep serving the two-segment root, and the next
+    // window discards the remnant and publishes a fresh compaction
+    val art = twoSegBase("lex_crash", 2)
+    val expected = rank(RootPointer.resolve(s, art))
+    Retrieval.lexIndexCompact(s, s"$art/v00001", s"$art/v00002")
+    assert(RootPointer.resolve(s, art) == s"$art/v00001" &&
+      Retrieval.lexSegmentCount(s, s"$art/v00001") == 2,
+      "a staged compaction must not be visible before its publish")
+    assert(rank(RootPointer.resolve(s, art)) == expected)
+    assert(Retrieval.maybeCompactLexVersioned(s, art, 1),
+      "the next window must publish the compaction")
+    val cur = RootPointer.resolve(s, art)
+    assert(Retrieval.lexSegmentCount(s, cur) == 1 && rank(cur) == expected,
+      "the published compaction must serve bit-for-bit")
+    assert(RootPointer.cleanStaging(s, art).isEmpty, "no staging may remain")
+    // CASE 1c — a segment appended to the published root after the crash
+    // is part of the next window's input, so it survives into the publish
+    val art1c = twoSegBase("lex_crash1c", 3)
+    Retrieval.lexIndexCompact(s, s"$art1c/v00001", s"$art1c/v00002")
+    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 3 === 2),
+      RootPointer.resolve(s, art1c), "seg2")
+    assert(Retrieval.maybeCompactLexVersioned(s, art1c, 1))
+    val cur1c = RootPointer.resolve(s, art1c)
+    assert(Retrieval.lexSegmentCount(s, cur1c) == 1,
+      "the post-crash segment must be merged into the published compaction")
+    assert(rank(cur1c) == expected, "all three thirds must serve after the publish")
+    // CASE 2 — crash mid-staging (a partial seg0, no marker) below the
+    // tier: the remnant is discarded, nothing publishes, the root is intact
+    val art2 = twoSegBase("lex_crash2", 2)
     val fs2 = new org.apache.hadoop.fs.Path(art2)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs2.mkdirs(new org.apache.hadoop.fs.Path(s"$art2/__compacting/seg0"))
-    assert(!Retrieval.maybeCompactLex(s, art2, 4),
-      "below tier with intact segments: stale scratch discarded, no compaction")
-    assert(Retrieval.lexSegmentCount(s, art2) == 2 &&
-      !fs2.exists(new org.apache.hadoop.fs.Path(s"$art2/__compacting")))
-    assert(rank(art2) == expected, "intact artifact untouched by the cleanup")
+    fs2.mkdirs(new org.apache.hadoop.fs.Path(s"$art2/v00002/seg0"))
+    assert(!Retrieval.maybeCompactLexVersioned(s, art2, 4),
+      "below tier with intact segments: remnant discarded, no compaction")
+    assert(RootPointer.resolve(s, art2) == s"$art2/v00001" &&
+      Retrieval.lexSegmentCount(s, s"$art2/v00001") == 2 &&
+      !fs2.exists(new org.apache.hadoop.fs.Path(s"$art2/v00002")))
+    assert(rank(RootPointer.resolve(s, art2)) == expected, "intact artifact untouched by the cleanup")
   }
 
   test("ivfCellSplitArtifact: full-probe serve bit-identical, mass conserved, untouched rows byte-equal") {
@@ -4294,67 +4266,78 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("maybeSplitIvf: share tier gates the swap; both crash windows recover to a consistent artifact") {
+    // the split step of the versioned window: tier-gated, and a crash at
+    // any point before the publish leaves readers on the consistent
+    // unsplit root
     val s = spark
     graft.functions.VectorFunctions.register(s)
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ivf_split_policy").toString
+    import graft.ops.RootPointer
+    val dir = java.nio.file.Files.createTempDirectory("ivf_split_policy").toString
     // skewed synthetic: cell 0 holds 80 of 100 rows; raw vectors spread so
     // the local 2-means produces two real halves
     val emb = s.range(100).selectExpr("id AS vec_id",
       """CASE WHEN id < 80 THEN array(CAST(id % 13 AS DOUBLE) * 0.1, CAST(id % 7 AS DOUBLE) * 0.1)
               ELSE array(CAST((1 + id % 3) * 10 AS DOUBLE), CAST((1 + id % 3) * 10 AS DOUBLE)) END AS e""")
-    def writeArt(root: String): Unit = {
+    def publishArt(base: String): Unit = {
+      val root = s"$base/v00001"
       Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 10.0)), (2L, Seq(20.0, 20.0)),
         (3L, Seq(30.0, 30.0))).toDF("cent_id", "ce").write.parquet(s"$root/cents")
       Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$root/books")
       s.range(100).selectExpr("id AS vec_id",
         "CAST(CASE WHEN id < 80 THEN 0 ELSE 1 + id % 3 END AS BIGINT) AS cell",
         "array(1, 2) AS codes").write.parquet(s"$root/codes")
+      RootPointer.publish(s, base, "v00001")
     }
-    def consistent(root: String): Unit = {
+    def split(base: String, ppm: Long) =
+      Similarity.maybeMaintainIvfVersioned(s, base, emb, maxTombstones = 1, maxSharePpm = ppm)._2
+    def consistent(root: String, split: Boolean): Unit = {
       val occ = s.read.parquet(s"$root/codes").groupBy("cell").count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(occ.values.sum == 100L, s"mass lost: $occ")
-      assert(occ.values.max < 80L, s"hot cell not lighter: $occ")
+      assert(if (split) occ.values.max < 80L else occ.values.max == 80L,
+        s"hot cell (split = $split): $occ")
       val centIds = s.read.parquet(s"$root/cents").select("cent_id").collect()
         .map(_.getLong(0)).toSet
       assert(occ.keySet.subsetOf(centIds),
         s"code rows route to missing centroids: ${occ.keySet -- centIds}")
     }
     // tier gate: 800000 ppm max share is under a 900000 tier → no-op
-    val root1 = s"$base/a1"; writeArt(root1)
-    assert(!Similarity.maybeSplitIvf(s, root1, emb, maxSharePpm = 900000))
-    assert(s.read.parquet(s"$root1/cents").count() == 4, "no-op below tier")
-    // past the tier: split runs, swapped artifact is consistent
-    assert(Similarity.maybeSplitIvf(s, root1, emb, maxSharePpm = 500000))
-    consistent(root1)
-    val hfs = new org.apache.hadoop.fs.Path(base)
+    val base1 = s"$dir/a1"; publishArt(base1)
+    assert(!split(base1, 900000))
+    assert(RootPointer.resolve(s, base1) == s"$base1/v00001", "no-op below tier")
+    // past the tier: the split publishes a consistent, lighter version
+    assert(split(base1, 500000))
+    assert(RootPointer.resolve(s, base1) != s"$base1/v00001")
+    consistent(RootPointer.resolve(s, base1), split = true)
+    val hfs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // crash window 1: committed swap, live cents retired, nothing promoted
-    val root2 = s"$base/a2"; writeArt(root2)
-    Similarity.ivfCellSplitArtifact(s, root2, s"$root2/__splitting", emb)
-    graft.ops.ArtifactSwap.commit(hfs, s"$root2/__splitting")
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root2/cents"), true)
-    assert(Similarity.maybeSplitIvf(s, root2, emb, maxSharePpm = 500000),
-      "recovery must finish the interrupted swap")
-    consistent(root2)
-    // crash window 2: cents promoted, codes half pending (scratch cents gone)
-    val root3 = s"$base/a3"; writeArt(root3)
-    Similarity.ivfCellSplitArtifact(s, root3, s"$root3/__splitting", emb)
-    graft.ops.ArtifactSwap.commit(hfs, s"$root3/__splitting")
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root3/cents"), true)
-    assert(hfs.rename(new org.apache.hadoop.fs.Path(s"$root3/__splitting/cents"),
-      new org.apache.hadoop.fs.Path(s"$root3/cents")))
-    assert(Similarity.maybeSplitIvf(s, root3, emb, maxSharePpm = 500000),
-      "recovery must finish the codes half")
-    consistent(root3)
+    // crash window 1: the split was fully staged but never published —
+    // readers resolve the unsplit root, which is consistent as it stands
+    val base2 = s"$dir/a2"; publishArt(base2)
+    Similarity.ivfCellSplitArtifact(s, s"$base2/v00001", s"$base2/v00002", emb)
+    assert(RootPointer.resolve(s, base2) == s"$base2/v00001")
+    consistent(RootPointer.resolve(s, base2), split = false)
+    assert(split(base2, 500000), "the next window must split and publish")
+    consistent(RootPointer.resolve(s, base2), split = true)
+    // crash window 2: only the staged cents were written (codes pending)
+    val base3 = s"$dir/a3"; publishArt(base3)
+    s.read.parquet(s"$base3/v00001/cents").write.parquet(s"$base3/v00002/cents")
+    assert(RootPointer.resolve(s, base3) == s"$base3/v00001")
+    consistent(RootPointer.resolve(s, base3), split = false)
+    assert(split(base3, 500000), "the next window must split and publish")
+    assert(RootPointer.resolve(s, base3) == s"$base3/v00002" &&
+      !hfs.exists(new org.apache.hadoop.fs.Path(s"$base3/v00003")),
+      "the remnant must be cleaned before staging, not stacked beside it")
+    consistent(RootPointer.resolve(s, base3), split = true)
   }
 
   test("split crash windows cannot lose an appended batch, wedge the compactor, or loop a degenerate split") {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ivf_split_edges").toString
+    import graft.ops.RootPointer
+    val dir = java.nio.file.Files.createTempDirectory("ivf_split_edges").toString
     val emb = s.range(100).selectExpr("id AS vec_id",
       """CASE WHEN id < 80 THEN array(CAST(id % 13 AS DOUBLE) * 0.1, CAST(id % 7 AS DOUBLE) * 0.1)
               ELSE array(CAST((1 + id % 3) * 10 AS DOUBLE), CAST((1 + id % 3) * 10 AS DOUBLE)) END AS e""")
@@ -4366,95 +4349,91 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
         "CAST(CASE WHEN id < 80 THEN 0 ELSE 1 + id % 3 END AS BIGINT) AS cell",
         "array(1, 2) AS codes").write.parquet(s"$root/codes")
     }
-    val hfs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // (1) the append-after-crash window: split crashed with codes RETIRED
-    // (scratch complete, cents promoted, live codes gone) — the next
-    // ingest batch must recover FIRST, not append into a phantom codes dir
-    // that recovery then deletes (that would silently drop the batch).
-    // Real artifacts here because the append ENCODES under books.
+    def publishArt(base: String): Unit = {
+      writeArt(s"$base/v00001"); RootPointer.publish(s, base, "v00001")
+    }
+    def codesOf(base: String) = s.read.parquet(s"${RootPointer.resolve(s, base)}/codes")
+    // (1) the append-after-crash window: a split staged but never
+    // published, then the next ingest batch appends to the PUBLISHED root
+    // — the next window splits from that root, so the batch is in the
+    // published split. Real artifacts here because the append ENCODES
+    // under books.
     val all = Tables.embeddings(s, sf)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")
     val (subsA, seedsA) = Similarity.subSplit(all)
     val (rcents, rbooks, rcodes) = Similarity.ivfPqIndex(all, subsA, seedsA)
-    val root1 = s"$base/a1"
-    rcents.write.parquet(s"$root1/cents")
-    rbooks.write.parquet(s"$root1/books")
-    rcodes.write.parquet(s"$root1/codes")
+    val base1 = s"$dir/a1"
+    rcents.write.parquet(s"$base1/v00001/cents")
+    rbooks.write.parquet(s"$base1/v00001/books")
+    rcodes.write.parquet(s"$base1/v00001/codes")
+    RootPointer.publish(s, base1, "v00001")
     val allIds = all.select("vec_id").collect().map(_.getLong(0)).toSet
-    Similarity.ivfCellSplitArtifact(s, root1, s"$root1/__splitting", all)
-    graft.ops.ArtifactSwap.commit(hfs, s"$root1/__splitting")
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root1/cents"), true)
-    assert(hfs.rename(new org.apache.hadoop.fs.Path(s"$root1/__splitting/cents"),
-      new org.apache.hadoop.fs.Path(s"$root1/cents")))
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root1/codes"), true)
+    Similarity.ivfCellSplitArtifact(s, s"$base1/v00001", s"$base1/v00002", all)
     val v0 = all.orderBy("vec_id").select("e").head().getSeq[Double](0)
     val freshBatch = Seq(900L, 901L).map(id =>
       (id, v0.map(x => (x * (1.0 + id * 1e-5)).toFloat)))
       .toDF("vec_id", "embedding")
-    graft.streaming.VecStream.indexAppendBatch(freshBatch, root1,
-      all.unionByName(freshBatch.selectExpr(
-        "vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")))
-    val ids1 = s.read.parquet(s"$root1/codes").select("vec_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(Set(900L, 901L).subsetOf(ids1), "the fresh batch was lost to split recovery")
-    assert(allIds.subsetOf(ids1), "the recovered split codes were lost")
-    // (2) a split crash must not wedge the COMPACTOR: the real
-    // codes-retired window (cents promoted — scratch cents renamed away —
-    // then codes deleted, crash before the codes rename), then
-    // maybeCompactIvf (which reads codes) must heal via the cross-recovery
-    // and then compact
-    val root2 = s"$base/a2"; writeArt(root2)
-    Similarity.ivfCellSplitArtifact(s, root2, s"$root2/__splitting", emb)
-    graft.ops.ArtifactSwap.commit(hfs, s"$root2/__splitting")
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root2/cents"), true)
-    assert(hfs.rename(new org.apache.hadoop.fs.Path(s"$root2/__splitting/cents"),
-      new org.apache.hadoop.fs.Path(s"$root2/cents")))
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root2/codes"), true)
-    s.range(5).select(col("id").as("vec_id")).write.parquet(s"$root2/tombstones/t0")
-    s.range(5, 9).select(col("id").as("vec_id")).write.parquet(s"$root2/tombstones/t1")
-    assert(Similarity.maybeCompactIvf(s, root2, maxTombstones = 1),
-      "compactor must heal the split crash and then compact")
-    assert(s.read.parquet(s"$root2/codes").count() == 91L,
-      "compaction over the healed codes must drop exactly the 9 tombstoned rows")
+    graft.streaming.VecStream.indexAppendBatch(freshBatch, RootPointer.resolve(s, base1))
+    assert(Similarity.maybeMaintainIvfVersioned(s, base1,
+      all.unionByName(freshBatch.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")),
+      maxTombstones = 1, maxSharePpm = 1L)._2, "the next window must split")
+    val ids1 = codesOf(base1).select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(Set(900L, 901L).subsetOf(ids1), "the fresh batch was lost to the split")
+    assert(allIds.subsetOf(ids1), "the split codes lost rows")
+    // (2) a crashed split must not wedge the COMPACTOR: its remnant is
+    // discarded and the compaction step reads the published root
+    val base2 = s"$dir/a2"; publishArt(base2)
+    Similarity.ivfCellSplitArtifact(s, s"$base2/v00001", s"$base2/v00002", emb)
+    s.range(5).select(col("id").as("vec_id")).write.parquet(s"$base2/v00001/tombstones/t0")
+    s.range(5, 9).select(col("id").as("vec_id")).write.parquet(s"$base2/v00001/tombstones/t1")
+    assert(Similarity.maybeMaintainIvfVersioned(s, base2, emb,
+      maxTombstones = 1, maxSharePpm = 1000000L)._1,
+      "the compactor must run past the split remnant")
+    assert(codesOf(base2).count() == 91L,
+      "compaction must drop exactly the 9 tombstoned rows")
     // (3) the no-progress guard: a hot list of IDENTICAL vectors cannot be
     // reduced by a 2-means (both seeds coincide) — the policy must refuse
-    // the swap instead of rewriting the codes table on every call forever
-    val root3 = s"$base/a3"; writeArt(root3)
+    // the publish instead of rewriting the codes table on every call
+    val base3 = s"$dir/a3"; publishArt(base3)
     val embDup = s.range(100).selectExpr("id AS vec_id",
       """CASE WHEN id < 80 THEN array(0.5, 0.5)
               ELSE array(CAST((1 + id % 3) * 10 AS DOUBLE), CAST((1 + id % 3) * 10 AS DOUBLE)) END AS e""")
-    assert(!Similarity.maybeSplitIvf(s, root3, embDup, maxSharePpm = 500000),
-      "a degenerate split must not land")
-    assert(s.read.parquet(s"$root3/cents").count() == 4L, "artifact must be untouched")
-    assert(!hfs.exists(new org.apache.hadoop.fs.Path(s"$root3/__splitting")),
-      "the refused scratch must be cleaned up")
-    // the refusal is MEMOIZED: while occupancy is unchanged the next call
-    // skips the attempt entirely (no scratch written — a skewed ingest of
-    // identical vectors must not pay a corpus rewrite per batch)
-    assert(hfs.exists(new org.apache.hadoop.fs.Path(s"$root3/__split_refused")),
+    def split3() = Similarity.maybeMaintainIvfVersioned(s, base3, embDup,
+      maxTombstones = 1, maxSharePpm = 500000)._2
+    assert(!split3(), "a degenerate split must not land")
+    assert(RootPointer.resolve(s, base3) == s"$base3/v00001" &&
+      RootPointer.cleanStaging(s, base3).isEmpty,
+      "the refused split must publish nothing and leave no staging")
+    // the refusal is MEMOIZED beside the pointer: while occupancy is
+    // unchanged the next window skips the attempt entirely (a skewed
+    // ingest of identical vectors must not pay a corpus rewrite per batch)
+    val hfs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    assert(hfs.exists(new org.apache.hadoop.fs.Path(s"$base3/_SPLIT_REFUSED")),
       "refusal memo must be written")
-    assert(!Similarity.maybeSplitIvf(s, root3, embDup, maxSharePpm = 500000))
+    assert(!split3())
     // (3b) PARTIAL progress lands: hot set = one degenerate list (cell 0,
     // identical vectors) + one splittable list (cell 1, spread) — the
     // splittable one's progress must not be discarded because the global
     // max (degenerate cell 0) is unchanged
-    val root3b = s"$base/a3b"
+    val base3b = s"$dir/a3b"
     Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 10.0)), (2L, Seq(20.0, 20.0)),
-      (3L, Seq(30.0, 30.0))).toDF("cent_id", "ce").write.parquet(s"$root3b/cents")
-    Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$root3b/books")
+      (3L, Seq(30.0, 30.0))).toDF("cent_id", "ce").write.parquet(s"$base3b/v00001/cents")
+    Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$base3b/v00001/books")
     // cell 0: 45 rows, cell 1: 40 rows, cells 2/3: ~7 each — both 0 and 1
     // are over a 300000 ppm tier
     s.range(100).selectExpr("id AS vec_id",
       "CAST(CASE WHEN id < 45 THEN 0 WHEN id < 85 THEN 1 ELSE 2 + id % 2 END AS BIGINT) AS cell",
-      "array(1, 2) AS codes").write.parquet(s"$root3b/codes")
+      "array(1, 2) AS codes").write.parquet(s"$base3b/v00001/codes")
+    RootPointer.publish(s, base3b, "v00001")
     val embMix = s.range(100).selectExpr("id AS vec_id",
       """CASE WHEN id < 45 THEN array(0.5, 0.5)
               WHEN id < 85 THEN array(10.0 + CAST(id % 13 AS DOUBLE) * 0.1, 10.0 + CAST(id % 7 AS DOUBLE) * 0.1)
               ELSE array(CAST((2 + id % 2) * 10 AS DOUBLE), CAST((2 + id % 2) * 10 AS DOUBLE)) END AS e""")
-    assert(Similarity.maybeSplitIvf(s, root3b, embMix, maxSharePpm = 300000),
+    assert(Similarity.maybeMaintainIvfVersioned(s, base3b, embMix,
+      maxTombstones = 1, maxSharePpm = 300000)._2,
       "the splittable hot cell's progress must land despite the degenerate one")
-    val occ3b = s.read.parquet(s"$root3b/codes").groupBy("cell").count()
+    val occ3b = codesOf(base3b).groupBy("cell").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(occ3b.values.sum == 100L)
     assert(occ3b(0L) == 45L, "the degenerate cell keeps its rows")
@@ -4462,44 +4441,33 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // (3c) over-tier-only selection: with ONE cell over the tier, only it
     // is a split candidate — the under-tier second-largest must not grow
     // the cell count as collateral
-    val root3c = s"$base/a3c"; writeArt(root3c) // cell 0 = 80, others ~7
-    assert(Similarity.maybeSplitIvf(s, root3c, emb, maxSharePpm = 500000))
-    val cents3c = s.read.parquet(s"$root3c/cents").count()
+    val base3c = s"$dir/a3c"; publishArt(base3c) // cell 0 = 80, others ~7
+    assert(Similarity.maybeMaintainIvfVersioned(s, base3c, emb,
+      maxTombstones = 1, maxSharePpm = 500000)._2)
+    val cents3c = s.read.parquet(s"${RootPointer.resolve(s, base3c)}/cents").count()
     assert(cents3c == 5L,
       s"only the over-tier cell may split (got $cents3c cells — an under-tier cell split too)")
     // (4) loud coverage: emb missing hot-cell members must throw, not
     // silently drop their rows from the rewritten artifact
-    val root4 = s"$base/a4"; writeArt(root4)
+    val root4 = s"$dir/a4"; writeArt(root4)
     val embPartial = emb.filter(col("vec_id") >= 40)
     val ex = intercept[IllegalArgumentException] {
       Similarity.ivfCellSplitArtifact(s, root4, s"$root4/out", embPartial)
     }
     assert(ex.getMessage.contains("cover every hot-cell vec_id"), ex.getMessage)
-    // (5) MIGRATION: a markerless scratch from the pre-marker protocol
-    // whose live inputs are already retired is finished, not destroyed
-    val root5 = s"$base/a5"; writeArt(root5)
-    Similarity.ivfCellSplitArtifact(s, root5, s"$root5/__splitting", emb)
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root5/cents"), true) // no _COMMIT
-    assert(Similarity.maybeSplitIvf(s, root5, emb, maxSharePpm = 500000),
-      "legacy markerless mid-swap scratch must be finished")
-    val occ5 = s.read.parquet(s"$root5/codes").groupBy("cell").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val centIds5 = s.read.parquet(s"$root5/cents").select("cent_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(occ5.values.sum == 100L && occ5.keySet.subsetOf(centIds5),
-      s"legacy recovery left an inconsistent artifact: $occ5 vs $centIds5")
   }
 
   test("maybeMaintainIvf: compaction runs before the split, so occupancy counts live rows") {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ivf_maintain").toString
-    val root = s"$base/art"
+    import graft.ops.RootPointer
+    val base = java.nio.file.Files.createTempDirectory("ivf_maintain").toString + "/ivf"
+    val root = s"$base/v00001"
     // cell 0 carries 60 physical rows but 40 are TOMBSTONED — live shares
     // are 20/20/20/20 (uniform). A split keyed on physical rows would split
-    // the mostly-dead cell 0; maintenance must compact first and then find
-    // no cell over the tier.
+    // the mostly-dead cell 0; the window must compact first and the split
+    // step then reads the compacted version and finds no cell over the tier.
     Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 10.0)), (2L, Seq(20.0, 20.0)),
       (3L, Seq(30.0, 30.0))).toDF("cent_id", "ce").write.parquet(s"$root/cents")
     Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$root/books")
@@ -4510,15 +4478,17 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       .parquet(s"$root/tombstones/t0")
     s.range(20, 40).select(col("id").as("vec_id")).write
       .parquet(s"$root/tombstones/t1")
+    RootPointer.publish(s, base, "v00001")
     val emb = s.range(120).selectExpr("id AS vec_id", "array(0.0, 0.0) AS e")
-    val (compacted, split, merged) = Similarity.maybeMaintainIvf(s, root, emb,
+    val (compacted, split, merged) = Similarity.maybeMaintainIvfVersioned(s, base, emb,
       maxTombstones = 1, maxSharePpm = 400000, minSharePpm = 100000)
     assert(compacted, "the tombstone tier must trigger compaction")
     assert(!split, "live shares are uniform at 250000 ppm — no split past a 400000 tier")
     assert(!merged, "live shares are uniform at 250000 ppm — no merge below a 100000 floor")
-    assert(s.read.parquet(s"$root/codes").count() == 80L, "deleted rows reclaimed")
-    assert(s.read.parquet(s"$root/cents").count() == 4L, "no cell split")
-    assert(Similarity.ivfTombstoneCount(s, root) == 0)
+    val cur = RootPointer.resolve(s, base)
+    assert(s.read.parquet(s"$cur/codes").count() == 80L, "deleted rows reclaimed")
+    assert(s.read.parquet(s"$cur/cents").count() == 4L, "no cell split")
+    assert(Similarity.ivfTombstoneCount(s, cur) == 0)
   }
 
   test("ivfCellMergeArtifact: full-probe serve bit-identical, mass conserved, cold rows rerouted, merged centroids gone") {
@@ -4574,98 +4544,104 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ivf_merge_policy").toString
+    import graft.ops.RootPointer
+    val dir = java.nio.file.Files.createTempDirectory("ivf_merge_policy").toString
     // cell 3 is EMPTY (a centroid with no code rows — the q132 dead-nlist
     // finding); cells 1/2 small but over the floor; cell 0 hot
-    def writeArt(root: String): Unit = {
+    def publishArt(base: String, nCells: Int): Unit = {
+      val root = s"$base/v00001"
       Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 10.0)), (2L, Seq(20.0, 20.0)),
-        (3L, Seq(30.0, 30.0))).toDF("cent_id", "ce").write.parquet(s"$root/cents")
+        (3L, Seq(30.0, 30.0))).take(nCells).toDF("cent_id", "ce").write.parquet(s"$root/cents")
       Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$root/books")
-      s.range(100).selectExpr("id AS vec_id",
-        "CAST(CASE WHEN id < 80 THEN 0 WHEN id % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS cell",
+      val cell = if (nCells == 4) "CASE WHEN id < 80 THEN 0 WHEN id % 2 = 0 THEN 1 ELSE 2 END"
+        else "id % 2"
+      s.range(100).selectExpr("id AS vec_id", s"CAST($cell AS BIGINT) AS cell",
         "array(1, 2) AS codes").write.parquet(s"$root/codes")
+      RootPointer.publish(s, base, "v00001")
     }
     val emb = s.range(100).selectExpr("id AS vec_id",
       "array(CAST(id % 13 AS DOUBLE) * 0.1, CAST(id % 7 AS DOUBLE) * 0.1) AS e")
+    def merge(base: String, floor: Long) = Similarity.maybeMaintainIvfVersioned(s, base, emb,
+      maxTombstones = 1, maxSharePpm = 1000000L, minSharePpm = floor)._3
+    def cur(base: String, t: String) = s.read.parquet(s"${RootPointer.resolve(s, base)}/$t")
     // shares: 800000 / 100000 / 100000 / 0 ppm. Floor 50000: only the
     // empty cell is below → pure metadata reclamation, no row moves.
-    val root1 = s"$base/a1"; writeArt(root1)
-    assert(Similarity.maybeMergeIvf(s, root1, emb, minSharePpm = 50000))
-    assert(s.read.parquet(s"$root1/cents").count() == 3, "empty cell reclaimed")
-    assert(s.read.parquet(s"$root1/codes").count() == 100, "no row touched")
+    val base1 = s"$dir/a1"; publishArt(base1, 4)
+    assert(merge(base1, 50000))
+    assert(cur(base1, "cents").count() == 3, "empty cell reclaimed")
+    assert(cur(base1, "codes").count() == 100, "no row touched")
     // tier no-op now: everything surviving is over the floor
-    assert(!Similarity.maybeMergeIvf(s, root1, emb, minSharePpm = 50000))
+    assert(!merge(base1, 50000))
     // floor 150000: cells 1 and 2 fold into survivors; mass conserved and
     // every row routes to a surviving centroid
-    assert(Similarity.maybeMergeIvf(s, root1, emb, minSharePpm = 150000))
-    val occ = s.read.parquet(s"$root1/codes").groupBy("cell").count().collect()
+    assert(merge(base1, 150000))
+    val occ = cur(base1, "codes").groupBy("cell").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val centIds = s.read.parquet(s"$root1/cents").select("cent_id").collect()
+    val centIds = cur(base1, "cents").select("cent_id").collect()
       .map(_.getLong(0)).toSet
     assert(occ.values.sum == 100L, s"mass lost: $occ")
     assert(occ.keySet.subsetOf(centIds) && centIds.size == 1,
       s"rows must route to the one survivor: $occ vs $centIds")
     // single-cell index: nothing below a saturating floor (share =
     // 1000000 is not < 1000000) — no-op, never a self-fold
-    assert(!Similarity.maybeMergeIvf(s, root1, emb, minSharePpm = 1000000,
-      mergeCells = 10))
-    assert(s.read.parquet(s"$root1/cents").count() == 1, "no-op must not touch cents")
-    val root2 = s"$base/a2"; writeArt(root2)
-    // all-cold refusal: every cell under the floor with room in the merge
-    // budget would fold the whole index — refuse, artifact untouched
-    assert(!Similarity.maybeMergeIvf(s, root2, emb, minSharePpm = 900000,
-      mergeCells = 10))
-    assert(s.read.parquet(s"$root2/cents").count() == 4, "refusal must not touch cents")
-    // crash window: committed merge swap, live codes retired, nothing
-    // promoted — the next policy call must finish it, not recompute
-    val hfs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Similarity.ivfCellMergeArtifact(s, root2, s"$root2/__merging", emb)
-    graft.ops.ArtifactSwap.commit(hfs, s"$root2/__merging")
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root2/codes"), true)
-    assert(Similarity.maybeMergeIvf(s, root2, emb, minSharePpm = 50000),
-      "recovery must finish the interrupted merge swap")
-    assert(s.read.parquet(s"$root2/codes").count() == 100L, "mass lost in recovery")
-    assert(s.read.parquet(s"$root2/cents").count() == 2L,
-      "the bottom-2 default merge must have landed through recovery")
-    // an UNcommitted scratch is discarded and the live artifact untouched
-    val root3 = s"$base/a3"; writeArt(root3)
-    Similarity.ivfCellMergeArtifact(s, root3, s"$root3/__merging", emb)
-    assert(!Similarity.recoverMergeIvf(s, root3) &&
-      s.read.parquet(s"$root3/cents").count() == 4L,
-      "uncommitted scratch must be discarded, live artifact intact")
+    val one = RootPointer.resolve(s, base1)
+    assert(!merge(base1, 1000000))
+    assert(RootPointer.resolve(s, base1) == one && cur(base1, "cents").count() == 1,
+      "no-op must not publish")
+    // all-cold refusal: both cells of a two-cell index under the floor
+    // would fold the whole index — refuse, nothing published
+    val base2 = s"$dir/a2"; publishArt(base2, 2)
+    assert(!merge(base2, 900000))
+    assert(RootPointer.resolve(s, base2) == s"$base2/v00001", "refusal must not publish")
+    // crash window: a merge staged but never published — readers keep the
+    // unmerged root, and the next window discards the remnant and merges
+    val base3 = s"$dir/a3"; publishArt(base3, 4)
+    Similarity.ivfCellMergeArtifact(s, s"$base3/v00001", s"$base3/v00002", emb)
+    assert(RootPointer.resolve(s, base3) == s"$base3/v00001" &&
+      cur(base3, "cents").count() == 4L, "an unpublished merge must not be visible")
+    assert(merge(base3, 50000), "the next window must merge and publish")
+    assert(cur(base3, "codes").count() == 100L, "mass lost")
+    assert(cur(base3, "cents").count() == 3L, "the window's own merge must land")
   }
 
   test("maintenance composition: planted skew splits and the dead tail merges in one maybeMaintainIvf pass") {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ivf_maintain2").toString
-    val root = s"$base/art"
+    import graft.ops.RootPointer
+    val base = java.nio.file.Files.createTempDirectory("ivf_maintain2").toString + "/ivf"
+    val root = s"$base/v00001"
     // cell 0: 80 rows (hot, separable halves); cells 1/2: 9 rows each;
-    // cell 3: EMPTY — one pass must split the hot cell AND reclaim the
-    // dead one, leaving mass conserved and every row reachable
+    // cell 3: EMPTY — one window must split the hot cell AND reclaim the
+    // dead one (the merge step reads the split step's version), leaving
+    // mass conserved and every row reachable
     Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 10.0)), (2L, Seq(20.0, 20.0)),
       (3L, Seq(30.0, 30.0))).toDF("cent_id", "ce").write.parquet(s"$root/cents")
     Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$root/books")
     s.range(98).selectExpr("id AS vec_id",
       "CAST(CASE WHEN id < 80 THEN 0 WHEN id % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS cell",
       "array(1, 2) AS codes").write.parquet(s"$root/codes")
+    RootPointer.publish(s, base, "v00001")
     val emb = s.range(98).selectExpr("id AS vec_id",
       """CASE WHEN id < 80 THEN array(CAST(id % 13 AS DOUBLE) * 0.1, CAST(id % 7 AS DOUBLE) * 0.1)
               ELSE array(CAST((1 + id % 3) * 10 AS DOUBLE), CAST((1 + id % 3) * 10 AS DOUBLE)) END AS e""")
-    val (compacted, split, merged) = Similarity.maybeMaintainIvf(s, root, emb,
+    val (compacted, split, merged) = Similarity.maybeMaintainIvfVersioned(s, base, emb,
       maxTombstones = 5, maxSharePpm = 500000, minSharePpm = 50000)
     assert(!compacted && split && merged, s"($compacted, $split, $merged)")
-    val occ = s.read.parquet(s"$root/codes").groupBy("cell").count().collect()
+    val cur = RootPointer.resolve(s, base)
+    val occ = s.read.parquet(s"$cur/codes").groupBy("cell").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val centIds = s.read.parquet(s"$root/cents").select("cent_id").collect()
+    val centIds = s.read.parquet(s"$cur/cents").select("cent_id").collect()
       .map(_.getLong(0)).toSet
     assert(occ.values.sum == 98L, s"mass lost: $occ")
     assert(occ.values.max < 80L, s"hot cell not lighter: $occ")
     assert(!centIds.contains(3L), "the dead cell must be reclaimed")
     assert(occ.keySet.subsetOf(centIds),
       s"rows route to missing centroids: ${occ.keySet -- centIds}")
+    // one publish for the whole window: the split's intermediate version
+    // was never published and is gone
+    assert(RootPointer.completeVersions(s, base) == Seq("v00001", cur.split('/').last) &&
+      RootPointer.cleanStaging(s, base).isEmpty)
   }
 
   test("versioned-root pointer: readers always resolve a complete immutable root; the lex policy publishes through it") {
@@ -4693,8 +4669,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     hfs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/v00002/seg0"))
     assert(RootPointer.resolve(s, base) == s"$base/v00001",
       "an unmarked version dir must never resolve")
-    // versioned compaction: acts on a CLONE, publishes the next version;
-    // the old root stays byte-immutable (a pre-flip reader's view)
+    // versioned compaction: stages the compaction as the next version and
+    // publishes it; the old root stays byte-immutable (a pre-flip reader's view)
     assert(Retrieval.maybeCompactLexVersioned(s, base, maxSegments = 1))
     val cur = RootPointer.resolve(s, base)
     assert(cur != s"$base/v00001" && cur.startsWith(s"$base/v0"), cur)
@@ -4764,31 +4740,158 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       "no-op pass must clean the ghost and leave no staging")
   }
 
+  test("maintenance window: a tombstone written into the published root mid-window refuses the publish, keeps it serving, leaves no staging") {
+    val s = spark
+    import s.implicits._
+    import graft.ops.{Retrieval, RootPointer, TextOps}
+    val docs = TextOps.tokenizedDocs(s, sf)
+    val qt = TextOps.queryTerms(s, sf)
+    def rank(t: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)) =
+      TextOps.bm25RankedFrom(t._1, t._2, t._3, qt).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val base = java.nio.file.Files.createTempDirectory("window_refuse").toString + "/lex"
+    val v1 = s"$base/v00001"
+    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 0), v1, "seg0")
+    Retrieval.lexIndexSegment(docs.filter(col("doc_id") % 2 === 1), v1, "seg1")
+    RootPointer.publish(s, base, "v00001")
+    val victim = rank(Retrieval.lexIndexServe(s, v1)).map(_._3).min
+    // a delete writer that lands after the compactor read the root and
+    // before the publish: the staged version never saw it
+    val ex = intercept[IllegalStateException] {
+      RootPointer.maintain(s, base) { (cur, out) =>
+        Retrieval.lexIndexCompact(s, cur, out)
+        graft.streaming.DocStream.tombstoneBatch(s, cur, Seq(victim).toDF("doc_id"), "late")
+        true
+      }
+    }
+    assert(ex.getMessage.contains("changed during the maintenance window"), ex.getMessage)
+    assert(RootPointer.resolve(s, base) == v1 && RootPointer.cleanStaging(s, base).isEmpty,
+      "a refused publish must leave the root serving and no staging")
+    // the root serves with the late delete applied — never resurrected
+    val rebuilt = rank(TextOps.lexIndexOf(docs.filter(col("doc_id") =!= victim)))
+    assert(rank(Retrieval.lexIndexServe(s, v1)) == rebuilt)
+    // the next window compacts with the delete included
+    assert(Retrieval.maybeCompactLexVersioned(s, base, 1))
+    assert(rank(Retrieval.lexIndexServe(s, RootPointer.resolve(s, base))) == rebuilt)
+  }
+
+  test("maintenance window: a residual root keeps its marker through a compaction-only window; the next split re-encodes and audits clean") {
+    val s = spark
+    import graft.ops.RootPointer
+    val (cents, books, codes) = Similarity.residualParts(s, sf)
+    val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
+    val base = java.nio.file.Files.createTempDirectory("window_marker").toString + "/ivf"
+    val v1 = s"$base/v00001"
+    val dels = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
+    Similarity.writeIvfArtifacts(v1, cents, books, codes,
+      "t0" -> dels.filter(col("vec_id") % 2 === 0), "t1" -> dels.filter(col("vec_id") % 2 =!= 0))
+    Similarity.markResidual(s, v1)
+    RootPointer.publish(s, base, "v00001")
+    assert(Similarity.maybeMaintainIvfVersioned(s, base, emb,
+      maxTombstones = 1, maxSharePpm = 1000000L) == ((true, false, false)))
+    val compacted = RootPointer.resolve(s, base)
+    assert(compacted != v1 && Similarity.ivfTombstoneCount(s, compacted) == 0)
+    assert(Similarity.isResidualRoot(s, compacted),
+      "the compacted version must carry the _VARIANT_RESIDUAL marker")
+    // the split reads the marker from the compacted root: the re-encoding
+    // route, audited clean (the plain route would corrupt the codes)
+    assert(Similarity.maybeMaintainIvfVersioned(s, base, emb,
+      maxTombstones = 1, maxSharePpm = 1L)._2)
+    val cur = RootPointer.resolve(s, base)
+    assert(cur != compacted && Similarity.isResidualRoot(s, cur))
+    assert(Similarity.residualAuditMismatches(s, cur, emb) == 0L,
+      "a split after a compaction-only window must re-encode")
+  }
+
+  test("maintenance window: a crash after the first of two chained steps publishes nothing; the next window publishes the full composition") {
+    val s = spark
+    graft.functions.VectorFunctions.register(s)
+    import s.implicits._
+    import graft.ops.RootPointer
+    val base = java.nio.file.Files.createTempDirectory("window_chain").toString + "/ivf"
+    val v1 = s"$base/v00001"
+    // cell 0: 80 rows; cells 1/2: 9 rows each; cell 3 empty. Ten cell-0
+    // rows are tombstoned in two files, so compaction acts; at a 150000
+    // ppm floor the merge then folds cells 3 and 1.
+    Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 10.0)), (2L, Seq(20.0, 20.0)),
+      (3L, Seq(30.0, 30.0))).toDF("cent_id", "ce").write.parquet(s"$v1/cents")
+    Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$v1/books")
+    s.range(98).selectExpr("id AS vec_id",
+      "CAST(CASE WHEN id < 80 THEN 0 WHEN id % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS cell",
+      "array(1, 2) AS codes").write.parquet(s"$v1/codes")
+    s.range(5).select(col("id").as("vec_id")).write.parquet(s"$v1/tombstones/t0")
+    s.range(5, 10).select(col("id").as("vec_id")).write.parquet(s"$v1/tombstones/t1")
+    RootPointer.publish(s, base, "v00001")
+    val emb = s.range(98).selectExpr("id AS vec_id",
+      "array(CAST(id % 13 AS DOUBLE), CAST(id % 7 AS DOUBLE)) AS e")
+    def maintain(e: org.apache.spark.sql.DataFrame) = Similarity.maybeMaintainIvfVersioned(
+      s, base, e, maxTombstones = 1, maxSharePpm = 1000000L, minSharePpm = 150000L)
+    // the merge step dies after the compaction step staged its version
+    // (the raw vectors of the cold cells' members are missing)
+    intercept[IllegalArgumentException](maintain(emb.filter(col("vec_id") < 80)))
+    assert(RootPointer.resolve(s, base) == v1 && RootPointer.cleanStaging(s, base).isEmpty,
+      "a failed window must publish nothing and leave no staging")
+    assert(Similarity.ivfTombstoneCount(s, v1) == 2)
+    // a hard kill at the same point leaves the compaction's version behind,
+    // unpublished: readers never see it
+    Similarity.ivfCodesCompact(s, v1, s"$base/v00002")
+    assert(RootPointer.resolve(s, base) == v1)
+    // the next window discards the remnant and publishes both steps
+    assert(maintain(emb) == ((true, false, true)))
+    val cur = RootPointer.resolve(s, base)
+    assert(RootPointer.completeVersions(s, base) == Seq("v00001", cur.split('/').last) &&
+      RootPointer.cleanStaging(s, base).isEmpty)
+    val occ = s.read.parquet(s"$cur/codes").groupBy("cell").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val centIds = s.read.parquet(s"$cur/cents").select("cent_id").collect()
+      .map(_.getLong(0)).toSet
+    assert(occ.values.sum == 88L && Similarity.ivfTombstoneCount(s, cur) == 0,
+      s"the compaction must be in the published version: $occ")
+    assert(centIds == Set(0L, 2L) && occ.keySet.subsetOf(centIds),
+      s"the merge must be in the published version: $occ vs $centIds")
+  }
+
   test("maybeCompactIvf: tombstone tier triggers the swap; plain serve after ≡ tombstoned serve before") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("ivf_policy").toString + "/art"
-    // minimal artifact: the policy swaps codes and retires tombstones; it
+    import graft.ops.RootPointer
+    val base = java.nio.file.Files.createTempDirectory("ivf_policy").toString + "/ivf"
+    val v1 = s"$base/v00001"
+    // minimal artifact: compaction rewrites codes and drops tombstones; it
     // must never interpret cents/books (frozen-quantizer contract)
-    Seq((0L, Seq(0.0))).toDF("cent_id", "ce").write.parquet(s"$root/cents")
-    Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$root/books")
+    Seq((0L, Seq(0.0))).toDF("cent_id", "ce").write.parquet(s"$v1/cents")
+    Seq((0, 0L, Seq(0.0))).toDF("m", "cent_id", "ce").write.parquet(s"$v1/books")
     (0L to 19L).map(i => (i, 0L, Seq(1, 2))).toDF("vec_id", "cell", "codes")
-      .write.parquet(s"$root/codes")
+      .write.parquet(s"$v1/codes")
+    RootPointer.publish(s, base, "v00001")
     import graft.streaming.VecStream
-    VecStream.tombstoneBatch(Seq(1L).toDF("vec_id"), root, "t0", maxTombstones = 2)
-    VecStream.tombstoneBatch(Seq(3L).toDF("vec_id"), root, "t1", maxTombstones = 2)
-    assert(Similarity.ivfTombstoneCount(s, root) == 2, "below tier: no compaction yet")
-    VecStream.tombstoneBatch(Seq(5L).toDF("vec_id"), root, "t2", maxTombstones = 2)
-    // third batch crossed the tier: tombstones physically applied + retired
-    assert(Similarity.ivfTombstoneCount(s, root) == 0,
-      "compaction must retire the tombstones dir")
-    val live = s.read.parquet(s"$root/codes").select("vec_id")
+    val emb = s.range(20).selectExpr("id AS vec_id", "array(0.0) AS e")
+    // delete batches land in the published root; the window runs between
+    // batches
+    def deleteThenMaintain(id: Long, name: String): Boolean = {
+      VecStream.tombstoneBatch(Seq(id).toDF("vec_id"), RootPointer.resolve(s, base), name)
+      Similarity.maybeMaintainIvfVersioned(s, base, emb,
+        maxTombstones = 2, maxSharePpm = 1000000L)._1
+    }
+    assert(!deleteThenMaintain(1L, "t0") && !deleteThenMaintain(3L, "t1"))
+    assert(RootPointer.resolve(s, base) == v1 && Similarity.ivfTombstoneCount(s, v1) == 2,
+      "below tier: no compaction yet")
+    // third batch crossed the tier: tombstones physically applied in a new
+    // published version that carries none
+    assert(deleteThenMaintain(5L, "t2"))
+    val cur = RootPointer.resolve(s, base)
+    assert(cur != v1 && Similarity.ivfTombstoneCount(s, cur) == 0,
+      "compaction must publish a version without tombstones")
+    val live = s.read.parquet(s"$cur/codes").select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(live == (0L to 19L).toSet -- Set(1L, 3L, 5L),
-      s"plain serve after the swap must equal the tombstoned serve before: $live")
-    // cents/books byte-untouched by the swap (frozen quantizer)
-    assert(s.read.parquet(s"$root/cents").count() == 1 &&
-      s.read.parquet(s"$root/books").count() == 1)
+      s"plain serve after the publish must equal the tombstoned serve before: $live")
+    // cents/books carried unchanged (frozen quantizer); the old root keeps
+    // its tombstones (published roots are never rewritten)
+    assert(s.read.parquet(s"$cur/cents").count() == 1 &&
+      s.read.parquet(s"$cur/books").count() == 1)
+    assert(Similarity.ivfTombstoneCount(s, v1) == 3)
   }
 
   test("q150 BPE trainer: planted fold algebra, and a plain-Scala reference reproduces the merge table") {

@@ -504,10 +504,10 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
 
   test("self-maintaining LSM: a forced 12-batch drain under the compaction policy ends ≤ tier segments, serve ≡ one-shot bit-for-bit") {
     val spark = TestSpark.spark
-    import graft.ops.{Retrieval, TextOps}
+    import graft.ops.{Retrieval, RootPointer, TextOps}
     val all = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val art = java.nio.file.Files.createTempDirectory("docstream_policy").toString + "/idx"
+    val base = java.nio.file.Files.createTempDirectory("docstream_policy").toString + "/idx"
     val maxSegs = 4
     // base segment, then 12 forced micro-batches folding in under the
     // size-tiered policy — the long-running-ingest shape the round-14
@@ -515,7 +515,8 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     // and the serve-time df fold pays the measured +75%)
     Retrieval.lexIndexSegment(
       all.filter(col("doc_id") % 13 === 12)
-        .select(col("doc_id"), split(col("text"), " ").as("w")), art, "seg0")
+        .select(col("doc_id"), split(col("text"), " ").as("w")), s"$base/v00001", "seg0")
+    RootPointer.publish(spark, base, "v00001")
     val dir = java.nio.file.Files.createTempDirectory("docstream_policy_src").toString
     (0 to 11).foreach { m =>
       all.filter(col("doc_id") % 13 === m).coalesce(1)
@@ -528,7 +529,10 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         if (!batch.isEmpty) {
-          DocStream.lexAppendBatch(spark, art, batch, s"seg_b$id", maxSegments = maxSegs)
+          // append into the published root, then the versioned policy
+          // between batches (one writer per base)
+          DocStream.lexAppendBatch(spark, RootPointer.resolve(spark, base), batch, s"seg_b$id")
+          Retrieval.maybeCompactLexVersioned(spark, base, maxSegs)
           batches += 1
         }
         ()
@@ -536,10 +540,12 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     assert(batches == 12, s"expected 12 forced micro-batches, got $batches")
+    val art = RootPointer.resolve(spark, base)
     val endSegs = Retrieval.lexSegmentCount(spark, art)
     assert(endSegs <= maxSegs,
       s"policy failed to hold the tier: $endSegs segments after the drain")
-    assert(endSegs < batches + 1, "no compaction ever ran — the trigger is dead code")
+    assert(endSegs < batches + 1 && art != s"$base/v00001",
+      "no compaction ever ran — the trigger is dead code")
     // the whole point of the exact additive merge: the self-maintained
     // artifact serves bit-for-bit like a one-shot full-corpus index
     val qt = TextOps.queryTerms(spark, sf)
@@ -647,23 +653,25 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
 
   test("self-maintaining ANN ingest: a skewed append drain under the split policy splits the hot list; full-probe serve ≡ policy-free appends") {
     val spark = TestSpark.spark
-    import graft.ops.Similarity
+    import graft.ops.{RootPointer, Similarity}
     graft.functions.VectorFunctions.register(spark)
     val all = Tables.embeddings(spark, sf)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")
     val static = all.filter(col("vec_id") % 5 =!= 0)
     // train on the full corpus (dense 0..k-1 seed ids — the LUT decode
     // assumes them), encode the static subset as the initial code table;
-    // two identical roots: one drained under the policy, one policy-free
+    // two identical artifacts: a versioned one drained under the policy,
+    // and a policy-free plain root
     val (subs, seeds) = Similarity.subSplit(all)
     val (cents, books, _) = Similarity.ivfPqIndex(all, subs, seeds)
     val codes0 = Similarity.ivfPqAppend(cents, books, static)
     val base = java.nio.file.Files.createTempDirectory("vecstream_split").toString
-    Seq(s"$base/pol", s"$base/ctl").foreach { r =>
+    Seq(s"$base/polv/v00001", s"$base/ctl").foreach { r =>
       cents.write.parquet(s"$r/cents")
       books.write.parquet(s"$r/books")
       codes0.write.parquet(s"$r/codes")
     }
+    RootPointer.publish(spark, s"$base/polv", "v00001")
     // skewed ingest: three batches of near-clones of one static vector —
     // every appended row routes to that vector's cell, which becomes the
     // hot list by construction
@@ -679,17 +687,20 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     val embAll = all.unionByName(batches.reduce(_ unionByName _)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e"))
     batches.foreach { b =>
-      VecStream.indexAppendBatch(b, s"$base/pol", embAll, maxSharePpm = 180000)
-      VecStream.indexAppendBatch(b, s"$base/ctl", embAll, maxSharePpm = 0)
+      VecStream.indexAppendBatch(b, RootPointer.resolve(spark, s"$base/polv"))
+      Similarity.maybeMaintainIvfVersioned(spark, s"$base/polv", embAll,
+        maxTombstones = 1, maxSharePpm = 180000)
+      VecStream.indexAppendBatch(b, s"$base/ctl")
     }
+    val pol = RootPointer.resolve(spark, s"$base/polv")
     // the policy fired: the maintained root carries more cells, every
     // routed cell has a centroid, and no list holds what the hot one would
-    val nPol = spark.read.parquet(s"$base/pol/cents").count().toInt
+    val nPol = spark.read.parquet(s"$pol/cents").count().toInt
     val nCtl = spark.read.parquet(s"$base/ctl/cents").count().toInt
     assert(nPol > nCtl, s"split policy never fired: $nPol vs $nCtl cells")
-    val occ = spark.read.parquet(s"$base/pol/codes").groupBy("cell").count()
+    val occ = spark.read.parquet(s"$pol/codes").groupBy("cell").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val centIds = spark.read.parquet(s"$base/pol/cents").select("cent_id")
+    val centIds = spark.read.parquet(s"$pol/cents").select("cent_id")
       .collect().map(_.getLong(0)).toSet
     assert(occ.keySet.subsetOf(centIds),
       s"rows route to missing centroids: ${occ.keySet -- centIds}")
@@ -705,15 +716,15 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       spark.read.parquet(s"$r/cents"), spark.read.parquet(s"$r/books"),
       spark.read.parquet(s"$r/codes"), queries, nprobe = np)
       .collect().map(_.toString).toSeq
-    val pol = serve(s"$base/pol", nPol)
+    val polServed = serve(pol, nPol)
     val ctl = serve(s"$base/ctl", nCtl)
-    assert(pol.nonEmpty && pol == ctl,
+    assert(polServed.nonEmpty && polServed == ctl,
       "full-probe serve diverged between the self-maintained and policy-free roots")
   }
 
   test("self-maintaining ANN ingest: the merge policy reclaims a dead list during the drain; full-probe serve ≡ policy-free appends") {
     val spark = TestSpark.spark
-    import graft.ops.Similarity
+    import graft.ops.{RootPointer, Similarity}
     graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val all = Tables.embeddings(spark, sf)
@@ -728,11 +739,12 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       Seq((999L, Seq.fill(dim)(1e6))).toDF("cent_id", "ce"))
     val codes0 = Similarity.ivfPqAppend(cents, books, static)
     val base = java.nio.file.Files.createTempDirectory("vecstream_merge").toString
-    Seq(s"$base/pol", s"$base/ctl").foreach { r =>
+    Seq(s"$base/polv/v00001", s"$base/ctl").foreach { r =>
       cents.write.parquet(s"$r/cents")
       books.write.parquet(s"$r/books")
       codes0.write.parquet(s"$r/codes")
     }
+    RootPointer.publish(spark, s"$base/polv", "v00001")
     val v0 = static.orderBy("vec_id").select("e").head().getSeq[Double](0)
     val batches = (0 until 2).map { b =>
       (0 until 10).map { i =>
@@ -744,18 +756,21 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     val embAll = all.unionByName(batches.reduce(_ unionByName _)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e"))
     batches.foreach { b =>
-      VecStream.indexAppendBatch(b, s"$base/pol", embAll, minSharePpm = 1000)
-      VecStream.indexAppendBatch(b, s"$base/ctl", embAll)
+      VecStream.indexAppendBatch(b, RootPointer.resolve(spark, s"$base/polv"))
+      Similarity.maybeMaintainIvfVersioned(spark, s"$base/polv", embAll,
+        maxTombstones = 1, maxSharePpm = 1000000L, minSharePpm = 1000)
+      VecStream.indexAppendBatch(b, s"$base/ctl")
     }
+    val pol = RootPointer.resolve(spark, s"$base/polv")
     // the merge fired: the dead centroid left the maintained root's cents
     // (pure metadata reclamation — no row ever routed there)
-    val polIds = spark.read.parquet(s"$base/pol/cents").select("cent_id")
+    val polIds = spark.read.parquet(s"$pol/cents").select("cent_id")
       .collect().map(_.getLong(0)).toSet
     val ctlIds = spark.read.parquet(s"$base/ctl/cents").select("cent_id")
       .collect().map(_.getLong(0)).toSet
     assert(ctlIds.contains(999L) && !polIds.contains(999L),
       s"merge policy never reclaimed the dead list: pol=$polIds")
-    val polN = spark.read.parquet(s"$base/pol/codes").count()
+    val polN = spark.read.parquet(s"$pol/codes").count()
     assert(polN == spark.read.parquet(s"$base/ctl/codes").count(),
       "append mass diverged across roots")
     // routing-only: full-probe serving is bit-identical across the drains
@@ -764,9 +779,9 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       spark.read.parquet(s"$r/cents"), spark.read.parquet(s"$r/books"),
       spark.read.parquet(s"$r/codes"), queries, nprobe = np)
       .collect().map(_.toString).toSeq
-    val pol = serve(s"$base/pol", polIds.size)
+    val polServed = serve(pol, polIds.size)
     val ctl = serve(s"$base/ctl", ctlIds.size)
-    assert(pol.nonEmpty && pol == ctl,
+    assert(polServed.nonEmpty && polServed == ctl,
       "full-probe serve diverged between the merge-maintained and policy-free roots")
   }
 
