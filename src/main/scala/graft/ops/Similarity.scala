@@ -182,9 +182,7 @@ object Similarity {
     val emb = embWithNorm(s, d).filter(col("nrm") > 0).cache()
     val cents = (if (trainIters > 0)
         trainCentroids(emb.select("vec_id", "e"), nlist, trainIters)
-      else
-        emb.filter(col("vec_id") < nlist)
-          .select(col("vec_id").as("cent_id"), col("e").as("ce")))
+      else seedCents(emb, nlist))
       .withColumn("cn", sqrt(expr("graft_dot(ce, ce)")))
       .select(col("cent_id"), col("ce"), col("cn"))
     // nearest-topN centroids per vector: the centroid set collapses to ONE
@@ -243,15 +241,13 @@ object Similarity {
     // round; PlanSpec "q69 cell assignment" now pins the map-side shape.)
     // Tie-break: array_min over struct(_d, cent_id) is the same
     // lexicographic (distance, id) minimum the old groupBy-min computed.
-    val cs = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cs"))
-    emb.crossJoin(broadcast(cs))
-      .withColumn("m", expr("element_at(graft_near_cells(e, cs, 1), 1)"))
+    emb.crossJoin(broadcast(ccRow(cents)))
+      .withColumn("m", expr("element_at(graft_near_cells(e, cc, 1), 1)"))
       .select(col("vec_id"), col("e"), col("m._d").as("dist"), col("m.cent_id").as("cell"))
   }
 
   private[graft] def trainCentroids(emb: DataFrame, nlist: Int, iters: Int): DataFrame = {
-    var cents = emb.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
+    var cents = seedCents(emb, nlist)
     (1 to iters).foreach { _ =>
       val prev = cents
       val means = assignCells(emb, prev)
@@ -403,10 +399,8 @@ object Similarity {
 
   def q69IvfTrained(s: SparkSession, d: String): DataFrame = {
     val emb = embWithNorm(s, d).select("vec_id", "e", "nrm")
-    val seed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
     // one fixed-point Lloyd round: assign to seeds, recompute exact means
-    val cents = fixedPointUpdate(assignCells(emb.select("vec_id", "e"), seed), seed)
+    val cents = knnCents(emb, IvfNList)
     // final assignment → inverted index; queries probe the nprobe nearest cells
     val index = assignCells(emb.select("vec_id", "e"), cents)
       .select(col("vec_id").as("neighbor_id"), col("e").as("en"),
@@ -463,9 +457,7 @@ object Similarity {
 
   def q71LloydTrained(s: SparkSession, d: String): DataFrame = {
     val emb = embWithNorm(s, d).select("vec_id", "e")
-    val seed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    var cents = seed
+    var cents = seedCents(emb, IvfNList)
     var stats: DataFrame = null
     for (r <- 1 to LloydRounds) {
       val asg = assignCells(emb, cents)
@@ -512,9 +504,7 @@ object Similarity {
     * vector map-side: per subspace the argmin struct (fixed-point dist,
     * code), then fingerprint + integer error sum. */
   private def pqEncode(emb: DataFrame, codebooks: DataFrame): DataFrame = {
-    val cs = codebooks.agg(
-      collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
-    emb.crossJoin(broadcast(cs))
+    emb.crossJoin(broadcast(csRow(codebooks)))
       .withColumn("enc", expr(
         s"transform(sequence(0, ${PqM - 1}), m -> " +
           s"element_at(graft_pq_near(slice(e, m * $PqSub + 1, $PqSub), cs, m, 1), 1))"))
@@ -552,8 +542,7 @@ object Similarity {
     * (vector, subspace) row to its codebook argmin (same one-row broadcast
     * shape as `pqEncode`), then integer means per (m, cell, i). */
   private[graft] def pqTrain(subs: DataFrame, seeds: DataFrame): DataFrame = {
-    val cs = seeds.agg(collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
-    val asg = subs.crossJoin(broadcast(cs))
+    val asg = subs.crossJoin(broadcast(csRow(seeds)))
       .withColumn("cell", expr("element_at(graft_pq_near(se, cs, m, 1), 1).cent_id"))
     val means = asg
       .select(col("m"), col("cell"), posexplode(col("se")).as(Seq("i", "v")))
@@ -633,8 +622,7 @@ object Similarity {
 
   def q73AdcTopk(s: SparkSession, d: String): DataFrame = {
     val (emb, subs, seeds) = pqParts(s, d)
-    val cs = pqTrain(subs, seeds)
-      .agg(collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
+    val cs = csRow(pqTrain(subs, seeds))
     // corpus → codes in subspace order (same argmin as pqEncode)
     val codes = emb.crossJoin(broadcast(cs))
       .withColumn("codes", expr(pqCodesExpr))
@@ -697,56 +685,200 @@ object Similarity {
     * trained index (OperatorSpec pins this through a real round trip). */
   def ivfPqIndex(emb: DataFrame, subs: DataFrame, seedsPq: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val coarseSeed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
     // cache the two tiny trained frames (nlist·dim + M·k rows): every
     // artifact-writing caller (q127/q133/q136/q138/q142) consumes cents
     // and books once directly AND once through codeTable's encode lineage
     // — uncached, the coarse train and the PQ train each ran twice
-    val cents = fixedPointUpdate(assignCells(emb, coarseSeed), coarseSeed).cache()
+    val cents = knnCents(emb, IvfNList).cache()
     val books = pqTrain(subs, seedsPq).cache()
     (cents, books, ivfPqAppend(cents, books, emb))
   }
 
-  /** Map-side assign+encode of a vector batch under ALREADY-TRAINED
-    * centroids + codebooks — both the index build's encode pass and the
-    * incremental ingest path (fresh vectors → cell+code rows to append to
-    * the persisted table; nothing existing is touched or re-encoded). Two
-    * one-row broadcasts, pure array expressions, no shuffle (PlanSpec). */
-  def ivfPqAppend(cents: DataFrame, books: DataFrame, emb: DataFrame): DataFrame = {
-    val cc = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    val cs = books.agg(collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
-    emb.crossJoin(broadcast(cc)).crossJoin(broadcast(cs))
-      .withColumn("cell", expr(s"$coarseArgminExpr.cent_id"))
-      .withColumn("codes", expr(pqCodesExpr))
-      .select(col("vec_id"), col("cell"), col("codes"))
-  }
+  /** Encode a vector batch under ALREADY-TRAINED centroids + codebooks
+    * ([[IvfCodec.FlatPq]]) — the build's encode pass and every ingest
+    * batch (nothing existing is touched or re-encoded). */
+  def ivfPqAppend(cents: DataFrame, books: DataFrame, emb: DataFrame): DataFrame =
+    IvfCodec.FlatPq.encode(cents, Some(books), emb)
 
-  /** Serve IVF-PQ top-k from persisted artifacts — no retraining, corpus
-    * embeddings never read. `queries` is any `(vec_id, e)` batch; a query
-    * sharing an id with a corpus vector excludes itself (the catalog
-    * convention). Same shapes as q74: LUT build is map-side under the two
-    * broadcasts, the candidate gate is a broadcast equi join on cell, and
-    * top-k + n_cand are ONE bounded aggregate ([[adcTopkWithCount]]), so
-    * the candidate subtree runs once and its only hash exchange is that
-    * aggregate's, on query_id. */
+  /** Serve IVF-PQ top-k from persisted artifacts: [[IvfCodec.FlatPq]]'s
+    * [[IvfCodec.searchFrom]]. */
   def ivfPqSearchFrom(cents: DataFrame, books: DataFrame, codeTable: DataFrame,
       queries: DataFrame, nprobe: Int = IvfNProbe, k: Int = AdcK,
       probeTap: DataFrame => DataFrame = identity,
-      candTap: DataFrame => DataFrame = identity): DataFrame = {
-    val cc = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    val cs = books.agg(collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
-    val index = codeTable
-      .select(col("vec_id").as("neighbor_id"), col("cell"), col("codes"))
-    val probes = probeTap(queries
-      .crossJoin(broadcast(cc)).crossJoin(broadcast(cs))
-      .withColumn("lut", expr(pqLutExpr))
-      .withColumn("pcell", explode(expr(probeCellsExpr(nprobe))))
-      .select(col("vec_id").as("query_id"), col("lut"), col("pcell").as("cell")))
-    val cand = candTap(index.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_fixed", expr(adcSumExpr)))
-    adcTopkWithCount(cand, k).orderBy("query_id", "rn")
+      candTap: DataFrame => DataFrame = identity): DataFrame =
+    IvfCodec.FlatPq.searchFrom(cents, Some(books), codeTable, queries, nprobe, k,
+      probeTap, candTap)
+
+  /** ONE IVF CODE TABLE SEAM, FAISS's `IndexIVF` shape (Johnson, Douze &
+    * Jégou, "Billion-scale similarity search with GPUs", 2017): one
+    * inverted-list skeleton over a pluggable quantizer. A codec states only
+    * what differs between code tables: how a batch encodes, how a query
+    * becomes per-(query, cell) probe rows, the candidate score and its
+    * order, and (PQ codecs) how a rerouted member's row is rewritten. The
+    * coarse train ([[knnCents]]), the search skeleton, and the split and
+    * merge cores are written once over it; [[IvfCodec.of]] is the one
+    * place a persisted root's codec is read.
+    *
+    * FROZEN-QUANTIZER CONTRACT: `cents` and (PQ) `books` are trained once
+    * and never change; every batch encodes under the persisted frames, so
+    * old and new codes stay comparable under one LUT. Exactness per codec:
+    *  - [[IvfCodec.FlatPq]] (q74) codes the raw vector, independent of
+    *    routing: append, delete, compaction, split and merge are exact (a
+    *    rebalance only rewrites `cell`).
+    *  - [[IvfCodec.ResidualPq]] (q75) codes x − c(cell): append, delete and
+    *    compaction are exact; a split or merge re-encodes every member whose
+    *    routed centroid changed, under the frozen books, and the window
+    *    audits the staged version before it can publish.
+    *  - [[IvfCodec.Sq8]] (q78) codes each vector in int8 and has no books
+    *    (`books` = None): append, delete and compaction are exact; it has no
+    *    rebalance route. */
+  sealed trait IvfCodec {
+    /** Code rows (vec_id, cell, payload…) of a batch under the frozen
+      * quantizer — the build's encode pass and every append; map-side
+      * under one-row broadcasts, no shuffle (PlanSpec). */
+    def encode(cents: DataFrame, books: Option[DataFrame], emb: DataFrame): DataFrame
+    /** One (query_id, cell, query-side columns) row per probed cell. */
+    protected def probes(cents: DataFrame, books: Option[DataFrame], queries: DataFrame,
+        nprobe: Int): DataFrame
+    /** Adds the score to (index ⋈ probes) candidate rows. */
+    protected def scored(cand: DataFrame): DataFrame
+    /** Per-query top-k + n_cand in the codec's order. */
+    protected def topk(cand: DataFrame, k: Int): DataFrame
+
+    /** Serve top-k from persisted artifacts, corpus embeddings never read;
+      * a query excludes its own id. Broadcast equi join on cell, then ONE
+      * bounded top-k + n_cand aggregate ([[topkWithCount]]) — the only
+      * hash exchange, on query_id. The taps see the probe rows and the
+      * scored candidates ([[observedServeMetrics]]). */
+    final def searchFrom(cents: DataFrame, books: Option[DataFrame], codeTable: DataFrame,
+        queries: DataFrame, nprobe: Int = IvfNProbe, k: Int = AdcK,
+        probeTap: DataFrame => DataFrame = identity,
+        candTap: DataFrame => DataFrame = identity): DataFrame = {
+      val probed = probeTap(probes(cents, books, queries, nprobe))
+      val cand = candTap(scored(codeTable.withColumnRenamed("vec_id", "neighbor_id")
+        .join(broadcast(probed), Seq("cell"))
+        .filter(col("query_id") =!= col("neighbor_id"))))
+      topk(cand, k).orderBy("query_id", "rn")
+    }
+  }
+
+  /** The PQ code tables: (vec_id, cell, codes) rows, (vec_id, e) batches,
+    * ranked by the integer ADC sum over per-(query, cell) LUTs. */
+  sealed trait PqCodec extends IvfCodec {
+    /** New code rows for rerouted members: `rows` are their current rows,
+      * `moved` their (vec_id, cell, e) under the new routing, `cents` the
+      * centroids routed to. Only a routing-dependent codec reads `books`. */
+    private[ops] def reroute(rows: DataFrame, moved: DataFrame, cents: DataFrame,
+        books: => DataFrame): DataFrame
+    /** Pre-publish audit of a staged rebalance (no-op by default). */
+    private[ops] def audit(s: SparkSession, out: String, emb: DataFrame,
+        action: String): Unit = ()
+    protected def scored(cand: DataFrame): DataFrame =
+      cand.withColumn("adc_fixed", expr(adcSumExpr))
+    protected def topk(cand: DataFrame, k: Int): DataFrame = adcTopkWithCount(cand, k)
+    /** [[searchFrom]] over a persisted root's live (untombstoned) rows. */
+    final def searchRoot(s: SparkSession, root: String, queries: DataFrame,
+        nprobe: Int): DataFrame =
+      searchFrom(s.read.parquet(s"$root/cents"), Some(s.read.parquet(s"$root/books")),
+        liveCodes(s, root), queries, nprobe)
+    protected def booksOf(books: Option[DataFrame]): DataFrame = books.getOrElse(
+      throw new IllegalArgumentException(s"$this needs its codebooks: books is None"))
+    protected def withBroadcasts(df: DataFrame, cents: DataFrame,
+        books: Option[DataFrame]): DataFrame =
+      df.crossJoin(broadcast(ccRow(cents))).crossJoin(broadcast(csRow(booksOf(books))))
+  }
+
+  object IvfCodec {
+    /** PQ codes of the raw vector (q74). */
+    case object FlatPq extends PqCodec {
+      def encode(cents: DataFrame, books: Option[DataFrame], emb: DataFrame): DataFrame =
+        withBroadcasts(emb, cents, books)
+          .withColumn("cell", expr(s"$coarseArgminExpr.cent_id"))
+          .withColumn("codes", expr(pqCodesExpr))
+          .select(col("vec_id"), col("cell"), col("codes"))
+      // one LUT per query, fanned out to its nprobe cells
+      protected def probes(cents: DataFrame, books: Option[DataFrame], queries: DataFrame,
+          nprobe: Int): DataFrame =
+        withBroadcasts(queries, cents, books)
+          .withColumn("lut", expr(pqLutExpr))
+          .withColumn("pcell", explode(expr(probeCellsExpr(nprobe))))
+          .select(col("vec_id").as("query_id"), col("lut"), col("pcell").as("cell"))
+      // the payload does not depend on routing: keep it, change `cell`
+      private[ops] def reroute(rows: DataFrame, moved: DataFrame, cents: DataFrame,
+          books: => DataFrame): DataFrame =
+        rows.drop("cell").join(moved.select("vec_id", "cell"), Seq("vec_id"))
+    }
+
+    /** PQ codes of the residual x − c(cell) (q75). */
+    case object ResidualPq extends PqCodec {
+      def encode(cents: DataFrame, books: Option[DataFrame], emb: DataFrame): DataFrame =
+        residualEncode(booksOf(books), residualFrame(cents, emb))
+      // per (query, probed cell) the query's RESIDUAL against that cell's
+      // centroid gets its own LUT: nprobe tiny LUTs per query, map-side
+      protected def probes(cents: DataFrame, books: Option[DataFrame], queries: DataFrame,
+          nprobe: Int): DataFrame =
+        withBroadcasts(queries, cents, books)
+          .withColumn("_p", explode(expr(
+            "slice(array_sort(transform(cc, c -> struct(" +
+              "graft_dot(e, e) - 2 * graft_dot(e, c.ce) + graft_dot(c.ce, c.ce) AS _d, " +
+              s"c.cent_id AS cent_id, c.ce AS cce))), 1, $nprobe)")))
+          .withColumn("e", expr("zip_with(e, _p.cce, (x, y) -> x - y)"))
+          .withColumn("lut", expr(pqLutExpr))
+          .select(col("vec_id").as("query_id"), col("_p.cent_id").as("cell"), col("lut"))
+      // re-encode x − c(ROUTED cell) under the frozen books: routing is
+      // the caller's (2-means / nearest-survivor), NOT the argmin
+      private[ops] def reroute(rows: DataFrame, moved: DataFrame, cents: DataFrame,
+          books: => DataFrame): DataFrame =
+        residualEncode(books, moved
+          .join(broadcast(cents.select(col("cent_id").as("cell"), col("ce"))), Seq("cell"))
+          .select(col("vec_id"), col("cell"), expr("zip_with(e, ce, (x, y) -> x - y)").as("e")))
+      // a re-encode bug dies HERE (the window then discards the staging),
+      // never as a published root
+      override private[ops] def audit(s: SparkSession, out: String, emb: DataFrame,
+          action: String): Unit = {
+        val bad = residualAuditMismatches(s, out, emb)
+        if (bad != 0L) throw new IllegalStateException(
+          s"residual $action staging failed the invariant audit: $bad rows' " +
+            "codes are not the frozen-book encode of x - c(routed cell); " +
+            "staging discarded, published root untouched")
+      }
+    }
+
+    /** int8 scalar codes (q78): (vec_id, cell, qc, max_abs, nrm) rows,
+      * nonzero-norm (vec_id, e, nrm) batches, ranked by the rounded
+      * approximate cosine, descending. A query encodes exactly as the index
+      * did, so a query that is also a corpus vector carries its own row. */
+    case object Sq8 extends IvfCodec {
+      def encode(cents: DataFrame, books: Option[DataFrame], emb: DataFrame): DataFrame =
+        withCodes(emb, cents)
+          .withColumn("cell", expr(s"$coarseArgminExpr.cent_id"))
+          .select(col("vec_id"), col("cell"), col("qc"), col("max_abs"), col("nrm"))
+      protected def probes(cents: DataFrame, books: Option[DataFrame], queries: DataFrame,
+          nprobe: Int): DataFrame =
+        withCodes(queries, cents)
+          .withColumn("pcell", explode(expr(probeCellsExpr(nprobe))))
+          .select(col("vec_id").as("query_id"), col("qc").as("cq"),
+            col("max_abs").as("maxq"), col("nrm").as("nq"), col("pcell").as("cell"))
+      protected def scored(cand: DataFrame): DataFrame =
+        cand.withColumn("idot", expr(
+            "aggregate(zip_with(cq, qc, (a, b) -> CAST(a AS BIGINT) * CAST(b AS BIGINT)), " +
+              "0L, (acc, x) -> acc + x)"))
+          .withColumn("sim8", expr(
+            "round(((CAST(idot AS DOUBLE) * (maxq / 127.0D)) * (max_abs / 127.0D)) / (nq * nrm), 6)"))
+      protected def topk(cand: DataFrame, k: Int): DataFrame =
+        topkWithCount(cand, col("sim8"), k).withColumnRenamed("score", "sim8")
+      private def withCodes(df: DataFrame, cents: DataFrame): DataFrame =
+        df.crossJoin(broadcast(ccRow(cents)))
+          .withColumn("max_abs", expr("array_max(transform(e, x -> abs(x)))"))
+          .withColumn("qc", expr(sq8CodesExpr))
+    }
+
+    /** The codec of a persisted IVF-PQ root: the one reader of the
+      * `_VARIANT_RESIDUAL` marker. */
+    def of(s: SparkSession, root: String): PqCodec = {
+      val p = new org.apache.hadoop.fs.Path(s"$root/$ResidualMarker")
+      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) ResidualPq else FlatPq
+    }
   }
 
   /** ANN serving observability: `Dataset.observe` counters piggybacked on
@@ -827,10 +959,15 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
     val q = queries.select(col("vec_id").as("query_id"), col("e").as("eq"))
     val corp = corpus.select(col("vec_id").as("neighbor_id"), col("e").as("en"))
+    exactTopk(corp.join(broadcast(shortlist), Seq("neighbor_id"))
+      .join(broadcast(q), Seq("query_id")), k)
+  }
+
+  /** The exact re-rank: fixed-point L2 top-k over (query_id, neighbor_id,
+    * eq, en) candidate pairs (q86, q165). */
+  private def exactTopk(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("exact_fixed"), col("neighbor_id"))
-    corp.join(broadcast(shortlist), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("exact_fixed", expr(
+    pairs.withColumn("exact_fixed", expr(
         s"CAST(floor((graft_dot(eq, eq) - 2 * graft_dot(eq, en) + graft_dot(en, en)) * $CentFixedScale) AS BIGINT)"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
@@ -864,7 +1001,7 @@ object Similarity {
     * equi join on cell, the only hash exchange is the query_id top-k. */
   def q75IvfPqResidual(s: SparkSession, d: String): DataFrame = {
     val (cents, books, codes) = residualParts(s, d)
-    residualSearchFrom(cents, books, codes,
+    IvfCodec.ResidualPq.searchFrom(cents, Some(books), codes,
       embWithNorm(s, d).select("vec_id", "e").filter(col("vec_id") < AdcQueries))
   }
 
@@ -876,11 +1013,10 @@ object Similarity {
       "c.cent_id AS cent_id, c.ce AS cce)))"
 
   /** (vec_id, cell, e := x − c(cell)) under the GIVEN coarse centroids —
-    * one map-side pass; shared by the build, the append (frozen
-    * artifacts), and the probe side. */
+    * one map-side pass; shared by the build and every append
+    * ([[IvfCodec.ResidualPq]]'s encode under frozen artifacts). */
   private def residualFrame(cents: DataFrame, vecs: DataFrame): DataFrame = {
-    val cc = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    vecs.crossJoin(broadcast(cc))
+    vecs.crossJoin(broadcast(ccRow(cents)))
       .withColumn("_k", expr(coarseMinExpr))
       .select(col("vec_id"), col("_k.cent_id").as("cell"),
         expr("zip_with(e, _k.cce, (x, y) -> x - y)").as("e"))
@@ -889,8 +1025,7 @@ object Similarity {
   /** Residual codes under the GIVEN codebooks (pqCodesExpr sees the
     * residual `e`) — map-side, one broadcast row. */
   private def residualEncode(books: DataFrame, resid: DataFrame): DataFrame = {
-    val cs = books.agg(collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
-    resid.crossJoin(broadcast(cs))
+    resid.crossJoin(broadcast(csRow(books)))
       .withColumn("codes", expr(pqCodesExpr))
       .select(col("vec_id"), col("cell"), col("codes"))
   }
@@ -901,15 +1036,13 @@ object Similarity {
     * so the residual index gets the same serving lifecycle. */
   private[graft] def residualParts(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val emb = embWithNorm(s, d).select("vec_id", "e")
-    val coarseSeed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
     // NOT cached here: q75 serves this trio in ONE action, where AQE
     // exchange reuse already deduplicates the trained subtrees and cache
     // barriers MEASURED 1.59× slower (r19 paired A/B). The multi-action
     // artifact entries (q160/q163/q165 — one write job per frame) cache
     // the returned cents/books themselves via [[residualPartsCached]],
     // where the same A/B measured 0.68×.
-    val cents = fixedPointUpdate(assignCells(emb, coarseSeed), coarseSeed)
+    val cents = knnCents(emb, IvfNList)
     val resid = residualFrame(cents, emb)
     val (rsubs, seeds) = subSplit(resid)
     val books = pqTrain(rsubs, seeds)
@@ -927,40 +1060,6 @@ object Similarity {
       : (DataFrame, DataFrame, DataFrame) = {
     val (cents, books, codes) = residualParts(s, d)
     (CacheBin.note(cents.cache()), CacheBin.note(books.cache()), codes)
-  }
-
-  /** Residual-encode a FRESH batch under PERSISTED artifacts — the
-    * residual family's [[ivfPqAppend]]: assignment against the frozen
-    * coarse centroids, residual against the winner, codes under the
-    * frozen books. Appends are EXACT for the residual variant (the
-    * centroids don't move), unlike split/merge — see the refusal rails. */
-  def residualAppend(cents: DataFrame, books: DataFrame, fresh: DataFrame): DataFrame =
-    residualEncode(books, residualFrame(cents, fresh))
-
-  /** q75's probe side over PERSISTED artifacts: per (query, probed cell)
-    * the query's RESIDUAL against that cell's centroid gets its own LUT
-    * (nprobe tiny LUTs per query, still map-side); candidates via the
-    * broadcast equi-join on cell; the only hash exchange is the per-query
-    * top-k+count aggregate ([[adcTopkWithCount]], q74's shape). */
-  def residualSearchFrom(cents: DataFrame, books: DataFrame, codeTable: DataFrame,
-      queries: DataFrame, nprobe: Int = IvfNProbe, k: Int = AdcK): DataFrame = {
-    val cc = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    val cs = books.agg(collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
-    val index = codeTable
-      .select(col("vec_id").as("neighbor_id"), col("cell"), col("codes"))
-    val probes = queries
-      .crossJoin(broadcast(cc)).crossJoin(broadcast(cs))
-      .withColumn("_p", explode(expr(
-        "slice(array_sort(transform(cc, c -> struct(" +
-          "graft_dot(e, e) - 2 * graft_dot(e, c.ce) + graft_dot(c.ce, c.ce) AS _d, " +
-          s"c.cent_id AS cent_id, c.ce AS cce))), 1, $nprobe)")))
-      .withColumn("e", expr("zip_with(e, _p.cce, (x, y) -> x - y)"))
-      .withColumn("lut", expr(pqLutExpr))
-      .select(col("vec_id").as("query_id"), col("_p.cent_id").as("cell"), col("lut"))
-    val cand = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_fixed", expr(adcSumExpr))
-    adcTopkWithCount(cand, k).orderBy("query_id", "rn")
   }
 
   /** Overlapped artifact-trio build (guide §2.6, [[Par]] scaladoc): write
@@ -994,18 +1093,12 @@ object Similarity {
     ids.select(col("vec_id").cast(LongType).as("vec_id"))
 
   /** Variant marker: a residual-encoded artifact root carries this empty
-    * file so the geometry-changing policies can refuse it (see
-    * [[markResidual]] / the requires in split/merge). */
+    * file; [[IvfCodec.of]] reads it. */
   private[graft] val ResidualMarker = "_VARIANT_RESIDUAL"
 
   private[graft] def markResidual(s: SparkSession, root: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$root/$ResidualMarker")
     p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
-  }
-
-  private[graft] def isResidualRoot(s: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$ResidualMarker")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** The refusal message the PLAIN split/merge raise on a residual-marked
@@ -1017,15 +1110,6 @@ object Similarity {
       "Use ivfCellSplitResidual / ivfCellMergeResidual (they re-encode the " +
       "routed members under the frozen books); compaction and appends " +
       "remain exact on this variant."
-
-  /** Residual of each routed row against its ROUTED centroid (routing is
-    * the caller's decision — NOT the argmin; a split/merge routes by the
-    * 2-means / nearest-survivor assignment). */
-  private def residualAgainstRouted(cents: DataFrame, routedRaw: DataFrame): DataFrame =
-    routedRaw.join(broadcast(cents.select(col("cent_id").as("cell"), col("ce"))),
-        Seq("cell"))
-      .select(col("vec_id"), col("cell"),
-        expr("zip_with(e, ce, (x, y) -> x - y)").as("e"))
 
   /** ARTIFACT AUDIT for the residual variant — recompute every row's
     * codes from (raw vector, routed centroid, frozen books) and count
@@ -1042,140 +1126,10 @@ object Similarity {
     val codes = s.read.parquet(s"$root/codes")
     val routedRaw = codes.select("vec_id", "cell")
       .join(emb.select("vec_id", "e"), Seq("vec_id"))
-    val expect = residualEncode(books, residualAgainstRouted(cents, routedRaw))
+    val expect = IvfCodec.ResidualPq.reroute(codes, routedRaw, cents, books)
       .select(col("vec_id"), col("codes").as("expect_codes"))
     codes.join(expect, Seq("vec_id"))
       .filter(not(col("codes") === col("expect_codes"))).count()
-  }
-
-  /** RE-ENCODING CELL SPLIT for residual artifacts — the capability
-    * behind the variant rail: identical routing algebra to
-    * [[ivfCellSplitArtifact]] (same [[localTwoMeans]] kernel, hot-cell
-    * choice, coverage requires), plus the step
-    * the plain split doesn't need — EVERY member of a split cell
-    * re-encodes its residual against its new routed centroid under the
-    * FROZEN books (sub-0 members too: the parent centroid moved).
-    * Untouched cells stay byte-identical; afterwards
-    * [[residualAuditMismatches]] is 0 by construction. */
-  def ivfCellSplitResidual(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, splitCells: Int = SplitHotCells): Unit = {
-    require(isResidualRoot(s, root),
-      "plain artifact: use ivfCellSplitArtifact (codes are routing-independent there)")
-    val occ = s.read.parquet(s"$root/codes").groupBy("cell")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val hotCells = occ.sortBy { case (c, n) => (-n, c) }.take(splitCells).map(_._1)
-    splitResidualCore(s, root, outRoot, emb, hotCells, occ)
-    ()
-  }
-
-  /** The residual split body, parameterized for the policy path (the
-    * [[splitCore]] convention): identical routing algebra, plus the
-    * re-encode of every member of a split cell against its new routed
-    * centroid under the FROZEN books. Returns per-hot-cell (kept, moved)
-    * counts for the policy's no-progress guard. */
-  private def splitResidualCore(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, hotCells: Seq[Long], occ: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
-    require(outRoot != root,
-      "cell split is copy-on-write: outRoot must be a new artifact root")
-    import s.implicits._
-    val cents = s.read.parquet(s"$root/cents")
-    val books = s.read.parquet(s"$root/books")
-    val codes = s.read.parquet(s"$root/codes")
-    val maxId = cents.select("cent_id").collect().map(_.getLong(0)).max
-    val newIdOf = hotCells.zipWithIndex
-      .map { case (c, i) => c -> (maxId + 1 + i) }.toMap
-    val members = codes.filter(col("cell").isin(hotCells: _*))
-      .select("vec_id", "cell")
-      .join(emb.select("vec_id", "e"), Seq("vec_id"))
-      .select("cell", "vec_id", "e").cache()
-    val hotRows = occ.collect { case (c, n) if hotCells.contains(c) => n }.sum
-    val cov = members.agg(count(lit(1)).as("n"),
-      countDistinct(col("vec_id")).as("d")).head()
-    require(cov.getLong(0) == hotRows && cov.getLong(1) == hotRows,
-      s"emb must cover every hot-cell vec_id exactly once: joined ${cov.getLong(0)} " +
-        s"rows / ${cov.getLong(1)} distinct of $hotRows hot rows")
-    val (finalLocal, updCs) = localTwoMeans(members, hotCells)
-    val subCountRows = finalLocal.groupBy("cell", "sub").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val newIdExpr = hotCells.foldLeft(lit(-1L)) { (acc, c) =>
-      when(col("cell") === c, lit(newIdOf(c))).otherwise(acc) }
-    val moved = finalLocal.select(col("vec_id"),
-      when(col("sub") === 0, col("cell")).otherwise(newIdExpr).as("cell"))
-    val updRows: Seq[(Long, Seq[Double])] = hotCells.flatMap { c =>
-      updCs(c).collect { case (sub, ce) if subCountRows.getOrElse((c, sub), 0L) > 0 =>
-        (if (sub == 0L) c else newIdOf(c), ce) } }
-    val centsOut = cents.filter(!col("cent_id").isin(hotCells: _*))
-      .unionByName(updRows.toDF("cent_id", "ce"))
-    val reenc = residualEncode(books, residualAgainstRouted(centsOut,
-      moved.join(members.select("vec_id", "e"), Seq("vec_id"))))
-    val codesOut = codes.filter(!col("cell").isin(hotCells: _*))
-      .unionByName(reenc.select(codes.columns.map(col): _*))
-    centsOut.write.mode("overwrite").parquet(s"$outRoot/cents")
-    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
-    books.write.mode("overwrite").parquet(s"$outRoot/books")
-    copyTombstones(s, root, outRoot)
-    markResidual(s, outRoot)
-    val out = hotCells.map { c =>
-      c -> ((subCountRows.getOrElse((c, 0L), 0L), subCountRows.getOrElse((c, 1L), 0L)))
-    }.toMap
-    members.unpersist(false)
-    out
-  }
-
-  /** RE-ENCODING CELL MERGE for residual artifacts — survivors'
-    * centroids are untouched, so ONLY the moved members re-encode
-    * (against their nearest surviving centroid, the same per-member
-    * [[assignCells]] routing the plain merge uses). */
-  def ivfCellMergeResidual(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, mergeCells: Int = MergeColdCells): Seq[Long] = {
-    require(isResidualRoot(s, root),
-      "plain artifact: use ivfCellMergeArtifact (codes are routing-independent there)")
-    val occ = mergeOccupancy(s, root)
-    val coldCells = occ.sortBy { case (c, n) => (n, c) }.take(mergeCells).map(_._1)
-    mergeResidualCore(s, root, outRoot, emb, coldCells, occ)
-    coldCells
-  }
-
-  /** The residual merge body, parameterized for the policy path (the
-    * [[mergeCore]] convention): survivors' centroids are untouched, so
-    * ONLY the moved members re-encode (against their nearest surviving
-    * centroid) under the FROZEN books. */
-  private def mergeResidualCore(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, coldCells: Seq[Long], occ: Seq[(Long, Long)]): Unit = {
-    require(outRoot != root,
-      "cell merge is copy-on-write: outRoot must be a new artifact root")
-    if (coldCells.isEmpty) return
-    val occMap = occ.toMap
-    require(coldCells.forall(occMap.contains),
-      s"unknown cells: ${coldCells.filterNot(occMap.contains)}")
-    val survivorIds = occ.map(_._1).filterNot(coldCells.contains)
-    require(survivorIds.nonEmpty,
-      "cell merge needs >= 1 surviving cell: refusing to fold the whole index")
-    val cents = s.read.parquet(s"$root/cents")
-    val books = s.read.parquet(s"$root/books")
-    val codes = s.read.parquet(s"$root/codes")
-    val survivors = cents.filter(!col("cent_id").isin(coldCells: _*))
-    val members = codes.filter(col("cell").isin(coldCells: _*))
-      .select("vec_id").join(emb.select("vec_id", "e"), Seq("vec_id")).cache()
-    // the mergeCore coverage check, same offsetting-errors argument
-    val coldRows = occ.collect { case (c, n) if coldCells.contains(c) => n }.sum
-    val cov = members.agg(count(lit(1)).as("n"),
-      countDistinct(col("vec_id")).as("d")).head()
-    require(cov.getLong(0) == coldRows && cov.getLong(1) == coldRows,
-      s"emb must cover every cold-cell vec_id exactly once: joined ${cov.getLong(0)} " +
-        s"rows / ${cov.getLong(1)} distinct of $coldRows cold rows")
-    val moved = assignCells(members, survivors).select("vec_id", "cell")
-    val reenc = residualEncode(books, residualAgainstRouted(survivors,
-      moved.join(members.select("vec_id", "e"), Seq("vec_id"))))
-    val codesOut = codes.filter(!col("cell").isin(coldCells: _*))
-      .unionByName(reenc.select(codes.columns.map(col): _*))
-    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
-    survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
-    books.write.mode("overwrite").parquet(s"$outRoot/books")
-    copyTombstones(s, root, outRoot)
-    markResidual(s, outRoot)
-    members.unpersist(false)
   }
 
   // --------------------------------------------------------------- q160
@@ -1193,22 +1147,26 @@ object Similarity {
     * persisted cents/books/codes to round-trip bit-exactly. */
   def q160ResidualServed(s: SparkSession, d: String): DataFrame = {
     val base = s"${knnGraphServePath(d)}/ivfresid"
-    val (cents, books, codes) = residualPartsCached(s, d)
     val emb = embWithNorm(s, d).select("vec_id", "e")
     val dels = emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= AdcQueries)
       .select("vec_id")
-    val v = RootPointer.nextVersion(s, base)
-    writeIvfArtifacts(s"$base/$v", cents, books, codes,
-      "t0" -> dels.filter(col("vec_id") % 2 === 0),
+    publishResidual(s, base, d, "t0" -> dels.filter(col("vec_id") % 2 === 0),
       "t1" -> dels.filter(col("vec_id") % 2 =!= 0))
-    markResidual(s, s"$base/$v")
-    RootPointer.publish(s, base, v)
     maybeMaintainIvfVersioned(s, base, emb, maxTombstones = 1, maxSharePpm = 1000000L)
     RootPointer.retireOld(s, base, keep = 2)
-    val root = RootPointer.resolve(s, base)
-    residualSearchFrom(s.read.parquet(s"$root/cents"),
-      s.read.parquet(s"$root/books"), s.read.parquet(s"$root/codes"),
-      emb.filter(col("vec_id") < AdcQueries))
+    IvfCodec.ResidualPq.searchRoot(s, RootPointer.resolve(s, base),
+      emb.filter(col("vec_id") < AdcQueries), IvfNProbe)
+  }
+
+  /** The residual trio of `d` as the next version under `base`, marked
+    * and published (q160/q163/q165). */
+  private def publishResidual(s: SparkSession, base: String, d: String,
+      tombs: (String, DataFrame)*): Unit = {
+    val (cents, books, codes) = residualPartsCached(s, d)
+    val v = RootPointer.nextVersion(s, base)
+    writeIvfArtifacts(s"$base/$v", cents, books, codes, tombs: _*)
+    markResidual(s, s"$base/$v")
+    RootPointer.publish(s, base, v)
   }
 
   // --------------------------------------------------------------- q163
@@ -1219,13 +1177,14 @@ object Similarity {
     * residual trio into a version dir, mark the variant, publish, then run
     * the versioned maintenance window with the MERGE tier armed
     * (minSharePpm = 1000000 ⇒ the [[MergeColdCells]] coldest cells fold,
-    * deterministically) — the policy now ROUTES to the re-encoding merge
-    * core ([[mergeResidualCore]]: moved members re-encode against their
-    * nearest surviving centroid under the FROZEN books), AUDITS the staged
-    * version against the residual invariant before it can publish,
+    * deterministically) — the policy reads the root's codec
+    * ([[IvfCodec.of]]) and runs the one merge core with
+    * [[IvfCodec.ResidualPq]]'s reroute (moved members re-encode against
+    * their nearest surviving centroid under the FROZEN books), AUDITS the
+    * staged version against the residual invariant before it can publish,
     * publishes through [[RootPointer]], and retires the old root after
-    * grace. Serve is [[residualSearchFrom]] at production nprobe from
-    * whatever resolve returns.
+    * grace. Serve is [[IvfCodec.ResidualPq]]'s search at production nprobe
+    * from whatever resolve returns.
     *
     * Oracle: the q75 chain EXTENDED with the merge modeled relationally —
     * the merge path (unlike the split's driver-iterative 2-means) is
@@ -1237,11 +1196,7 @@ object Similarity {
     * the versioned publish/resolve round trip breaks the hash. */
   def q163ResidualRebalanceServed(s: SparkSession, d: String): DataFrame = {
     val base = s"${knnGraphServePath(d)}/ivfresver"
-    val (cents, books, codes) = residualPartsCached(s, d)
-    val v = RootPointer.nextVersion(s, base)
-    writeIvfArtifacts(s"$base/$v", cents, books, codes)
-    markResidual(s, s"$base/$v")
-    RootPointer.publish(s, base, v)
+    publishResidual(s, base, d)
     val emb = embWithNorm(s, d).select("vec_id", "e")
     // split tier at 100% (cannot fire — geometry change there is not
     // SQL-expressible, its gates are the audit + OperatorSpec); merge tier
@@ -1249,10 +1204,8 @@ object Similarity {
     maybeMaintainIvfVersioned(s, base, emb,
       maxTombstones = 1, maxSharePpm = 1000000L, minSharePpm = 1000000L)
     RootPointer.retireOld(s, base, keep = 2)
-    val root = RootPointer.resolve(s, base)
-    residualSearchFrom(s.read.parquet(s"$root/cents"),
-      s.read.parquet(s"$root/books"), s.read.parquet(s"$root/codes"),
-      emb.filter(col("vec_id") < AdcQueries))
+    IvfCodec.ResidualPq.searchRoot(s, RootPointer.resolve(s, base),
+      emb.filter(col("vec_id") < AdcQueries), IvfNProbe)
   }
 
   // --------------------------------------------------------------- q165
@@ -1262,10 +1215,11 @@ object Similarity {
     * through a published, served root): build the residual trio into a
     * version dir, mark the variant, publish, arm the SPLIT tier at 1 ppm
     * (every cell is over-tier, so the [[SplitHotCells]] hottest cells
-    * split deterministically through [[splitResidualCore]] — moved AND
-    * kept members re-encode against their new routed centroids under the
-    * FROZEN books), audit the staged version against the residual
-    * invariant before it can publish, publish through [[RootPointer]],
+    * split deterministically through the one split core with
+    * [[IvfCodec.ResidualPq]]'s reroute — moved AND kept members re-encode
+    * against their new routed centroids under the FROZEN books), audit
+    * the staged version against the residual invariant before it can
+    * publish, publish through [[RootPointer]],
     * retire after grace, and serve from whatever resolve returns.
     *
     * The split's driver-local 2-means is NOT SQL-expressible, so the
@@ -1283,11 +1237,7 @@ object Similarity {
     * served ≡ direct-core differential at production nprobe. */
   def q165ResidualSplitServed(s: SparkSession, d: String): DataFrame = {
     val base = s"${knnGraphServePath(d)}/ivfressplit"
-    val (cents, books, codes) = residualPartsCached(s, d)
-    val v = RootPointer.nextVersion(s, base)
-    writeIvfArtifacts(s"$base/$v", cents, books, codes)
-    markResidual(s, s"$base/$v")
-    RootPointer.publish(s, base, v)
+    publishResidual(s, base, d)
     val emb = embWithNorm(s, d).select("vec_id", "e")
     val (_, split, _) = maybeMaintainIvfVersioned(s, base, emb,
       maxTombstones = 1, maxSharePpm = 1L, minSharePpm = 0L)
@@ -1303,7 +1253,7 @@ object Similarity {
     * candidate set is definitionally the REACHABLE set — every codes row
     * whose cell exists in cents, for every query, minus self-pairs — and
     * the exact re-rank discards the shortlist's ADC ranking entirely. The
-    * r19 shape materialized that ranking anyway ([[residualSearchFrom]] at
+    * r19 shape materialized that ranking anyway (the residual search at
     * nprobe = cell count, k = corpus count): per-(query, cell) LUTs, an
     * ADC sum per (query, row) pair, a corpus-sized per-query window sort,
     * and an n_cand broadcast — all provably dropped on the floor by the
@@ -1325,16 +1275,9 @@ object Similarity {
       .select("neighbor_id")
     val q = queries.select(col("vec_id").as("query_id"), col("e").as("eq"))
     val corp = corpus.select(col("vec_id").as("neighbor_id"), col("e").as("en"))
-    val w = Window.partitionBy("query_id").orderBy(col("exact_fixed"), col("neighbor_id"))
-    corp.join(broadcast(reachable), Seq("neighbor_id"), "left_semi")
+    exactTopk(corp.join(broadcast(reachable), Seq("neighbor_id"), "left_semi")
       .crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("exact_fixed", expr(
-        s"CAST(floor((graft_dot(eq, eq) - 2 * graft_dot(eq, en) + graft_dot(en, en)) * $CentFixedScale) AS BIGINT)"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "exact_fixed", "rn")
-      .orderBy("query_id", "rn")
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Oracle for q165: brute-force fixed-point L2 top-k — the full-probe
@@ -1510,7 +1453,7 @@ object Similarity {
     * keeps ≤ k pairs per query map-side (PlanSpec). The index
     * row is cell + 64 bytes + 2 scalars — no embedding ever shuffles. */
   /** q58's encoder verbatim (incl. the ±127 max-element special case) —
-    * shared by the SQ8 build, append, and serve paths so they can never
+    * shared by [[IvfCodec.Sq8]]'s encode and probe sides so they can never
     * drift. */
   private val sq8CodesExpr: String =
     "transform(e, x -> CAST(CASE WHEN abs(x) = max_abs " +
@@ -1520,55 +1463,11 @@ object Similarity {
   /** The PERSISTED SQ8-IVF index: coarse centroids `(cent_id, ce)` plus
     * the code table `(vec_id, cell, qc, max_abs, nrm)` — cell + 64 int8
     * codes + 2 scalars per corpus vector. Train once, write both to
-    * parquet; [[sq8SearchFrom]] serves and [[sq8Append]] ingests without
-    * retraining (OperatorSpec pins the round trip bit-identical to q78). */
+    * parquet; [[IvfCodec.Sq8]] serves and ingests without retraining
+    * (OperatorSpec pins the round trip bit-identical to q78). */
   def sq8Index(emb: DataFrame): (DataFrame, DataFrame) = {
-    val coarseSeed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    val cents = fixedPointUpdate(
-      assignCells(emb.select("vec_id", "e"), coarseSeed), coarseSeed)
-    (cents, sq8Append(cents, emb))
-  }
-
-  /** Map-side assign+encode of a vector batch under ALREADY-TRAINED
-    * centroids — both the index build's encode pass and the incremental
-    * ingest path. One one-row broadcast, pure array expressions, no
-    * shuffle (PlanSpec). `emb` is any `(vec_id, e, nrm)` batch. */
-  def sq8Append(cents: DataFrame, emb: DataFrame): DataFrame = {
-    val cc = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    emb.crossJoin(broadcast(cc))
-      .withColumn("max_abs", expr("array_max(transform(e, x -> abs(x)))"))
-      .withColumn("qc", expr(sq8CodesExpr))
-      .withColumn("cell", expr(s"$coarseArgminExpr.cent_id"))
-      .select(col("vec_id"), col("cell"), col("qc"), col("max_abs"), col("nrm"))
-  }
-
-  /** Serve SQ8-IVF top-k from persisted artifacts — corpus embeddings
-    * never read. `queries` is any `(vec_id, e, nrm)` batch; it encodes
-    * itself map-side under the centroid broadcast (encoding is per-row
-    * deterministic, so a query that is also a corpus vector gets the exact
-    * code row the index holds). Same exchange shapes as q74's serve. */
-  def sq8SearchFrom(cents: DataFrame, codeTable: DataFrame, queries: DataFrame,
-      nprobe: Int = IvfNProbe, k: Int = AdcK): DataFrame = {
-    val cc = cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    val index = codeTable.select(col("vec_id").as("neighbor_id"), col("cell"),
-      col("qc").as("cn"), col("max_abs").as("maxn"), col("nrm").as("nn"))
-    val probes = queries.crossJoin(broadcast(cc))
-      .withColumn("max_abs", expr("array_max(transform(e, x -> abs(x)))"))
-      .withColumn("qc", expr(sq8CodesExpr))
-      .withColumn("pcell", explode(expr(probeCellsExpr(nprobe))))
-      .select(col("vec_id").as("query_id"), col("qc").as("cq"),
-        col("max_abs").as("maxq"), col("nrm").as("nq"), col("pcell").as("cell"))
-    val cand = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("idot", expr(
-        "aggregate(zip_with(cq, cn, (a, b) -> CAST(a AS BIGINT) * CAST(b AS BIGINT)), " +
-          "0L, (acc, x) -> acc + x)"))
-      .withColumn("sim8", expr(
-        "round(((CAST(idot AS DOUBLE) * (maxq / 127.0D)) * (maxn / 127.0D)) / (nq * nn), 6)"))
-    topkWithCount(cand, col("sim8"), k)
-      .withColumnRenamed("score", "sim8")
-      .orderBy("query_id", "rn")
+    val cents = knnCents(emb, IvfNList)
+    (cents, IvfCodec.Sq8.encode(cents, None, emb))
   }
 
   def q78Sq8Ivf(s: SparkSession, d: String): DataFrame = {
@@ -1576,7 +1475,7 @@ object Similarity {
     // the catalog entry IS the artifact pipeline (train + encode + serve),
     // so the OperatorSpec parquet round trip pins serving ≡ this query
     val (cents, codeTable) = sq8Index(emb)
-    sq8SearchFrom(cents, codeTable, emb.filter(col("vec_id") < AdcQueries))
+    IvfCodec.Sq8.searchFrom(cents, None, codeTable, emb.filter(col("vec_id") < AdcQueries))
   }
 
   lazy val q78Sql: String = {
@@ -1762,15 +1661,23 @@ object Similarity {
     * round over vec_id < nlist seeds, exactly as the self-contained
     * queries train. */
   private[graft] def knnCents(emb: DataFrame, nlist: Int): DataFrame = {
-    val coarseSeed = emb.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
+    val coarseSeed = seedCents(emb, nlist)
     fixedPointUpdate(assignCells(emb.select("vec_id", "e"), coarseSeed), coarseSeed)
   }
+
+  /** The untrained coarse seed: the vec_id < nlist vectors as (cent_id, ce). */
+  private def seedCents(emb: DataFrame, nlist: Int): DataFrame =
+    emb.filter(col("vec_id") < nlist).select(col("vec_id").as("cent_id"), col("e").as("ce"))
 
   /** Collapse a (cent_id, ce) centroid frame to the one-row `cc` broadcast
     * the coarse argmin / probe-cell expressions consume. */
   private[graft] def ccRow(cents: DataFrame): DataFrame =
     cents.agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
+
+  /** [[ccRow]]'s twin for PQ codebooks: (m, cent_id, ce) rows → the
+    * one-row `cs` broadcast the encode / LUT expressions consume. */
+  private def csRow(books: DataFrame): DataFrame =
+    books.agg(collect_list(struct(col("m"), col("cent_id"), col("ce"))).as("cs"))
 
   /** [[knnCand]] under EXPLICIT centroids — the seam the append
     * differential and the artifact build share with the self-contained
@@ -2217,7 +2124,7 @@ object Similarity {
       .select("vec_id", "pcells")
 
   /** INCREMENTAL kNN-GRAPH MAINTENANCE — the missing member of the append
-    * family ([[ivfPqAppend]]/[[opqAppend]]/[[sq8Append]]), and the genuinely
+    * family ([[ivfPqAppend]]/[[opqAppend]]/[[IvfCodec.Sq8]]), and the genuinely
     * harder one: fresh vectors can DISPLACE existing top-k edges, so unlike
     * the one-sided incremental-dedup probe the existing side must be
     * patched, not just probed. Under the artifact's frozen quantizer
@@ -2855,11 +2762,7 @@ object Similarity {
 
   def q83SemDedup(s: SparkSession, d: String): DataFrame = {
     val emb = embWithNorm(s, d).filter(col("nrm") > 0).select("vec_id", "e", "nrm")
-    val coarseSeed = emb.filter(col("vec_id") < corpusNList(s, d))
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    val cc = fixedPointUpdate(assignCells(emb.select("vec_id", "e"), coarseSeed), coarseSeed)
-      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    val assigned = emb.crossJoin(broadcast(cc))
+    val assigned = emb.crossJoin(broadcast(ccRow(knnCents(emb, corpusNList(s, d)))))
       .withColumn("cell", expr(s"$coarseArgminExpr.cent_id"))
       .select("vec_id", "e", "nrm", "cell")
     val keep = assigned.select(col("vec_id").as("keep_id"), col("cell"),
@@ -3270,16 +3173,16 @@ object Similarity {
     writeIvfArtifacts(root, cents, books, codeTable,
       "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= AdcQueries)
         .select("vec_id"))
-    ivfPqSearchFrom(s.read.parquet(s"$root/cents"), s.read.parquet(s"$root/books"),
-      liveCodes(s, root), emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"))
+    IvfCodec.FlatPq.searchRoot(s, root,
+      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"), IvfNProbe)
   }
 
   /** Physical reclamation for a tombstoned IVF-PQ artifact — the vector
     * analogue of [[graft.ops.Retrieval.lexIndexCompact]]'s delete
     * handling: copy-on-write to a NEW root with deleted rows dropped from
-    * the code table and NO tombstones dir (cents/books copy unchanged —
-    * the frozen-quantizer contract means compaction never retrains
-    * either). After compaction a plain serve (no delete logic) is
+    * the code table and NO tombstones dir (cents/books are FILE-copied
+    * unchanged — the frozen-quantizer contract means compaction never
+    * retrains either, so no Spark job rewrites them). After compaction a plain serve (no delete logic) is
     * identical to the tombstoned serve of the old root: the anti-join was
     * the only thing the tombstone changed. Merely copying segments while
     * dropping the tombstones would RESURRECT deleted vectors — same
@@ -3287,8 +3190,7 @@ object Similarity {
   def ivfCodesCompact(s: SparkSession, root: String, outRoot: String): Unit = {
     require(outRoot != root,
       "compaction is copy-on-write: outRoot must be a new artifact root")
-    s.read.parquet(s"$root/cents").write.mode("overwrite").parquet(s"$outRoot/cents")
-    s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
+    copyFrozen(s, root, outRoot, "cents", "books")
     liveCodes(s, root).write.mode("overwrite").parquet(s"$outRoot/codes")
   }
 
@@ -3339,6 +3241,27 @@ object Similarity {
     tombstoneUnion(s, root).foreach(
       _.distinct().write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
 
+  /** FILE-copy `root`'s frozen quantizer dirs (and the variant marker,
+    * if any) into `outRoot`: no maintenance step changes them. */
+  private def copyFrozen(s: SparkSession, root: String, outRoot: String,
+      names: String*): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = s.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    (names :+ ResidualMarker).map(n => new Path(s"$root/$n")).filter(fs.exists)
+      .foreach { src =>
+        val dst = new Path(s"$outRoot/${src.getName}")
+        fs.delete(dst, true)
+        FileUtil.copy(fs, src, fs, dst, false, conf)
+      }
+  }
+
+  /** Physical code rows per cell (nlist rows, driver-side metadata). */
+  private def codeOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] =
+    s.read.parquet(s"$root/codes").groupBy("cell")
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+
   /** ARTIFACT-LEVEL HOT-CELL SPLIT — q141's maintenance action applied to
     * the persisted q74-family index (cents/books/codes under `root`),
     * copy-on-write into `outRoot`: the `splitCells` largest cells split by
@@ -3347,8 +3270,9 @@ object Similarity {
     * payload column is byte-identical), books byte-identical. The plain
     * IVF-PQ artifact is split-SAFE because its PQ codes quantize raw
     * vectors, independent of cell routing; the residual variant (q75)
-    * encodes relative to its cell centroid, so splitting it would
-    * invalidate codes — split before encode, or re-encode the hot cells.
+    * encodes relative to its cell centroid, so this entry refuses it —
+    * [[ivfCellSplitResidual]] runs the same core with the re-encoding
+    * reroute ([[IvfCodec.ResidualPq]]).
     *
     * The split needs the hot cells' RAW vectors (codes are lossy): `emb`
     * supplies them via one semi-join against the hot routing rows — only
@@ -3369,31 +3293,39 @@ object Similarity {
     * normal nprobe the split is the standard IVF approximation trade:
     * finer cells, smaller probed candidate sets. */
   def ivfCellSplitArtifact(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, splitCells: Int = SplitHotCells): Unit = {
-    require(!isResidualRoot(s, root), residualRefusal("splitting"))
-    val occ = s.read.parquet(s"$root/codes").groupBy("cell")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val hotCells = occ.sortBy { case (c, n) => (-n, c) }
-      .take(splitCells).map(_._1)
-    splitCore(s, root, outRoot, emb, hotCells, occ)
-    ()
+      emb: DataFrame, splitCells: Int = SplitHotCells): Unit =
+    splitTop(s, IvfCodec.FlatPq, residualRefusal("splitting"), root, outRoot, emb, splitCells)
+
+  /** RE-ENCODING CELL SPLIT for residual artifacts: the same core; EVERY
+    * member of a split cell re-encodes (sub-0 too: the parent moved). */
+  def ivfCellSplitResidual(s: SparkSession, root: String, outRoot: String,
+      emb: DataFrame, splitCells: Int = SplitHotCells): Unit =
+    splitTop(s, IvfCodec.ResidualPq, "plain artifact: use ivfCellSplitArtifact " +
+      "(codes are routing-independent there)", root, outRoot, emb, splitCells)
+
+  // the refusal rail: a direct entry refuses a root that holds another codec
+  private def splitTop(s: SparkSession, codec: PqCodec, refusal: => String, root: String,
+      outRoot: String, emb: DataFrame, splitCells: Int): Unit = {
+    require(IvfCodec.of(s, root) == codec, refusal)
+    val occ = codeOccupancy(s, root)
+    val hotCells = occ.sortBy { case (c, n) => (-n, c) }.take(splitCells).map(_._1)
+    splitCore(s, codec, root, outRoot, emb, hotCells, occ)
   }
 
-  /** The split body, parameterized for the policy path: `occ` is the
+  /** THE split body, for both PQ codecs and the policy path: `occ` is the
     * occupancy the caller already computed (the policy's tier check reads
     * it anyway — recomputing would scan the corpus-sized codes table
-    * twice). Returns per-hot-cell (kept, moved) counts for the policy's
-    * no-progress guard. */
-  private def splitCore(s: SparkSession, root: String, outRoot: String,
+    * twice). The hot cells' members are rerouted by the codec
+    * ([[PqCodec.reroute]]). Returns per-hot-cell (kept, moved) counts for
+    * the policy's no-progress guard. */
+  private def splitCore(s: SparkSession, codec: PqCodec, root: String, outRoot: String,
       emb: DataFrame, hotCells: Seq[Long], occ: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
     require(outRoot != root,
       "cell split is copy-on-write: outRoot must be a new artifact root")
     import s.implicits._
     val cents = s.read.parquet(s"$root/cents")
     val codes = s.read.parquet(s"$root/codes")
-    val centIds = cents.select("cent_id").collect().map(_.getLong(0))
-    val maxId = centIds.max
+    val maxId = cents.select("cent_id").collect().map(_.getLong(0)).max
     val newIdOf = hotCells.zipWithIndex
       .map { case (c, i) => c -> (maxId + 1 + i) }.toMap
     val members = codes.filter(col("cell").isin(hotCells: _*))
@@ -3423,7 +3355,7 @@ object Similarity {
     val newIdExpr = hotCells.foldLeft(lit(-1L)) { (acc, c) =>
       when(col("cell") === c, lit(newIdOf(c))).otherwise(acc) }
     val moved = finalLocal.select(col("vec_id"),
-      when(col("sub") === 0, col("cell")).otherwise(newIdExpr).as("cell"))
+      when(col("sub") === 0, col("cell")).otherwise(newIdExpr).as("cell"), col("e"))
     // cents': untouched rows byte-identical; parent id ← sub-0 centroid,
     // new id ← sub-1 centroid — each written ONLY when that half received
     // ≥ 1 member. The 2-means can land a degenerate multi-member cell
@@ -3436,19 +3368,18 @@ object Similarity {
         (if (sub == 0L) c else newIdOf(c), ce) } }
     val centsOut = cents.filter(!col("cent_id").isin(hotCells: _*))
       .unionByName(updRows.toDF("cent_id", "ce"))
-    // codes': untouched rows byte-identical; hot rows re-routed only
+    // codes': untouched rows byte-identical; hot rows rerouted
     val codesOut = codes.filter(!col("cell").isin(hotCells: _*))
-      .unionByName(codes.filter(col("cell").isin(hotCells: _*))
-        .drop("cell").join(moved, Seq("vec_id")))
+      .unionByName(codec.reroute(codes.filter(col("cell").isin(hotCells: _*)), moved,
+        centsOut, s.read.parquet(s"$root/books")))
     centsOut.write.mode("overwrite").parquet(s"$outRoot/cents")
     codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
-    s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
+    copyFrozen(s, root, outRoot, "books")
     copyTombstones(s, root, outRoot)
-    val out = hotCells.map { c =>
+    members.unpersist(false)
+    hotCells.map { c =>
       c -> ((subCountRows.getOrElse((c, 0L), 0L), subCountRows.getOrElse((c, 1L), 0L)))
     }.toMap
-    members.unpersist(false)
-    out
   }
 
   /** SHARE-TIERED SPLIT STEP of [[maybeMaintainIvfVersioned]] — the
@@ -3460,11 +3391,12 @@ object Similarity {
     * a split was staged. */
   private def splitStep(s: SparkSession, base: String, cur: String, out: String,
       emb: DataFrame, maxSharePpm: Long): Boolean = {
+    // a cell's share n·10⁶/total never exceeds 10⁶, so at the 100% tier
+    // no cell can be over it: skip the corpus-sized occupancy scan
+    if (maxSharePpm >= 1000000L) return false
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val occ = s.read.parquet(s"$cur/codes").groupBy("cell")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val occ = codeOccupancy(s, cur)
     val total = occ.map(_._2).sum
     if (total == 0L) return false
     // hot = the top-m cells AMONG THOSE OVER THE TIER (not the global
@@ -3489,13 +3421,10 @@ object Similarity {
     val memo = s"$base/$SplitRefusedMemo"
     val sig = hotCells.map(c => s"$c:${occ.toMap.apply(c)}")
     if (readLines(fs, memo) == sig) return false
-    // a residual root routes to the re-encoding split core, and the staged
-    // version is AUDITED against the residual invariant before it can
-    // publish
-    val residual = isResidualRoot(s, cur)
-    val subCounts =
-      if (residual) splitResidualCore(s, cur, out, emb, hotCells, occ)
-      else splitCore(s, cur, out, emb, hotCells, occ)
+    // the root's codec reroutes the members (a residual root re-encodes
+    // them), and audits the staged version before it can publish
+    val codec = IvfCodec.of(s, cur)
+    val subCounts = splitCore(s, codec, cur, out, emb, hotCells, occ)
     // NO-PROGRESS GUARD, per split cell: a cell actually split iff BOTH
     // halves are non-empty (all-in-one-half means the 2-means was
     // degenerate for that cell — e.g. identical vectors, coinciding
@@ -3507,26 +3436,13 @@ object Similarity {
       writeLines(fs, memo, sig)
       return false
     }
-    if (residual) auditStaged(s, out, emb, "split")
+    codec.audit(s, out, emb, "split")
     fs.delete(new org.apache.hadoop.fs.Path(memo), true)
     true
   }
 
   /** Name of the split step's refusal memo, beside the base's pointer. */
   private val SplitRefusedMemo = "_SPLIT_REFUSED"
-
-  /** Pre-publish audit of a staged residual rebalance: every staged code
-    * row must equal the frozen-book encode of its vector's residual
-    * against its ROUTED (staged) centroid — a re-encode bug dies HERE
-    * (the window then discards the staging), never as a published root. */
-  private def auditStaged(s: SparkSession, out: String, emb: DataFrame,
-      action: String): Unit = {
-    val bad = residualAuditMismatches(s, out, emb)
-    if (bad != 0L) throw new IllegalStateException(
-      s"residual $action staging failed the invariant audit: $bad rows' " +
-        "codes are not the frozen-book encode of x - c(routed cell); " +
-        "staging discarded, published root untouched")
-  }
 
   /** A small line-list file (memo or manifest): empty when absent. */
   private[graft] def readLines(fs: org.apache.hadoop.fs.FileSystem,
@@ -3564,17 +3480,22 @@ object Similarity {
     * approximation shift is the standard IVF trade and is exercised by the
     * OperatorSpec full-probe/mass/byte-identity gates. Eager writes, the
     * q127 convention; the probe side is the eval-sized query batch. */
-  def q142SplitServed(s: SparkSession, d: String): DataFrame = {
-    val root = s"${knnGraphServePath(d)}/ivfsplit"
+  def q142SplitServed(s: SparkSession, d: String): DataFrame =
+    rebalancedFullProbe(s, d, s"${knnGraphServePath(d)}/ivfsplit", "split")(
+      ivfCellSplitArtifact(s, _, _, _))
+
+  /** q142/q144's shape: the q74-family artifacts built at `root`,
+    * rebalanced copy-on-write into `root/out`, served at FULL probe
+    * (PlanSpec pins the `out` dir names). */
+  private def rebalancedFullProbe(s: SparkSession, d: String, root: String, out: String)(
+      rebalance: (String, String, DataFrame) => Unit): DataFrame = {
     val (emb, subs, seedsPq) = pqParts(s, d)
     val (cents, books, codeTable) = ivfPqIndex(emb, subs, seedsPq)
     writeIvfArtifacts(root, cents, books, codeTable)
-    ivfCellSplitArtifact(s, root, s"$root/split", emb.select("vec_id", "e"))
-    val sc = s.read.parquet(s"$root/split/cents")
-    ivfPqSearchFrom(sc, s.read.parquet(s"$root/split/books"),
-      s.read.parquet(s"$root/split/codes"),
+    rebalance(root, s"$root/$out", emb.select("vec_id", "e"))
+    IvfCodec.FlatPq.searchRoot(s, s"$root/$out",
       emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"),
-      nprobe = sc.count().toInt)
+      nprobe = s.read.parquet(s"$root/$out/cents").count().toInt)
       .select("query_id", "neighbor_id", "adc_fixed", "rn")
   }
 
@@ -3604,8 +3525,10 @@ object Similarity {
     *
     * Like the split, the plain IVF-PQ artifact is merge-SAFE because PQ
     * codes quantize raw vectors independent of routing; the residual
-    * variant (q75) encodes relative to its cell centroid — re-encode moved
-    * members there. Tombstones transfer as their deduplicated union.
+    * variant (q75) encodes relative to its cell centroid, so this entry
+    * refuses it — [[ivfCellMergeResidual]] runs the same core and
+    * re-encodes the moved members. Tombstones transfer as their
+    * deduplicated union.
     *
     * Exactness gate (the q142 argument in reverse): FULL-PROBE serving
     * from the merged artifact ≡ full-probe pre-merge bit-for-bit — a merge
@@ -3614,11 +3537,23 @@ object Similarity {
     * opposite direction (coarser where the corpus is thin — exactly where
     * the probe budget was being wasted on near-empty lists). */
   def ivfCellMergeArtifact(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, mergeCells: Int = MergeColdCells): Seq[Long] = {
-    require(!isResidualRoot(s, root), residualRefusal("merging"))
+      emb: DataFrame, mergeCells: Int = MergeColdCells): Seq[Long] =
+    mergeBottom(s, IvfCodec.FlatPq, residualRefusal("merging"), root, outRoot, emb, mergeCells)
+
+  /** RE-ENCODING CELL MERGE for residual artifacts: the same core; only
+    * the moved members re-encode (survivors' centroids are untouched). */
+  def ivfCellMergeResidual(s: SparkSession, root: String, outRoot: String,
+      emb: DataFrame, mergeCells: Int = MergeColdCells): Seq[Long] =
+    mergeBottom(s, IvfCodec.ResidualPq, "plain artifact: use ivfCellMergeArtifact " +
+      "(codes are routing-independent there)", root, outRoot, emb, mergeCells)
+
+  // the refusal rail, as splitTop's
+  private def mergeBottom(s: SparkSession, codec: PqCodec, refusal: => String, root: String,
+      outRoot: String, emb: DataFrame, mergeCells: Int): Seq[Long] = {
+    require(IvfCodec.of(s, root) == codec, refusal)
     val occ = mergeOccupancy(s, root)
     val cold = occ.sortBy { case (c, n) => (n, c) }.take(mergeCells).map(_._1)
-    mergeCore(s, root, outRoot, emb, cold, occ)
+    mergeCore(s, codec, root, outRoot, emb, cold, occ)
     cold
   }
 
@@ -3627,18 +3562,16 @@ object Similarity {
     * nlist" finding — must appear at count 0 or it could never be
     * reclaimed. nlist rows, driver-side (index metadata). */
   private def mergeOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] = {
-    val counts = s.read.parquet(s"$root/codes").groupBy("cell")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    val counts = codeOccupancy(s, root).toMap
     s.read.parquet(s"$root/cents").select("cent_id").collect()
       .map(_.getLong(0)).toSeq.sorted
       .map(c => (c, counts.getOrElse(c, 0L)))
   }
 
-  /** The merge body, parameterized for the policy path (the [[splitCore]]
-    * convention): `occ` is the full-universe occupancy the caller already
-    * computed. */
-  private def mergeCore(s: SparkSession, root: String, outRoot: String,
+  /** THE merge body, for both PQ codecs and the policy path (the
+    * [[splitCore]] convention): `occ` is the full-universe occupancy the
+    * caller already computed; the codec reroutes the moved members. */
+  private def mergeCore(s: SparkSession, codec: PqCodec, root: String, outRoot: String,
       emb: DataFrame, coldCells: Seq[Long], occ: Seq[(Long, Long)]): Unit = {
     require(outRoot != root,
       "cell merge is copy-on-write: outRoot must be a new artifact root")
@@ -3653,36 +3586,30 @@ object Similarity {
     val codes = s.read.parquet(s"$root/codes")
     val survivors = cents.filter(!col("cent_id").isin(coldCells: _*))
     val coldRows = occ.collect { case (c, n) if coldCells.contains(c) => n }.sum
-    val movedOut =
-      if (coldRows == 0L) {
-        // every cold cell is EMPTY — pure metadata reclamation, no assign
-        codes.filter(col("cell").isin(coldCells: _*)) // empty frame, keeps schema
-      } else {
-        val members = codes.filter(col("cell").isin(coldCells: _*))
-          .select("vec_id")
-          .join(emb.select("vec_id", "e"), Seq("vec_id"))
-          .cache()
-        // the splitCore coverage check, same offsetting-errors argument: a
-        // missing vec_id silently DROPS its code row; a duplicate
-        // duplicates it — both counts must match the physical cold mass
-        val cov = members.agg(count(lit(1)).as("n"),
-          countDistinct(col("vec_id")).as("d")).head()
-        require(cov.getLong(0) == coldRows && cov.getLong(1) == coldRows,
-          s"emb must cover every cold-cell vec_id exactly once: joined ${cov.getLong(0)} " +
-            s"rows / ${cov.getLong(1)} distinct of $coldRows cold rows")
-        val moved = assignCells(members, survivors).select("vec_id", "cell")
-        val out = codes.filter(col("cell").isin(coldCells: _*))
-          .drop("cell").join(moved, Seq("vec_id"))
-          .select(codes.columns.map(col): _*)
-        members.unpersist(false)
-        out
-      }
-    val codesOut = codes.filter(!col("cell").isin(coldCells: _*))
-      .unionByName(movedOut)
-    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
+    val cold = codes.filter(col("cell").isin(coldCells: _*))
+    // every cold cell EMPTY: pure metadata reclamation, no assign
+    val members = if (coldRows == 0L) None else Some(
+      cold.select("vec_id").join(emb.select("vec_id", "e"), Seq("vec_id")).cache())
+    members.foreach { m =>
+      // the splitCore coverage check, same offsetting-errors argument: a
+      // missing vec_id silently DROPS its code row; a duplicate
+      // duplicates it — both counts must match the physical cold mass
+      val cov = m.agg(count(lit(1)).as("n"), countDistinct(col("vec_id")).as("d")).head()
+      require(cov.getLong(0) == coldRows && cov.getLong(1) == coldRows,
+        s"emb must cover every cold-cell vec_id exactly once: joined ${cov.getLong(0)} " +
+          s"rows / ${cov.getLong(1)} distinct of $coldRows cold rows")
+    }
+    val movedOut = members.fold(cold) { m =>
+      codec.reroute(cold, assignCells(m, survivors).select("vec_id", "cell", "e"),
+        survivors, s.read.parquet(s"$root/books"))
+    }
+    codes.filter(!col("cell").isin(coldCells: _*)).unionByName(movedOut)
+      .write.mode("overwrite").parquet(s"$outRoot/codes")
     survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
-    s.read.parquet(s"$root/books").write.mode("overwrite").parquet(s"$outRoot/books")
+    copyFrozen(s, root, outRoot, "books")
     copyTombstones(s, root, outRoot)
+    // released only after the codes write, which reads the cached members
+    members.foreach(_.unpersist(false))
   }
 
   /** SHARE-TIERED MERGE STEP of [[maybeMaintainIvfVersioned]] — the
@@ -3704,10 +3631,9 @@ object Similarity {
       .sortBy { case (c, n) => (n, c) }.take(MergeColdCells).map(_._1)
     if (cold.isEmpty) return false
     if (cold.size == occ.size) return false // all-cold: merge is the wrong lever
-    if (isResidualRoot(s, cur)) {
-      mergeResidualCore(s, cur, out, emb, cold, occ)
-      auditStaged(s, out, emb, "merge")
-    } else mergeCore(s, cur, out, emb, cold, occ)
+    val codec = IvfCodec.of(s, cur)
+    mergeCore(s, codec, cur, out, emb, cold, occ)
+    codec.audit(s, out, emb, "merge")
     true
   }
 
@@ -3724,19 +3650,9 @@ object Similarity {
     * mutated payload changes the top-k). Production probing stays
     * nprobe-bounded over the SHRUNK cell set — the point of merging.
     * Eager writes, the q127/q142 convention. */
-  def q144MergeServed(s: SparkSession, d: String): DataFrame = {
-    val root = s"${knnGraphServePath(d)}/ivfmerge"
-    val (emb, subs, seedsPq) = pqParts(s, d)
-    val (cents, books, codeTable) = ivfPqIndex(emb, subs, seedsPq)
-    writeIvfArtifacts(root, cents, books, codeTable)
-    ivfCellMergeArtifact(s, root, s"$root/merged", emb.select("vec_id", "e"))
-    val mc = s.read.parquet(s"$root/merged/cents")
-    ivfPqSearchFrom(mc, s.read.parquet(s"$root/merged/books"),
-      s.read.parquet(s"$root/merged/codes"),
-      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"),
-      nprobe = mc.count().toInt)
-      .select("query_id", "neighbor_id", "adc_fixed", "rn")
-  }
+  def q144MergeServed(s: SparkSession, d: String): DataFrame =
+    rebalancedFullProbe(s, d, s"${knnGraphServePath(d)}/ivfmerge", "merged") { (root, out, emb) =>
+      ivfCellMergeArtifact(s, root, out, emb); () }
 
   // --------------------------------------------------------------- q158
   /** q158: FLEET-FORM VERSIONED IVF MAINTENANCE, ORACLE-GATED — the
@@ -3782,10 +3698,8 @@ object Similarity {
     maybeMaintainIvfVersioned(s, base, emb.select("vec_id", "e"),
       maxTombstones = 1, maxSharePpm = 1000000L)
     RootPointer.retireOld(s, base, keep = 2)
-    val root = RootPointer.resolve(s, base)
-    ivfPqSearchFrom(s.read.parquet(s"$root/cents"),
-      s.read.parquet(s"$root/books"), s.read.parquet(s"$root/codes"),
-      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"))
+    IvfCodec.FlatPq.searchRoot(s, RootPointer.resolve(s, base),
+      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"), IvfNProbe)
   }
 
   /** VERSIONED IVF MAINTENANCE — the combined pass a long-running index
@@ -3922,9 +3836,7 @@ object Similarity {
     * what remains must be the pure map-side assign+encode shape. */
   private[graft] def q74AppendProbe(s: SparkSession, d: String): DataFrame = {
     val (emb, _, seeds) = pqParts(s, d)
-    val cents = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    ivfPqAppend(cents, seeds, emb)
+    ivfPqAppend(seedCents(emb, IvfNList), seeds, emb)
   }
 
   /** PlanSpec probe: OPQ ingest under untrained artifacts — a (v, vv) row
@@ -3935,9 +3847,7 @@ object Similarity {
     val (emb, _, seeds) = pqParts(s, d)
     val hh = emb.filter(col("vec_id") === 0)
       .select(col("e").as("v"), expr("graft_dot(e, e)").as("vv"))
-    val cents = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    opqAppend(hh, cents, seeds, emb)
+    opqAppend(hh, seedCents(emb, IvfNList), seeds, emb)
   }
 
   /** PlanSpec probe: SQ8 ingest under untrained (seed) centroids — the
@@ -3945,9 +3855,7 @@ object Similarity {
     * broadcast. */
   private[graft] def q78AppendProbe(s: SparkSession, d: String): DataFrame = {
     val emb = embWithNorm(s, d).filter(col("nrm") > 0).select("vec_id", "e", "nrm")
-    val cents = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    sq8Append(cents, emb)
+    IvfCodec.Sq8.encode(seedCents(emb, IvfNList), None, emb)
   }
 
   lazy val q72Sql: String = {
@@ -3993,9 +3901,7 @@ object Similarity {
     * no Window anywhere — nothing in the assignment may shuffle embeddings. */
   private[graft] def q69AssignProbe(s: SparkSession, d: String): DataFrame = {
     val emb = embWithNorm(s, d).select("vec_id", "e")
-    val seed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    assignCells(emb, seed)
+    assignCells(emb, seedCents(emb, IvfNList))
   }
 
   /** q71 oracle, generated per round so the SQL can never drift from
@@ -4335,9 +4241,7 @@ object Similarity {
     * is over nlist rows, not the corpus, at any data size). */
   def q132IvfBalance(s: SparkSession, d: String): DataFrame = {
     val emb = embWithNorm(s, d).select("vec_id", "e")
-    val seed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    val cents = fixedPointUpdate(assignCells(emb, seed), seed)
+    val cents = knnCents(emb, IvfNList)
     val counts = assignCells(emb, cents)
       .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
     val tot = counts.agg(sum(col("n_vecs")).as("total"))
@@ -4524,9 +4428,7 @@ object Similarity {
   def q141CellSplit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = embWithNorm(s, d).select("vec_id", "e")
-    val seed = emb.filter(col("vec_id") < IvfNList)
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    val cents = fixedPointUpdate(assignCells(emb, seed), seed).cache()
+    val cents = knnCents(emb, IvfNList).cache()
     val asg = assignCells(emb, cents).select("vec_id", "e", "cell")
     // hot pick: the occupancy table is nlist rows — index METADATA, not
     // data — so it comes to the driver (the q63 cut-point convention) and
@@ -4661,11 +4563,7 @@ object Similarity {
     * q83 broadcast pass) — the build side the served variant persists. */
   private[graft] def miningAssigned(s: SparkSession, d: String): DataFrame = {
     val emb = embWithNorm(s, d).filter(col("nrm") > 0).select("vec_id", "e", "nrm")
-    val coarseSeed = emb.filter(col("vec_id") < corpusNList(s, d))
-      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-    val cc = fixedPointUpdate(assignCells(emb.select("vec_id", "e"), coarseSeed), coarseSeed)
-      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cc"))
-    emb.crossJoin(broadcast(cc))
+    emb.crossJoin(broadcast(ccRow(knnCents(emb, corpusNList(s, d)))))
       .withColumn("cell", expr(s"$coarseArgminExpr.cent_id"))
       .select("vec_id", "e", "nrm", "cell")
   }

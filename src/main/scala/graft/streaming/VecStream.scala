@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.Similarity
 
-/** Streaming ANN index ingest — the continuous form of
-  * [[graft.ops.Similarity.ivfPqAppend]] (the q70 incremental-ingest story
-  * applied to the serving index): fresh embedding batches arrive as a file
-  * stream and are coarse-assigned + PQ-encoded MAP-SIDE under the
-  * PERSISTED index artifacts (coarse centroids + codebooks, each collapsed
-  * to a one-row broadcast), emitting (vec_id, cell, codes) rows that
-  * append to the serving cell+code table. No retraining, no state, no
+/** Streaming ANN index ingest — the continuous form of an IVF code
+  * table's encode ([[graft.ops.Similarity.IvfCodec]]; the q70
+  * incremental-ingest story applied to the serving index): fresh embedding
+  * batches arrive as a file stream and are coarse-assigned + PQ-encoded
+  * MAP-SIDE under the PERSISTED index artifacts (coarse centroids +
+  * codebooks, each collapsed to a one-row broadcast), emitting
+  * (vec_id, cell, codes) rows that append to the serving cell+code table. No retraining, no state, no
   * shuffle: the whole transform is a stateless projection against two
   * static one-row frames, so it is streaming-legal under any trigger and
   * the per-micro-batch cost is proportional to the batch — never the
@@ -212,21 +212,20 @@ object VecStream {
     Similarity.ivfTombRows(ids).write.mode("errorifexists")
       .parquet(s"$root/tombstones/$name")
 
-  /** foreachBatch INGEST for the persisted IVF-PQ artifact: assign+encode
-    * the fresh batch under the frozen cents/books (read back from the
-    * artifact root per batch — KBs, never a training lineage) and APPEND
-    * the code rows to `root/codes` (new part files beside the old ones).
-    * Rebalancing a skewed or drifting ingest is
-    * [[graft.ops.Similarity.maybeMaintainIvfVersioned]]'s split and merge
-    * steps, run between batches on the versioned base: both are
-    * routing-only, so ANY interleaving of appends and rebalances serves
-    * the same full-probe results as policy-free appends (the q142/q144
-    * gates; DocStreamSpec drains both). */
+  /** foreachBatch INGEST for the persisted IVF-PQ artifact: encode the
+    * fresh batch with the root's codec ([[graft.ops.Similarity.IvfCodec.of]])
+    * under the frozen cents/books (read back per batch — KBs, never a
+    * training lineage) and APPEND the code rows to `root/codes`. Rebalancing
+    * is [[graft.ops.Similarity.maybeMaintainIvfVersioned]]'s split and merge,
+    * run between batches: on a flat root they only reroute, so ANY
+    * interleaving of appends and rebalances serves the same full-probe
+    * results as policy-free appends (the q142/q144 gates; DocStreamSpec
+    * drains both); on a residual root they re-encode and audit. */
   def indexAppendBatch(freshVecs: DataFrame, root: String): Unit = {
     val s = freshVecs.sparkSession
     val pc = s.read.parquet(s"$root/cents")
     val pb = s.read.parquet(s"$root/books")
-    Similarity.ivfPqAppend(pc, pb,
+    Similarity.IvfCodec.of(s, root).encode(pc, Some(pb),
       freshVecs.select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
       .write.mode("append").parquet(s"$root/codes")
   }

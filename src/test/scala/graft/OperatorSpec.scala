@@ -12,6 +12,22 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   private val sf = "/root/testdata/sf0.001"
   private def spark = TestSpark.spark
 
+  /** The residual artifact trio (cents, books, codes) of `sf`, trained
+    * ONCE per run and persisted to a temp dir; each residual case reads it
+    * back and writes its own roots from it. */
+  private lazy val residualTrioDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_resid_trio").toString
+    val (cents, books, codes) = Similarity.residualPartsCached(spark, sf)
+    Similarity.writeIvfArtifacts(dir, cents, books, codes)
+    dir
+  }
+
+  private def residualTrio: (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    (spark.read.parquet(s"$residualTrioDir/cents"),
+      spark.read.parquet(s"$residualTrioDir/books"),
+      spark.read.parquet(s"$residualTrioDir/codes"))
+
   test("every catalog query runs and has a deterministic schema") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
@@ -808,7 +824,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       def key(r: org.apache.spark.sql.Row) =
         (r.getAs[Long]("query_id"), r.getAs[Long]("rn"))
       val queries = emb.filter(col("vec_id") < 10)
-      val served = Similarity.sq8SearchFrom(pc, pt, queries).collect()
+      val served = Similarity.IvfCodec.Sq8.searchFrom(pc, None, pt, queries).collect()
         .map(r => key(r) -> (r.getAs[Long]("neighbor_id"), r.getAs[Double]("sim8"),
           r.getAs[Long]("n_cand"))).toMap
       val direct = Similarity.q78Sq8Ivf(spark, sf).collect()
@@ -821,7 +837,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
           (r.getAs[Long]("cell"), r.getAs[Seq[Int]]("qc").mkString(","),
             r.getAs[Double]("max_abs"), r.getAs[Double]("nrm"))).toMap
       val fresh = emb.filter(col("vec_id") % 5 === 0)
-      val appended = codeRows(Similarity.sq8Append(pc, fresh))
+      val appended = codeRows(Similarity.IvfCodec.Sq8.encode(pc, None, fresh))
       val rebuilt = codeRows(codeTable.filter(col("vec_id") % 5 === 0))
       assert(appended == rebuilt && appended.nonEmpty, "SQ8 append diverged from rebuild")
     } finally {
@@ -3435,7 +3451,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
 
   test("residual artifacts: parquet round-trip serves bit-identically; append equals rebuild; split/merge refuse the marked root") {
     val s = spark
-    val (cents, books, codeTable) = Similarity.residualParts(s, sf)
+    val (cents, books, codeTable) = residualTrio
     val dir = java.nio.file.Files.createTempDirectory("graft_resid_idx").toString
     cents.write.mode("overwrite").parquet(s"$dir/cents")
     books.write.mode("overwrite").parquet(s"$dir/books")
@@ -3448,8 +3464,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // serving from PERSISTED artifacts must be bit-identical to the
     // self-contained catalog query — doubles survive parquet exactly and
     // the downstream ranking is integer (the q74 artifact argument)
-    val served = Similarity.residualSearchFrom(
-        s.read.parquet(s"$dir/cents"), s.read.parquet(s"$dir/books"),
+    val served = Similarity.IvfCodec.ResidualPq.searchFrom(
+        s.read.parquet(s"$dir/cents"), Some(s.read.parquet(s"$dir/books")),
         s.read.parquet(s"$dir/codes"), queries).collect()
       .map(r => key(r) -> (r.getAs[Long]("neighbor_id"),
         r.getAs[Long]("adc_fixed"), r.getAs[Long]("n_cand"))).toMap
@@ -3466,11 +3482,26 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       .map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Long]("cell"), r.getAs[Seq[Long]]("codes").mkString(","))).toMap
     val fresh = emb.filter(col("vec_id") % 5 === 0)
-    val appended = codeRows(Similarity.residualAppend(
-      s.read.parquet(s"$dir/cents"), s.read.parquet(s"$dir/books"), fresh))
+    val appended = codeRows(Similarity.IvfCodec.ResidualPq.encode(
+      s.read.parquet(s"$dir/cents"), Some(s.read.parquet(s"$dir/books")), fresh))
     val rebuilt = codeRows(codeTable.filter(col("vec_id") % 5 === 0))
     assert(appended == rebuilt && appended.nonEmpty,
       "residual append diverged from the full rebuild")
+    // the streaming ingest reads the root's codec: a batch appended to the
+    // MARKED root through VecStream encodes residuals too, so the root
+    // keeps its invariant and the appended rows equal the rebuild's
+    val app = s"$dir/app"
+    cents.write.mode("overwrite").parquet(s"$app/cents")
+    books.write.mode("overwrite").parquet(s"$app/books")
+    codeTable.filter(col("vec_id") % 5 =!= 0).write.mode("overwrite").parquet(s"$app/codes")
+    Similarity.markResidual(s, app)
+    graft.streaming.VecStream.indexAppendBatch(
+      Tables.embeddings(s, sf).filter(col("vec_id") % 5 === 0)
+        .select("vec_id", "embedding"), app)
+    assert(Similarity.residualAuditMismatches(s, app, emb) == 0L,
+      "a streamed append must keep the residual invariant on a marked root")
+    assert(codeRows(s.read.parquet(s"$app/codes").filter(col("vec_id") % 5 === 0)) == rebuilt,
+      "streamed residual append diverged from the full rebuild")
     // the geometry-changing policies must refuse the marked root LOUDLY:
     // rerouting a member without re-encoding corrupts x - c(cell) codes
     val ex = intercept[IllegalArgumentException] {
@@ -3487,7 +3518,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
 
   test("residual rebalance: re-encoding split/merge audit clean; the PLAIN split on the same content audits corrupt") {
     val s = spark
-    val (cents, books, codeTable) = Similarity.residualParts(s, sf)
+    val (cents, books, codeTable) = residualTrio
     val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
     val dir = java.nio.file.Files.createTempDirectory("graft_resid_reb").toString
     def write(sub: String, mark: Boolean): String = {
@@ -3535,8 +3566,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     assert(mass(s"$dir/merge") == mass(root))
     assert(Similarity.residualAuditMismatches(s, s"$dir/merge", emb) == 0L,
       "re-encoding merge must leave the invariant intact")
-    val served = Similarity.residualSearchFrom(
-      s.read.parquet(s"$dir/merge/cents"), s.read.parquet(s"$dir/merge/books"),
+    val served = Similarity.IvfCodec.ResidualPq.searchFrom(
+      s.read.parquet(s"$dir/merge/cents"), Some(s.read.parquet(s"$dir/merge/books")),
       s.read.parquet(s"$dir/merge/codes"), emb.filter(col("vec_id") < 10))
     assert(served.count() > 0, "post-rebalance residual serve must return rows")
   }
@@ -3598,7 +3629,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   test("q163 residual policy route: maybe* rebalance ACTS on a residual root, audits clean, mid-swap reader isolated") {
     import graft.ops.RootPointer
     val s = spark
-    val (cents, books, codes) = Similarity.residualParts(s, sf)
+    val (cents, books, codes) = residualTrio
     val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
     // (a) the policy routes: a residual-marked root SPLITS and MERGES
     // through the versioned window (the round-17 refusal is replaced by
@@ -3631,8 +3662,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     Similarity.markResidual(s, s"$base/$v1")
     RootPointer.publish(s, base, v1)
     val rootA = RootPointer.resolve(s, base)
-    def serve(root: String) = Similarity.residualSearchFrom(
-        s.read.parquet(s"$root/cents"), s.read.parquet(s"$root/books"),
+    def serve(root: String) = Similarity.IvfCodec.ResidualPq.searchFrom(
+        s.read.parquet(s"$root/cents"), Some(s.read.parquet(s"$root/books")),
         s.read.parquet(s"$root/codes"),
         emb.filter(col("vec_id") < Similarity.AdcQueries))
       .collect().map(_.toString).sorted.toSeq
@@ -3645,7 +3676,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       "pre-maintenance reader must be isolated from the residual rebalance")
     val rootB = RootPointer.resolve(s, base)
     assert(rootB != rootA, "maintenance must have published a new version")
-    assert(Similarity.isResidualRoot(s, rootB),
+    assert(Similarity.IvfCodec.of(s, rootB) == Similarity.IvfCodec.ResidualPq,
       "the staged version must carry the _VARIANT_RESIDUAL marker")
     assert(Similarity.residualAuditMismatches(s, rootB, emb) == 0L,
       "the published rebalanced root must satisfy the residual invariant")
@@ -3655,11 +3686,11 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   test("q165 residual split: versioned-policy serve equals the direct core row-for-row; mid-swap reader isolated") {
     import graft.ops.RootPointer
     val s = spark
-    val (cents, books, codes) = Similarity.residualParts(s, sf)
+    val (cents, books, codes) = residualTrio
     val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
     val queries = emb.filter(col("vec_id") < Similarity.AdcQueries)
-    def serve(root: String) = Similarity.residualSearchFrom(
-        s.read.parquet(s"$root/cents"), s.read.parquet(s"$root/books"),
+    def serve(root: String) = Similarity.IvfCodec.ResidualPq.searchFrom(
+        s.read.parquet(s"$root/cents"), Some(s.read.parquet(s"$root/books")),
         s.read.parquet(s"$root/codes"), queries)
       .collect().map(_.toString).sorted.toSeq
     // (a) direct core: the same trio in a plain root, split by the kernel
@@ -3692,7 +3723,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       "pre-maintenance reader must be isolated from the residual split")
     val rootB = RootPointer.resolve(s, base)
     assert(rootB != rootA, "maintenance must have published a new version")
-    assert(Similarity.isResidualRoot(s, rootB),
+    assert(Similarity.IvfCodec.of(s, rootB) == Similarity.IvfCodec.ResidualPq,
       "the staged version must carry the _VARIANT_RESIDUAL marker")
     assert(Similarity.residualAuditMismatches(s, rootB, emb) == 0L,
       "the published split root must satisfy the residual invariant")
@@ -4779,7 +4810,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   test("maintenance window: a residual root keeps its marker through a compaction-only window; the next split re-encodes and audits clean") {
     val s = spark
     import graft.ops.RootPointer
-    val (cents, books, codes) = Similarity.residualParts(s, sf)
+    val (cents, books, codes) = residualTrio
     val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
     val base = java.nio.file.Files.createTempDirectory("window_marker").toString + "/ivf"
     val v1 = s"$base/v00001"
@@ -4792,14 +4823,14 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       maxTombstones = 1, maxSharePpm = 1000000L) == ((true, false, false)))
     val compacted = RootPointer.resolve(s, base)
     assert(compacted != v1 && Similarity.ivfTombstoneCount(s, compacted) == 0)
-    assert(Similarity.isResidualRoot(s, compacted),
+    assert(Similarity.IvfCodec.of(s, compacted) == Similarity.IvfCodec.ResidualPq,
       "the compacted version must carry the _VARIANT_RESIDUAL marker")
     // the split reads the marker from the compacted root: the re-encoding
     // route, audited clean (the plain route would corrupt the codes)
     assert(Similarity.maybeMaintainIvfVersioned(s, base, emb,
       maxTombstones = 1, maxSharePpm = 1L)._2)
     val cur = RootPointer.resolve(s, base)
-    assert(cur != compacted && Similarity.isResidualRoot(s, cur))
+    assert(cur != compacted && Similarity.IvfCodec.of(s, cur) == Similarity.IvfCodec.ResidualPq)
     assert(Similarity.residualAuditMismatches(s, cur, emb) == 0L,
       "a split after a compaction-only window must re-encode")
   }
@@ -4869,17 +4900,23 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val emb = s.range(20).selectExpr("id AS vec_id", "array(0.0) AS e")
     // delete batches land in the published root; the window runs between
     // batches
-    def deleteThenMaintain(id: Long, name: String): Boolean = {
+    // returns (compacted, Spark jobs the maintenance window launched)
+    def deleteThenMaintain(id: Long, name: String): (Boolean, Int) = {
       VecStream.tombstoneBatch(Seq(id).toDF("vec_id"), RootPointer.resolve(s, base), name)
-      Similarity.maybeMaintainIvfVersioned(s, base, emb,
-        maxTombstones = 2, maxSharePpm = 1000000L)._1
+      val (acted, counts) = JobCounter(s.sparkContext)(
+        Similarity.maybeMaintainIvfVersioned(s, base, emb,
+          maxTombstones = 2, maxSharePpm = 1000000L))
+      (acted._1, counts.jobs)
     }
-    assert(!deleteThenMaintain(1L, "t0") && !deleteThenMaintain(3L, "t1"))
+    // below every tier the window is file-system work only: the 100% split
+    // tier cannot fire, so not even the occupancy scan runs
+    assert(deleteThenMaintain(1L, "t0") == ((false, 0)) &&
+      deleteThenMaintain(3L, "t1") == ((false, 0)))
     assert(RootPointer.resolve(s, base) == v1 && Similarity.ivfTombstoneCount(s, v1) == 2,
       "below tier: no compaction yet")
     // third batch crossed the tier: tombstones physically applied in a new
     // published version that carries none
-    assert(deleteThenMaintain(5L, "t2"))
+    assert(deleteThenMaintain(5L, "t2")._1)
     val cur = RootPointer.resolve(s, base)
     assert(cur != v1 && Similarity.ivfTombstoneCount(s, cur) == 0,
       "compaction must publish a version without tombstones")
@@ -4891,6 +4928,18 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // its tombstones (published roots are never rewritten)
     assert(s.read.parquet(s"$cur/cents").count() == 1 &&
       s.read.parquet(s"$cur/books").count() == 1)
+    // ... byte for byte: the compaction copies the frozen files
+    def parts(root: String, d: String): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val stream = java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/$d"))
+      try stream.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(f => f.getFileName.toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally stream.close()
+    }
+    Seq("cents", "books").foreach { d =>
+      assert(parts(cur, d).nonEmpty && parts(cur, d) == parts(v1, d),
+        s"the compacted version's $d must be byte-equal to v1's")
+    }
     assert(Similarity.ivfTombstoneCount(s, v1) == 3)
   }
 
