@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Session
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
   * ONE JSON line. Each query is fully executed via the built-in `noop` sink
@@ -56,21 +56,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      // keep repeated plan shapes' generated classes resident (the default
-      // 100-entry cache evicts within one catalog pass)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
 
     // None = the query threw: a failure must surface in the JSON, never be
     // folded into the timings (a fast analysis error would otherwise record

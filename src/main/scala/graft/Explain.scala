@@ -1,15 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.obs.Session
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     SparkEntry.queries(args(0))(spark, if (args.length > 1) args(1) else "/root/testdata/sf0.1")
       .explain("formatted")
     spark.stop()

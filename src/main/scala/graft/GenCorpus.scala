@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
+import graft.obs.Session
 
 /** Deterministic adversarial dedup-corpus generator — the reproducible
   * source of the "sfbig" self-baseline corpus in BASELINE.md.
@@ -58,11 +59,7 @@ object GenCorpus {
     val out = args.headOption.getOrElse("/tmp/sfbig")
     val nDocs = if (args.length > 1) args(1).toLong else 100000L
     val nBase = math.max(1L, nDocs / 10L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
     val langs = Array("en", "en", "en", "zh", "de", "fr")
     spark.range(nDocs)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
+import graft.obs.Session
 
 /** Deterministic LONG-DOCUMENT corpus generator — the reproducible source
   * of the "sflong" anchors in BASELINE.md. The driver testdata's documents
@@ -58,11 +59,7 @@ object GenLongDocs {
     val nDocs = if (args.length > 1) args(1).toLong else 500L
     val minTok = if (args.length > 2) args(2).toInt else 10000
     val maxTok = if (args.length > 3) args(3).toInt else 100000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
     val langs = Array("en", "en", "en", "zh", "de", "fr")
     spark.range(nDocs)

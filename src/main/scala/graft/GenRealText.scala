@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
+import graft.obs.Session
 
 /** Deterministic REALISTIC-text corpus generator — the round-16 gap (c)
   * closer: GenCorpus's vocabulary contains no English function words, so
@@ -153,11 +154,7 @@ object GenRealText {
     val nDocs = if (args.length > 1) args(1).toLong else 100000L
     val rare = if (args.length > 2) args(2).toInt else 0
     val nBase = math.max(1L, nDocs / 10L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
     spark.range(nDocs)
       .map { id =>

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.obs.Session
 
 /** Deterministic N× replication of the driver testdata's relational tables —
   * the reproducible source of BASELINE.md's relational-side scale anchors
@@ -21,12 +22,7 @@ object GenScale {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/sf1x"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
 
     def load(t: String): DataFrame = spark.read.parquet(s"$base/$t.parquet")
     def write(t: String, df: DataFrame): Unit = {

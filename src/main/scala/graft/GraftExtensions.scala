@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.IntegerType
 import graft.functions.{BloomAgg, BloomContains, CovAgg, DotProductD, HllAgg, HllMergeAgg, HllStats, MGAgg, MinHashAgg, NearCells, PqNearCells, SimHashAgg, SrpBuckets, TopKAgg}
 
-/** Session-extension installer: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` (or
+/** Session-extension installer: a builder's
+  * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.GraftExtensions`) makes the engine's native
   * expressions available in every session — including pure-SQL clients —
   * without per-query registration.

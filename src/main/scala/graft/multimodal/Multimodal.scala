@@ -680,7 +680,7 @@ object MultimodalOps {
       "shiftleft(element_at(fp, 2 * i + 2), 16))"
 
   /** PER-CORPUS BAND-LAYOUT POLICY (`maybe*` pattern) — mechanizes the
-    * choice the round-18 ProfilePhashReal rows made by hand: the 2×32
+    * choice the BASELINE.md round-18 real-codec rows made by hand: the 2×32
     * layout cuts candidate mass by orders of magnitude on realistic
     * geometry (11.8×, recall intact) but costs half the recall on
     * adversarial gradient re-renders (scattered flips leave no wide band

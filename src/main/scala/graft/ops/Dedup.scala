@@ -1046,8 +1046,7 @@ object Dedup {
   private[ops] val EmbBits = 10
 
   /** SRP-LSH near-dup core over any (vec_id, embedding) frame — tables/bits
-    * are the scale dials (hold 2^bits ∝ n for constant bucket occupancy;
-    * `Profile27` validates the 100k-vector operating point). */
+    * are the scale dials (hold 2^bits ∝ n for constant bucket occupancy). */
   private[graft] def embedNearDups(raw: DataFrame, threshold: Double,
       tables: Int, bits: Int): DataFrame = {
     val s = raw.sparkSession
@@ -1176,9 +1175,10 @@ object Dedup {
     // real near-dup component (duplicates of one source, maybe chained
     // through a few rewrites) converges in ≤ ~5; a graph still moving after
     // 12 is pathological and the star fallback is exact, O(log² n) rounds
-    // regardless of diameter, and already FASTER at ~1M pairs (Profile53).
+    // regardless of diameter.
     // The cap only picks which kernel finishes the job — never correctness.
-    // Measured (Profile53Power, chain diameter 5000 + 500k-degree hub):
+    // Measured (BASELINE.md's power-law clustering probe, chain diameter
+    // 5000 + 500k-degree hub):
     // with the old cap of 50 the capped phase burned ~3× the cost of the
     // entire star fallback before invoking it.
     while (!converged && rounds < 12) {
@@ -1200,8 +1200,7 @@ object Dedup {
       // switch to alternating large-star/small-star contraction, which is
       // O(log² n) rounds REGARDLESS of diameter. min-label stays the default
       // for its exact monotone-sum convergence proof and lower constant on
-      // small per-query graphs; at ~1M pairs the star rounds are already
-      // competitive (Profile53: 12.8 s vs 21.7 s, star faster).
+      // small per-query graphs.
       labels.unpersist(blocking = false)
       labels = starCluster(prdd.filter { case (a, b) => a != b })
     }
@@ -1624,7 +1623,7 @@ object Dedup {
 
   /** Collapsed candidate pairs (post length-band filter, pre-verify): the
     * set the O(len²) levenshtein actually runs on — its size vs the verified
-    * count is the blocking-selectivity metric `Profile57` tracks. */
+    * count is the blocking-selectivity metric. */
   private[graft] def editCandidates(src: DataFrame): DataFrame = {
     val docs = src
       .select(col("doc_id"), col("text"), length(col("text")).as("len"),

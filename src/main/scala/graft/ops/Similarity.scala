@@ -2548,7 +2548,7 @@ object Similarity {
 
   /** q105: LABEL PROPAGATION SERVED FROM THE PERSISTED GRAPH ARTIFACT —
     * q101's recipe applied to the other graph analytic ([[q84LabelPropFrom]]
-    * was previously exercised only by Profile94 + specs): build the edge
+    * was previously exercised only by specs): build the edge
     * artifact, read it back, and run label propagation over the
     * ROUND-TRIPPED rows under EXACTLY q84's oracle — any write/read/type
     * drift in the artifact path, or any divergence between served and
@@ -4277,7 +4277,7 @@ object Similarity {
     * back, and run [[triangleCountFrom]] — mutual-edge counting, wedge
     * join, closing semi-join — over the ROUND-TRIPPED frame under EXACTLY
     * q131's oracle. Serve-time cost is the k-bounded integer-edge passes
-    * only (~2 s marginal at 100k per the ProfileTriangles seam
+    * only (~2 s marginal at 100k per the BASELINE.md round-14 seam
     * decomposition); PlanSpec pins the no-kernel lineage like q101's.
     * Eager at construction (writes the artifact), the q101/q113
     * convention. */

@@ -322,10 +322,10 @@ object TextOps {
     * each token with its 1-based position, sort the (term, pos) structs
     * (lexicographic: term, then pos — so each run's positions come out
     * ascending), mark run starts, and each run's slice IS that term's
-    * position array. Kernel choice is MEASURED (`graft.ProfilePositional`,
-    * BASELINE.md round-14): steady-state best-of-3 the struct sort is
-    * linear (1.67 → 2.82 s at 2× doc length on the 500-doc 70k/137k-char
-    * corpora) and ~20% faster than a string-encoded
+    * position array. Kernel choice is MEASURED (BASELINE.md round-14):
+    * steady-state best-of-3 the struct sort is linear (1.67 → 2.82 s at
+    * 2× doc length on the 500-doc 70k/137k-char corpora) and ~20% faster
+    * than a string-encoded
     * `term ⧺ sep ⧺ padded-pos` sort, which additionally needs a
     * separator-char contract; single-shot timings mis-rank these kernels
     * by 3–6× (whole-stage-codegen + JIT warmup lands on whichever heavy

@@ -24,8 +24,9 @@ import graft.ops.Similarity
   * must never mutate the quantizers mid-flight, or old and new codes stop
   * being comparable under one LUT).
   *
-  * `DocStreamSpec`'s VecStream case pins streamed ≡ batch: draining the
-  * stream produces exactly `ivfPqAppend`'s rows for the same batch.
+  * `DocStreamSpec`'s VecStream cases pin streamed ≡ batch: draining the
+  * stream produces exactly the codec's batch encode for the same batch,
+  * on a flat root and on a residual one.
   */
 object VecStream {
 
@@ -41,14 +42,17 @@ object VecStream {
       .option("pathGlobFilter", "*.parquet")
       .parquet(dir)
 
-  /** Assign + encode a streaming batch under persisted artifacts —
-    * delegates to the batch `ivfPqAppend` verbatim (same expressions, same
-    * broadcasts), which is exactly why streamed ≡ batch holds: the only
-    * stream-specific part is the source. `cents`/`books` should be the
+  /** Assign + encode a streaming batch under persisted artifacts with the
+    * root's codec ([[graft.ops.Similarity.IvfCodec.of]]) — the batch
+    * encode verbatim (same expressions, same broadcasts), which is exactly
+    * why streamed ≡ batch holds: the only stream-specific part is the
+    * source. A residual root's batches encode x − c(cell), so streaming
+    * into it keeps its invariant. `cents`/`books` should be the
     * parquet-persisted artifacts (reading them back per micro-batch is a
     * few KB; training lineage would retrain per micro-batch). */
-  def indexAppend(freshVecs: DataFrame, cents: DataFrame, books: DataFrame): DataFrame =
-    Similarity.ivfPqAppend(cents, books,
+  def indexAppend(freshVecs: DataFrame, codec: Similarity.IvfCodec, cents: DataFrame,
+      books: Option[DataFrame]): DataFrame =
+    codec.encode(cents, books,
       freshVecs.select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
 
   /** Per-micro-batch SEMANTIC DECONTAMINATION flags — q151's rule at
@@ -223,10 +227,8 @@ object VecStream {
     * drains both); on a residual root they re-encode and audit. */
   def indexAppendBatch(freshVecs: DataFrame, root: String): Unit = {
     val s = freshVecs.sparkSession
-    val pc = s.read.parquet(s"$root/cents")
-    val pb = s.read.parquet(s"$root/books")
-    Similarity.IvfCodec.of(s, root).encode(pc, Some(pb),
-      freshVecs.select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    indexAppend(freshVecs, Similarity.IvfCodec.of(s, root), s.read.parquet(s"$root/cents"),
+      Some(s.read.parquet(s"$root/books")))
       .write.mode("append").parquet(s"$root/codes")
   }
 }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Relational, Similarity}
 import graft.multimodal.Multimodal
+import graft.obs.Trace
 
 /** Per-operator invariants on sf0.001 (the DuckDB oracle harness is the
   * authoritative value-level check; these specs guard semantics that the
@@ -268,6 +269,27 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"trial $trial: $got vs $expected")
     }
+  }
+
+  test("cluster assignment is exact on a power-law mix: a long chain, a mega-star hub, many small stars") {
+    // the adversarial shape at small scale: the 40-node chain outlasts the
+    // 12-round min-label cap, so the whole graph's labels come from the
+    // large-star/small-star fallback, hub and small stars included
+    val s = spark
+    import s.implicits._
+    val (hub, smallBase) = (1000L, 10000L)
+    val chain = (1L until 40L).map(i => (i - 1, i))
+    val mega = (1L to 500L).map(i => (hub, hub + i))
+    val small = (0L until 50L).flatMap { c =>
+      (1L until 8L).map(i => (smallBase + c * 100L, smallBase + c * 100L + i))
+    }
+    val got = Dedup.clusterPairs((chain ++ mega ++ small).toDF("a_id", "b_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    def expected(d: Long): Long =
+      if (d < 40L) 0L else if (d < smallBase) hub else (d / 100L) * 100L
+    assert(got.length == 40 + 501 + 50 * 8)
+    assert(got.forall { case (d, c) => c == expected(d) },
+      got.filter { case (d, c) => c != expected(d) }.take(5).mkString(", "))
   }
 
   test("incremental dedup equals full-corpus pairs restricted to the fresh batch") {
@@ -2401,6 +2423,18 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       s"raw HLL estimate off by >5% at n=400k: $est")
   }
 
+  test("q96 hll: a stream that repeats every key yields the identical sketch") {
+    // register max is idempotent: duplicates never move the sketch
+    graft.functions.HllAgg.register(spark)
+    def sketch(rows: Long): org.apache.spark.sql.Row = spark.range(0, rows, 1, 8)
+      .selectExpr("md5(CAST(id % 20000 AS STRING)) AS fp")
+      .selectExpr("CAST(conv(substring(fp, 1, 3), 16, 10) AS BIGINT) AS bucket",
+        "CAST(length(regexp_extract(substring(fp, 4, 13), '^0*', 0)) AS BIGINT) + 1 AS rho")
+      .agg(expr("graft_hll_stats(graft_hll_agg(bucket, rho))").as("st"))
+      .select("st.v_empty", "st.s_scaled").collect().head
+    assert(sketch(20000) == sketch(60000))
+  }
+
   test("q111 rrf: fused list recomputes from the two public arms") {
     import graft.ops.{Retrieval, Similarity, TextOps}
     // the two arms, independently (the oracle certifies their values;
@@ -2952,7 +2986,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     Retrieval.lexTombstone(Seq(4L, 7L).toDF("doc_id"), dir, "t0")
     Retrieval.lexTombstone(Seq(4L, 2L, 999L).toDF("doc_id"), dir, "t1")
     val ((tf, df, st), opened) =
-      JobCounter(spark.sparkContext)(Retrieval.lexIndexServeDel(spark, dir))
+      Trace(spark.sparkContext)(Retrieval.lexIndexServeDel(spark, dir))
     assert(opened.jobs == 0,
       s"building the serve frames ran ${opened.jobs} Spark jobs — a segment or tombstone read lost its declared schema")
     val (rtf, rdf, rst) = TextOps.lexIndexOf(docs.filter(!col("doc_id").isin(2L, 4L, 7L)))
@@ -3323,7 +3357,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("maybePhashLayout: adversarial flip geometry holds 4x16, realistic geometry takes the 2x32 lever; choice recorded") {
-    // the mechanized form of the round-18 ProfilePhashReal adjudication:
+    // the mechanized form of the round-18 real-codec phash adjudication:
     // scattered flips (gradient re-renders) leave no WIDE band untouched
     // while still sharing a narrow band → the sampled recall probe sees
     // the wide layout lose the pairs and holds the guaranteed floor;
@@ -4903,7 +4937,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // returns (compacted, Spark jobs the maintenance window launched)
     def deleteThenMaintain(id: Long, name: String): (Boolean, Int) = {
       VecStream.tombstoneBatch(Seq(id).toDF("vec_id"), RootPointer.resolve(s, base), name)
-      val (acted, counts) = JobCounter(s.sparkContext)(
+      val (acted, counts) = Trace(s.sparkContext)(
         Similarity.maybeMaintainIvfVersioned(s, base, emb,
           maxTombstones = 2, maxSharePpm = 1000000L))
       (acted._1, counts.jobs)

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AsOf, Dedup, Relational}
+import graft.obs.Trace
 
 /** Physical-plan regressions: the scale design claims (pushdown, pruning,
   * broadcast strategy, no nested loops in the bucketed as-of) asserted
@@ -61,11 +62,11 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
   // with no Spark job, and no change that can alter the inferred schema (a
   // rewritten file, a flipped conversion conf, a directory's contents) is
   // ever served a remembered one
-  private def planJobs(body: => Unit): Int = JobCounter(spark.sparkContext)(body)._2.jobs
+  private def planJobs(body: => Unit): Int = Trace(spark.sparkContext)(body)._2.jobs
 
   test("Tables schema memo: a second load of a single-file table plans with no Spark job") {
     val first = Tables.orders(spark, sf)
-    val (second, counts) = JobCounter(spark.sparkContext)(Tables.orders(spark, sf))
+    val (second, counts) = Trace(spark.sparkContext)(Tables.orders(spark, sf))
     assert(counts.jobs == 0, counts.toString)
     assert(second.schema == first.schema)
     assert(second.count() == first.count())
@@ -79,7 +80,7 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       spark.read.parquet(s"$sf/region.parquet").schema)
     assert(planJobs(Tables.load(spark, dir.toString, "t")) == 0)
     Files.copy(Paths.get(s"$sf/nation.parquet"), t, StandardCopyOption.REPLACE_EXISTING)
-    val (reread, counts) = JobCounter(spark.sparkContext)(Tables.load(spark, dir.toString, "t"))
+    val (reread, counts) = Trace(spark.sparkContext)(Tables.load(spark, dir.toString, "t"))
     assert(counts.jobs >= 1, "the rewritten file was served the remembered schema")
     assert(reread.schema == spark.read.parquet(s"$sf/nation.parquet").schema)
     assert(reread.count() == spark.read.parquet(s"$sf/nation.parquet").count())
@@ -476,7 +477,7 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       RedskinsPipeline.loadNflCsv(spark, s"$fixtures/nfl"),
       RedskinsPipeline.loadElectionsCsv(spark, s"$fixtures/elections/elections.csv"),
       RedskinsPipeline.electionDaysDf(spark, 1976, 2020))
-    val (rows, counts) = JobCounter(spark.sparkContext)(df.collect())
+    val (rows, counts) = Trace(spark.sparkContext)(df.collect())
     // the three single-partition sources satisfy every dropDuplicates,
     // window and sort requirement: the 3 broadcasts plus the result
     assert(counts.jobs <= 4, counts.toString)
@@ -1590,12 +1591,12 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
   test("q138 serve request stays within its stage budget, and the lexical delete correction plans without a job") {
     import graft.ops.Retrieval
     Retrieval.q138RagServed(spark, sf) // builds the artifacts
-    val (df, planned) = JobCounter(spark.sparkContext)(Retrieval.q138Serve(spark, sf))
+    val (df, planned) = Trace(spark.sparkContext)(Retrieval.q138Serve(spark, sf))
     // the only planning-time jobs left are schema inference on the six
     // undeclared reads (documents, embeddings, cents, books, codes,
     // clusters): the lexical segments and both tombstone sets declare theirs
     assert(planned.jobs <= 6, s"planning the serve ran ${planned.jobs} jobs")
-    val (_, served) = JobCounter(spark.sparkContext)(df.collect())
+    val (_, served) = Trace(spark.sparkContext)(df.collect())
     // 37 stages when the IVF top-k and n_cand were a window plus a
     // joined-back count (the candidate subtree ran twice) and each delete
     // correction was a fold + a delta agg + a join; 26 with one top-k+count

@@ -192,7 +192,8 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       .select("vec_id", "embedding")
       .coalesce(1).write.mode("overwrite").parquet(dir)
 
-    val q = VecStream.indexAppend(VecStream.readVecs(spark, dir), pc, pb)
+    val q = VecStream.indexAppend(VecStream.readVecs(spark, dir),
+        Similarity.IvfCodec.of(spark, art), pc, Some(pb))
       .writeStream.format("memory").queryName("stream_annappend")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -205,6 +206,47 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     assert(batch.nonEmpty, "vacuous: empty fresh batch")
     assert(streamed == batch,
       s"streamed index diverged: ${streamed.size} vs ${batch.size} rows")
+  }
+
+  test("streamed ANN ingest into a residual root keeps its invariant and equals the batch residual encode") {
+    val spark = TestSpark.spark
+    import graft.ops.Similarity
+    graft.functions.VectorFunctions.register(spark)
+    // a residual-marked root over the static corpus: its codes encode
+    // x - c(cell), so a batch encoded with flat PQ would break every row
+    val (cents, books, codes) = Similarity.residualPartsCached(spark, sf)
+    val root = java.nio.file.Files.createTempDirectory("vecstream_resid").toString
+    cents.write.parquet(s"$root/cents")
+    books.write.parquet(s"$root/books")
+    codes.filter(col("vec_id") % 5 =!= 0).write.parquet(s"$root/codes")
+    Similarity.markResidual(spark, root)
+    val pc = spark.read.parquet(s"$root/cents")
+    val pb = spark.read.parquet(s"$root/books")
+
+    val dir = java.nio.file.Files.createTempDirectory("vecstream_resid_in").toString
+    Tables.embeddings(spark, sf).filter(col("vec_id") % 5 === 0)
+      .select("vec_id", "embedding")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val q = VecStream.readVecs(spark, dir).writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        VecStream.indexAppend(batch, Similarity.IvfCodec.of(spark, root), pc, Some(pb))
+          .write.mode("append").parquet(s"$root/codes")
+        ()
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+
+    val emb = Similarity.embWithNorm(spark, sf).select("vec_id", "e")
+    assert(Similarity.residualAuditMismatches(spark, root, emb) == 0L,
+      "a streamed batch broke the residual invariant of the root it serves")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.getAs[Long]("vec_id") ->
+        (r.getAs[Long]("cell"), r.getAs[Seq[Long]]("codes").mkString(","))).toMap
+    val fresh = emb.filter(col("vec_id") % 5 === 0)
+    val batch = rows(Similarity.IvfCodec.ResidualPq.encode(pc, Some(pb), fresh))
+    val streamed = rows(spark.read.parquet(s"$root/codes").filter(col("vec_id") % 5 === 0))
+    assert(batch.nonEmpty, "vacuous: empty fresh batch")
+    assert(streamed == batch, s"streamed residual rows diverged: ${streamed.size} vs ${batch.size}")
   }
 
   test("streamed Gram sketches fold to the exact whole-corpus matrix (fixed-point cells are additive)") {

@@ -10,12 +10,14 @@
 # Usage: tools/bench_pair.sh BASE_CLASSES_DIR q105 [q106 ...]
 #   BASE_CLASSES_DIR: target/scala-2.13/classes of the baseline checkout
 #   env: SF (default sf0.1), REPS (A/B pairs per query, default 3),
-#        RUNS (in-JVM BenchOne iterations, min taken, default 3)
+#        RUNS (in-JVM BenchOne iterations, min taken, default 3),
+#        SPARK_GRAFT_CPUS (cores for both arms, default nproc)
 set -eo pipefail
 BASE=$1; shift
 SF=${SF:-/root/testdata/sf0.1}
 REPS=${REPS:-3}
 RUNS=${RUNS:-3}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 HEADCP=${HEADCP:-/root/repo/target/scala-2.13/classes}
 # ORDER=BA runs the baseline arm first in each pair — flip it to cancel
 # position bias (the first JVM of a session reads the parquet cold, and a
@@ -31,9 +33,15 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
 
+# Both arms get the same cores and the same 64 MB broadcast threshold: a
+# baseline whose BenchOne builds its own session otherwise plans with its
+# own core count and Spark's 10 MB default, and the ratio would measure the
+# settings rather than the code (the system property only fills in what a
+# session leaves unset).
 one() { # one BenchOne JVM: $1=classes $2=query -> min steady-state seconds
-  SPARK_GRAFT_SF_DIR="$SF" java $ADD_OPENS -Xmx16g -Xms16g \
+  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" java $ADD_OPENS -Xmx16g -Xms16g \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+    -Dspark.sql.autoBroadcastJoinThreshold=67108864 \
     -cp "$1:/opt/spark/jars/*" graft.BenchOne "$2" "$SF" "$RUNS" 2>/dev/null \
     | awk '/^run /{ if (min=="" || $3+0 < min) min=$3+0 } END { print min }'
 }
