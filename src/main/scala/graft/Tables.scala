@@ -58,9 +58,8 @@ object Tables {
     * path (Spark's own read reports the latter). */
   private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      val st = fs.getFileStatus(p)
+      val st = graft.ops.Artifacts.fs(spark, path).getFileStatus(p)
       if (!st.isFile) None
       else Some(SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime,
         SchemaConfs.map(spark.conf.getOption)))

@@ -730,10 +730,7 @@ object MultimodalOps {
           (if (ppm >= recallFloorPpm) 2 else 4, ppm)
         }
       }
-    val fs = new org.apache.hadoop.fs.Path(artifactPath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(artifactPath))
-    graft.ops.Similarity.writeLines(fs, s"$artifactPath/phash_layout",
+    graft.ops.Artifacts.writeLines(s, s"$artifactPath/phash_layout",
       Seq(s"layout=${chosen}x${64 / chosen}", s"mass_4x16=$mass4",
         s"mass_2x32=$mass2", s"sampled_wide_recall_ppm=$recallPpm"))
     chosen

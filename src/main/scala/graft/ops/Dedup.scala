@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import graft.Tables
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -651,8 +652,7 @@ object Dedup {
     * [[containmentRankTable]]. */
   def containmentArtifactBuild(s: SparkSession, path: String, docs: DataFrame)
       : org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    Artifacts.delete(s, path)
     // CACHE the hashed arrays before anything explodes them — the
     // rankedDocsAndPrefix convention: dfRankPairs explodes hs0, and
     // exploding a freshly-COMPUTED array re-evaluates the interpreted
@@ -666,8 +666,7 @@ object Dedup {
     s.sparkContext.parallelize(pairs.toIndexedSeq, 1).toDF("shh", "df")
       .write.mode("overwrite").parquet(s"$path/rank")
     val btable = s.sparkContext.broadcast(graft.functions.RankSort.buildTable(pairs))
-    rankDocs(hashed, btable).select("doc_id", "hs", "nsh")
-      .write.mode("overwrite").parquet(s"$path/seg0")
+    writeContainmentSegment(hashed, btable, s"$path/seg0")
     hashed.unpersist(blocking = false)
     btable
   }
@@ -690,40 +689,34 @@ object Dedup {
   private[graft] def containmentAppendWith(path: String, freshDocs: DataFrame,
       seg: String,
       btable: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])]): Unit =
-    rankDocs(hashShingles(freshDocs), btable)
-      .select("doc_id", "hs", "nsh")
-      .write.mode("overwrite").parquet(s"$path/$seg")
+    writeContainmentSegment(hashShingles(freshDocs), btable, s"$path/$seg")
 
-  /** Segment list — the [[graft.ops.Retrieval.lexSegments]] convention:
-    * a driver-side metadata listing of `seg*` dirs only, so an in-flight
-    * append's `_temporary` staging is never read as data. */
-  private def containmentSegments(s: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg"))
-      .map(_.getPath.toString).sorted.toSeq
-    require(segs.nonEmpty, s"no containment-index segments under $path")
-    segs
-  }
+  /** Declared schema of a containment segment, in the column order
+    * [[writeContainmentSegment]] writes it (the compactor writes the same
+    * rows): serving, rehydration and compaction read under it, so opening
+    * the artifact launches no footer-reading job per segment; OperatorSpec
+    * compares it with the schema of the written file. */
+  private[graft] val ContainmentSegSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("hs", ArrayType(LongType)),
+    StructField("nsh", LongType)))
 
-  /** The segment union as one frame — the serve side's index input, also
-    * the [[graft.streaming.DocStream]] rehydration seam. */
+  /** One containment segment: the hashed docs ranked under `btable`. */
+  private def writeContainmentSegment(hashed: DataFrame,
+      btable: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])],
+      out: String): Unit =
+    rankDocs(hashed, btable).select("doc_id", "hs", "nsh")
+      .write.mode("overwrite").parquet(out)
+
+  /** The segment union as one frame ([[Artifacts.segments]], read under
+    * [[ContainmentSegSchema]]) — the serve side's index input, the
+    * compactor's merge, and the [[graft.streaming.DocStream]]
+    * rehydration seam. */
   private[graft] def containmentSegmentDocs(s: SparkSession, path: String): DataFrame =
-    containmentSegments(s, path).map(s.read.parquet(_)).reduce(_ unionByName _)
-
-  /** Segment count (0 when the root doesn't exist) — the size-tier input
-    * to [[maybeCompactContainmentVersioned]]. */
-  def containmentSegmentCount(s: SparkSession, path: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) 0
-    else fs.listStatus(root)
-      .count(st => st.isDirectory && st.getPath.getName.startsWith("seg"))
-  }
+    Artifacts.readSegments(s, Artifacts.requireSegments(s, path, "containment-index"), "",
+      ContainmentSegSchema)
 
   /** SIZE-TIERED COMPACTION for the containment-index artifact — the
-    * [[graft.ops.Retrieval.maybeCompactLexVersioned]] policy applied to
+    * [[Artifacts.compactOverTier]] window the lexical index uses, applied to
     * the round-18 gap (containment segments never compacted: a year of
     * daily appends is 365 segments, and the serve-side full-token explode
     * plus per-segment listing grow with segment count). At ≤ `maxSegments`
@@ -736,17 +729,11 @@ object Dedup {
     * (OperatorSpec pins it). Call it between ingest batches (one writer
     * per base). Returns true iff a compaction published. */
   def maybeCompactContainmentVersioned(s: SparkSession, base: String,
-      maxSegments: Int): Boolean = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    RootPointer.maintain(s, base) { (cur, out) =>
-      containmentSegmentCount(s, cur) > maxSegments && {
-        s.read.parquet(containmentSegments(s, cur): _*).select("doc_id", "hs", "nsh")
-          .write.mode("overwrite").parquet(s"$out/seg0")
-        s.read.parquet(s"$cur/rank").write.mode("overwrite").parquet(s"$out/rank")
-        true
-      }
-    }.head
-  }
+      maxSegments: Int): Boolean =
+    Artifacts.compactOverTier(s, base, maxSegments) { (cur, out) =>
+      containmentSegmentDocs(s, cur).write.mode("overwrite").parquet(s"$out/seg0")
+      s.read.parquet(s"$cur/rank").write.mode("overwrite").parquet(s"$out/rank")
+    }
 
   /** "Is any FRESH doc an excerpt of anything in the artifact (fresh
     * batch included, once appended)?" — the [[incrementalContainment]]
@@ -814,7 +801,7 @@ object Dedup {
     * results require the persisted rank order, the segment round-trip,
     * and the one-sided probe to lose nothing and add nothing. */
   def q164ContainmentServed(s: SparkSession, d: String): DataFrame = {
-    val root = s"${Similarity.knnGraphServePath(d)}/contain"
+    val root = s"${Artifacts.datasetScratch(d)}/contain"
     val docs = Tables.spread(s, Tables.documents(s, d), "doc_id")
     // ONE rank table for the whole lifecycle (r19 verdict #2): the build
     // just computed and persisted it — append and serve rank under the

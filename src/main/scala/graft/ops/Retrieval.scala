@@ -262,36 +262,11 @@ object Retrieval {
     StructField("n_docs", LongType), StructField("tot_dl", LongType),
     StructField("avgdl", DoubleType)))
 
-  /** One file set (`tf`, `df` or `stats`) across `segs`, read under its
-    * declared schema. */
-  private def readSegFiles(s: SparkSession, segs: Seq[String], file: String,
-      schema: StructType): DataFrame =
-    s.read.schema(schema).parquet(segs.map(sg => s"$sg/$file"): _*)
-
   /** Fold freshly-arrived documents into a persisted lexical-index
     * artifact: write them as a new immutable segment. Cost is O(fresh) —
     * tokenize + count the fresh docs only; base postings are untouched. */
   def lexIndexAppend(s: SparkSession, path: String, freshDocs: DataFrame, seg: String): Unit =
     lexIndexSegment(freshDocs, path, seg)
-
-  /** Enumerate the segments of a lexical-index artifact — one driver-side
-    * metadata list rather than a glob: deterministic order, and no
-    * spurious streaming-sink probe warnings on the unexpanded pattern.
-    * Only `seg*` dirs count: an in-flight append's `_temporary` staging
-    * dir (or any other non-segment artifact) must never be read as data —
-    * that's what keeps the appendable-while-serving claim true. Order
-    * note: `.sorted` is lexicographic (seg10 < seg2) — fine because every
-    * consumer folds order-independently (union + additive sums), but
-    * nothing downstream may ever assume numeric segment order here. */
-  private[graft] def lexSegments(s: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg"))
-      .map(_.getPath.toString).sorted.toSeq
-    require(segs.nonEmpty, s"no lexical-index segments under $path")
-    segs
-  }
 
   /** Open a segmented lexical-index artifact for serving, with its
     * tombstones applied. Postings are the union of segment scans (`doc_id`
@@ -317,19 +292,17 @@ object Retrieval {
     * inconsistency the delete contract cannot survive. Every file is read
     * under its declared schema, so building these frames runs no Spark
     * job. */
-  def lexIndexServe(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    lexFold(s, lexSegments(s, path), lexTombstoneUnion(s, Similarity.tombDirs(fs, path)))
-  }
+  def lexIndexServe(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) =
+    lexFold(s, Artifacts.requireSegments(s, path, "lexical-index"),
+      Artifacts.DocTombstones.union(s, path))
 
   /** [[lexIndexServe]]'s frames over EXPLICIT segments and delete set —
     * also the compactor's merge. */
   private def lexFold(s: SparkSession, segs: Seq[String], dead: Option[DataFrame])
       : (DataFrame, DataFrame, DataFrame) = {
-    val tf0 = readSegFiles(s, segs, "tf", LexTfSchema)
-    val df0 = readSegFiles(s, segs, "df", LexDfSchema)
-    val st0 = readSegFiles(s, segs, "stats", LexStatsSchema).select("n_docs", "tot_dl")
+    val tf0 = Artifacts.readSegments(s, segs, "tf", LexTfSchema)
+    val df0 = Artifacts.readSegments(s, segs, "df", LexDfSchema)
+    val st0 = Artifacts.readSegments(s, segs, "stats", LexStatsSchema).select("n_docs", "tot_dl")
     val (tf, dfRows, statRows) = dead match {
       case None => (tf0, df0, st0)
       case Some(del) =>
@@ -371,17 +344,15 @@ object Retrieval {
   def lexIndexCompact(s: SparkSession, path: String, outPath: String): Unit = {
     require(outPath != path,
       "compaction is copy-on-write: outPath must be a new artifact root")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = lexSegments(s, path)
+    val segs = Artifacts.requireSegments(s, path, "lexical-index")
     // validate the mixed-positional invariant BEFORE the first write: a
     // rejected compaction must leave NO artifact at outPath — a partial
     // seg0 (tf/df/stats but no pp) would be served position-less by
-    // lexSegments/lexIndexServe with no error
-    val withPp = segs.filter(sg => fs.exists(new org.apache.hadoop.fs.Path(s"$sg/pp")))
+    // lexIndexServe with no error
+    val withPp = segs.filter(sg => Artifacts.exists(s, s"$sg/pp"))
     require(withPp.isEmpty || withPp.size == segs.size,
       s"mixed positional artifact: ${withPp.size}/${segs.size} segments carry pp")
-    val del = lexTombstoneUnion(s, Similarity.tombDirs(fs, path))
+    val del = Artifacts.DocTombstones.union(s, path)
     val (tf, df, stats) = lexFold(s, segs, del)
     tf.write.mode("overwrite").parquet(s"$outPath/seg0/tf")
     df.write.mode("overwrite").parquet(s"$outPath/seg0/df")
@@ -398,13 +369,7 @@ object Retrieval {
 
   /** Segment count of a lexical-index artifact (0 when the root doesn't
     * exist yet) — the size-tier input to [[maybeCompactLexVersioned]]. */
-  def lexSegmentCount(s: SparkSession, path: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) 0
-    else fs.listStatus(root)
-      .count(st => st.isDirectory && st.getPath.getName.startsWith("seg"))
-  }
+  def lexSegmentCount(s: SparkSession, path: String): Int = Artifacts.segmentCount(s, path)
 
   /** SIZE-TIERED COMPACTION POLICY — the trigger [[lexIndexCompact]]
     * deliberately lacks: the kernel is a manual call, so without a policy a
@@ -421,12 +386,8 @@ object Retrieval {
     * drain). Call it between ingest batches — the one-writer-per-base
     * contract. Returns true iff a compaction published. */
   def maybeCompactLexVersioned(s: SparkSession, base: String,
-      maxSegments: Int): Boolean = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    RootPointer.maintain(s, base) { (cur, out) =>
-      lexSegmentCount(s, cur) > maxSegments && { lexIndexCompact(s, cur, out); true }
-    }.head
-  }
+      maxSegments: Int): Boolean =
+    Artifacts.compactOverTier(s, base, maxSegments)(lexIndexCompact(s, _, _))
 
   /** q113: BM25 SERVED FROM THE PERSISTED LEXICAL-INDEX ARTIFACT — q101's
     * recipe applied to the text family: the entry writes tf/df/stats via
@@ -441,7 +402,7 @@ object Retrieval {
     * kernel (no array_sort sorted-run counter) and roots at the artifact
     * scan. Eager at construction (writes the artifact), like q101/q76. */
   def q113Bm25Served(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Similarity.knnGraphServePath(d)}/lexindex"
+    val path = s"${Artifacts.datasetScratch(d)}/lexindex"
     lexIndexSegment(TextOps.tokenizedDocs(s, d), path, "seg0")
     val (tf, df, stats) = lexIndexServe(s, path)
     TextOps.bm25RankedFrom(tf, df, stats, TextOps.queryTerms(s, d))
@@ -461,7 +422,7 @@ object Retrieval {
     * glob union, the additive df fold, or the Σtot_dl/Σn_docs avgdl
     * breaks the hash. Eager at construction (writes both segments). */
   def q115LexAppend(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Similarity.knnGraphServePath(d)}/lexappend"
+    val path = s"${Artifacts.datasetScratch(d)}/lexappend"
     val docs = TextOps.tokenizedDocs(s, d)
     val cut = Tables.documents(s, d).agg(max(col("doc_id"))).head().getLong(0) * 4 / 5
     // disjoint doc ranges into disjoint seg dirs — overlapped (guide §2.6)
@@ -817,11 +778,8 @@ object Retrieval {
     * carry positions (mixed artifacts would silently lose phrase recall
     * on the position-less segments — fail loud instead). */
   def lexIndexServePos(s: SparkSession, path: String): DataFrame = {
-    val segs = lexSegments(s, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val missing = segs.filterNot(sg =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$sg/pp")))
+    val segs = Artifacts.requireSegments(s, path, "lexical-index")
+    val missing = segs.filterNot(sg => Artifacts.exists(s, s"$sg/pp"))
     require(missing.isEmpty,
       s"segments without positional postings: $missing — a mixed artifact " +
         "would silently drop phrase matches; rebuild those segments with " +
@@ -839,7 +797,7 @@ object Retrieval {
     * Eager at construction (writes the artifact), the q113/q115
     * convention. */
   def q120PhraseServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Similarity.knnGraphServePath(d)}/lexpos"
+    val path = s"${Artifacts.datasetScratch(d)}/lexpos"
     val docs = TextOps.tokenizedDocs(s, d)
     val cut = Tables.documents(s, d).agg(max(col("doc_id"))).head().getLong(0) * 4 / 5
     // disjoint doc ranges into disjoint seg dirs — overlapped (guide §2.6)
@@ -1203,7 +1161,7 @@ object Retrieval {
     * NO RDD-backed cluster kernel. Under EXACTLY q124's oracle. Eager at
     * construction (writes the artifact), the q113/q115 convention. */
   def q128CollapseServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Similarity.knnGraphServePath(d)}/clusters"
+    val path = s"${Artifacts.datasetScratch(d)}/clusters"
     Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(path)
     val p = TextOps.bm25Parts(s, d)
     collapseRankFrom(TextOps.bm25ScoredFrom(p.tf, p.df, p.stats, p.qt),
@@ -1322,21 +1280,7 @@ object Retrieval {
     * its own tiny immutable write, so deletes compose with concurrent
     * serves and appends exactly like segments do. */
   def lexTombstone(ids: DataFrame, path: String, name: String): Unit =
-    lexTombRows(ids).write.mode("overwrite").parquet(s"$path/tombstones/$name")
-
-  /** Declared schema of a lexical tombstone file; [[lexTombRows]] is what
-    * every tombstone writer emits. */
-  private[graft] val LexTombSchema: StructType =
-    StructType(Seq(StructField("doc_id", LongType)))
-
-  private[graft] def lexTombRows(ids: DataFrame): DataFrame =
-    ids.select(col("doc_id").cast(LongType).as("doc_id"))
-
-  /** The union of the given tombstone files under [[LexTombSchema]], or
-    * None when there are none. Not deduplicated: its consumers are semi
-    * and anti joins, where a duplicate id is inert. */
-  private def lexTombstoneUnion(s: SparkSession, tombs: Seq[String]): Option[DataFrame] =
-    if (tombs.isEmpty) None else Some(s.read.schema(LexTombSchema).parquet(tombs: _*))
+    Artifacts.DocTombstones.write(ids, path, name)
 
   /** [[lexIndexServe]] under its former delete-aware name, which the
     * perfbench client still calls: every lexical serve applies the root's
@@ -1362,7 +1306,7 @@ object Retrieval {
     * live-docs discipline). Eager at construction, the q113/q115
     * convention. */
   def q126TombstoneServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Similarity.knnGraphServePath(d)}/lextomb"
+    val path = s"${Artifacts.datasetScratch(d)}/lextomb"
     val docs = TextOps.tokenizedDocs(s, d)
     lexIndexSegment(docs, path, "seg0")
     lexTombstone(tombstoneIds(docs), path, "t0")
@@ -1403,8 +1347,8 @@ object Retrieval {
     * RDD-backed cluster kernel (q128's pin), scans rooted at the lexical
     * segments, the tombstone file, and the label artifact. */
   def q133RetrievalServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Similarity.knnGraphServePath(d)}/servedfull"
-    val clPath = s"${Similarity.knnGraphServePath(d)}/servedfull_clusters"
+    val path = s"${Artifacts.datasetScratch(d)}/servedfull"
+    val clPath = s"${Artifacts.datasetScratch(d)}/servedfull_clusters"
     val docs = TextOps.tokenizedDocs(s, d)
     // lexical family and cluster-label artifact are independent builds
     // over disjoint paths — overlapped (guide §2.6, Par scaladoc)
@@ -1475,19 +1419,13 @@ object Retrieval {
         lexTombstone(docs.filter(col("doc_id") % 7 === 3 &&
           col("doc_id") >= Similarity.AdcQueries).select("doc_id"), s"$root/lex", "t0")
       },
-      () => {
-        cents.write.mode("overwrite").parquet(s"$root/ivf/cents")
-        books.write.mode("overwrite").parquet(s"$root/ivf/books")
-        codeTable.write.mode("overwrite").parquet(s"$root/ivf/codes")
-        Similarity.ivfTombRows(emb.filter(col("vec_id") % 7 === 3 &&
-          col("vec_id") >= Similarity.AdcQueries))
-          .write.mode("overwrite").parquet(s"$root/ivf/tombstones/t0")
-      },
+      () => Similarity.writeIvfArtifacts(s"$root/ivf", cents, books, codeTable,
+        "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= Similarity.AdcQueries)),
       () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(s"$root/clusters"))
     q138Serve(s, d)
   }
 
-  private def q138Root(d: String): String = s"${Similarity.knnGraphServePath(d)}/ragserve"
+  private def q138Root(d: String): String = s"${Artifacts.datasetScratch(d)}/ragserve"
 
   /** q138's serve frame over its ALREADY-BUILT artifacts — split out so
     * PlanSpec can price one serve request apart from the build. */
@@ -1569,7 +1507,7 @@ object Retrieval {
     * step of the composition can drift from its standalone entry. */
   def q147RagFull(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    val root = s"${Similarity.knnGraphServePath(d)}/ragfull"
+    val root = s"${Artifacts.datasetScratch(d)}/ragfull"
     val docs = TextOps.tokenizedDocs(s, d)
     val (emb, subs, seedsPq) = Similarity.pqParts(s, d)
     val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
@@ -1582,14 +1520,8 @@ object Retrieval {
         lexTombstone(docs.filter(col("doc_id") % 7 === 3 &&
           col("doc_id") >= Similarity.AdcQueries).select("doc_id"), s"$root/lex", "t0")
       },
-      () => {
-        cents.write.mode("overwrite").parquet(s"$root/ivf/cents")
-        books.write.mode("overwrite").parquet(s"$root/ivf/books")
-        codeTable.write.mode("overwrite").parquet(s"$root/ivf/codes")
-        Similarity.ivfTombRows(emb.filter(col("vec_id") % 7 === 3 &&
-          col("vec_id") >= Similarity.AdcQueries))
-          .write.mode("overwrite").parquet(s"$root/ivf/tombstones/t0")
-      },
+      () => Similarity.writeIvfArtifacts(s"$root/ivf", cents, books, codeTable,
+        "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= Similarity.AdcQueries)),
       () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(s"$root/clusters"),
       () => Similarity.embWithNorm(s, d).select("vec_id", "e", "nrm")
         .write.mode("overwrite").parquet(s"$root/vecs"))
@@ -1624,7 +1556,7 @@ object Retrieval {
     * re-runs in one session stack further versions and retire the tail —
     * exactly a maintenance cadence. */
   def q148VersionedServed(s: SparkSession, d: String): DataFrame = {
-    val base = s"${Similarity.knnGraphServePath(d)}/lexver"
+    val base = s"${Artifacts.datasetScratch(d)}/lexver"
     val docs = TextOps.tokenizedDocs(s, d)
     val cut = Tables.documents(s, d).agg(max(col("doc_id"))).head().getLong(0) * 4 / 5
     val v = RootPointer.nextVersion(s, base)
@@ -1648,7 +1580,7 @@ object Retrieval {
     * walk; PlanSpec asserts it on this frame instead (the entry composes
     * exactly this value). Callers must have run the build phase first. */
   private[graft] def q147Fused(s: SparkSession, d: String): DataFrame =
-    ragServeFrom(s, d, s"${Similarity.knnGraphServePath(d)}/ragfull")
+    ragServeFrom(s, d, s"${Artifacts.datasetScratch(d)}/ragfull")
 
 
   lazy val q147Sql: String =

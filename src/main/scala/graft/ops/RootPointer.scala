@@ -45,13 +45,10 @@ object RootPointer {
   val Complete = "_ROOT_COMPLETE"
   private val VersionRe = "^v(\\d{5})$".r
 
-  private def fsOf(s: SparkSession, base: String): FileSystem =
-    new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-
   /** All version dirs under base carrying the completeness marker,
     * oldest → newest. */
   def completeVersions(s: SparkSession, base: String): Seq[String] = {
-    val fs = fsOf(s, base)
+    val fs = Artifacts.fs(s, base)
     val b = new Path(base)
     if (!fs.exists(b)) Seq.empty
     else fs.listStatus(b).toSeq
@@ -63,7 +60,7 @@ object RootPointer {
   /** The next version NAME to stage into (max existing + 1, complete or
     * not — a crashed staging dir must not be reused until cleaned). */
   def nextVersion(s: SparkSession, base: String): String = {
-    val fs = fsOf(s, base)
+    val fs = Artifacts.fs(s, base)
     val b = new Path(base)
     val maxN =
       if (!fs.exists(b)) 0
@@ -77,14 +74,11 @@ object RootPointer {
     * precedes the pointer write — the order the reader fallback relies
     * on. */
   def publish(s: SparkSession, base: String, version: String): Unit = {
-    val fs = fsOf(s, base)
+    val fs = Artifacts.fs(s, base)
     require(fs.exists(new Path(s"$base/$version")),
       s"cannot publish missing version dir $base/$version")
-    val m = fs.create(new Path(s"$base/$version/$Complete"), true)
-    m.close()
-    val o = fs.create(new Path(s"$base/$Pointer"), true)
-    o.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    o.close()
+    fs.create(new Path(s"$base/$version/$Complete"), true).close()
+    Artifacts.writeLines(s, s"$base/$Pointer", Seq(version))
   }
 
   /** Resolve the current serving root (a full path under base). Pointer
@@ -93,18 +87,8 @@ object RootPointer {
     * the newest COMPLETE version. Throws only when nothing was ever
     * published. */
   def resolve(s: SparkSession, base: String): String = {
-    val fs = fsOf(s, base)
-    val p = new Path(s"$base/$Pointer")
-    val fromPointer: Option[String] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val v =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        Some(v).filter(v => v.nonEmpty &&
-          fs.exists(new Path(s"$base/$v/$Complete")))
-      }
+    val fromPointer = Artifacts.readLines(s, s"$base/$Pointer").headOption
+      .filter(v => Artifacts.exists(s, s"$base/$v/$Complete"))
     val v = fromPointer.orElse(completeVersions(s, base).lastOption)
       .getOrElse(throw new IllegalStateException(
         s"no published artifact root under $base"))
@@ -118,7 +102,7 @@ object RootPointer {
     * window. */
   def retireOld(s: SparkSession, base: String, keep: Int): Seq[String] = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
-    val fs = fsOf(s, base)
+    val fs = Artifacts.fs(s, base)
     val current = resolve(s, base).split('/').last
     val victims = completeVersions(s, base).dropRight(keep)
       .filter(_ != current)
@@ -131,7 +115,7 @@ object RootPointer {
     * version dirs, so any unmarked one it did not just create is a crash
     * remnant, never an in-flight publish. */
   def cleanStaging(s: SparkSession, base: String): Seq[String] = {
-    val fs = fsOf(s, base)
+    val fs = Artifacts.fs(s, base)
     val b = new Path(base)
     if (!fs.exists(b)) return Seq.empty
     val victims = fs.listStatus(b).toSeq
@@ -165,7 +149,7 @@ object RootPointer {
     * Returns each step's acted flag. */
   private[graft] def maintain(s: SparkSession, base: String)(
       steps: ((String, String) => Boolean)*): Seq[Boolean] = {
-    val fs = fsOf(s, base)
+    val fs = Artifacts.fs(s, base)
     cleanStaging(s, base)
     val cur = resolve(s, base)
     val before = listing(fs, cur)

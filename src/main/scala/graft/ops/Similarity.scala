@@ -306,8 +306,11 @@ object Similarity {
     * lever: with no env override it derives nlist ≈ ⌈√n⌉ from the corpus
     * count ([[corpusNList]]); the static [[IvfNList]] below only feeds the
     * per-query serving family, where nlist scales build cost linearly. */
-  private[graft] val IvfNList: Int =
-    sys.env.get("SPARK_GRAFT_NLIST").map(_.toInt).getOrElse(8)
+  // the one read of SPARK_GRAFT_NLIST: the plans and the oracle SQL below
+  // all take the override from here
+  private[graft] val NListOverride: Option[Int] =
+    sys.env.get("SPARK_GRAFT_NLIST").map(_.toInt)
+  private[graft] val IvfNList: Int = NListOverride.getOrElse(8)
   private[graft] val IvfNProbe: Int =
     sys.env.get("SPARK_GRAFT_NPROBE").map(_.toInt).getOrElse(2)
 
@@ -341,7 +344,7 @@ object Similarity {
     * √n. */
   private def embDirToken(s: SparkSession, d: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Artifacts.fs(s, p.toString)
     // statuses sorted by name (listing order is not contractually stable —
     // unsorted folding caused spurious cache misses) and the token is the
     // concatenated (name,len,mtime) strings, not a folded Int hashCode: a
@@ -356,7 +359,7 @@ object Similarity {
   }
 
   private[graft] def corpusNList(s: SparkSession, d: String): Int =
-    sys.env.get("SPARK_GRAFT_NLIST").map(_.toInt)
+    NListOverride
       // memoized per (dataset dir, file-listing token): every corpus² entry
       // (q82/q83/q84/q94/q101/q103…) triggers this at PLAN time, so an
       // unmemoized count would launch the same footer-metadata job once per
@@ -368,7 +371,7 @@ object Similarity {
   /** SQL mirror of [[corpusNList]]: the env literal when the override is
     * set, else the √n derivation as a scalar subquery over the same table. */
   private[graft] lazy val corpusNListSql: String =
-    sys.env.get("SPARK_GRAFT_NLIST").map(_.toInt.toString).getOrElse(
+    NListOverride.map(_.toString).getOrElse(
       "(SELECT GREATEST(8, CAST(ceil(sqrt(COUNT(*))) AS BIGINT)) FROM embeddings)")
   private val IvfK = 5
   private val IvfNQueries = 10
@@ -873,12 +876,10 @@ object Similarity {
           .withColumn("qc", expr(sq8CodesExpr))
     }
 
-    /** The codec of a persisted IVF-PQ root: the one reader of the
-      * `_VARIANT_RESIDUAL` marker. */
-    def of(s: SparkSession, root: String): PqCodec = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$ResidualMarker")
-      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) ResidualPq else FlatPq
-    }
+    /** The codec of a persisted IVF-PQ root, by its variant marker
+      * ([[Artifacts.isResidual]]). */
+    def of(s: SparkSession, root: String): PqCodec =
+      if (Artifacts.isResidual(s, root)) ResidualPq else FlatPq
   }
 
   /** ANN serving observability: `Dataset.observe` counters piggybacked on
@@ -1078,27 +1079,9 @@ object Similarity {
       () => books.write.mode("overwrite").parquet(s"$root/books"),
       () => codes.write.mode("overwrite").parquet(s"$root/codes"))
     val tw: Seq[() => Unit] = tombs.map { case (n, df) =>
-      () => ivfTombRows(df).write.mode("overwrite").parquet(s"$root/tombstones/$n")
+      () => Artifacts.VecTombstones.write(df, root, n)
     }
     Par.jobs(trio ++ tw: _*)
-  }
-
-  /** Declared schema of an IVF-PQ tombstone file (`tombstones/<name>`,
-    * deleted vec_ids): [[tombstoneUnion]] reads under it, and the
-    * engine's tombstone writers emit [[ivfTombRows]]. */
-  private[graft] val IvfTombSchema: StructType =
-    StructType(Seq(StructField("vec_id", LongType)))
-
-  private[graft] def ivfTombRows(ids: DataFrame): DataFrame =
-    ids.select(col("vec_id").cast(LongType).as("vec_id"))
-
-  /** Variant marker: a residual-encoded artifact root carries this empty
-    * file; [[IvfCodec.of]] reads it. */
-  private[graft] val ResidualMarker = "_VARIANT_RESIDUAL"
-
-  private[graft] def markResidual(s: SparkSession, root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$ResidualMarker")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
   }
 
   /** The refusal message the PLAIN split/merge raise on a residual-marked
@@ -1146,7 +1129,7 @@ object Similarity {
     * have dropped exactly the tombstoned rows and NOTHING else, and the
     * persisted cents/books/codes to round-trip bit-exactly. */
   def q160ResidualServed(s: SparkSession, d: String): DataFrame = {
-    val base = s"${knnGraphServePath(d)}/ivfresid"
+    val base = s"${Artifacts.datasetScratch(d)}/ivfresid"
     val emb = embWithNorm(s, d).select("vec_id", "e")
     val dels = emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= AdcQueries)
       .select("vec_id")
@@ -1165,7 +1148,7 @@ object Similarity {
     val (cents, books, codes) = residualPartsCached(s, d)
     val v = RootPointer.nextVersion(s, base)
     writeIvfArtifacts(s"$base/$v", cents, books, codes, tombs: _*)
-    markResidual(s, s"$base/$v")
+    Artifacts.markResidual(s, s"$base/$v")
     RootPointer.publish(s, base, v)
   }
 
@@ -1195,7 +1178,7 @@ object Similarity {
     * routing, the re-encode arithmetic, the policy's cold-cell choice, or
     * the versioned publish/resolve round trip breaks the hash. */
   def q163ResidualRebalanceServed(s: SparkSession, d: String): DataFrame = {
-    val base = s"${knnGraphServePath(d)}/ivfresver"
+    val base = s"${Artifacts.datasetScratch(d)}/ivfresver"
     publishResidual(s, base, d)
     val emb = embWithNorm(s, d).select("vec_id", "e")
     // split tier at 100% (cannot fire — geometry change there is not
@@ -1236,7 +1219,7 @@ object Similarity {
     * re-encode bug throws, never publishes) plus the OperatorSpec
     * served ≡ direct-core differential at production nprobe. */
   def q165ResidualSplitServed(s: SparkSession, d: String): DataFrame = {
-    val base = s"${knnGraphServePath(d)}/ivfressplit"
+    val base = s"${Artifacts.datasetScratch(d)}/ivfressplit"
     publishResidual(s, base, d)
     val emb = embWithNorm(s, d).select("vec_id", "e")
     val (_, split, _) = maybeMaintainIvfVersioned(s, base, emb,
@@ -2448,11 +2431,30 @@ object Similarity {
     // outdeg is carried on every edge row (knnEdges computes it as
     // size(tk) inside the top-k agg), so no re-aggregation + join here —
     // one fewer edge-list shuffle per graph build
-    val eo = edges
-      .cache() // lazy: round 1's materialization populates it; like q84's
-    // caches (n·k integer rows + PrRounds tiny rank frames) these fall to
-    // the session-level clearCache between bench/verify queries — repo
+    // lazy: round 1's materialization populates it; like q84's caches
+    // (n·k integer rows + the last round's tiny rank frame) it falls to the
+    // session-level clearCache between bench/verify queries — repo
     // convention for in-query caches (see q84's scaladoc)
+    pageRankRounds(nodes, edges.cache(), None)
+  }
+
+  /** The damped round loop of q94 and q103 over the node set and the
+    * cached edge list `eo` (query_id, neighbor_id, outdeg): per round, the
+    * fixed-point fan-in sum, then `0.15 + 0.85·(Σ_in + dangling/n)` where
+    * the dangling term (q103) redistributes the rank mass sitting on the
+    * `dangling` nodes uniformly, and is absent for q94.
+    *
+    * Per-round barrier, as q84: each round reads the previous ranks once,
+    * but an unmaterialized lineage re-derives every prior round inside
+    * round r's plan (and the final plan would re-run the whole
+    * recursion), so every round but the last is cached and counted; the
+    * last folds into the final job. A round's cache is released once the
+    * next round has materialized from it (a loaded cache survives the
+    * release of the one it was built from), so the entry holds at most
+    * two rank frames at a time. */
+  private def pageRankRounds(nodes: DataFrame, eo: DataFrame,
+      dangling: Option[DataFrame]): DataFrame = {
+    val nD = dangling.map(_ => nodes.count().toDouble)
     var pr = nodes.select(col("vec_id"), lit(1.0).as("pr")).cache()
     for (r <- 1 to PrRounds) {
       val sums = eo
@@ -2460,14 +2462,21 @@ object Similarity {
         .select(col("neighbor_id").as("vec_id"),
           floor(col("pr") / col("outdeg") * lit(1000000000.0)).as("c"))
         .groupBy("vec_id").agg(sum(col("c")).as("fs"))
-      pr = nodes.join(sums, Seq("vec_id"), "left")
-        .select(col("vec_id"), (lit(0.15) + lit(0.85) *
-          (coalesce(col("fs"), lit(0L)).cast("double") / lit(1000000000.0))).as("pr"))
-      // same per-round barrier as q84: each round reads the previous
-      // ranks once, but an unmaterialized lineage re-derives every prior
-      // round inside round r's plan (and the final plan would re-run the
-      // whole recursion); the last round folds into the final job
-      if (r < PrRounds) pr.cache().count()
+      val inMass = coalesce(col("fs"), lit(0L)).cast("double") / lit(1000000000.0)
+      val joined = nodes.join(sums, Seq("vec_id"), "left")
+      val next = dangling match {
+        case None => joined.select(col("vec_id"), (lit(0.15) + lit(0.85) * inMass).as("pr"))
+        case Some(dg) =>
+          val dm = pr.join(dg, Seq("vec_id"), "left_semi")
+            .agg(coalesce(sum(floor(col("pr") * lit(1000000000.0))), lit(0L)).as("dms"))
+          joined.crossJoin(broadcast(dm)).select(col("vec_id"), (lit(0.15) + lit(0.85) *
+            (inMass + ((col("dms").cast("double") / lit(1000000000.0)) / lit(nD.get)))).as("pr"))
+      }
+      if (r < PrRounds) {
+        next.cache().count()
+        pr.unpersist(blocking = false)
+      }
+      pr = next
     }
     pr.select(col("vec_id"), round(col("pr"), 6).as("pr")).orderBy("vec_id")
   }
@@ -2499,35 +2508,6 @@ object Similarity {
        |SELECT vec_id, round(pr, 6) AS pr FROM p$PrRounds ORDER BY vec_id""".stripMargin
   }
 
-  /** Session-scoped parquet root for the served-graph catalog entries (the
-    * q76 sink convention: one temp root per JVM, deleted by a shutdown
-    * hook; the path never reaches output). Artifacts live in a SUBDIR KEYED
-    * BY DATASET ([[knnGraphServePath]]) so building the served entry for a
-    * second dataset in the same JVM can never overwrite the parquet a
-    * still-lazy served frame from an earlier dataset will read. */
-  private lazy val knnGraphServeDir: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_knn_serve")
-    sys.addShutdownHook {
-      import java.nio.file.{Files, Path}
-      import scala.jdk.CollectionConverters._
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach((f: Path) => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }
-    p.toString
-  }
-
-  /** Per-dataset artifact dir under [[knnGraphServeDir]]: a sanitized tail
-    * of the dataset path plus its full-path hash (collision-proof across
-    * same-named leaf dirs). Stable within the JVM, so repeated builds for
-    * the SAME dataset still overwrite in place (the q76 convention). */
-  private[graft] def knnGraphServePath(d: String): String =
-    s"$knnGraphServeDir/${d.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(40)}_" +
-      java.lang.Integer.toHexString(d.hashCode)
-
   /** q101: PAGERANK SERVED FROM THE PERSISTED GRAPH ARTIFACT — the
     * oracle-gated promotion of the [[knnGraphArtifact]] serving seam (the
     * q74-append precedent applied to the graph family): the entry writes
@@ -2541,7 +2521,7 @@ object Similarity {
     * and every served analytic reads n·k 16-byte integer rows. Eager at
     * construction (writes the artifact), like q76/q93. */
   def q101PageRankServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${knnGraphServePath(d)}/edges"
+    val path = s"${Artifacts.datasetScratch(d)}/edges"
     knnGraphArtifact(s, d, path, withCells = false)
     q94PageRankFrom(s, d, s.read.parquet(path))
   }
@@ -2556,7 +2536,7 @@ object Similarity {
     * so a still-lazy q101 frame and this entry can never clobber each
     * other's parquet. PlanSpec pins the no-kernel lineage like q101's. */
   def q105LabelPropServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${knnGraphServePath(d)}/edges_lp"
+    val path = s"${Artifacts.datasetScratch(d)}/edges_lp"
     knnGraphArtifact(s, d, path, withCells = false)
     q84LabelPropFrom(s, d, s.read.parquet(path))
   }
@@ -2580,8 +2560,7 @@ object Similarity {
     val emb = embWithNorm(s, d).filter(col("nrm") > 0).select("vec_id", "e", "nrm")
     val cut = Tables.embeddings(s, d).agg(max(col("vec_id"))).head().getLong(0) * 4 / 5
     val base = emb.filter(col("vec_id") <= cut)
-    val nlist = sys.env.get("SPARK_GRAFT_NLIST").map(_.toInt)
-      .getOrElse(derivedNList(base.count()))
+    val nlist = NListOverride.getOrElse(derivedNList(base.count()))
     val cents = knnCents(base, nlist).cache() // tiny; three consumers below
     val cellsTable = probeCellRows(base.select("vec_id", "e"), cents)
     val baseEdges = knnEdgesScoredFrom(s, base, ccRow(cents))
@@ -2592,7 +2571,7 @@ object Similarity {
 
   lazy val q106Sql: String = {
     val kdist = "list_inner_product(x.e, x.e) - 2 * list_inner_product(x.e, c.ce) + list_inner_product(c.ce, c.ce)"
-    val nlistSql = sys.env.get("SPARK_GRAFT_NLIST").map(_.toInt.toString).getOrElse(
+    val nlistSql = NListOverride.map(_.toString).getOrElse(
       "(SELECT GREATEST(8, CAST(ceil(sqrt(COUNT(*))) AS BIGINT)) FROM eb)")
     s"""WITH e AS (
        |  SELECT vec_id, e, sqrt(list_inner_product(e, e)) AS nrm
@@ -2677,25 +2656,7 @@ object Similarity {
     val eo = knnEdges(s, d).filter(col("query_id") % PrSinkMod =!= 0).cache()
     val dangling = nodes.join(eo.select(col("query_id").as("vec_id")).distinct(),
       Seq("vec_id"), "left_anti").cache()
-    val nD = nodes.count().toDouble
-    var pr = nodes.select(col("vec_id"), lit(1.0).as("pr")).cache()
-    for (r <- 1 to PrRounds) {
-      val dm = pr.join(dangling, Seq("vec_id"), "left_semi")
-        .agg(coalesce(sum(floor(col("pr") * lit(1000000000.0))), lit(0L)).as("dms"))
-      val sums = eo
-        .join(pr.select(col("vec_id").as("query_id"), col("pr")), Seq("query_id"))
-        .select(col("neighbor_id").as("vec_id"),
-          floor(col("pr") / col("outdeg") * lit(1000000000.0)).as("c"))
-        .groupBy("vec_id").agg(sum(col("c")).as("fs"))
-      pr = nodes.join(sums, Seq("vec_id"), "left").crossJoin(broadcast(dm))
-        .select(col("vec_id"), (lit(0.15) + lit(0.85) *
-          ((coalesce(col("fs"), lit(0L)).cast("double") / lit(1000000000.0)) +
-            ((col("dms").cast("double") / lit(1000000000.0)) / lit(nD)))).as("pr"))
-      // q94's per-round barrier (see its scaladoc); the last round folds
-      // into the final job over the cached edge/dangling/rank inputs
-      if (r < PrRounds) pr.cache().count()
-    }
-    pr.select(col("vec_id"), round(col("pr"), 6).as("pr")).orderBy("vec_id")
+    pageRankRounds(nodes, eo, Some(dangling))
   }
 
   lazy val q103Sql: String = {
@@ -3167,7 +3128,7 @@ object Similarity {
     * it, not a rebuild. Eager at construction (writes the artifacts +
     * tombstone), the q101/q113 convention. */
   def q127AnnTombstoneServed(s: SparkSession, d: String): DataFrame = {
-    val root = s"${knnGraphServePath(d)}/ivftomb"
+    val root = s"${Artifacts.datasetScratch(d)}/ivftomb"
     val (emb, subs, seedsPq) = pqParts(s, d)
     val (cents, books, codeTable) = ivfPqIndex(emb, subs, seedsPq)
     writeIvfArtifacts(root, cents, books, codeTable,
@@ -3194,39 +3155,10 @@ object Similarity {
     liveCodes(s, root).write.mode("overwrite").parquet(s"$outRoot/codes")
   }
 
-  /** Tombstone-file count under an IVF-PQ artifact root (0 when none) —
-    * the size-tier input to [[maybeMaintainIvfVersioned]]'s compaction. */
-  def ivfTombstoneCount(s: SparkSession, root: String): Int = {
-    val tombRoot = new org.apache.hadoop.fs.Path(s"$root/tombstones")
-    val fs = tombRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tombRoot)) 0
-    else fs.listStatus(tombRoot).count(_.isDirectory)
-  }
-
-  /** The union of an IVF-PQ root's tombstone files as a (vec_id) frame,
-    * or None when the root carries no tombstones — the ONE definition of
-    * "the delete set" shared by serving (q127/q136/q138), compaction, and
-    * the split. The files are read under the declared [[IvfTombSchema]],
-    * so opening the set launches no footer-reading job. NOT deduplicated:
-    * every serving and compaction consumer is an anti (or semi) join, where
-    * a duplicate id cannot change the result; a consumer that writes or
-    * counts the rows dedups itself ([[copyTombstones]]). */
-  private[graft] def tombstoneUnion(s: SparkSession, root: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tombs = tombDirs(fs, root)
-    if (tombs.isEmpty) None
-    else Some(s.read.schema(IvfTombSchema).parquet(tombs: _*))
-  }
-
-  /** The tombstone dirs under an artifact root (lexical or IVF), sorted. */
-  private[graft] def tombDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Seq[String] = {
-    val tomb = new org.apache.hadoop.fs.Path(s"$root/tombstones")
-    if (!fs.exists(tomb)) Seq.empty
-    else fs.listStatus(tomb).filter(_.isDirectory)
-      .map(_.getPath.toString).sorted.toSeq
-  }
+  /** The delete set of an IVF-PQ root ([[Artifacts.VecTombstones]]),
+    * shared by serving (q127/q136/q138), compaction, and the split. */
+  private[graft] def tombstoneUnion(s: SparkSession, root: String): Option[DataFrame] =
+    Artifacts.VecTombstones.union(s, root)
 
   /** The code table of an IVF-PQ root minus its tombstoned vectors. */
   private[graft] def liveCodes(s: SparkSession, root: String): DataFrame = {
@@ -3238,21 +3170,20 @@ object Similarity {
   /** Carry `root`'s delete set into `outRoot` as ONE deduplicated
     * tombstone file — the split/merge rewrites' aux copy. */
   private def copyTombstones(s: SparkSession, root: String, outRoot: String): Unit =
-    tombstoneUnion(s, root).foreach(
-      _.distinct().write.mode("overwrite").parquet(s"$outRoot/tombstones/t0"))
+    tombstoneUnion(s, root)
+      .foreach(del => Artifacts.VecTombstones.write(del.distinct(), outRoot, "t0"))
 
   /** FILE-copy `root`'s frozen quantizer dirs (and the variant marker,
     * if any) into `outRoot`: no maintenance step changes them. */
   private def copyFrozen(s: SparkSession, root: String, outRoot: String,
       names: String*): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(root).getFileSystem(conf)
-    (names :+ ResidualMarker).map(n => new Path(s"$root/$n")).filter(fs.exists)
+    val fs = Artifacts.fs(s, root)
+    (names :+ Artifacts.ResidualMarker).map(n => new Path(s"$root/$n")).filter(fs.exists)
       .foreach { src =>
         val dst = new Path(s"$outRoot/${src.getName}")
         fs.delete(dst, true)
-        FileUtil.copy(fs, src, fs, dst, false, conf)
+        FileUtil.copy(fs, src, fs, dst, false, s.sparkContext.hadoopConfiguration)
       }
   }
 
@@ -3394,8 +3325,6 @@ object Similarity {
     // a cell's share n·10⁶/total never exceeds 10⁶, so at the 100% tier
     // no cell can be over it: skip the corpus-sized occupancy scan
     if (maxSharePpm >= 1000000L) return false
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val occ = codeOccupancy(s, cur)
     val total = occ.map(_._2).sum
     if (total == 0L) return false
@@ -3420,7 +3349,7 @@ object Similarity {
     // leave the codes table.
     val memo = s"$base/$SplitRefusedMemo"
     val sig = hotCells.map(c => s"$c:${occ.toMap.apply(c)}")
-    if (readLines(fs, memo) == sig) return false
+    if (Artifacts.readLines(s, memo) == sig) return false
     // the root's codec reroutes the members (a residual root re-encodes
     // them), and audits the staged version before it can publish
     val codec = IvfCodec.of(s, cur)
@@ -3433,36 +3362,16 @@ object Similarity {
     // (some cells real, some degenerate) lands: occupancy changes, so the
     // next call re-evaluates honestly.
     if (!subCounts.values.exists { case (keep, move) => keep > 0 && move > 0 }) {
-      writeLines(fs, memo, sig)
+      Artifacts.writeLines(s, memo, sig)
       return false
     }
     codec.audit(s, out, emb, "split")
-    fs.delete(new org.apache.hadoop.fs.Path(memo), true)
+    Artifacts.delete(s, memo)
     true
   }
 
   /** Name of the split step's refusal memo, beside the base's pointer. */
   private val SplitRefusedMemo = "_SPLIT_REFUSED"
-
-  /** A small line-list file (memo or manifest): empty when absent. */
-  private[graft] def readLines(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
-    }
-  }
-
-  private[graft] def writeLines(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, lines: Seq[String]): Unit = {
-    val o = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    try o.write(lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally o.close()
-  }
 
   /** q142: THE SPLIT ARTIFACT SERVED, ORACLE-GATED — the catalog face of
     * [[ivfCellSplitArtifact]]: build the q74-family artifacts, split the
@@ -3481,7 +3390,7 @@ object Similarity {
     * OperatorSpec full-probe/mass/byte-identity gates. Eager writes, the
     * q127 convention; the probe side is the eval-sized query batch. */
   def q142SplitServed(s: SparkSession, d: String): DataFrame =
-    rebalancedFullProbe(s, d, s"${knnGraphServePath(d)}/ivfsplit", "split")(
+    rebalancedFullProbe(s, d, s"${Artifacts.datasetScratch(d)}/ivfsplit", "split")(
       ivfCellSplitArtifact(s, _, _, _))
 
   /** q142/q144's shape: the q74-family artifacts built at `root`,
@@ -3651,8 +3560,8 @@ object Similarity {
     * nprobe-bounded over the SHRUNK cell set — the point of merging.
     * Eager writes, the q127/q142 convention. */
   def q144MergeServed(s: SparkSession, d: String): DataFrame =
-    rebalancedFullProbe(s, d, s"${knnGraphServePath(d)}/ivfmerge", "merged") { (root, out, emb) =>
-      ivfCellMergeArtifact(s, root, out, emb); () }
+    rebalancedFullProbe(s, d, s"${Artifacts.datasetScratch(d)}/ivfmerge", "merged") {
+      (root, out, emb) => ivfCellMergeArtifact(s, root, out, emb); () }
 
   // --------------------------------------------------------------- q158
   /** q158: FLEET-FORM VERSIONED IVF MAINTENANCE, ORACLE-GATED — the
@@ -3683,7 +3592,7 @@ object Similarity {
     * maintenance publishes and retirement runs (published roots are
     * immutable; grace keeps them). */
   def q158IvfVersionedServed(s: SparkSession, d: String): DataFrame = {
-    val base = s"${knnGraphServePath(d)}/ivfver"
+    val base = s"${Artifacts.datasetScratch(d)}/ivfver"
     val (emb, subs, seedsPq) = pqParts(s, d)
     val (cents, books, codeTable) = ivfPqIndex(emb, subs, seedsPq)
     val v = RootPointer.nextVersion(s, base)
@@ -3734,7 +3643,7 @@ object Similarity {
     require(minSharePpm >= 0 && minSharePpm <= 1000000,
       s"minSharePpm must be in [0, 1000000], got $minSharePpm")
     val Seq(compacted, split, merged) = RootPointer.maintain(s, base)(
-      (cur, out) => ivfTombstoneCount(s, cur) > maxTombstones &&
+      (cur, out) => Artifacts.VecTombstones.count(s, cur) > maxTombstones &&
         { ivfCodesCompact(s, cur, out); true },
       (cur, out) => splitStep(s, base, cur, out, emb, maxSharePpm),
       (cur, out) => minSharePpm > 0L && mergeStep(s, cur, out, emb, minSharePpm))
@@ -4282,7 +4191,7 @@ object Similarity {
     * Eager at construction (writes the artifact), the q101/q113
     * convention. */
   def q135TriangleServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${knnGraphServePath(d)}/edges_tri"
+    val path = s"${Artifacts.datasetScratch(d)}/edges_tri"
     knnGraphArtifact(s, d, path, withCells = false)
     triangleCountFrom(s.read.parquet(path).select("query_id", "neighbor_id"))
   }
@@ -4304,7 +4213,7 @@ object Similarity {
     * construction (writes artifacts + tombstone), the q127 convention.
     * Oracle: q74's chain with BOTH predicates applied before ranking. */
   def q136FilteredTombstoneAnn(s: SparkSession, d: String): DataFrame = {
-    val root = s"${knnGraphServePath(d)}/ivffiltomb"
+    val root = s"${Artifacts.datasetScratch(d)}/ivffiltomb"
     val (emb, subs, seedsPq) = pqParts(s, d)
     val (cents, books, codeTable) = ivfPqIndex(emb, subs, seedsPq)
     writeIvfArtifacts(root, cents, books, codeTable,
@@ -4609,7 +4518,7 @@ object Similarity {
     * pins that the serve lineage scans the artifact and runs NO quantizer
     * kernel. */
   def q153MiningServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${knnGraphServePath(d)}/cells_mine"
+    val path = s"${Artifacts.datasetScratch(d)}/cells_mine"
     miningAssigned(s, d).select("vec_id", "cell")
       .write.mode("overwrite").parquet(path)
     val emb = embWithNorm(s, d).filter(col("nrm") > 0).select("vec_id", "e", "nrm")

@@ -1588,7 +1588,7 @@ object TextOps {
     * read path picks it up at the next resolve. */
   def q159VocabServed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val base = s"${Similarity.knnGraphServePath(d)}/vocabroot"
+    val base = s"${Artifacts.datasetScratch(d)}/vocabroot"
     val learned = bpeTrainLocal(bpeWordFreqs(s, d), BpeMerges).map(_._4).distinct
     if (learned.isEmpty)
       // the q152 degenerate-corpus contract, artifact path included

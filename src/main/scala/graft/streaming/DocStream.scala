@@ -410,8 +410,7 @@ object DocStream {
     * contract). Batch tombstone files are written errorifexists: a
     * published root only ever gains files, never has one rewritten. */
   def tombstoneBatch(s: SparkSession, path: String, ids: DataFrame, name: String): Unit =
-    graft.ops.Retrieval.lexTombRows(ids).write.mode("errorifexists")
-      .parquet(s"$path/tombstones/$name")
+    graft.ops.Artifacts.DocTombstones.add(ids, path, name)
 
   /** Fold a fresh-document micro-batch into the persisted near-dup CLUSTER
     * LABELS — the streaming half of the q129 contract, keeping the split

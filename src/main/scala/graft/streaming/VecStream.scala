@@ -213,8 +213,7 @@ object VecStream {
     * [[graft.ops.Similarity.maybeMaintainIvfVersioned]], run between
     * batches. */
   def tombstoneBatch(ids: DataFrame, root: String, name: String): Unit =
-    Similarity.ivfTombRows(ids).write.mode("errorifexists")
-      .parquet(s"$root/tombstones/$name")
+    graft.ops.Artifacts.VecTombstones.add(ids, root, name)
 
   /** foreachBatch INGEST for the persisted IVF-PQ artifact: encode the
     * fresh batch with the root's codec ([[graft.ops.Similarity.IvfCodec.of]])

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Relational, Similarity}
+import graft.ops.{Artifacts, Dedup, Relational, Similarity}
 import graft.multimodal.Multimodal
 import graft.obs.Trace
 
@@ -2578,7 +2578,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     }
     val before = ranked(dir)
     Retrieval.lexIndexCompact(spark, dir, out)
-    assert(Retrieval.lexSegments(spark, out).size == 1,
+    assert(Artifacts.segmentCount(spark, out) == 1,
       "compaction must produce exactly one segment")
     val after = ranked(out)
     assert(before.nonEmpty && after == before,
@@ -2615,7 +2615,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     val before = pos(dir)
     Retrieval.lexIndexCompact(spark, dir, out)
-    assert(Retrieval.lexSegments(spark, out).size == 1)
+    assert(Artifacts.segmentCount(spark, out) == 1)
     assert(before.nonEmpty && pos(out) == before,
       "compaction dropped or mangled positional postings")
     // mixed artifact (a position-less segment appended): serve-pos and
@@ -2882,7 +2882,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     import graft.ops.Similarity
     // q127's entry builds the artifact + first tombstone (t0)
     Similarity.q127AnnTombstoneServed(spark, sf).collect()
-    val root = s"${Similarity.knnGraphServePath(sf)}/ivftomb"
+    val root = s"${Artifacts.datasetScratch(sf)}/ivftomb"
     val (emb, _, _) = Similarity.pqParts(spark, sf)
     // a second delete batch lands through the streaming surface
     graft.streaming.VecStream.tombstoneBatch(
@@ -2960,7 +2960,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // compaction applies tombstones physically: one segment, no
     // tombstones dir, plain serve (no delete logic) reproduces the ranking
     Retrieval.lexIndexCompact(spark, dir, out)
-    assert(Retrieval.lexSegments(spark, out).size == 1)
+    assert(Artifacts.segmentCount(spark, out) == 1)
     assert(!new java.io.File(s"$out/tombstones").exists,
       "compacted root must not carry tombstones — they were applied")
     val (ctf, cdf, cst) = Retrieval.lexIndexServe(spark, out)
@@ -3009,10 +3009,15 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       assert(spark.read.parquet(s"$root/$file").schema == declared, s"$root/$file drifted")
     graft.streaming.DocStream.tombstoneBatch(spark, dir, Seq(5).toDF("doc_id"), "d0")
     Seq("t0", "d0").foreach(t => assert(
-      spark.read.parquet(s"$dir/tombstones/$t").schema == Retrieval.LexTombSchema, t))
+      spark.read.parquet(s"$dir/tombstones/$t").schema == Artifacts.DocTombstones.schema, t))
     val ivf = java.nio.file.Files.createTempDirectory("graft_ivftomb_schema").toString
     graft.streaming.VecStream.tombstoneBatch(Seq(3).toDF("vec_id"), ivf, "d0")
-    assert(spark.read.parquet(s"$ivf/tombstones/d0").schema == Similarity.IvfTombSchema)
+    assert(spark.read.parquet(s"$ivf/tombstones/d0").schema == Artifacts.VecTombstones.schema)
+    val cont = java.nio.file.Files.createTempDirectory("graft_contain_schema").toString
+    Dedup.containmentArtifactBuild(spark, cont, Seq(1L -> "alpha beta gamma delta",
+      2L -> "alpha beta gamma epsilon").toDF("doc_id", "text"))
+    assert(spark.read.parquet(s"$cont/seg0").schema == Dedup.ContainmentSegSchema,
+      "containment segment drifted")
     // deleting EVERY doc leaves an empty index: avgdl is null, not a
     // division by zero, and the compactor still merges it
     Retrieval.lexTombstone(docs.select("doc_id"), dir, "t2")
@@ -3392,11 +3397,9 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       s"$dir/real", affordableMass = 1L, sampleMod = 1)
     assert(real == 2, s"realistic geometry must take the 2x32 lever, got $real")
     // the decision and its evidence are in the artifact
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val m = Similarity.readLines(fs, s"$dir/adv/phash_layout")
+    val m = Artifacts.readLines(s, s"$dir/adv/phash_layout")
     assert(m.exists(_ == "layout=4x16") && m.exists(_.startsWith("mass_4x16=")), m.toString)
-    val m2 = Similarity.readLines(fs, s"$dir/real/phash_layout")
+    val m2 = Artifacts.readLines(s, s"$dir/real/phash_layout")
     assert(m2.exists(_ == "layout=2x32") &&
       m2.exists(l => l.startsWith("sampled_wide_recall_ppm=") &&
         l.split("=")(1).toLong >= 900000L), m2.toString)
@@ -3490,7 +3493,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     cents.write.mode("overwrite").parquet(s"$dir/cents")
     books.write.mode("overwrite").parquet(s"$dir/books")
     codeTable.write.mode("overwrite").parquet(s"$dir/codes")
-    Similarity.markResidual(s, dir)
+    Artifacts.markResidual(s, dir)
     val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
     val queries = emb.filter(col("vec_id") < 10)
     def key(r: org.apache.spark.sql.Row) =
@@ -3528,7 +3531,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     cents.write.mode("overwrite").parquet(s"$app/cents")
     books.write.mode("overwrite").parquet(s"$app/books")
     codeTable.filter(col("vec_id") % 5 =!= 0).write.mode("overwrite").parquet(s"$app/codes")
-    Similarity.markResidual(s, app)
+    Artifacts.markResidual(s, app)
     graft.streaming.VecStream.indexAppendBatch(
       Tables.embeddings(s, sf).filter(col("vec_id") % 5 === 0)
         .select("vec_id", "embedding"), app)
@@ -3560,7 +3563,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       cents.write.mode("overwrite").parquet(s"$r/cents")
       books.write.mode("overwrite").parquet(s"$r/books")
       codeTable.write.mode("overwrite").parquet(s"$r/codes")
-      if (mark) Similarity.markResidual(s, r)
+      if (mark) Artifacts.markResidual(s, r)
       r
     }
     def nlist(r: String) = s.read.parquet(s"$r/cents").count()
@@ -3673,7 +3676,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     cents.write.mode("overwrite").parquet(s"$dir/v00001/cents")
     books.write.mode("overwrite").parquet(s"$dir/v00001/books")
     codes.write.mode("overwrite").parquet(s"$dir/v00001/codes")
-    Similarity.markResidual(s, s"$dir/v00001")
+    Artifacts.markResidual(s, s"$dir/v00001")
     RootPointer.publish(s, dir, "v00001")
     assert(Similarity.maybeMaintainIvfVersioned(s, dir, emb,
       maxTombstones = 1, maxSharePpm = 1L)._2,
@@ -3693,7 +3696,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     cents.write.mode("overwrite").parquet(s"$base/$v1/cents")
     books.write.mode("overwrite").parquet(s"$base/$v1/books")
     codes.write.mode("overwrite").parquet(s"$base/$v1/codes")
-    Similarity.markResidual(s, s"$base/$v1")
+    Artifacts.markResidual(s, s"$base/$v1")
     RootPointer.publish(s, base, v1)
     val rootA = RootPointer.resolve(s, base)
     def serve(root: String) = Similarity.IvfCodec.ResidualPq.searchFrom(
@@ -3734,7 +3737,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     cents.write.mode("overwrite").parquet(s"$dir/cents")
     books.write.mode("overwrite").parquet(s"$dir/books")
     codes.write.mode("overwrite").parquet(s"$dir/codes")
-    Similarity.markResidual(s, dir)
+    Artifacts.markResidual(s, dir)
     Similarity.ivfCellSplitResidual(s, dir, s"$dir/split", emb)
     val direct = serve(s"$dir/split")
     // (b) the versioned window (q165's shape): publish, arm the split
@@ -3745,7 +3748,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     cents.write.mode("overwrite").parquet(s"$base/$v1/cents")
     books.write.mode("overwrite").parquet(s"$base/$v1/books")
     codes.write.mode("overwrite").parquet(s"$base/$v1/codes")
-    Similarity.markResidual(s, s"$base/$v1")
+    Artifacts.markResidual(s, s"$base/$v1")
     RootPointer.publish(s, base, v1)
     val rootA = RootPointer.resolve(s, base)
     val before = serve(rootA)
@@ -3809,6 +3812,9 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val dir = java.nio.file.Files.createTempDirectory("graft_contain").toString
     Dedup.containmentArtifactBuild(s, s"$dir/c", all.filter(col("doc_id") % 5 =!= 0))
     Dedup.containmentAppend(s, s"$dir/c", fresh, "seg1")
+    val (_, opened) = Trace(s.sparkContext)(Dedup.containmentSegmentDocs(s, s"$dir/c"))
+    assert(opened.jobs == 0, s"opening the two-segment artifact ran ${opened.jobs} Spark " +
+      "jobs — a segment read lost its declared schema")
     val served = Dedup.containmentServeFresh(s, s"$dir/c", fresh, 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // the self-contained incremental path ranks with a DIFFERENT df table
@@ -3834,7 +3840,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       Dedup.containmentAppend(s, v1,
         fresh.filter(col("doc_id") % 3 === (i - 1)), s"seg$i"))
     RootPointer.publish(s, base, "v00001")
-    assert(Dedup.containmentSegmentCount(s, v1) == 4)
+    assert(Artifacts.segmentCount(s, v1) == 4)
     def serve(root: String) = Dedup.containmentServeFresh(s, root, fresh, 0.8)
       .collect().map(_.toString).sorted.toSeq
     val before = serve(RootPointer.resolve(s, base))
@@ -3856,12 +3862,14 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // byte-identical, so serve is too
     assert(Dedup.maybeCompactContainmentVersioned(s, base, maxSegments = 1))
     val cur = RootPointer.resolve(s, base)
-    assert(cur != v1 && Dedup.containmentSegmentCount(s, cur) == 1,
+    assert(cur != v1 && Artifacts.segmentCount(s, cur) == 1,
       "compaction must publish one merged segment")
+    assert(s.read.parquet(s"$cur/seg0").schema == Dedup.ContainmentSegSchema,
+      "the merged segment must keep the declared schema")
     assert(hfs.exists(new org.apache.hadoop.fs.Path(s"$cur/rank")),
       "the rank table must carry into the compacted version")
     assert(serve(cur) == before, "serve must be identical across the publish")
-    assert(Dedup.containmentSegmentCount(s, v1) == 4 && serve(v1) == before,
+    assert(Artifacts.segmentCount(s, v1) == 4 && serve(v1) == before,
       "the published old root must stay immutable")
     assert(RootPointer.cleanStaging(s, base).isEmpty, "no staging may remain")
   }
@@ -4553,7 +4561,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val cur = RootPointer.resolve(s, base)
     assert(s.read.parquet(s"$cur/codes").count() == 80L, "deleted rows reclaimed")
     assert(s.read.parquet(s"$cur/cents").count() == 4L, "no cell split")
-    assert(Similarity.ivfTombstoneCount(s, cur) == 0)
+    assert(Artifacts.VecTombstones.count(s, cur) == 0)
   }
 
   test("ivfCellMergeArtifact: full-probe serve bit-identical, mass conserved, cold rows rerouted, merged centroids gone") {
@@ -4851,12 +4859,12 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val dels = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
     Similarity.writeIvfArtifacts(v1, cents, books, codes,
       "t0" -> dels.filter(col("vec_id") % 2 === 0), "t1" -> dels.filter(col("vec_id") % 2 =!= 0))
-    Similarity.markResidual(s, v1)
+    Artifacts.markResidual(s, v1)
     RootPointer.publish(s, base, "v00001")
     assert(Similarity.maybeMaintainIvfVersioned(s, base, emb,
       maxTombstones = 1, maxSharePpm = 1000000L) == ((true, false, false)))
     val compacted = RootPointer.resolve(s, base)
-    assert(compacted != v1 && Similarity.ivfTombstoneCount(s, compacted) == 0)
+    assert(compacted != v1 && Artifacts.VecTombstones.count(s, compacted) == 0)
     assert(Similarity.IvfCodec.of(s, compacted) == Similarity.IvfCodec.ResidualPq,
       "the compacted version must carry the _VARIANT_RESIDUAL marker")
     // the split reads the marker from the compacted root: the re-encoding
@@ -4897,7 +4905,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     intercept[IllegalArgumentException](maintain(emb.filter(col("vec_id") < 80)))
     assert(RootPointer.resolve(s, base) == v1 && RootPointer.cleanStaging(s, base).isEmpty,
       "a failed window must publish nothing and leave no staging")
-    assert(Similarity.ivfTombstoneCount(s, v1) == 2)
+    assert(Artifacts.VecTombstones.count(s, v1) == 2)
     // a hard kill at the same point leaves the compaction's version behind,
     // unpublished: readers never see it
     Similarity.ivfCodesCompact(s, v1, s"$base/v00002")
@@ -4911,7 +4919,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val centIds = s.read.parquet(s"$cur/cents").select("cent_id").collect()
       .map(_.getLong(0)).toSet
-    assert(occ.values.sum == 88L && Similarity.ivfTombstoneCount(s, cur) == 0,
+    assert(occ.values.sum == 88L && Artifacts.VecTombstones.count(s, cur) == 0,
       s"the compaction must be in the published version: $occ")
     assert(centIds == Set(0L, 2L) && occ.keySet.subsetOf(centIds),
       s"the merge must be in the published version: $occ vs $centIds")
@@ -4946,13 +4954,13 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // tier cannot fire, so not even the occupancy scan runs
     assert(deleteThenMaintain(1L, "t0") == ((false, 0)) &&
       deleteThenMaintain(3L, "t1") == ((false, 0)))
-    assert(RootPointer.resolve(s, base) == v1 && Similarity.ivfTombstoneCount(s, v1) == 2,
+    assert(RootPointer.resolve(s, base) == v1 && Artifacts.VecTombstones.count(s, v1) == 2,
       "below tier: no compaction yet")
     // third batch crossed the tier: tombstones physically applied in a new
     // published version that carries none
     assert(deleteThenMaintain(5L, "t2")._1)
     val cur = RootPointer.resolve(s, base)
-    assert(cur != v1 && Similarity.ivfTombstoneCount(s, cur) == 0,
+    assert(cur != v1 && Artifacts.VecTombstones.count(s, cur) == 0,
       "compaction must publish a version without tombstones")
     val live = s.read.parquet(s"$cur/codes").select("vec_id")
       .collect().map(_.getLong(0)).toSet
@@ -4974,7 +4982,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       assert(parts(cur, d).nonEmpty && parts(cur, d) == parts(v1, d),
         s"the compacted version's $d must be byte-equal to v1's")
     }
-    assert(Similarity.ivfTombstoneCount(s, v1) == 3)
+    assert(Artifacts.VecTombstones.count(s, v1) == 3)
   }
 
   test("q150 BPE trainer: planted fold algebra, and a plain-Scala reference reproduces the merge table") {

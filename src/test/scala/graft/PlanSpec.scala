@@ -670,7 +670,8 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       "served lineage re-runs the coarse argmin — the build cost the artifact exists to amortize")
     assert(!full.contains("graft_topk"), "served lineage re-runs the bounded top-k")
     assert(ns.collect { case f: FileSourceScanExec => f }
-      .exists(_.relation.location.rootPaths.exists(_.toString.contains("graft_knn_serve"))),
+      .exists(_.relation.location.rootPaths
+        .exists(_.toString.contains(graft.ops.Artifacts.datasetScratch(sf)))),
       "expected a parquet scan rooted at the served edge artifact")
   }
 
@@ -693,7 +694,8 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       "served lineage re-runs the coarse argmin — the build cost the artifact exists to amortize")
     assert(!full.contains("graft_topk"), "served lineage re-runs the bounded top-k")
     assert(ns.collect { case f: FileSourceScanExec => f }
-      .exists(_.relation.location.rootPaths.exists(_.toString.contains("graft_knn_serve"))),
+      .exists(_.relation.location.rootPaths
+        .exists(_.toString.contains(graft.ops.Artifacts.datasetScratch(sf)))),
       "expected a parquet scan rooted at the served edge artifact")
   }
 
@@ -1044,7 +1046,7 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       case n => Seq(n)
     }
     val ns = nodes(df.queryExecution.executedPlan)
-    val base = s"${Similarity.knnGraphServePath(sf)}/ivfver"
+    val base = s"${graft.ops.Artifacts.datasetScratch(sf)}/ivfver"
     val resolved = RootPointer.resolve(spark, base)
     val scans = ns.collect { case f: FileSourceScanExec => f }
       .flatMap(_.relation.location.rootPaths.map(_.toString))

@@ -219,7 +219,7 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     cents.write.parquet(s"$root/cents")
     books.write.parquet(s"$root/books")
     codes.filter(col("vec_id") % 5 =!= 0).write.parquet(s"$root/codes")
-    Similarity.markResidual(spark, root)
+    graft.ops.Artifacts.markResidual(spark, root)
     val pc = spark.read.parquet(s"$root/cents")
     val pb = spark.read.parquet(s"$root/books")
 
@@ -527,7 +527,7 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     assert(batches >= 2, s"expected ≥2 micro-batches, got $batches")
-    assert(Retrieval.lexSegments(spark, art).size == batches + 1,
+    assert(graft.ops.Artifacts.segmentCount(spark, art) == batches + 1,
       "each micro-batch must land as its own immutable segment")
 
     // the q115 additivity identity, transitively across the batching:
