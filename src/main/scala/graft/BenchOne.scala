@@ -4,8 +4,10 @@ import graft.obs.{Session, Trace}
 
 /** Dev helper: time a single catalog query N times (steady-state) —
   * `graft.BenchOne <query_name> [sfDir] [runs]`. Each run prints one line,
-  * `run N: <seconds> key=value ...`: wall seconds to 3 decimals (the field
-  * `tools/bench_pair.sh` reads), then the run's Spark work from [[Trace]]. */
+  * `run N: <seconds> key=value ...`: wall seconds to 3 decimals (the third
+  * field, which `tools/bench_pair.sh` reads), then the run's Spark work from
+  * [[Trace]], ending in `compiles=`, the classes Spark's code generator
+  * compiled during the run. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -23,10 +25,13 @@ object BenchOne {
           .write.format("noop").mode("overwrite").save()
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      println("run %d: %.3f %s".formatLocal(java.util.Locale.ROOT, i, sec,
-        trace.counts(s"run $i").fields))
+      println(line(i, sec, trace.counts(s"run $i")))
     }
     trace.close()
     spark.stop()
   }
+
+  /** The printed line of run `i`. */
+  private[graft] def line(i: Int, sec: Double, work: Trace.Counts): String =
+    "run %d: %.3f %s".formatLocal(java.util.Locale.ROOT, i, sec, work.fields)
 }

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
 /** Named spans over a SparkContext, and the Spark work each one caused:
@@ -19,11 +20,20 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *
   * The listener keeps raw records and attribution happens when counts are
   * read. Listener events arrive asynchronously, so [[counts]] drains the
-  * bus first. */
+  * bus first.
+  *
+  * `compiles` is the number of classes Spark's code generator compiled
+  * while a span was open: the change in the count of
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` from its start to its end
+  * (cache hits compile nothing). That counter is JVM-wide, so the figure
+  * is exact only when one span runs at a time; spans open side by side
+  * (a `Par.jobs` pool, two recorders) each count the other's compiles. A
+  * span still open counts none yet. */
 final class Trace private (sc: SparkContext) extends AutoCloseable {
   import Trace._
 
   private val spans = ArrayBuffer.empty[Span]
+  private val compiled = scala.collection.mutable.Map.empty[Long, Long]
   private val rec = new Recorder
   sc.addSparkListener(rec)
 
@@ -34,15 +44,25 @@ final class Trace private (sc: SparkContext) extends AutoCloseable {
     val s = Span(ids.incrementAndGet(), name, outer.fold(-1L)(_.toLong))
     spans.synchronized(spans += s)
     sc.setLocalProperty(SpanKey, s.id.toString)
+    val c0 = compileCount
     try body
-    finally sc.setLocalProperty(SpanKey, outer.orNull)
+    finally {
+      spans.synchronized(compiled(s.id) = compileCount - c0)
+      sc.setLocalProperty(SpanKey, outer.orNull)
+    }
   }
 
   /** The work of every span called `name`, its nested spans included. */
   def counts(name: String): Counts = {
     drainBus(sc)
-    val (parent, roots) = spans.synchronized(
-      (spans.map(s => s.id -> s.parent).toMap, spans.filter(_.name == name).map(_.id).toSet))
+    val (parent, roots, compiles) = spans.synchronized {
+      val parent = spans.map(s => s.id -> s.parent).toMap
+      val roots = spans.filter(_.name == name).map(_.id).toSet
+      // a span nested in another span of the same name compiled inside it
+      val outermost = roots.filterNot(id =>
+        Iterator.iterate(parent(id))(p => parent.getOrElse(p, -1L)).takeWhile(_ >= 0).exists(roots))
+      (parent, roots, outermost.toSeq.map(compiled.getOrElse(_, 0L)).sum)
+    }
     def in(span: Long): Boolean =
       Iterator.iterate(span)(id => parent.getOrElse(id, -1L)).takeWhile(_ >= 0).exists(roots)
     rec.synchronized {
@@ -57,7 +77,8 @@ final class Trace private (sc: SparkContext) extends AutoCloseable {
         shuffleReadBytes = tasks.map(_.shuffleRead).sum,
         shuffleWriteBytes = tasks.map(_.shuffleWrite).sum,
         spillBytes = tasks.map(_.diskSpill).sum,
-        outputBytes = tasks.map(_.bytesWritten).sum)
+        outputBytes = tasks.map(_.bytesWritten).sum,
+        compiles = compiles)
     }
   }
 
@@ -76,17 +97,21 @@ object Trace {
       shuffleWrite: Long, diskSpill: Long, bytesWritten: Long)
 
   final case class Counts(jobs: Int, stages: Int, tasks: Int, taskSeconds: Double,
-      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long, outputBytes: Long) {
-    /** `key=value` fields, one space apart. */
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long, outputBytes: Long,
+      compiles: Long) {
+    /** `key=value` fields, one space apart, `compiles` last. */
     def fields: String =
       s"jobs=$jobs stages=$stages tasks=$tasks " +
         "task_s=%.3f ".formatLocal(java.util.Locale.ROOT, taskSeconds) +
         s"shuffle_read_bytes=$shuffleReadBytes shuffle_write_bytes=$shuffleWriteBytes " +
-        s"spill_bytes=$spillBytes output_bytes=$outputBytes"
+        s"spill_bytes=$spillBytes output_bytes=$outputBytes compiles=$compiles"
   }
 
   // span ids are unique per JVM, so two recorders never share an id
   private val ids = new AtomicLong
+
+  /** Classes compiled by Spark's code generator in this JVM so far. */
+  private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** A recorder listening on `sc` until closed. */
   def on(sc: SparkContext): Trace = new Trace(sc)

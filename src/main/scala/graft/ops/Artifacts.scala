@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *   root/_VARIANT_RESIDUAL  # empty marker file: a residual-encoded IVF root
   * }}}
   * Everything that lists segments or tombstones, writes a tombstone, reads
-  * a small line file or needs a filesystem handle goes through here
+  * a small line file, copies a frozen file set or needs a filesystem
+  * handle goes through here
   * (`ProtocolGuardSpec` fails on the building blocks anywhere else under
   * `src/main`). The session scratch root that the served catalog entries
   * build their artifacts under lives here too. */
@@ -89,6 +90,21 @@ object Artifacts {
     RootPointer.maintain(s, base) { (cur, out) =>
       segmentCount(s, cur) > maxSegments && { kernel(cur, out); true }
     }.head
+  }
+
+  // ---------------------------------------------------- frozen file sets
+  /** FILE-copy those of `root`'s named entries that exist (file-set dirs
+    * or marker files) into `outRoot`, replacing what is there: the
+    * copy-on-write step for what no maintenance step changes — the IVF
+    * quantizer and the containment rank table. No Spark job runs, and the
+    * copies are byte-equal to the originals. */
+  def copyFrozen(s: SparkSession, root: String, outRoot: String, names: String*): Unit = {
+    val f = fs(s, root)
+    names.map(n => new Path(s"$root/$n")).filter(f.exists).foreach { src =>
+      val dst = new Path(s"$outRoot/${src.getName}")
+      f.delete(dst, true)
+      FileUtil.copy(f, src, f, dst, false, s.sparkContext.hadoopConfiguration)
+    }
   }
 
   // ---------------------------------------------------------- tombstones

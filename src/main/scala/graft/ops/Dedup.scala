@@ -726,13 +726,16 @@ object Dedup {
     * publishes it through [[RootPointer.maintain]]. df ranks are
     * build-time constants of the artifact, so merged rows are
     * byte-identical rows and serve-after ≡ serve-before exactly
-    * (OperatorSpec pins it). Call it between ingest batches (one writer
-    * per base). Returns true iff a compaction published. */
+    * (OperatorSpec pins it), and the rank table is FILE-copied
+    * ([[Artifacts.copyFrozen]]): the one Spark job is the merged segment's
+    * write. Call it between ingest batches (one writer per base). Returns
+    * true iff a compaction published. */
   def maybeCompactContainmentVersioned(s: SparkSession, base: String,
       maxSegments: Int): Boolean =
     Artifacts.compactOverTier(s, base, maxSegments) { (cur, out) =>
+      require(Artifacts.exists(s, s"$cur/rank"), s"no containment rank table under $cur")
       containmentSegmentDocs(s, cur).write.mode("overwrite").parquet(s"$out/seg0")
-      s.read.parquet(s"$cur/rank").write.mode("overwrite").parquet(s"$out/rank")
+      Artifacts.copyFrozen(s, cur, out, "rank")
     }
 
   /** "Is any FRESH doc an excerpt of anything in the artifact (fresh

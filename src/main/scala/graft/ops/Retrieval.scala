@@ -42,9 +42,10 @@ object Retrieval {
     * Scale shape: each arm is its own audited serving plan (BM25: map-side
     * tf, broadcast query terms, partial+final score agg; cosine: the exact
     * arm — or any ANN arm by substitution since only ranks cross the
-    * interface). The fusion itself joins two (n_queries·k)-row lists —
-    * eval-set-sized, never corpus-sized — full-outer on (query_id, doc_id)
-    * so a doc found by one arm only still fuses. */
+    * interface). The fusion itself aggregates the union of two
+    * (n_queries·k)-row lists — eval-set-sized, never corpus-sized — by
+    * (query_id, doc_id) in one partition ([[rrfScores]]), so a doc found by
+    * one arm only still fuses and the fused top-k plans with no exchange. */
   def q111HybridRrf(s: SparkSession, d: String): DataFrame = {
     val p = TextOps.bm25Parts(s, d)
     val lex = TextOps.bm25RankedFrom(p.tf, p.df, p.stats, p.qt)
@@ -58,8 +59,9 @@ object Retrieval {
     * (IVF-PQ arm) — the substitution seam the arm-interface claim rests
     * on: only (query_id, doc_id, rank) crosses it, so the two entries can
     * never drift on the fusion arithmetic. Eval-set-sized on both inputs
-    * (each arm is its own audited serving plan), full-outer on
-    * (query_id, doc_id) so a doc found by one arm only still fuses. */
+    * (each arm is its own audited serving plan); a doc found by one arm
+    * only still fuses. The window and the final order run in
+    * [[rrfScores]]'s one partition, so they add no exchange. */
   private def rrfFuse(lex: DataFrame, sem: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("query_id").orderBy(col("rrf").desc, col("doc_id"))
@@ -73,11 +75,29 @@ object Retrieval {
   /** The PRE-RANK fused score table (every (query, doc) either arm
     * surfaced, with its integer RRF sum) — [[rrfFuse]] minus the top-k
     * window: the seam a post-fusion collapse (q138) interposes on,
-    * mirroring what [[TextOps.bm25ScoredFrom]] is to `bm25RankedFrom`. */
+    * mirroring what [[TextOps.bm25ScoredFrom]] is to `bm25RankedFrom`.
+    *
+    * Precondition: each arm has at most one row per (query_id, doc_id).
+    * `bm25RankedFrom` groups by that key, and the IVF top-k ranks the
+    * distinct `vec_id`s of a code table. Under it, one aggregate over the
+    * union of the arms, each carrying its own rank and a null for the
+    * other's, equals the full-outer join on (query_id, doc_id) (OperatorSpec
+    * pins the two against each other).
+    *
+    * ONE PARTITION: the union holds at most nq·(Bm25K + SemK) rows, so it
+    * is placed in a single partition. The aggregate, and every window and
+    * final `orderBy` a caller stacks on it ([[rrfFuse]],
+    * [[collapseRankFrom]]), then plan with no exchange and no range
+    * sample: the whole fusion tail is one stage. */
   private[graft] def rrfScores(lex: DataFrame, sem: DataFrame): DataFrame = {
     def arm(c: String) = coalesce(
       floor(lit(RrfScale) / (lit(RrfK) + col(c))).cast("long"), lit(0L))
-    lex.join(sem, Seq("query_id", "doc_id"), "full_outer")
+    val none = lit(null).cast(LongType)
+    lex.select(col("query_id"), col("doc_id"), col("lex_rnk"), none.as("sem_rnk"))
+      .unionByName(sem.select(col("query_id"), col("doc_id"), none.as("lex_rnk"), col("sem_rnk")))
+      .coalesce(1)
+      .groupBy("query_id", "doc_id")
+      .agg(max("lex_rnk").as("lex_rnk"), max("sem_rnk").as("sem_rnk"))
       .withColumn("rrf", arm("lex_rnk") + arm("sem_rnk"))
   }
 
@@ -361,7 +381,7 @@ object Retrieval {
     // concat-only fold (minus tombstoned docs), same disjoint-doc
     // algebra. Mixed artifacts failed loud above, before any write.
     if (withPp.nonEmpty) {
-      val pp0 = s.read.parquet(segs.map(_ + "/pp"): _*)
+      val pp0 = Artifacts.readSegments(s, segs, "pp", LexPpSchema)
       val pp = del.map(pp0.join(_, Seq("doc_id"), "left_anti")).getOrElse(pp0)
       pp.write.mode("overwrite").parquet(s"$outPath/seg0/pp")
     }
@@ -773,6 +793,14 @@ object Retrieval {
       .write.mode("overwrite").parquet(s"$path/$seg/pp")
   }
 
+  /** Declared schema of the positional `pp` file set, in the column order
+    * [[lexIndexSegmentPos]] writes it (the compactor writes the same
+    * rows): serving and compaction read under it, so opening a positional
+    * artifact launches no footer-reading job. */
+  private[graft] val LexPpSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("term", StringType),
+    StructField("positions", ArrayType(IntegerType))))
+
   /** Serve the positional postings of a segmented artifact (union of
     * per-segment pp scans — concat-only fold). Requires every segment to
     * carry positions (mixed artifacts would silently lose phrase recall
@@ -784,7 +812,7 @@ object Retrieval {
       s"segments without positional postings: $missing — a mixed artifact " +
         "would silently drop phrase matches; rebuild those segments with " +
         "lexIndexSegmentPos or compact")
-    s.read.parquet(segs.map(_ + "/pp"): _*)
+    Artifacts.readSegments(s, segs, "pp", LexPpSchema)
   }
 
   /** q120: PHRASE SEARCH SERVED FROM THE ARTIFACT — q113's recipe for the
@@ -1135,7 +1163,9 @@ object Retrieval {
   /** The collapse kernel over ANY (doc_id, cluster_id) label frame —
     * freshly clustered (q124) or served from the persisted artifact
     * (q128); only label rows cross the interface, the [[rrfFuse]]
-    * substitution convention. */
+    * substitution convention. Over [[rrfScores]]' one partition (q138,
+    * q147) the two windows and the final order add no exchange; over a
+    * BM25 scored list (q124/q128/q133) they partition as usual. */
   private[graft] def collapseRankFrom(scored: DataFrame, clusters: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cl = clusters.select(col("doc_id"), col("cluster_id").as("cid"))
@@ -1396,9 +1426,14 @@ object Retrieval {
     * corpus minus the delete set, the adc chain over the FULL corpus
     * with the delete predicate applied before ranking.
     *
-    * Scale shape: each arm is its audited serving plan; fusion and
-    * collapse run on eval-sized frames except the one doc-keyed label
-    * join (AQE-planned, the q124 convention). Eager at construction
+    * Scale shape: each arm is its audited serving plan and ends in its
+    * own top-k, and the quantizer's one-row `cc`/`cs` broadcast aggregates
+    * inside one partition. The fused list is at most nq·(Bm25K + SemK)
+    * rows, so [[rrfScores]] places it in ONE partition: the fusion
+    * aggregate, both collapse windows and the final order run in one stage
+    * with no exchange and no range sample. The one doc-keyed label join
+    * stays AQE-planned (the q124 convention; a broadcast at eval scale).
+    * PlanSpec pins both shapes and 17 stages per serve. Eager at construction
     * (writes all three artifact families), the q113/q127/q128
     * convention — the bench prices the build; the serve marginal is the
     * BASELINE.md round-15 economics rows. */

@@ -751,8 +751,13 @@ object Similarity {
     /** Serve top-k from persisted artifacts, corpus embeddings never read;
       * a query excludes its own id. Broadcast equi join on cell, then ONE
       * bounded top-k + n_cand aggregate ([[topkWithCount]]) — the only
-      * hash exchange, on query_id. The taps see the probe rows and the
-      * scored candidates ([[observedServeMetrics]]). */
+      * hash exchange, on query_id. `queries` is a request-sized batch, so
+      * the result is at most nq·k rows: the aggregate's final merge (≤ nq
+      * buffers per map task) and the final order run in one partition,
+      * with no range exchange or sample job, and a fusion that unions the
+      * result ([[graft.ops.Retrieval.rrfScores]]) stays in that stage. The
+      * taps see the probe rows and the scored candidates
+      * ([[observedServeMetrics]]). */
     final def searchFrom(cents: DataFrame, books: Option[DataFrame], codeTable: DataFrame,
         queries: DataFrame, nprobe: Int = IvfNProbe, k: Int = AdcK,
         probeTap: DataFrame => DataFrame = identity,
@@ -761,7 +766,7 @@ object Similarity {
       val cand = candTap(scored(codeTable.withColumnRenamed("vec_id", "neighbor_id")
         .join(broadcast(probed), Seq("cell"))
         .filter(col("query_id") =!= col("neighbor_id"))))
-      topk(cand, k).orderBy("query_id", "rn")
+      topk(cand, k).coalesce(1).orderBy("query_id", "rn")
     }
   }
 
@@ -786,9 +791,25 @@ object Similarity {
         liveCodes(s, root), queries, nprobe)
     protected def booksOf(books: Option[DataFrame]): DataFrame = books.getOrElse(
       throw new IllegalArgumentException(s"$this needs its codebooks: books is None"))
+    /** `df` beside ONE broadcast row holding both `cc` ([[ccRow]]'s list)
+      * and `cs` ([[csRow]]'s). The quantizer frames that reach here are
+      * persisted or trained (nlist and M·k rows), so their union collapses
+      * to that row in one aggregate inside ONE partition: one broadcast, no
+      * `Exchange SinglePartition` stage. The order of each collected list
+      * moves with that, and no consumer depends on it (argmin, probe cells
+      * and codes break ties on (distance, cent_id), LUT entries are looked
+      * up by (m, cent_id)). */
     protected def withBroadcasts(df: DataFrame, cents: DataFrame,
-        books: Option[DataFrame]): DataFrame =
-      df.crossJoin(broadcast(ccRow(cents))).crossJoin(broadcast(csRow(booksOf(books))))
+        books: Option[DataFrame]): DataFrame = {
+      val c = cents.select(struct(col("cent_id"), col("ce")).as("c"))
+      val b = booksOf(books).select(struct(col("m"), col("cent_id"), col("ce")).as("b"))
+      def none(of: DataFrame) = lit(null).cast(of.schema.head.dataType)
+      val quant = c.select(col("c"), none(b).as("b"))
+        .unionByName(b.select(none(c).as("c"), col("b")))
+        .coalesce(1)
+        .agg(collect_list(col("c")).as("cc"), collect_list(col("b")).as("cs"))
+      df.crossJoin(broadcast(quant))
+    }
   }
 
   object IvfCodec {
@@ -3151,7 +3172,7 @@ object Similarity {
   def ivfCodesCompact(s: SparkSession, root: String, outRoot: String): Unit = {
     require(outRoot != root,
       "compaction is copy-on-write: outRoot must be a new artifact root")
-    copyFrozen(s, root, outRoot, "cents", "books")
+    Artifacts.copyFrozen(s, root, outRoot, "cents", "books", Artifacts.ResidualMarker)
     liveCodes(s, root).write.mode("overwrite").parquet(s"$outRoot/codes")
   }
 
@@ -3172,20 +3193,6 @@ object Similarity {
   private def copyTombstones(s: SparkSession, root: String, outRoot: String): Unit =
     tombstoneUnion(s, root)
       .foreach(del => Artifacts.VecTombstones.write(del.distinct(), outRoot, "t0"))
-
-  /** FILE-copy `root`'s frozen quantizer dirs (and the variant marker,
-    * if any) into `outRoot`: no maintenance step changes them. */
-  private def copyFrozen(s: SparkSession, root: String, outRoot: String,
-      names: String*): Unit = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val fs = Artifacts.fs(s, root)
-    (names :+ Artifacts.ResidualMarker).map(n => new Path(s"$root/$n")).filter(fs.exists)
-      .foreach { src =>
-        val dst = new Path(s"$outRoot/${src.getName}")
-        fs.delete(dst, true)
-        FileUtil.copy(fs, src, fs, dst, false, s.sparkContext.hadoopConfiguration)
-      }
-  }
 
   /** Physical code rows per cell (nlist rows, driver-side metadata). */
   private def codeOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] =
@@ -3305,7 +3312,7 @@ object Similarity {
         centsOut, s.read.parquet(s"$root/books")))
     centsOut.write.mode("overwrite").parquet(s"$outRoot/cents")
     codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
-    copyFrozen(s, root, outRoot, "books")
+    Artifacts.copyFrozen(s, root, outRoot, "books", Artifacts.ResidualMarker)
     copyTombstones(s, root, outRoot)
     members.unpersist(false)
     hotCells.map { c =>
@@ -3515,7 +3522,7 @@ object Similarity {
     codes.filter(!col("cell").isin(coldCells: _*)).unionByName(movedOut)
       .write.mode("overwrite").parquet(s"$outRoot/codes")
     survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
-    copyFrozen(s, root, outRoot, "books")
+    Artifacts.copyFrozen(s, root, outRoot, "books", Artifacts.ResidualMarker)
     copyTombstones(s, root, outRoot)
     // released only after the codes write, which reads the cached members
     members.foreach(_.unpersist(false))

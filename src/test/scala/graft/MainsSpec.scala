@@ -50,6 +50,23 @@ class MainsSpec extends AnyFunSuite {
     } finally t.close()
   }
 
+  test("Trace: compiles counts the classes Spark compiled inside a span; BenchOne prints it last and keeps the seconds third") {
+    val s = TestSpark.spark
+    val t = Trace.on(s.sparkContext)
+    try {
+      // a literal no earlier plan carries, so its generated code is new
+      val salt = System.nanoTime()
+      t.span("fresh")(s.range(4).selectExpr(s"id * $salt AS x").collect())
+      t.span("idle")(())
+      val fresh = t.counts("fresh")
+      assert(fresh.compiles >= 1, fresh.toString)
+      assert(t.counts("idle").compiles == 0)
+      val fields = BenchOne.line(1, 1.5, fresh).split(" ")
+      assert(fields(2) == "1.500", fields.mkString(" "))
+      assert(fields.last == s"compiles=${fresh.compiles}", fields.mkString(" "))
+    } finally t.close()
+  }
+
   test("oracle_sql.json parses back exactly through a tab, a CR, a quote and a backslash") {
     val sql = Seq(
       "q_tab" -> "SELECT 1\tAS a",

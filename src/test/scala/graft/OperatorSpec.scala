@@ -2461,6 +2461,38 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       s"missing=${(expected -- got).take(3)} extra=${(got -- expected).take(3)}")
   }
 
+  test("rrfScores: the one-partition union aggregate equals the full-outer fusion on crafted arms") {
+    import graft.ops.Retrieval
+    val s = spark
+    import s.implicits._
+    // q1: docs 1-3 lex only or both, doc 4 sem only; q2 lex only; q3 sem
+    // only; q4: an RRF tie (both arms rank their doc first)
+    val lex = Seq((1L, 1L, 1L), (1L, 2L, 2L), (1L, 3L, 3L), (2L, 5L, 1L), (4L, 10L, 1L))
+      .toDF("query_id", "doc_id", "lex_rnk")
+    val sem = Seq((1L, 2L, 1L), (1L, 4L, 2L), (1L, 1L, 3L), (3L, 7L, 1L), (4L, 11L, 1L))
+      .toDF("query_id", "doc_id", "sem_rnk")
+    def fullOuter(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) = {
+      def arm(c: String) = coalesce(floor(lit(1000000000.0) / (lit(60) + col(c))).cast("long"), lit(0L))
+      l.join(r, Seq("query_id", "doc_id"), "full_outer")
+        .withColumn("rrf", arm("lex_rnk") + arm("sem_rnk"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "doc_id", "lex_rnk", "sem_rnk", "rrf").collect().map(_.toSeq).toSet
+    for ((l, r) <- Seq(lex -> sem, lex -> sem.limit(0), lex.limit(0) -> sem)) {
+      val got = rows(Retrieval.rrfScores(l, r))
+      assert(got.nonEmpty && got == rows(fullOuter(l, r)),
+        s"union fusion diverges: ${got.toSeq.sortBy(_.toString)}")
+    }
+    val tie = rows(Retrieval.rrfScores(lex, sem)).filter(_.head == 4L)
+    assert(tie.map(_.last).size == 1 && tie.size == 2, s"the crafted tie is not a tie: $tie")
+    // the tie breaks on doc_id through the shared collapse tail, as before
+    val ranked = Retrieval.collapseRankFrom(
+      Retrieval.rrfScores(lex, sem).select(col("query_id"), col("doc_id"), col("rrf").as("score")),
+      Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"))
+      .filter(col("query_id") === 4L).select("doc_id").as[Long].collect().toSeq
+    assert(ranked == Seq(10L, 11L), s"tie order $ranked")
+  }
+
   test("q112 conjunctive: every hit contains ALL of its query's terms; no qualifying doc is ranked out below a non-qualifier") {
     import graft.ops.Retrieval
     val rows = Retrieval.q112Conjunctive(spark, sf).collect()
@@ -2626,6 +2658,18 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       Retrieval.lexIndexCompact(spark, dir,
         java.nio.file.Files.createTempDirectory("graft_lexpos_out2").toString + "/c2")
     }
+  }
+
+  test("positional root: opening two pp segments (the q120 shape) runs 0 jobs") {
+    import graft.ops.{Retrieval, TextOps}
+    val dir = java.nio.file.Files.createTempDirectory("graft_lexpos_open").toString
+    val docs = TextOps.tokenizedDocs(spark, sf)
+    Retrieval.lexIndexSegmentPos(docs.filter(col("doc_id") % 2 === 0), dir, "seg0")
+    Retrieval.lexIndexSegmentPos(docs.filter(col("doc_id") % 2 === 1), dir, "seg1")
+    val (pp, opened) = Trace(spark.sparkContext)(Retrieval.lexIndexServePos(spark, dir))
+    assert(opened.jobs == 0,
+      s"opening the positional root ran ${opened.jobs} Spark jobs — pp lost its declared schema")
+    assert(pp.count() == TextOps.positionalPostings(docs).count())
   }
 
   test("q119 query likelihood: scores match a plain-Scala Dirichlet recompute (sum-form identity)") {
@@ -3013,6 +3057,11 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val ivf = java.nio.file.Files.createTempDirectory("graft_ivftomb_schema").toString
     graft.streaming.VecStream.tombstoneBatch(Seq(3).toDF("vec_id"), ivf, "d0")
     assert(spark.read.parquet(s"$ivf/tombstones/d0").schema == Artifacts.VecTombstones.schema)
+    val pos = java.nio.file.Files.createTempDirectory("graft_lexpos_schema").toString
+    Retrieval.lexIndexSegmentPos(docs, pos, "seg0")
+    Retrieval.lexIndexCompact(spark, pos, s"$pos/c")
+    for (root <- Seq(s"$pos/seg0", s"$pos/c/seg0"))
+      assert(spark.read.parquet(s"$root/pp").schema == Retrieval.LexPpSchema, s"$root/pp drifted")
     val cont = java.nio.file.Files.createTempDirectory("graft_contain_schema").toString
     Dedup.containmentArtifactBuild(spark, cont, Seq(1L -> "alpha beta gamma delta",
       2L -> "alpha beta gamma epsilon").toDF("doc_id", "text"))
@@ -3872,6 +3921,33 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     assert(Artifacts.segmentCount(s, v1) == 4 && serve(v1) == before,
       "the published old root must stay immutable")
     assert(RootPointer.cleanStaging(s, base).isEmpty, "no staging may remain")
+  }
+
+  test("containment compaction file-copies the frozen rank table: byte-equal files, one Spark job") {
+    import graft.ops.RootPointer
+    val s = spark
+    val all = Tables.documents(s, sf).select("doc_id", "text")
+    val base = java.nio.file.Files.createTempDirectory("graft_contrank").toString + "/c"
+    val v1 = s"$base/v00001"
+    Dedup.containmentArtifactBuild(s, v1, all.filter(col("doc_id") % 5 =!= 0))
+    Dedup.containmentAppend(s, v1, all.filter(col("doc_id") % 5 === 0), "seg1")
+    RootPointer.publish(s, base, "v00001")
+    val (published, work) = Trace(s.sparkContext)(
+      Dedup.maybeCompactContainmentVersioned(s, base, maxSegments = 1))
+    assert(published)
+    // the merged segment's write is the window's only job: the rank table
+    // is neither re-read with schema inference nor rewritten
+    assert(work.jobs == 1, s"the compaction ran ${work.jobs} Spark jobs")
+    def files(root: String): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val dir = java.nio.file.Paths.get(new java.net.URI(s"$root/rank").getPath)
+      java.nio.file.Files.list(dir).iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => f.getFileName.toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+    }
+    val before = files(v1)
+    assert(before.keys.exists(_.endsWith(".parquet")), s"vacuous: ${before.keys}")
+    assert(files(RootPointer.resolve(s, base)) == before,
+      "the published rank files must be byte-equal to the previous version's")
   }
 
   test("reliable-checkpoint mode: funnel and cluster kernels produce identical results to local mode") {

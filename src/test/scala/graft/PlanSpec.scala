@@ -1602,9 +1602,54 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     // 37 stages when the IVF top-k and n_cand were a window plus a
     // joined-back count (the candidate subtree ran twice) and each delete
     // correction was a fold + a delta agg + a join; 26 with one top-k+count
-    // pass and one aggregate per correction. A serve plan that grows back
-    // fails here.
-    assert(served.stages <= 26, s"one q138 serve ran ${served.stages} stages (budget 26)")
+    // pass and one aggregate per correction; 17 once the fusion tail, the
+    // IVF arm's final order and the one cc/cs row run inside one partition.
+    // A serve plan that grows back fails here.
+    assert(served.stages <= 17, s"one q138 serve ran ${served.stages} stages (budget 17)")
+  }
+
+  test("q138 serve and q111 fusion: no shuffle above the two arms' ranks; the serve's cc/cs rows aggregate without an Exchange SinglePartition") {
+    import graft.ops.Retrieval
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def nodes(pl: SparkPlan): Seq[SparkPlan] = pl.flatMap {
+      case q: QueryStageExec => nodes(q.plan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case n => Seq(n)
+    }
+    // the operators from the root down to the union of the two arms
+    def tail(pl: SparkPlan): Seq[SparkPlan] = pl match {
+      case q: QueryStageExec => tail(q.plan)
+      case a: AdaptiveSparkPlanExec => tail(a.executedPlan)
+      case u: UnionExec => Seq(u)
+      case n => n +: n.children.flatMap(tail)
+    }
+    Retrieval.q138RagServed(spark, sf) // builds the artifacts
+    for ((name, df) <- Seq("q138 serve" -> Retrieval.q138Serve(spark, sf),
+        "q111 fusion" -> Retrieval.q111HybridRrf(spark, sf))) {
+      df.collect()
+      val top = tail(df.queryExecution.executedPlan)
+      assert(top.count(_.isInstanceOf[UnionExec]) == 1, s"$name: no single union of the arms")
+      val shuffles = top.collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+      assert(shuffles.isEmpty, s"$name: the fusion tail shuffles again: $shuffles")
+    }
+    val serve = Retrieval.q138Serve(spark, sf)
+    serve.collect()
+    val quant = nodes(serve.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec if a.output.exists(o => o.name == "cc" || o.name == "cs") => a
+    }
+    assert(quant.flatMap(_.output.map(_.name)).toSet == Set("cc", "cs"),
+      s"expected the cc and cs aggregates; got ${quant.map(_.output.map(_.name))}")
+    quant.foreach { a =>
+      val single = nodes(a).collect {
+        case e: ShuffleExchangeLike if e.outputPartitioning == SinglePartition => e
+      }
+      assert(single.isEmpty,
+        s"${a.output.map(_.name)} still aggregates through an Exchange SinglePartition")
+    }
   }
 
   test("q147 complete RAG serve: artifact-only walk incl. positions and vectors; the only RDD leaf is the eval-sized MMR checkpoint") {
