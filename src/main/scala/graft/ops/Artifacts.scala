@@ -7,23 +7,67 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** THE ON-DISK LAYOUT OF AN ARTIFACT ROOT — the one module that knows
   * what is inside a version: [[RootPointer]] decides WHICH root a reader
-  * sees, this object says what that root holds and how to read it. The
-  * lexical index, the containment index and the IVF artifacts all share
-  * it:
+  * sees, this object says what that root holds and how to read it. Every
+  * artifact family shares it, and every file set is a [[FileSet]] at
+  * `root/<name>`, declared beside its writer:
   * {{{
-  *   root/seg0/...           # immutable segments (seg* dirs): lexical, containment
-  *   root/seg_a1/...
-  *   root/tombstones/t0      # immutable delete batches, one key column each
-  *   root/tombstones/d3
-  *   root/_VARIANT_RESIDUAL  # empty marker file: a residual-encoded IVF root
+  *   lexical root (Retrieval)       root/<seg>/tf, df, stats, pp (optional)
+  *                                  root/tombstones/<batch>   (doc_id)
+  *   containment root (Dedup)       root/<seg>                (the segment IS the set)
+  *                                  root/rank                 (frozen df-rank table)
+  *   IVF root (Similarity)          root/cents, books, codes
+  *                                  root/tombstones/<batch>   (vec_id)
+  *                                  root/_VARIANT_RESIDUAL    (empty marker: residual codes)
+  *   kNN-graph root (Similarity)    root/edges, cents, cells
+  *   rag roots (Retrieval)          root/clusters, vecs
+  *   mining root (Similarity, q153) root/cells_mine
+  *   vocab version (TextOps)        root/vocab
+  *   cluster-fold root (DocStream)  root/ranked, labels
   * }}}
-  * Everything that lists segments or tombstones, writes a tombstone, reads
-  * a small line file, copies a frozen file set or needs a filesystem
-  * handle goes through here
+  * where `<seg>` is a `seg*` segment dir. Everything that reads or writes
+  * a file set, lists segments or tombstones, writes a tombstone, reads a
+  * small line file, copies a frozen file set or needs a filesystem handle
+  * goes through here
   * (`ProtocolGuardSpec` fails on the building blocks anywhere else under
   * `src/main`). The session scratch root that the served catalog entries
   * build their artifacts under lives here too. */
 object Artifacts {
+
+  // ----------------------------------------------------------- file sets
+  /** ONE NAMED, TYPED FILE SET of an artifact root: its parquet lives at
+    * [[path]] (`root/name`; the root itself when `name` is empty, the
+    * containment segment's shape) and is always read under `schema`, so
+    * opening it launches no footer-reading schema-inference job. Both
+    * writes first `require` that the frame's schema IS the declared one
+    * (nullability aside — an analysis-time check, no job): a declared read
+    * of a file that lacks a declared column returns nulls silently, so a
+    * writer that drifts must fail at its write instead. */
+  final case class FileSet(name: String, schema: StructType) {
+    def path(root: String): String = if (name.isEmpty) root else s"$root/$name"
+
+    def exists(s: SparkSession, root: String): Boolean = Artifacts.exists(s, path(root))
+
+    /** The union of this set across `roots` (segments, versions), under
+      * the declared schema. */
+    def read(s: SparkSession, roots: String*): DataFrame =
+      s.read.schema(schema).parquet(roots.map(path): _*)
+
+    /** Write into a root nothing serves yet (a build or a staged version). */
+    def write(df: DataFrame, root: String): Unit =
+      conformed(df).write.mode("overwrite").parquet(path(root))
+
+    /** Add rows beside the existing files (a streaming append). */
+    def append(df: DataFrame, root: String): Unit =
+      conformed(df).write.mode("append").parquet(path(root))
+
+    // catalogString spells names and types, never nullability
+    private def conformed(df: DataFrame): DataFrame = {
+      require(df.schema.catalogString == schema.catalogString,
+        s"file set '$name' declares ${schema.catalogString}; its writer emits " +
+          df.schema.catalogString)
+      df
+    }
+  }
 
   // ---------------------------------------------------------- filesystem
   /** The Hadoop filesystem that holds `path`. */
@@ -72,13 +116,6 @@ object Artifacts {
     * the size-tier input to [[compactOverTier]]. */
   def segmentCount(s: SparkSession, root: String): Int = segments(s, root).size
 
-  /** One segment file set across `segs` (`file` = "" for segments that
-    * are a single parquet dir), read under its declared schema: opening an
-    * artifact launches no footer-reading schema-inference job. */
-  def readSegments(s: SparkSession, segs: Seq[String], file: String,
-      schema: StructType): DataFrame =
-    s.read.schema(schema).parquet(segs.map(sg => if (file.isEmpty) sg else s"$sg/$file"): _*)
-
   /** SIZE-TIERED COMPACTION WINDOW over the published root of `base`: at
     * ≤ `maxSegments` segments it is a metadata-only no-op; past the tier
     * `kernel(cur, out)` writes the merged root into the next version,
@@ -115,13 +152,14 @@ object Artifacts {
     * so opening the delete set launches no footer-reading job. */
   final case class Tombstones(key: String) {
     val schema: StructType = StructType(Seq(StructField(key, LongType)))
+    private val batch = FileSet("", schema)
 
     private def rows(ids: DataFrame): DataFrame = ids.select(col(key).cast(LongType).as(key))
 
     /** Write batch `name` into a root nothing serves yet (a build or a
       * staged version): overwrite. */
     def write(ids: DataFrame, root: String, name: String): Unit =
-      rows(ids).write.mode("overwrite").parquet(s"$root/tombstones/$name")
+      batch.write(rows(ids), s"$root/tombstones/$name")
 
     /** Add batch `name` to a PUBLISHED root: errorifexists — a published
       * root only ever gains files, never has one rewritten. */
@@ -142,7 +180,7 @@ object Artifacts {
       * consumer that writes or counts the rows dedups itself. */
     def union(s: SparkSession, root: String): Option[DataFrame] = {
       val ds = dirs(s, root)
-      if (ds.isEmpty) None else Some(s.read.schema(schema).parquet(ds: _*))
+      if (ds.isEmpty) None else Some(batch.read(s, ds: _*))
     }
   }
 

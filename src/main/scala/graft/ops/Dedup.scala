@@ -663,18 +663,23 @@ object Dedup {
     import s.implicits._
     // parallelize, never a local relation: toDF on a 1M-entry driver
     // array would embed the rows in the query plan
-    s.sparkContext.parallelize(pairs.toIndexedSeq, 1).toDF("shh", "df")
-      .write.mode("overwrite").parquet(s"$path/rank")
+    ContainmentRank.write(s.sparkContext.parallelize(pairs.toIndexedSeq, 1).toDF("shh", "df"),
+      path)
     val btable = s.sparkContext.broadcast(graft.functions.RankSort.buildTable(pairs))
     writeContainmentSegment(hashed, btable, s"$path/seg0")
     hashed.unpersist(blocking = false)
     btable
   }
 
+  /** The frozen df-rank table of a containment root, (shh, df) rows in the
+    * column order [[containmentArtifactBuild]] writes them. */
+  private[graft] val ContainmentRank = Artifacts.FileSet("rank", StructType(Seq(
+    StructField("shh", LongType), StructField("df", LongType))))
+
   private[graft] def containmentRankTable(s: SparkSession, path: String)
       : org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])] =
     s.sparkContext.broadcast(graft.functions.RankSort.buildTable(
-      s.read.parquet(s"$path/rank").collect()
+      ContainmentRank.read(s, path).collect()
         .map(r => (r.getLong(0), r.getLong(1)))))
 
   /** Fold a fresh batch into the containment artifact: rank under the
@@ -691,29 +696,24 @@ object Dedup {
       btable: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])]): Unit =
     writeContainmentSegment(hashShingles(freshDocs), btable, s"$path/$seg")
 
-  /** Declared schema of a containment segment, in the column order
-    * [[writeContainmentSegment]] writes it (the compactor writes the same
-    * rows): serving, rehydration and compaction read under it, so opening
-    * the artifact launches no footer-reading job per segment; OperatorSpec
-    * compares it with the schema of the written file. */
-  private[graft] val ContainmentSegSchema: StructType = StructType(Seq(
+  /** A containment segment, in the column order [[writeContainmentSegment]]
+    * writes it (the compactor writes the same rows). The segment dir IS
+    * the file set, so its name is empty. */
+  private[graft] val ContainmentSeg = Artifacts.FileSet("", StructType(Seq(
     StructField("doc_id", LongType), StructField("hs", ArrayType(LongType)),
-    StructField("nsh", LongType)))
+    StructField("nsh", LongType))))
 
   /** One containment segment: the hashed docs ranked under `btable`. */
   private def writeContainmentSegment(hashed: DataFrame,
       btable: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])],
-      out: String): Unit =
-    rankDocs(hashed, btable).select("doc_id", "hs", "nsh")
-      .write.mode("overwrite").parquet(out)
+      seg: String): Unit =
+    ContainmentSeg.write(rankDocs(hashed, btable).select("doc_id", "hs", "nsh"), seg)
 
   /** The segment union as one frame ([[Artifacts.segments]], read under
-    * [[ContainmentSegSchema]]) — the serve side's index input, the
-    * compactor's merge, and the [[graft.streaming.DocStream]]
-    * rehydration seam. */
+    * [[ContainmentSeg]]) — the serve side's index input, the compactor's
+    * merge, and the [[graft.streaming.DocStream]] rehydration seam. */
   private[graft] def containmentSegmentDocs(s: SparkSession, path: String): DataFrame =
-    Artifacts.readSegments(s, Artifacts.requireSegments(s, path, "containment-index"), "",
-      ContainmentSegSchema)
+    ContainmentSeg.read(s, Artifacts.requireSegments(s, path, "containment-index"): _*)
 
   /** SIZE-TIERED COMPACTION for the containment-index artifact — the
     * [[Artifacts.compactOverTier]] window the lexical index uses, applied to
@@ -733,9 +733,9 @@ object Dedup {
   def maybeCompactContainmentVersioned(s: SparkSession, base: String,
       maxSegments: Int): Boolean =
     Artifacts.compactOverTier(s, base, maxSegments) { (cur, out) =>
-      require(Artifacts.exists(s, s"$cur/rank"), s"no containment rank table under $cur")
-      containmentSegmentDocs(s, cur).write.mode("overwrite").parquet(s"$out/seg0")
-      Artifacts.copyFrozen(s, cur, out, "rank")
+      require(ContainmentRank.exists(s, cur), s"no containment rank table under $cur")
+      ContainmentSeg.write(containmentSegmentDocs(s, cur), s"$out/seg0")
+      Artifacts.copyFrozen(s, cur, out, ContainmentRank.name)
     }
 
   /** "Is any FRESH doc an excerpt of anything in the artifact (fresh

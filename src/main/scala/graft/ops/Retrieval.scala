@@ -252,13 +252,11 @@ object Retrieval {
     // to lexIndexOf's. TextOps.indexTokens is the null policy both
     // builders share: a null token array would explode to ZERO tf rows.
     val tf = TextOps.termCounts(TextOps.indexTokens(docs)).cache()
-    tf.write.mode("overwrite").parquet(s"$path/$seg/tf")
-    tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$path/$seg/df")
-    tf.select("doc_id", "dl").distinct()
+    LexTf.write(tf, s"$path/$seg")
+    LexDf.write(tf.groupBy("term").agg(count(lit(1)).as("df")), s"$path/$seg")
+    LexStats.write(tf.select("doc_id", "dl").distinct()
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-      .write.mode("overwrite").parquet(s"$path/$seg/stats")
+        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl")), s"$path/$seg")
     // scoped release, NOT CacheBin (r19 ADVICE): all three consumers are
     // eager inside this function, so the cache has no consumer that
     // outlives it — registering it leaked one cached frame per streaming
@@ -267,20 +265,17 @@ object Retrieval {
     tf.unpersist(blocking = false)
   }
 
-  /** Declared schemas of the three files of a lexical-index segment, in
-    * the column order [[lexIndexSegment]] writes them (the compactor
-    * writes the same columns). Serving and compaction read under these,
-    * so opening an artifact launches no footer-reading schema-inference
-    * job per file set; OperatorSpec compares each with the schema of the
-    * file its writer produces, so drift fails loudly. */
-  private[graft] val LexTfSchema: StructType = StructType(Seq(
+  /** The three file sets of a lexical-index segment, in the column order
+    * [[lexIndexSegment]] writes them (the compactor writes the same
+    * columns); serving and compaction read every segment under them. */
+  private[graft] val LexTf = Artifacts.FileSet("tf", StructType(Seq(
     StructField("doc_id", LongType), StructField("dl", LongType),
-    StructField("term", StringType), StructField("tf", LongType)))
-  private[graft] val LexDfSchema: StructType = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType)))
-  private[graft] val LexStatsSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("tf", LongType))))
+  private[graft] val LexDf = Artifacts.FileSet("df", StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType))))
+  private[graft] val LexStats = Artifacts.FileSet("stats", StructType(Seq(
     StructField("n_docs", LongType), StructField("tot_dl", LongType),
-    StructField("avgdl", DoubleType)))
+    StructField("avgdl", DoubleType))))
 
   /** Fold freshly-arrived documents into a persisted lexical-index
     * artifact: write them as a new immutable segment. Cost is O(fresh) —
@@ -320,9 +315,9 @@ object Retrieval {
     * also the compactor's merge. */
   private def lexFold(s: SparkSession, segs: Seq[String], dead: Option[DataFrame])
       : (DataFrame, DataFrame, DataFrame) = {
-    val tf0 = Artifacts.readSegments(s, segs, "tf", LexTfSchema)
-    val df0 = Artifacts.readSegments(s, segs, "df", LexDfSchema)
-    val st0 = Artifacts.readSegments(s, segs, "stats", LexStatsSchema).select("n_docs", "tot_dl")
+    val tf0 = LexTf.read(s, segs: _*)
+    val df0 = LexDf.read(s, segs: _*)
+    val st0 = LexStats.read(s, segs: _*).select("n_docs", "tot_dl")
     val (tf, dfRows, statRows) = dead match {
       case None => (tf0, df0, st0)
       case Some(del) =>
@@ -369,21 +364,21 @@ object Retrieval {
     // rejected compaction must leave NO artifact at outPath — a partial
     // seg0 (tf/df/stats but no pp) would be served position-less by
     // lexIndexServe with no error
-    val withPp = segs.filter(sg => Artifacts.exists(s, s"$sg/pp"))
+    val withPp = segs.filter(LexPp.exists(s, _))
     require(withPp.isEmpty || withPp.size == segs.size,
       s"mixed positional artifact: ${withPp.size}/${segs.size} segments carry pp")
     val del = Artifacts.DocTombstones.union(s, path)
     val (tf, df, stats) = lexFold(s, segs, del)
-    tf.write.mode("overwrite").parquet(s"$outPath/seg0/tf")
-    df.write.mode("overwrite").parquet(s"$outPath/seg0/df")
-    stats.write.mode("overwrite").parquet(s"$outPath/seg0/stats")
+    val seg0 = s"$outPath/seg0"
+    LexTf.write(tf, seg0)
+    LexDf.write(df, seg0)
+    LexStats.write(stats, seg0)
     // positional postings (optional segment file) survive compaction:
     // concat-only fold (minus tombstoned docs), same disjoint-doc
     // algebra. Mixed artifacts failed loud above, before any write.
     if (withPp.nonEmpty) {
-      val pp0 = Artifacts.readSegments(s, segs, "pp", LexPpSchema)
-      val pp = del.map(pp0.join(_, Seq("doc_id"), "left_anti")).getOrElse(pp0)
-      pp.write.mode("overwrite").parquet(s"$outPath/seg0/pp")
+      val pp0 = LexPp.read(s, segs: _*)
+      LexPp.write(del.map(pp0.join(_, Seq("doc_id"), "left_anti")).getOrElse(pp0), seg0)
     }
   }
 
@@ -789,17 +784,15 @@ object Retrieval {
     * at all. */
   def lexIndexSegmentPos(docs: DataFrame, path: String, seg: String): Unit = {
     lexIndexSegment(docs, path, seg)
-    TextOps.positionalPostings(docs)
-      .write.mode("overwrite").parquet(s"$path/$seg/pp")
+    LexPp.write(TextOps.positionalPostings(docs), s"$path/$seg")
   }
 
-  /** Declared schema of the positional `pp` file set, in the column order
+  /** The positional `pp` file set, in the column order
     * [[lexIndexSegmentPos]] writes it (the compactor writes the same
-    * rows): serving and compaction read under it, so opening a positional
-    * artifact launches no footer-reading job. */
-  private[graft] val LexPpSchema: StructType = StructType(Seq(
+    * rows). */
+  private[graft] val LexPp = Artifacts.FileSet("pp", StructType(Seq(
     StructField("doc_id", LongType), StructField("term", StringType),
-    StructField("positions", ArrayType(IntegerType))))
+    StructField("positions", ArrayType(IntegerType)))))
 
   /** Serve the positional postings of a segmented artifact (union of
     * per-segment pp scans — concat-only fold). Requires every segment to
@@ -807,12 +800,12 @@ object Retrieval {
     * on the position-less segments — fail loud instead). */
   def lexIndexServePos(s: SparkSession, path: String): DataFrame = {
     val segs = Artifacts.requireSegments(s, path, "lexical-index")
-    val missing = segs.filterNot(sg => Artifacts.exists(s, s"$sg/pp"))
+    val missing = segs.filterNot(LexPp.exists(s, _))
     require(missing.isEmpty,
       s"segments without positional postings: $missing — a mixed artifact " +
         "would silently drop phrase matches; rebuild those segments with " +
         "lexIndexSegmentPos or compact")
-    Artifacts.readSegments(s, segs, "pp", LexPpSchema)
+    LexPp.read(s, segs: _*)
   }
 
   /** q120: PHRASE SEARCH SERVED FROM THE ARTIFACT — q113's recipe for the
@@ -1191,12 +1184,22 @@ object Retrieval {
     * NO RDD-backed cluster kernel. Under EXACTLY q124's oracle. Eager at
     * construction (writes the artifact), the q113/q115 convention. */
   def q128CollapseServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Artifacts.datasetScratch(d)}/clusters"
-    Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(path)
+    val root = Artifacts.datasetScratch(d)
+    writeClusters(s, d, root)
     val p = TextOps.bm25Parts(s, d)
     collapseRankFrom(TextOps.bm25ScoredFrom(p.tf, p.df, p.stats, p.qt),
-      s.read.parquet(path))
+      RagClusters.read(s, root))
   }
+
+  /** The persisted q53 label artifact, (doc_id, cluster_id) rows, in the
+    * column order [[writeClusters]] writes them: the collapse input of
+    * q128/q133/q138/q147. */
+  private[graft] val RagClusters = Artifacts.FileSet("clusters", StructType(Seq(
+    StructField("doc_id", LongType), StructField("cluster_id", LongType))))
+
+  /** Build q53's cluster labels of `d` into `root`. */
+  private[graft] def writeClusters(s: SparkSession, d: String, root: String): Unit =
+    RagClusters.write(Dedup.q53DedupClusters(s, d), root)
 
   /** The collapse CTE tail shared by q124/q133/q138's oracles — ONE
     * parametrized text (the bm25ScoreCtes discipline: three verbatim
@@ -1378,7 +1381,7 @@ object Retrieval {
     * segments, the tombstone file, and the label artifact. */
   def q133RetrievalServed(s: SparkSession, d: String): DataFrame = {
     val path = s"${Artifacts.datasetScratch(d)}/servedfull"
-    val clPath = s"${Artifacts.datasetScratch(d)}/servedfull_clusters"
+    val clRoot = s"${Artifacts.datasetScratch(d)}/servedfull_clusters"
     val docs = TextOps.tokenizedDocs(s, d)
     // lexical family and cluster-label artifact are independent builds
     // over disjoint paths — overlapped (guide §2.6, Par scaladoc)
@@ -1387,11 +1390,11 @@ object Retrieval {
         lexIndexSegment(docs, path, "seg0")
         lexTombstone(tombstoneIds(docs), path, "t0")
       },
-      () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(clPath))
+      () => writeClusters(s, d, clRoot))
     val (tf, df, stats) = lexIndexServe(s, path)
     collapseRankFrom(
       TextOps.bm25ScoredFrom(tf, df, stats, TextOps.queryTermsOf(docs)),
-      s.read.parquet(clPath))
+      RagClusters.read(s, clRoot))
   }
 
   val q133Sql: String =
@@ -1456,7 +1459,7 @@ object Retrieval {
       },
       () => Similarity.writeIvfArtifacts(s"$root/ivf", cents, books, codeTable,
         "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= Similarity.AdcQueries)),
-      () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(s"$root/clusters"))
+      () => writeClusters(s, d, root))
     q138Serve(s, d)
   }
 
@@ -1476,16 +1479,15 @@ object Retrieval {
     val (tf, df, stats) = lexIndexServe(s, s"$root/lex")
     val lex = TextOps.bm25RankedFrom(tf, df, stats, TextOps.queryTerms(s, d))
       .select(col("query_id"), col("doc_id"), col("rnk").as("lex_rnk"))
-    val sem = Similarity.ivfPqSearchFrom(s.read.parquet(s"$root/ivf/cents"),
-        s.read.parquet(s"$root/ivf/books"), Similarity.liveCodes(s, s"$root/ivf"),
+    val sem = Similarity.IvfCodec.FlatPq.searchRoot(s, s"$root/ivf",
         Similarity.embWithNorm(s, d)
           .filter(col("vec_id") < TextOps.Bm25NQueries).select("vec_id", "e"),
-        k = SemK)
+        Similarity.IvfNProbe, SemK)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rn").as("sem_rnk"))
     collapseRankFrom(
       rrfScores(lex, sem).select(col("query_id"), col("doc_id"),
         col("rrf").as("score")),
-      s.read.parquet(s"$root/clusters"))
+      RagClusters.read(s, root))
   }
 
   lazy val q138Sql: String =
@@ -1557,14 +1559,13 @@ object Retrieval {
       },
       () => Similarity.writeIvfArtifacts(s"$root/ivf", cents, books, codeTable,
         "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= Similarity.AdcQueries)),
-      () => Dedup.q53DedupClusters(s, d).write.mode("overwrite").parquet(s"$root/clusters"),
-      () => Similarity.embWithNorm(s, d).select("vec_id", "e", "nrm")
-        .write.mode("overwrite").parquet(s"$root/vecs"))
+      () => writeClusters(s, d, root),
+      () => writeVecs(s, d, root))
     val fused = q147Fused(s, d)
     val sel = mmrSelect(
       fused.select(col("query_id"), col("doc_id"),
         (col("score").cast("double") / lit(MmrRelNorm.toDouble)).as("rel")),
-      s.read.parquet(s"$root/vecs"))
+      RagVecs.read(s, root))
     val snip = snippetFrom(lexIndexServePos(s, s"$root/lex"),
       TextOps.queryTermsOf(docs), sel.select("query_id", "doc_id"))
     sel.join(snip, Seq("query_id", "doc_id"), "left")
@@ -1573,6 +1574,15 @@ object Retrieval {
         coalesce(col("best_start"), lit(0L)).as("best_start"))
       .orderBy("query_id", "sel_rnk")
   }
+
+  /** q147's raw-vector artifact, (vec_id, e, nrm) rows in the column order
+    * [[writeVecs]] writes them: the MMR pairwise sims read it. */
+  private[graft] val RagVecs = Artifacts.FileSet("vecs", StructType(Seq(
+    StructField("vec_id", LongType), StructField("e", ArrayType(DoubleType)),
+    StructField("nrm", DoubleType))))
+
+  private[graft] def writeVecs(s: SparkSession, d: String, root: String): Unit =
+    RagVecs.write(Similarity.embWithNorm(s, d).select("vec_id", "e", "nrm"), root)
 
   /** q148: THE VERSIONED-ROOT SERVE, ORACLE-GATED — the catalog face of
     * [[RootPointer]]: the whole pointer lifecycle (stage → publish →

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.Tables
 
 /** Similarity search over the embedding column (`Array[Float]`, dim 64).
@@ -784,11 +784,13 @@ object Similarity {
     protected def scored(cand: DataFrame): DataFrame =
       cand.withColumn("adc_fixed", expr(adcSumExpr))
     protected def topk(cand: DataFrame, k: Int): DataFrame = adcTopkWithCount(cand, k)
-    /** [[searchFrom]] over a persisted root's live (untombstoned) rows. */
+    /** [[searchFrom]] over a persisted root's live (untombstoned) rows;
+      * every file set is read under its declared schema, so planning it
+      * runs no job. */
     final def searchRoot(s: SparkSession, root: String, queries: DataFrame,
-        nprobe: Int): DataFrame =
-      searchFrom(s.read.parquet(s"$root/cents"), Some(s.read.parquet(s"$root/books")),
-        liveCodes(s, root), queries, nprobe)
+        nprobe: Int, k: Int): DataFrame =
+      searchFrom(IvfCents.read(s, root), Some(IvfBooks.read(s, root)),
+        liveCodes(s, root), queries, nprobe, k)
     protected def booksOf(books: Option[DataFrame]): DataFrame = books.getOrElse(
       throw new IllegalArgumentException(s"$this needs its codebooks: books is None"))
     /** `df` beside ONE broadcast row holding both `cc` ([[ccRow]]'s list)
@@ -1096,14 +1098,27 @@ object Similarity {
   private[graft] def writeIvfArtifacts(root: String, cents: DataFrame,
       books: DataFrame, codes: DataFrame, tombs: (String, DataFrame)*): Unit = {
     val trio: Seq[() => Unit] = Seq(
-      () => cents.write.mode("overwrite").parquet(s"$root/cents"),
-      () => books.write.mode("overwrite").parquet(s"$root/books"),
-      () => codes.write.mode("overwrite").parquet(s"$root/codes"))
+      () => IvfCents.write(cents, root),
+      () => IvfBooks.write(books, root),
+      () => IvfCodes.write(codes, root))
     val tw: Seq[() => Unit] = tombs.map { case (n, df) =>
       () => Artifacts.VecTombstones.write(df, root, n)
     }
     Par.jobs(trio ++ tw: _*)
   }
+
+  /** The file sets of an IVF root, in the column order [[writeIvfArtifacts]]
+    * and every maintenance step write them: coarse centroids, PQ codebooks
+    * and the (flat or residual) PQ code table. The kNN-graph root keeps its
+    * frozen centroids in the same `cents` set. */
+  private[graft] val IvfCents = Artifacts.FileSet("cents", StructType(Seq(
+    StructField("cent_id", LongType), StructField("ce", ArrayType(DoubleType)))))
+  private[graft] val IvfBooks = Artifacts.FileSet("books", StructType(Seq(
+    StructField("m", IntegerType), StructField("cent_id", LongType),
+    StructField("ce", ArrayType(DoubleType)))))
+  private[graft] val IvfCodes = Artifacts.FileSet("codes", StructType(Seq(
+    StructField("vec_id", LongType), StructField("cell", LongType),
+    StructField("codes", ArrayType(LongType)))))
 
   /** The refusal message the PLAIN split/merge raise on a residual-marked
     * root — the re-encoding variants are the way through. */
@@ -1125,9 +1140,9 @@ object Similarity {
     * the same content audits > 0 (the corruption the refusal rail
     * exists to prevent, made visible). */
   def residualAuditMismatches(s: SparkSession, root: String, emb: DataFrame): Long = {
-    val cents = s.read.parquet(s"$root/cents")
-    val books = s.read.parquet(s"$root/books")
-    val codes = s.read.parquet(s"$root/codes")
+    val cents = IvfCents.read(s, root)
+    val books = IvfBooks.read(s, root)
+    val codes = IvfCodes.read(s, root)
     val routedRaw = codes.select("vec_id", "cell")
       .join(emb.select("vec_id", "e"), Seq("vec_id"))
     val expect = IvfCodec.ResidualPq.reroute(codes, routedRaw, cents, books)
@@ -1159,7 +1174,7 @@ object Similarity {
     maybeMaintainIvfVersioned(s, base, emb, maxTombstones = 1, maxSharePpm = 1000000L)
     RootPointer.retireOld(s, base, keep = 2)
     IvfCodec.ResidualPq.searchRoot(s, RootPointer.resolve(s, base),
-      emb.filter(col("vec_id") < AdcQueries), IvfNProbe)
+      emb.filter(col("vec_id") < AdcQueries), IvfNProbe, AdcK)
   }
 
   /** The residual trio of `d` as the next version under `base`, marked
@@ -1209,7 +1224,7 @@ object Similarity {
       maxTombstones = 1, maxSharePpm = 1000000L, minSharePpm = 1000000L)
     RootPointer.retireOld(s, base, keep = 2)
     IvfCodec.ResidualPq.searchRoot(s, RootPointer.resolve(s, base),
-      emb.filter(col("vec_id") < AdcQueries), IvfNProbe)
+      emb.filter(col("vec_id") < AdcQueries), IvfNProbe, AdcK)
   }
 
   // --------------------------------------------------------------- q165
@@ -1272,14 +1287,16 @@ object Similarity {
     * served ≡ direct-core differential at production nprobe. */
   private def residualRefineFullProbe(s: SparkSession, root: String,
       corpus: DataFrame, queries: DataFrame, k: Int = AdcK): DataFrame = {
-    val cents = s.read.parquet(s"$root/cents")
-    val codes = s.read.parquet(s"$root/codes")
+    val cents = IvfCents.read(s, root)
+    val codes = IvfCodes.read(s, root)
     val reachable = codes.select(col("vec_id").as("neighbor_id"), col("cell"))
       .join(broadcast(cents.select(col("cent_id").as("cell"))), Seq("cell"), "left_semi")
       .select("neighbor_id")
     val q = queries.select(col("vec_id").as("query_id"), col("e").as("eq"))
     val corp = corpus.select(col("vec_id").as("neighbor_id"), col("e").as("en"))
-    exactTopk(corp.join(broadcast(reachable), Seq("neighbor_id"), "left_semi")
+    // `reachable` is every live code row's id — corpus-sized, so no
+    // broadcast hint: AQE picks the semi join's strategy from its size
+    exactTopk(corp.join(reachable, Seq("neighbor_id"), "left_semi")
       .crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id")), k)
   }
@@ -2073,12 +2090,12 @@ object Similarity {
     * (OperatorSpec round-trip) because the edge list IS the whole graph
     * state — no float recompute on the read path.
     *
-    * Layout: the SCORED edge list (query_id, outdeg, neighbor_id, cos_sim)
-    * at `path` — scores persisted so [[knnGraphAppend]] can merge fresh
-    * candidates into existing top-k lists without re-running the kernel —
-    * and the coarse centroids (cent_id, ce) at `${path}_cents` (the frozen
-    * build-time quantizer every append serves under; edges are built from
-    * the ROUND-TRIPPED cents so artifact and append can never see different
+    * Layout, under the graph root `root`: the SCORED edge list
+    * [[GraphEdges]] — scores persisted so [[knnGraphAppend]] can merge
+    * fresh candidates into existing top-k lists without re-running the
+    * kernel — and the coarse centroids [[IvfCents]] (the frozen build-time
+    * quantizer every append serves under; edges are built from the
+    * ROUND-TRIPPED cents so artifact and append can never see different
     * quantizers — doubles survive parquet bit-exactly).
     *
     * Eager (two writes), so unlike the lazily-returned query frames it can
@@ -2086,15 +2103,14 @@ object Similarity {
     * the writes complete (closes the round-12 "restore after eager actions"
     * item; the documented session-wide raise remains only for lazy frames,
     * where SQLConf-at-planning makes scoping impossible). */
-  def knnGraphArtifact(s: SparkSession, d: String, path: String,
+  def knnGraphArtifact(s: SparkSession, d: String, root: String,
       withCells: Boolean = true): Unit = {
     val confKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val prior = s.conf.get(confKey, "128")
     try {
       val emb = embWithNorm(s, d).filter(col("nrm") > 0).select("vec_id", "e", "nrm")
-      knnCents(emb, corpusNList(s, d))
-        .write.mode("overwrite").parquet(s"${path}_cents")
-      val cc = ccRow(s.read.parquet(s"${path}_cents"))
+      IvfCents.write(knnCents(emb, corpusNList(s, d)), root)
+      val cents = IvfCents.read(s, root)
       // the per-vector PROBE-CELL table (vec_id, pcells) — the graph
       // analogue of ivfPqIndex's per-vector cell+code table: pcells[0] is
       // the assign cell (graft_near_cells orders by (distance, cent_id),
@@ -2108,16 +2124,23 @@ object Similarity {
       // (the q101/q105 gates re-build per run and never append) — readers
       // that will fold batches in keep the default and get the append-
       // ready artifact
-      if (withCells)
-        probeCellRows(emb.select("vec_id", "e"), s.read.parquet(s"${path}_cents"))
-          .write.mode("overwrite").parquet(s"${path}_cells")
-      knnEdgesScoredFrom(s, emb, cc)
-        .write.mode("overwrite").parquet(path)
+      if (withCells) GraphCells.write(probeCellRows(emb.select("vec_id", "e"), cents), root)
+      GraphEdges.write(knnEdgesScoredFrom(s, emb, ccRow(cents)), root)
     } finally s.conf.set(confKey, prior)
   }
 
+  /** The kNN-graph root's file sets beside its frozen [[IvfCents]], in the
+    * column order [[knnGraphArtifact]] and the streaming fold
+    * ([[graft.streaming.VecStream.graphAppend]]) write them: the scored
+    * edge list and the probe-cell table. */
+  private[graft] val GraphEdges = Artifacts.FileSet("edges", StructType(Seq(
+    StructField("query_id", LongType), StructField("outdeg", LongType),
+    StructField("neighbor_id", LongType), StructField("cos_sim", DoubleType))))
+  private[graft] val GraphCells = Artifacts.FileSet("cells", StructType(Seq(
+    StructField("vec_id", LongType), StructField("pcells", ArrayType(LongType)))))
+
   /** (vec_id, pcells) probe-cell rows for a (vec_id, e) batch under frozen
-    * cents — the artifact's `_cells` schema (pcells[0] = assign cell);
+    * cents — the artifact's [[GraphCells]] rows (pcells[0] = assign cell);
     * nonzero-norm rows only, the graph node-set convention. The streaming
     * fold uses this to carry the cells table forward per version. */
   def probeCellRows(emb: DataFrame, cents: DataFrame): DataFrame =
@@ -2174,7 +2197,7 @@ object Similarity {
   }
 
   /** [[knnGraphAppend]] served from the artifact's persisted PROBE-CELL
-    * table (`${path}_cells`: vec_id → pcells, pcells[0] = assign cell) —
+    * table ([[GraphCells]]: vec_id → pcells, pcells[0] = assign cell) —
     * the base corpus's cells/probes come from n·nprobe integer parquet
     * rows joined to the embeddings on vec_id instead of two recomputed
     * n·nlist assign passes. The join is O(n) shuffle where the recompute
@@ -2187,7 +2210,7 @@ object Similarity {
     graft.functions.VectorFunctions.register(s)
     val cc = ccRow(cents)
     // LEFT join + raise_error on a missing pcells row: an inner join would
-    // silently drop any base vector whose _cells row is absent (corpus
+    // silently drop any base vector whose `cells` row is absent (corpus
     // store and probe-cell table drifted out of lockstep) from both the
     // existing-side patch and the union index — a silent divergence from
     // rebuild. coalesce short-circuits, so the error expression only fires
@@ -2195,7 +2218,7 @@ object Similarity {
     // it can't be pruned away by the optimizer.
     val pre = baseEmb.join(cells, Seq("vec_id"), "left")
       .withColumn("pcells", coalesce(col("pcells"), expr(
-        "raise_error('graft: base vec_id missing from the _cells probe table " +
+        "raise_error('graft: base vec_id missing from the cells probe table " +
           "- corpus and cells artifacts are out of lockstep; rebuild the index')")))
     val exA = pre.select(col("vec_id"), col("e"), col("nrm"),
       element_at(col("pcells"), 1).as("cell"))
@@ -2542,9 +2565,9 @@ object Similarity {
     * and every served analytic reads n·k 16-byte integer rows. Eager at
     * construction (writes the artifact), like q76/q93. */
   def q101PageRankServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Artifacts.datasetScratch(d)}/edges"
-    knnGraphArtifact(s, d, path, withCells = false)
-    q94PageRankFrom(s, d, s.read.parquet(path))
+    val root = s"${Artifacts.datasetScratch(d)}/graph"
+    knnGraphArtifact(s, d, root, withCells = false)
+    q94PageRankFrom(s, d, GraphEdges.read(s, root))
   }
 
   /** q105: LABEL PROPAGATION SERVED FROM THE PERSISTED GRAPH ARTIFACT —
@@ -2557,9 +2580,9 @@ object Similarity {
     * so a still-lazy q101 frame and this entry can never clobber each
     * other's parquet. PlanSpec pins the no-kernel lineage like q101's. */
   def q105LabelPropServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Artifacts.datasetScratch(d)}/edges_lp"
-    knnGraphArtifact(s, d, path, withCells = false)
-    q84LabelPropFrom(s, d, s.read.parquet(path))
+    val root = s"${Artifacts.datasetScratch(d)}/graph_lp"
+    knnGraphArtifact(s, d, root, withCells = false)
+    q84LabelPropFrom(s, d, GraphEdges.read(s, root))
   }
 
   /** q106: THE APPEND GATE — [[knnGraphAppendFrom]]'s whole algebra under
@@ -3156,7 +3179,7 @@ object Similarity {
       "t0" -> emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= AdcQueries)
         .select("vec_id"))
     IvfCodec.FlatPq.searchRoot(s, root,
-      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"), IvfNProbe)
+      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"), IvfNProbe, AdcK)
   }
 
   /** Physical reclamation for a tombstoned IVF-PQ artifact — the vector
@@ -3172,8 +3195,9 @@ object Similarity {
   def ivfCodesCompact(s: SparkSession, root: String, outRoot: String): Unit = {
     require(outRoot != root,
       "compaction is copy-on-write: outRoot must be a new artifact root")
-    Artifacts.copyFrozen(s, root, outRoot, "cents", "books", Artifacts.ResidualMarker)
-    liveCodes(s, root).write.mode("overwrite").parquet(s"$outRoot/codes")
+    Artifacts.copyFrozen(s, root, outRoot, IvfCents.name, IvfBooks.name,
+      Artifacts.ResidualMarker)
+    IvfCodes.write(liveCodes(s, root), outRoot)
   }
 
   /** The delete set of an IVF-PQ root ([[Artifacts.VecTombstones]]),
@@ -3183,7 +3207,7 @@ object Similarity {
 
   /** The code table of an IVF-PQ root minus its tombstoned vectors. */
   private[graft] def liveCodes(s: SparkSession, root: String): DataFrame = {
-    val codes = s.read.parquet(s"$root/codes")
+    val codes = IvfCodes.read(s, root)
     tombstoneUnion(s, root)
       .map(del => codes.join(del, Seq("vec_id"), "left_anti")).getOrElse(codes)
   }
@@ -3196,7 +3220,7 @@ object Similarity {
 
   /** Physical code rows per cell (nlist rows, driver-side metadata). */
   private def codeOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] =
-    s.read.parquet(s"$root/codes").groupBy("cell")
+    IvfCodes.read(s, root).groupBy("cell")
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
 
@@ -3261,8 +3285,8 @@ object Similarity {
     require(outRoot != root,
       "cell split is copy-on-write: outRoot must be a new artifact root")
     import s.implicits._
-    val cents = s.read.parquet(s"$root/cents")
-    val codes = s.read.parquet(s"$root/codes")
+    val cents = IvfCents.read(s, root)
+    val codes = IvfCodes.read(s, root)
     val maxId = cents.select("cent_id").collect().map(_.getLong(0)).max
     val newIdOf = hotCells.zipWithIndex
       .map { case (c, i) => c -> (maxId + 1 + i) }.toMap
@@ -3309,10 +3333,10 @@ object Similarity {
     // codes': untouched rows byte-identical; hot rows rerouted
     val codesOut = codes.filter(!col("cell").isin(hotCells: _*))
       .unionByName(codec.reroute(codes.filter(col("cell").isin(hotCells: _*)), moved,
-        centsOut, s.read.parquet(s"$root/books")))
-    centsOut.write.mode("overwrite").parquet(s"$outRoot/cents")
-    codesOut.write.mode("overwrite").parquet(s"$outRoot/codes")
-    Artifacts.copyFrozen(s, root, outRoot, "books", Artifacts.ResidualMarker)
+        centsOut, IvfBooks.read(s, root)))
+    IvfCents.write(centsOut, outRoot)
+    IvfCodes.write(codesOut, outRoot)
+    Artifacts.copyFrozen(s, root, outRoot, IvfBooks.name, Artifacts.ResidualMarker)
     copyTombstones(s, root, outRoot)
     members.unpersist(false)
     hotCells.map { c =>
@@ -3411,7 +3435,7 @@ object Similarity {
     rebalance(root, s"$root/$out", emb.select("vec_id", "e"))
     IvfCodec.FlatPq.searchRoot(s, s"$root/$out",
       emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"),
-      nprobe = s.read.parquet(s"$root/$out/cents").count().toInt)
+      nprobe = IvfCents.read(s, s"$root/$out").count().toInt, AdcK)
       .select("query_id", "neighbor_id", "adc_fixed", "rn")
   }
 
@@ -3479,7 +3503,7 @@ object Similarity {
     * reclaimed. nlist rows, driver-side (index metadata). */
   private def mergeOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] = {
     val counts = codeOccupancy(s, root).toMap
-    s.read.parquet(s"$root/cents").select("cent_id").collect()
+    IvfCents.read(s, root).select("cent_id").collect()
       .map(_.getLong(0)).toSeq.sorted
       .map(c => (c, counts.getOrElse(c, 0L)))
   }
@@ -3498,8 +3522,8 @@ object Similarity {
     val survivorIds = occ.map(_._1).filterNot(coldCells.contains)
     require(survivorIds.nonEmpty,
       "cell merge needs >= 1 surviving cell: refusing to fold the whole index")
-    val cents = s.read.parquet(s"$root/cents")
-    val codes = s.read.parquet(s"$root/codes")
+    val cents = IvfCents.read(s, root)
+    val codes = IvfCodes.read(s, root)
     val survivors = cents.filter(!col("cent_id").isin(coldCells: _*))
     val coldRows = occ.collect { case (c, n) if coldCells.contains(c) => n }.sum
     val cold = codes.filter(col("cell").isin(coldCells: _*))
@@ -3517,12 +3541,12 @@ object Similarity {
     }
     val movedOut = members.fold(cold) { m =>
       codec.reroute(cold, assignCells(m, survivors).select("vec_id", "cell", "e"),
-        survivors, s.read.parquet(s"$root/books"))
+        survivors, IvfBooks.read(s, root))
     }
-    codes.filter(!col("cell").isin(coldCells: _*)).unionByName(movedOut)
-      .write.mode("overwrite").parquet(s"$outRoot/codes")
-    survivors.write.mode("overwrite").parquet(s"$outRoot/cents")
-    Artifacts.copyFrozen(s, root, outRoot, "books", Artifacts.ResidualMarker)
+    IvfCodes.write(codes.filter(!col("cell").isin(coldCells: _*)).unionByName(movedOut),
+      outRoot)
+    IvfCents.write(survivors, outRoot)
+    Artifacts.copyFrozen(s, root, outRoot, IvfBooks.name, Artifacts.ResidualMarker)
     copyTombstones(s, root, outRoot)
     // released only after the codes write, which reads the cached members
     members.foreach(_.unpersist(false))
@@ -3615,7 +3639,7 @@ object Similarity {
       maxTombstones = 1, maxSharePpm = 1000000L)
     RootPointer.retireOld(s, base, keep = 2)
     IvfCodec.FlatPq.searchRoot(s, RootPointer.resolve(s, base),
-      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"), IvfNProbe)
+      emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"), IvfNProbe, AdcK)
   }
 
   /** VERSIONED IVF MAINTENANCE — the combined pass a long-running index
@@ -4198,9 +4222,9 @@ object Similarity {
     * Eager at construction (writes the artifact), the q101/q113
     * convention. */
   def q135TriangleServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Artifacts.datasetScratch(d)}/edges_tri"
-    knnGraphArtifact(s, d, path, withCells = false)
-    triangleCountFrom(s.read.parquet(path).select("query_id", "neighbor_id"))
+    val root = s"${Artifacts.datasetScratch(d)}/graph_tri"
+    knnGraphArtifact(s, d, root, withCells = false)
+    triangleCountFrom(GraphEdges.read(s, root).select("query_id", "neighbor_id"))
   }
 
   /** q136: PREDICATE + TOMBSTONE ANN SERVE — the two pre-filters a real
@@ -4229,7 +4253,7 @@ object Similarity {
     val keep = Tables.spread(s, Tables.embeddings(s, d), "vec_id")
       .filter(col("label") % 3 === 0).select("vec_id")
     val live = liveCodes(s, root).join(keep, Seq("vec_id"), "left_semi")
-    ivfPqSearchFrom(s.read.parquet(s"$root/cents"), s.read.parquet(s"$root/books"),
+    ivfPqSearchFrom(IvfCents.read(s, root), IvfBooks.read(s, root),
       live, emb.filter(col("vec_id") < AdcQueries).select("vec_id", "e"))
   }
 
@@ -4525,13 +4549,16 @@ object Similarity {
     * pins that the serve lineage scans the artifact and runs NO quantizer
     * kernel. */
   def q153MiningServed(s: SparkSession, d: String): DataFrame = {
-    val path = s"${Artifacts.datasetScratch(d)}/cells_mine"
-    miningAssigned(s, d).select("vec_id", "cell")
-      .write.mode("overwrite").parquet(path)
+    val root = Artifacts.datasetScratch(d)
+    MineCells.write(miningAssigned(s, d).select("vec_id", "cell"), root)
     val emb = embWithNorm(s, d).filter(col("nrm") > 0).select("vec_id", "e", "nrm")
-    miningRanked(emb.join(s.read.parquet(path), Seq("vec_id"))
+    miningRanked(emb.join(MineCells.read(s, root), Seq("vec_id"))
       .select("vec_id", "e", "nrm", "cell"))
   }
+
+  /** q153's persisted label artifact: one (vec_id, cell) row per vector. */
+  private[graft] val MineCells = Artifacts.FileSet("cells_mine", StructType(Seq(
+    StructField("vec_id", LongType), StructField("cell", LongType))))
 
   lazy val q149Sql: String = {
     val kdist = "list_inner_product(x.e, x.e) - 2 * list_inner_product(x.e, c.ce) + list_inner_product(c.ce, c.ce)"

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.Tables
 
 /** Text-analysis operators for large-scale training-data pipelines:
@@ -1560,16 +1561,20 @@ object TextOps {
       "vocab entries must be multi-char (single chars are the kernel's fallback)")
     RootPointer.cleanStaging(s, base)
     val v = RootPointer.nextVersion(s, base)
-    vocab.toDF("v").coalesce(1).write.mode("overwrite").parquet(s"$base/$v/vocab")
+    Vocab.write(vocab.toDF("v").coalesce(1), s"$base/$v")
     RootPointer.publish(s, base, v)
     v
   }
+
+  /** A published vocabulary version: one (v) row per entry. */
+  private[graft] val Vocab = Artifacts.FileSet("vocab",
+    StructType(Seq(StructField("v", StringType))))
 
   /** Resolve the published vocabulary (root path, entries) — the serve
     * side's per-batch read; a few KB. */
   def resolveVocab(s: SparkSession, base: String): (String, Seq[String]) = {
     val root = RootPointer.resolve(s, base)
-    (root, s.read.parquet(s"$root/vocab").collect().map(_.getString(0)).toSeq.sorted)
+    (root, Vocab.read(s, root).collect().map(_.getString(0)).toSeq.sorted)
   }
 
   // ---------------------------------------------------------------- q159

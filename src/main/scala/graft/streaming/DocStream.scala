@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.Dedup
+import graft.ops.{Artifacts, Dedup}
 
 /** Streaming corpus ingestion with near-dup detection — the continuous form
   * of `Dedup.incrementalJaccardPairs`: fresh documents arrive as a file
@@ -410,15 +410,15 @@ object DocStream {
     * contract). Batch tombstone files are written errorifexists: a
     * published root only ever gains files, never has one rewritten. */
   def tombstoneBatch(s: SparkSession, path: String, ids: DataFrame, name: String): Unit =
-    graft.ops.Artifacts.DocTombstones.add(ids, path, name)
+    Artifacts.DocTombstones.add(ids, path, name)
 
   /** Fold a fresh-document micro-batch into the persisted near-dup CLUSTER
     * LABELS — the streaming half of the q129 contract, keeping the split
     * key (q108) and collapse key (q124/q128) current on a live ingest
     * stream without ever re-comparing existing×existing documents. Two
-    * copy-on-write artifacts roll forward per batch (the
-    * [[graft.streaming.VecStream.graphAppend]] convention — new version
-    * dirs, the retire/swap is the caller's step):
+    * copy-on-write file sets under `root` roll forward per batch into
+    * `outRoot` (the [[graft.streaming.VecStream.graphAppend]] convention —
+    * new version roots, the retire/swap is the caller's step):
     *   - the RANKED-CORPUS probe side (df-ranked hash arrays, the
     *     [[graft.ops.Dedup.corpusArtifact]] shape, ranked once under the
     *     frozen broadcast rank table — rank CONSISTENCY is all All-Pairs
@@ -428,33 +428,34 @@ object DocStream {
     *     one-sided-probe pairs → min-label fixpoint.
     * Streamed ≡ one-shot full recluster bit-for-bit by induction on the
     * per-step q129 identity (DocStreamSpec). */
-  def clusterAppendBatch(s: SparkSession, rankedIn: String, labelsIn: String,
+  def clusterAppendBatch(s: SparkSession, root: String,
       btable: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])],
-      batch: DataFrame, threshold: Double,
-      rankedOut: String, labelsOut: String): Unit = {
-    import graft.ops.Dedup
+      batch: DataFrame, threshold: Double, outRoot: String): Unit = {
     // copy-on-write guard (the lexIndexCompact/ivfCodesCompact contract):
     // the labels write goes through an RDD-backed lineage (clusterPairs)
     // where Spark's self-overwrite detection may not trip, so an in-place
-    // outPath could CORRUPT the artifact instead of failing fast. All
-    // FOUR roots must be pairwise distinct after path normalization —
-    // cross-aliasing (labelsOut == rankedIn) or a trailing-slash spelling
-    // of the same dir corrupts just as surely as the direct case
-    val norm = Seq(rankedIn, labelsIn, rankedOut, labelsOut)
-      .map(p => new org.apache.hadoop.fs.Path(p).toString)
-    require(norm.distinct.size == 4,
-      "copy-on-write: the four artifact roots must be pairwise distinct " +
-        s"(got rankedIn=$rankedIn labelsIn=$labelsIn rankedOut=$rankedOut labelsOut=$labelsOut)")
-    val corpusRanked = s.read.parquet(rankedIn)
-    val labels = s.read.parquet(labelsIn)
+    // fold could CORRUPT the artifact instead of failing fast. The roots
+    // must differ after path normalization — a trailing-slash spelling of
+    // the same dir corrupts just as surely as the direct case
+    require(new org.apache.hadoop.fs.Path(root).toString !=
+      new org.apache.hadoop.fs.Path(outRoot).toString,
+      s"copy-on-write: outRoot must be a new root (got root=$root outRoot=$outRoot)")
+    val corpusRanked = ClusterRanked.read(s, root)
     val freshPairs = Dedup.incrementalFrom(corpusRanked, btable, batch, threshold)
       .select("a_id", "b_id")
-    Dedup.clusterPairs(
-      labels.select(col("doc_id").as("a_id"), col("cluster_id").as("b_id"))
-        .unionByName(freshPairs))
-      .write.mode("overwrite").parquet(labelsOut)
-    corpusRanked
-      .unionByName(Dedup.rankDocs(Dedup.hashShingles(batch), btable))
-      .write.mode("overwrite").parquet(rankedOut)
+    ClusterLabels.write(Dedup.clusterPairs(
+      ClusterLabels.read(s, root).select(col("doc_id").as("a_id"), col("cluster_id").as("b_id"))
+        .unionByName(freshPairs)), outRoot)
+    ClusterRanked.write(corpusRanked
+      .unionByName(Dedup.rankDocs(Dedup.hashShingles(batch), btable)), outRoot)
   }
+
+  /** The cluster fold's file sets, in the column order
+    * [[clusterAppendBatch]] writes them: the ranked-corpus probe side
+    * ([[graft.ops.Dedup.corpusArtifact]]'s rows) and the labels. */
+  val ClusterRanked: Artifacts.FileSet = Artifacts.FileSet("ranked", StructType(Seq(
+    StructField("doc_id", LongType), StructField("hs", ArrayType(LongType)),
+    StructField("nsh", LongType))))
+  val ClusterLabels: Artifacts.FileSet = Artifacts.FileSet("labels", StructType(Seq(
+    StructField("doc_id", LongType), StructField("cluster_id", LongType))))
 }

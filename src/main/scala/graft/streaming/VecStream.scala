@@ -172,34 +172,33 @@ object VecStream {
     * (DocStreamSpec) — append(append(G, b₁), b₂) = rebuild(base ∪ b₁ ∪ b₂)
     * by induction on the per-step equivalence.
     *
-    * Copy-on-write versioning: the updated SCORED edge list lands at
-    * `outPath` (a NEW dir — parquet cannot be overwritten while the fold
-    * is reading it), and the frozen centroids are carried forward to
-    * `${outPath}_cents`, so every version is a self-contained artifact the
-    * next fold (or any serving query) can point at. Retiring old versions
-    * is the caller's swap step, the standard CoW table convention.
+    * Copy-on-write versioning: the updated SCORED edge list and probe-cell
+    * table land under `outRoot` (a NEW graph root — parquet cannot be
+    * overwritten while the fold is reading it), and the frozen centroids
+    * are file-copied beside them, so every version is a self-contained
+    * artifact the next fold (or any serving query) can point at. Retiring
+    * old versions is the caller's swap step, the standard CoW table
+    * convention.
     *
     * `baseEmb` must be the nonzero-norm (vec_id, e, nrm) corpus the
-    * `artifactPath` edge list currently covers — stream operators keep it
+    * `root` edge list currently covers — stream operators keep it
     * current by appending each drained batch's raw rows to the corpus
     * store they read it from (the spec's accumulating-dir shape). */
-  def graphAppend(s: SparkSession, baseEmb: DataFrame, artifactPath: String,
-      fresh: DataFrame, outPath: String): Unit = {
-    val edges = s.read.parquet(artifactPath)
-    val cents = s.read.parquet(s"${artifactPath}_cents")
-    val cells = s.read.parquet(s"${artifactPath}_cells")
+  def graphAppend(s: SparkSession, baseEmb: DataFrame, root: String,
+      fresh: DataFrame, outRoot: String): Unit = {
+    import Similarity.{GraphCells, GraphEdges, IvfCents}
+    val cents = IvfCents.read(s, root)
+    val cells = GraphCells.read(s, root)
     val fr = fresh.select(col("vec_id"),
       col("embedding").cast("array<double>").as("e"))
     // the O(n)-shuffle path: base cells/probes from the persisted
     // probe-cell table, never an n·nlist recompute per micro-batch
-    graft.ops.Similarity
-      .knnGraphAppendFrom(s, baseEmb, cells, edges, cents, fr)
-      .write.mode("overwrite").parquet(outPath)
-    cents.write.mode("overwrite").parquet(s"${outPath}_cents")
+    GraphEdges.write(Similarity.knnGraphAppendFrom(s, baseEmb, cells,
+      GraphEdges.read(s, root), cents, fr), outRoot)
+    graft.ops.Artifacts.copyFrozen(s, root, outRoot, IvfCents.name)
     // fold the batch's probe-cell rows in so the NEXT version appends
     // against the union table (same expression, same frozen cents)
-    cells.unionByName(graft.ops.Similarity.probeCellRows(fr, cents))
-      .write.mode("overwrite").parquet(s"${outPath}_cells")
+    GraphCells.write(cells.unionByName(Similarity.probeCellRows(fr, cents)), outRoot)
   }
 
   /** Fold a vector DELETE micro-batch into the persisted IVF-PQ artifact —
@@ -226,8 +225,7 @@ object VecStream {
     * drains both); on a residual root they re-encode and audit. */
   def indexAppendBatch(freshVecs: DataFrame, root: String): Unit = {
     val s = freshVecs.sparkSession
-    indexAppend(freshVecs, Similarity.IvfCodec.of(s, root), s.read.parquet(s"$root/cents"),
-      Some(s.read.parquet(s"$root/books")))
-      .write.mode("append").parquet(s"$root/codes")
+    Similarity.IvfCodes.append(indexAppend(freshVecs, Similarity.IvfCodec.of(s, root),
+      Similarity.IvfCents.read(s, root), Some(Similarity.IvfBooks.read(s, root))), root)
   }
 }

@@ -24,10 +24,23 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   }
 
   private def residualTrio: (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    (spark.read.parquet(s"$residualTrioDir/cents"),
-      spark.read.parquet(s"$residualTrioDir/books"),
-      spark.read.parquet(s"$residualTrioDir/codes"))
+      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = trio(residualTrioDir)
+
+  /** The flat (q74) artifact trio of `sf`, trained ONCE per run the same
+    * way: the flat cases read it back instead of retraining it. */
+  private lazy val flatTrioDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_flat_trio").toString
+    val (emb, subs, seedsPq) = Similarity.pqParts(spark, sf)
+    val (cents, books, codes) = Similarity.ivfPqIndex(emb, subs, seedsPq)
+    Similarity.writeIvfArtifacts(dir, cents, books, codes)
+    dir
+  }
+
+  private def flatTrio: (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = trio(flatTrioDir)
+
+  private def trio(root: String) = (Similarity.IvfCents.read(spark, root),
+    Similarity.IvfBooks.read(spark, root), Similarity.IvfCodes.read(spark, root))
 
   test("every catalog query runs and has a deterministic schema") {
     SparkEntry.queries.foreach { case (name, fn) =>
@@ -703,9 +716,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
     try {
-      cents.write.mode("overwrite").parquet(s"$dir/cents")
-      books.write.mode("overwrite").parquet(s"$dir/books")
-      codeTable.write.mode("overwrite").parquet(s"$dir/codes")
+      Similarity.writeIvfArtifacts(dir, cents, books, codeTable)
       val pc = spark.read.parquet(s"$dir/cents")
       val pb = spark.read.parquet(s"$dir/books")
       val pt = spark.read.parquet(s"$dir/codes")
@@ -765,29 +776,16 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   }
 
   test("q86 refine serves bit-identically from parquet-persisted artifacts") {
-    val (emb, subs, seedsPq) = Similarity.pqParts(spark, sf)
-    val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
-    val dir = java.nio.file.Files.createTempDirectory("graft_refine_idx").toString
-    try {
-      cents.write.mode("overwrite").parquet(s"$dir/cents")
-      books.write.mode("overwrite").parquet(s"$dir/books")
-      codeTable.write.mode("overwrite").parquet(s"$dir/codes")
-      val queries = emb.filter(col("vec_id") < 10).select("vec_id", "e")
-      def m(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-        (r.getAs[Long]("query_id"), r.getAs[Long]("rn")) ->
-          (r.getAs[Long]("neighbor_id"), r.getAs[Long]("exact_fixed"))).toMap
-      val served = m(Similarity.ivfPqRefineFrom(
-        spark.read.parquet(s"$dir/cents"), spark.read.parquet(s"$dir/books"),
-        spark.read.parquet(s"$dir/codes"), emb, queries).collect())
-      val direct = m(Similarity.q86AdcRefine(spark, sf).collect())
-      assert(served == direct, "persisted-artifact refine diverged from the catalog query")
-      assert(served.nonEmpty)
-    } finally {
-      import java.nio.file.{Files, Path, Paths}
-      import scala.jdk.CollectionConverters._
-      Files.walk(Paths.get(dir)).iterator().asScala.toSeq
-        .sortBy((p: Path) => -p.getNameCount).foreach(Files.deleteIfExists(_))
-    }
+    val (emb, _, _) = Similarity.pqParts(spark, sf)
+    val (cents, books, codeTable) = flatTrio
+    val queries = emb.filter(col("vec_id") < 10).select("vec_id", "e")
+    def m(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Long]("rn")) ->
+        (r.getAs[Long]("neighbor_id"), r.getAs[Long]("exact_fixed"))).toMap
+    val served = m(Similarity.ivfPqRefineFrom(cents, books, codeTable, emb, queries).collect())
+    val direct = m(Similarity.q86AdcRefine(spark, sf).collect())
+    assert(served == direct, "persisted-artifact refine diverged from the catalog query")
+    assert(served.nonEmpty)
   }
 
   test("q77 artifacts: persisted rotation+index serve bit-identically; append equals rebuild") {
@@ -1950,7 +1948,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     import graft.ops.Similarity
     val dir = java.nio.file.Files.createTempDirectory("knn_graph_art").toString
     Similarity.knnGraphArtifact(spark, sf, dir)
-    val served = spark.read.parquet(dir)
+    val served = Similarity.GraphEdges.read(spark, dir)
     val lpSelf = Similarity.q84LabelProp(spark, sf).collect().toSeq
     val lpServed = Similarity.q84LabelPropFrom(spark, sf, served).collect().toSeq
     assert(lpSelf.nonEmpty && lpSelf == lpServed,
@@ -2015,7 +2013,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     try {
       spark.conf.set(key, "128") // simulate the untouched Spark default
       val dir = java.nio.file.Files.createTempDirectory("knn_art_conf").toString
-      Similarity.knnGraphArtifact(spark, sf, s"$dir/edges")
+      Similarity.knnGraphArtifact(spark, sf, s"$dir/graph")
       assert(spark.conf.get(key) == "128",
         "eager artifact build must restore the session conf it raised")
     } finally spark.conf.set(key, prior)
@@ -2672,6 +2670,34 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     assert(pp.count() == TextOps.positionalPostings(docs).count())
   }
 
+  test("opening an IVF version or a graph fold's inputs plans without a job: flat and residual serves, graphAppend's frames") {
+    import Similarity.{GraphCells, GraphEdges, IvfCents}
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_open").toString
+    val queries = Similarity.embWithNorm(spark, sf)
+      .filter(col("vec_id") < Similarity.AdcQueries).select("vec_id", "e")
+    val dead = queries.select((col("vec_id") + 10L).as("vec_id"))
+    val (fc, fb, fcodes) = flatTrio
+    Similarity.writeIvfArtifacts(s"$dir/flat", fc, fb, fcodes, "t0" -> dead)
+    val (rc, rb, rcodes) = residualTrio
+    Similarity.writeIvfArtifacts(s"$dir/resid", rc, rb, rcodes, "t0" -> dead)
+    Artifacts.markResidual(spark, s"$dir/resid")
+    for (root <- Seq(s"$dir/flat", s"$dir/resid")) {
+      val codec = Similarity.IvfCodec.of(spark, root)
+      val (served, planned) = Trace(spark.sparkContext)(
+        codec.searchRoot(spark, root, queries, Similarity.IvfNProbe, Similarity.AdcK))
+      assert(planned.jobs == 0, s"planning a $codec serve ran ${planned.jobs} jobs")
+      assert(served.count() > 0, s"$codec serve returned no rows")
+    }
+    val g = s"$dir/graph"
+    Similarity.knnGraphArtifact(spark, sf, g)
+    val base = Similarity.embWithNorm(spark, sf).filter(col("nrm") > 0)
+      .select("vec_id", "e", "nrm")
+    val fresh = base.limit(3).select((col("vec_id") + 1000000L).as("vec_id"), col("e"))
+    val (_, folded) = Trace(spark.sparkContext)(Similarity.knnGraphAppendFrom(spark, base,
+      GraphCells.read(spark, g), GraphEdges.read(spark, g), IvfCents.read(spark, g), fresh))
+    assert(folded.jobs == 0, s"planning a graph fold ran ${folded.jobs} jobs")
+  }
+
   test("q119 query likelihood: scores match a plain-Scala Dirichlet recompute (sum-form identity)") {
     import graft.ops.Retrieval
     val toks = Tables.documents(spark, sf).select("doc_id", "text").collect()
@@ -2898,8 +2924,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   test("q127 ANN tombstones: pre-filter serve ≡ post-filtering the FULL unfiltered candidate list; no deleted id served; delete non-vacuous") {
     import graft.ops.Similarity
     val spark0 = spark
-    val (emb, subs, seedsPq) = Similarity.pqParts(spark0, sf)
-    val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
+    val (emb, _, _) = Similarity.pqParts(spark0, sf)
+    val (cents, books, codeTable) = flatTrio
     val queries = emb.filter(col("vec_id") < 10).select("vec_id", "e")
     // the unfiltered candidate universe (k = all): what a post-filter
     // consumer would start from
@@ -3044,13 +3070,15 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       java.lang.Double.doubleToLongBits(s1.getDouble(2)) ==
         java.lang.Double.doubleToLongBits(r1.getDouble(2)),
       s"stats $s1 != rebuild $r1 — avgdl must be BIT-identical")
-    // every declared schema equals the schema its writer produces — the
-    // segment build, the compactor and both tombstone writers
+    // every declared schema equals the schema each of its writers wrote,
+    // read back from the parquet footers (never under the declared schema)
+    def written(set: Artifacts.FileSet, roots: String*): Unit = roots.foreach { r =>
+      assert(spark.read.parquet(set.path(r)).schema == set.schema, s"${set.path(r)} drifted")
+    }
+    // the lexical segment build and compactor, both tombstone writers
     Retrieval.lexIndexCompact(spark, dir, out)
-    for (root <- Seq(s"$dir/seg0", s"$out/seg0"); (file, declared) <- Seq(
-        "tf" -> Retrieval.LexTfSchema, "df" -> Retrieval.LexDfSchema,
-        "stats" -> Retrieval.LexStatsSchema))
-      assert(spark.read.parquet(s"$root/$file").schema == declared, s"$root/$file drifted")
+    Seq(Retrieval.LexTf, Retrieval.LexDf, Retrieval.LexStats)
+      .foreach(written(_, s"$dir/seg0", s"$out/seg0"))
     graft.streaming.DocStream.tombstoneBatch(spark, dir, Seq(5).toDF("doc_id"), "d0")
     Seq("t0", "d0").foreach(t => assert(
       spark.read.parquet(s"$dir/tombstones/$t").schema == Artifacts.DocTombstones.schema, t))
@@ -3060,13 +3088,60 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val pos = java.nio.file.Files.createTempDirectory("graft_lexpos_schema").toString
     Retrieval.lexIndexSegmentPos(docs, pos, "seg0")
     Retrieval.lexIndexCompact(spark, pos, s"$pos/c")
-    for (root <- Seq(s"$pos/seg0", s"$pos/c/seg0"))
-      assert(spark.read.parquet(s"$root/pp").schema == Retrieval.LexPpSchema, s"$root/pp drifted")
+    written(Retrieval.LexPp, s"$pos/seg0", s"$pos/c/seg0")
+    // the containment build (its compaction: the containment compaction case)
     val cont = java.nio.file.Files.createTempDirectory("graft_contain_schema").toString
-    Dedup.containmentArtifactBuild(spark, cont, Seq(1L -> "alpha beta gamma delta",
-      2L -> "alpha beta gamma epsilon").toDF("doc_id", "text"))
-    assert(spark.read.parquet(s"$cont/seg0").schema == Dedup.ContainmentSegSchema,
-      "containment segment drifted")
+    val twoDocs = Seq(1L -> "alpha beta gamma delta", 2L -> "alpha beta gamma epsilon")
+      .toDF("doc_id", "text")
+    Dedup.containmentArtifactBuild(spark, cont, twoDocs)
+    written(Dedup.ContainmentSeg, s"$cont/seg0")
+    written(Dedup.ContainmentRank, cont)
+    // the IVF sets: flat and residual builds, compaction, flat and
+    // residual split and merge, the streaming append
+    import Similarity.{IvfBooks, IvfCents, IvfCodes}
+    val ivfw = java.nio.file.Files.createTempDirectory("graft_ivf_schema").toString
+    val emb = Similarity.embWithNorm(spark, sf).select("vec_id", "e")
+    Seq(IvfCents, IvfBooks, IvfCodes).foreach(written(_, flatTrioDir, residualTrioDir))
+    Similarity.ivfCodesCompact(spark, flatTrioDir, s"$ivfw/compact")
+    Similarity.ivfCellSplitArtifact(spark, flatTrioDir, s"$ivfw/split", emb)
+    Similarity.ivfCellMergeArtifact(spark, flatTrioDir, s"$ivfw/merge", emb)
+    val (rc, rb, rcodes) = residualTrio
+    Similarity.writeIvfArtifacts(s"$ivfw/r", rc, rb, rcodes)
+    Artifacts.markResidual(spark, s"$ivfw/r")
+    Similarity.ivfCellSplitResidual(spark, s"$ivfw/r", s"$ivfw/rsplit", emb)
+    Similarity.ivfCellMergeResidual(spark, s"$ivfw/r", s"$ivfw/rmerge", emb)
+    val (fc, fb, fcodes) = flatTrio
+    Similarity.writeIvfArtifacts(s"$ivfw/app", fc, fb, fcodes.filter(col("vec_id") % 5 =!= 0))
+    graft.streaming.VecStream.indexAppendBatch(Tables.embeddings(spark, sf)
+      .filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"), s"$ivfw/app")
+    written(IvfCodes, Seq("compact", "split", "merge", "rsplit", "rmerge", "app")
+      .map(r => s"$ivfw/$r"): _*)
+    written(IvfCents, Seq("split", "merge", "rsplit", "rmerge").map(r => s"$ivfw/$r"): _*)
+    // the kNN graph build and its streaming fold
+    Similarity.knnGraphArtifact(spark, sf, s"$ivfw/g0")
+    graft.streaming.VecStream.graphAppend(spark,
+      Similarity.embWithNorm(spark, sf).filter(col("nrm") > 0).select("vec_id", "e", "nrm"),
+      s"$ivfw/g0", Tables.embeddings(spark, sf).limit(3)
+        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")), s"$ivfw/g1")
+    Seq(IvfCents, Similarity.GraphEdges, Similarity.GraphCells)
+      .foreach(written(_, s"$ivfw/g0", s"$ivfw/g1"))
+    // the cluster fold's sets, seeded and folded
+    import graft.streaming.DocStream.{ClusterLabels, ClusterRanked}
+    val (ranked, btable) = Dedup.corpusArtifact(twoDocs)
+    ClusterRanked.write(ranked, s"$ivfw/c0")
+    ClusterLabels.write(Dedup.clusterPairs(Seq((1L, 2L)).toDF("a_id", "b_id")), s"$ivfw/c0")
+    graft.streaming.DocStream.clusterAppendBatch(spark, s"$ivfw/c0", btable,
+      Seq(3L -> "alpha beta gamma delta zeta").toDF("doc_id", "text"), 0.6, s"$ivfw/c1")
+    Seq(ClusterRanked, ClusterLabels).foreach(written(_, s"$ivfw/c0", s"$ivfw/c1"))
+    // the rag labels and vectors, q153's cells, a published vocabulary
+    Retrieval.writeClusters(spark, sf, s"$ivfw/rag")
+    Retrieval.writeVecs(spark, sf, s"$ivfw/rag")
+    written(Retrieval.RagClusters, s"$ivfw/rag")
+    written(Retrieval.RagVecs, s"$ivfw/rag")
+    Similarity.q153MiningServed(spark, sf)
+    written(Similarity.MineCells, Artifacts.datasetScratch(sf))
+    TextOps.publishVocab(spark, s"$ivfw/vocab", Seq("ab", "cd"))
+    written(TextOps.Vocab, graft.ops.RootPointer.resolve(spark, s"$ivfw/vocab"))
     // deleting EVERY doc leaves an empty index: avgdl is null, not a
     // division by zero, and the compactor still merges it
     Retrieval.lexTombstone(docs.select("doc_id"), dir, "t2")
@@ -3228,8 +3303,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // BEFORE candidate generation equals filtering the complete unfiltered
     // candidate list after — verified here against an independent
     // driver-side re-rank of the full list
-    val (emb, subs, seedsPq) = Similarity.pqParts(s, sf)
-    val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
+    val (emb, _, _) = Similarity.pqParts(s, sf)
+    val (cents, books, codeTable) = flatTrio
     val queries = emb.filter(col("vec_id") < 10).select("vec_id", "e")
     val full = Similarity.ivfPqSearchFrom(cents, books, codeTable, queries,
         k = Int.MaxValue)
@@ -3539,9 +3614,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val s = spark
     val (cents, books, codeTable) = residualTrio
     val dir = java.nio.file.Files.createTempDirectory("graft_resid_idx").toString
-    cents.write.mode("overwrite").parquet(s"$dir/cents")
-    books.write.mode("overwrite").parquet(s"$dir/books")
-    codeTable.write.mode("overwrite").parquet(s"$dir/codes")
+    Similarity.writeIvfArtifacts(dir, cents, books, codeTable)
     Artifacts.markResidual(s, dir)
     val emb = Similarity.embWithNorm(s, sf).select("vec_id", "e")
     val queries = emb.filter(col("vec_id") < 10)
@@ -3577,9 +3650,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // MARKED root through VecStream encodes residuals too, so the root
     // keeps its invariant and the appended rows equal the rebuild's
     val app = s"$dir/app"
-    cents.write.mode("overwrite").parquet(s"$app/cents")
-    books.write.mode("overwrite").parquet(s"$app/books")
-    codeTable.filter(col("vec_id") % 5 =!= 0).write.mode("overwrite").parquet(s"$app/codes")
+    Similarity.writeIvfArtifacts(app, cents, books, codeTable.filter(col("vec_id") % 5 =!= 0))
     Artifacts.markResidual(s, app)
     graft.streaming.VecStream.indexAppendBatch(
       Tables.embeddings(s, sf).filter(col("vec_id") % 5 === 0)
@@ -3609,9 +3680,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val dir = java.nio.file.Files.createTempDirectory("graft_resid_reb").toString
     def write(sub: String, mark: Boolean): String = {
       val r = s"$dir/$sub"
-      cents.write.mode("overwrite").parquet(s"$r/cents")
-      books.write.mode("overwrite").parquet(s"$r/books")
-      codeTable.write.mode("overwrite").parquet(s"$r/codes")
+      Similarity.writeIvfArtifacts(r, cents, books, codeTable)
       if (mark) Artifacts.markResidual(s, r)
       r
     }
@@ -3661,13 +3730,11 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
   test("q158 mid-swap reader isolation: a pre-maintenance resolve serves identical rows through publish + retirement") {
     import graft.ops.RootPointer
     val s = spark
-    val (emb, subs, seedsPq) = Similarity.pqParts(s, sf)
-    val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
+    val (emb, _, _) = Similarity.pqParts(s, sf)
+    val (cents, books, codeTable) = flatTrio
     val base = java.nio.file.Files.createTempDirectory("graft_ivfver").toString
     val v1 = RootPointer.nextVersion(s, base)
-    cents.write.mode("overwrite").parquet(s"$base/$v1/cents")
-    books.write.mode("overwrite").parquet(s"$base/$v1/books")
-    codeTable.write.mode("overwrite").parquet(s"$base/$v1/codes")
+    Similarity.writeIvfArtifacts(s"$base/$v1", cents, books, codeTable)
     val dels = emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= Similarity.AdcQueries)
       .select("vec_id")
     dels.filter(col("vec_id") % 2 === 0)
@@ -3722,9 +3789,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // the re-encoding route), and each published root satisfies the
     // residual invariant
     val dir = java.nio.file.Files.createTempDirectory("graft_respol").toString
-    cents.write.mode("overwrite").parquet(s"$dir/v00001/cents")
-    books.write.mode("overwrite").parquet(s"$dir/v00001/books")
-    codes.write.mode("overwrite").parquet(s"$dir/v00001/codes")
+    Similarity.writeIvfArtifacts(s"$dir/v00001", cents, books, codes)
     Artifacts.markResidual(s, s"$dir/v00001")
     RootPointer.publish(s, dir, "v00001")
     assert(Similarity.maybeMaintainIvfVersioned(s, dir, emb,
@@ -3742,9 +3807,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // new root
     val base = java.nio.file.Files.createTempDirectory("graft_resver").toString
     val v1 = RootPointer.nextVersion(s, base)
-    cents.write.mode("overwrite").parquet(s"$base/$v1/cents")
-    books.write.mode("overwrite").parquet(s"$base/$v1/books")
-    codes.write.mode("overwrite").parquet(s"$base/$v1/codes")
+    Similarity.writeIvfArtifacts(s"$base/$v1", cents, books, codes)
     Artifacts.markResidual(s, s"$base/$v1")
     RootPointer.publish(s, base, v1)
     val rootA = RootPointer.resolve(s, base)
@@ -3783,9 +3846,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // (at 1 ppm every cell is over the tier, so the policy picks the same
     // two hottest cells the kernel does)
     val dir = java.nio.file.Files.createTempDirectory("graft_ressplit_d").toString
-    cents.write.mode("overwrite").parquet(s"$dir/cents")
-    books.write.mode("overwrite").parquet(s"$dir/books")
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
+    Similarity.writeIvfArtifacts(dir, cents, books, codes)
     Artifacts.markResidual(s, dir)
     Similarity.ivfCellSplitResidual(s, dir, s"$dir/split", emb)
     val direct = serve(s"$dir/split")
@@ -3794,9 +3855,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // isolation
     val base = java.nio.file.Files.createTempDirectory("graft_ressplit_v").toString
     val v1 = RootPointer.nextVersion(s, base)
-    cents.write.mode("overwrite").parquet(s"$base/$v1/cents")
-    books.write.mode("overwrite").parquet(s"$base/$v1/books")
-    codes.write.mode("overwrite").parquet(s"$base/$v1/codes")
+    Similarity.writeIvfArtifacts(s"$base/$v1", cents, books, codes)
     Artifacts.markResidual(s, s"$base/$v1")
     RootPointer.publish(s, base, v1)
     val rootA = RootPointer.resolve(s, base)
@@ -3861,9 +3920,12 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val dir = java.nio.file.Files.createTempDirectory("graft_contain").toString
     Dedup.containmentArtifactBuild(s, s"$dir/c", all.filter(col("doc_id") % 5 =!= 0))
     Dedup.containmentAppend(s, s"$dir/c", fresh, "seg1")
-    val (_, opened) = Trace(s.sparkContext)(Dedup.containmentSegmentDocs(s, s"$dir/c"))
-    assert(opened.jobs == 0, s"opening the two-segment artifact ran ${opened.jobs} Spark " +
-      "jobs — a segment read lost its declared schema")
+    val (_, opened) = Trace(s.sparkContext)(
+      (Dedup.ContainmentRank.read(s, s"$dir/c"), Dedup.containmentSegmentDocs(s, s"$dir/c")))
+    assert(opened.jobs == 0, s"opening the two-segment artifact and its rank table ran " +
+      s"${opened.jobs} Spark jobs — a segment or rank read lost its declared schema")
+    val (_, ranked) = Trace(s.sparkContext)(Dedup.containmentRankTable(s, s"$dir/c"))
+    assert(ranked.jobs == 1, s"loading the rank table ran ${ranked.jobs} jobs (1: its collect)")
     val served = Dedup.containmentServeFresh(s, s"$dir/c", fresh, 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // the self-contained incremental path ranks with a DIFFERENT df table
@@ -3913,7 +3975,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val cur = RootPointer.resolve(s, base)
     assert(cur != v1 && Artifacts.segmentCount(s, cur) == 1,
       "compaction must publish one merged segment")
-    assert(s.read.parquet(s"$cur/seg0").schema == Dedup.ContainmentSegSchema,
+    assert(s.read.parquet(s"$cur/seg0").schema == Dedup.ContainmentSeg.schema,
       "the merged segment must keep the declared schema")
     assert(hfs.exists(new org.apache.hadoop.fs.Path(s"$cur/rank")),
       "the rank table must carry into the compacted version")
@@ -4365,12 +4427,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     val base = java.nio.file.Files.createTempDirectory("ivf_split").toString
-    val root = s"$base/art"; val out = s"$base/art2"
-    val (emb, subs, seedsPq) = Similarity.pqParts(s, sf)
-    val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
-    cents.write.parquet(s"$root/cents")
-    books.write.parquet(s"$root/books")
-    codeTable.write.parquet(s"$root/codes")
+    val root = flatTrioDir; val out = s"$base/art2"
+    val (emb, _, _) = Similarity.pqParts(s, sf)
     Similarity.ivfCellSplitArtifact(s, root, out, emb.select("vec_id", "e"))
     // a split changes only WHERE rows are routed, never what the index
     // contains: probing every cell on both sides must return identical rows
@@ -4512,9 +4570,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val (subsA, seedsA) = Similarity.subSplit(all)
     val (rcents, rbooks, rcodes) = Similarity.ivfPqIndex(all, subsA, seedsA)
     val base1 = s"$dir/a1"
-    rcents.write.parquet(s"$base1/v00001/cents")
-    rbooks.write.parquet(s"$base1/v00001/books")
-    rcodes.write.parquet(s"$base1/v00001/codes")
+    Similarity.writeIvfArtifacts(s"$base1/v00001", rcents, rbooks, rcodes)
     RootPointer.publish(s, base1, "v00001")
     val allIds = all.select("vec_id").collect().map(_.getLong(0)).toSet
     Similarity.ivfCellSplitArtifact(s, s"$base1/v00001", s"$base1/v00002", all)
@@ -4644,12 +4700,8 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     val base = java.nio.file.Files.createTempDirectory("ivf_merge").toString
-    val root = s"$base/art"; val out = s"$base/art2"
-    val (emb, subs, seedsPq) = Similarity.pqParts(s, sf)
-    val (cents, books, codeTable) = Similarity.ivfPqIndex(emb, subs, seedsPq)
-    cents.write.parquet(s"$root/cents")
-    books.write.parquet(s"$root/books")
-    codeTable.write.parquet(s"$root/codes")
+    val root = flatTrioDir; val out = s"$base/art2"
+    val (emb, _, _) = Similarity.pqParts(s, sf)
     val cold = Similarity.ivfCellMergeArtifact(s, root, out, emb.select("vec_id", "e")).toSet
     // a merge changes only WHERE rows are routed, never what the index
     // contains: probing every cell on both sides must return identical rows

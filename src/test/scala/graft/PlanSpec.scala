@@ -711,9 +711,9 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     // serving contract — in-memory lineage would smuggle shuffle_merge
     // cell joins from the build into this assertion)
     val dir = java.nio.file.Files.createTempDirectory("knn_append_plan").toString
-    Similarity.knnGraphArtifact(spark, sf, s"$dir/edges")
-    val edges = spark.read.parquet(s"$dir/edges")
-    val cents = spark.read.parquet(s"$dir/edges_cents")
+    Similarity.knnGraphArtifact(spark, sf, dir)
+    val edges = Similarity.GraphEdges.read(spark, dir)
+    val cents = Similarity.IvfCents.read(spark, dir)
     val base = Similarity.embWithNorm(spark, sf)
       .filter(col("nrm") > 0).select("vec_id", "e", "nrm")
     val fresh = base.limit(40)
@@ -1594,10 +1594,12 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
     import graft.ops.Retrieval
     Retrieval.q138RagServed(spark, sf) // builds the artifacts
     val (df, planned) = Trace(spark.sparkContext)(Retrieval.q138Serve(spark, sf))
-    // the only planning-time jobs left are schema inference on the six
-    // undeclared reads (documents, embeddings, cents, books, codes,
-    // clusters): the lexical segments and both tombstone sets declare theirs
-    assert(planned.jobs <= 6, s"planning the serve ran ${planned.jobs} jobs")
+    // every artifact file set (lexical segments, both tombstone sets, the
+    // IVF trio, the cluster labels) is read under its declared schema, and
+    // the build already read the documents and embeddings tables, whose
+    // schemas `Tables` then remembers: planning a serve runs no job (6 jobs
+    // while cents, books, codes and clusters inferred theirs)
+    assert(planned.jobs == 0, s"planning the serve ran ${planned.jobs} jobs")
     val (_, served) = Trace(spark.sparkContext)(df.collect())
     // 37 stages when the IVF top-k and n_cand were a window plus a
     // joined-back count (the candidate subtree ran twice) and each delete
@@ -1726,7 +1728,7 @@ class PlanSpec extends AnyFunSuite with CacheHygiene {
       "served lineage re-runs the coarse argmin — the build cost the artifact exists to amortize")
     assert(!full.contains("graft_topk"), "served lineage re-runs the bounded top-k")
     assert(ns.collect { case f: FileSourceScanExec => f }
-      .exists(_.relation.location.rootPaths.exists(_.toString.contains("edges_tri"))),
+      .exists(_.relation.location.rootPaths.exists(_.toString.endsWith("graph_tri/edges"))),
       "expected a parquet scan rooted at the served edge artifact")
   }
 

@@ -13,7 +13,11 @@ import scala.jdk.CollectionConverters._
   *    may not contain its building blocks at all;
   *  - the ONE layout module: only `graft.ops.Artifacts` lists segments,
   *    spells tombstone paths, makes scratch dirs or opens a filesystem
-  *    handle. */
+  *    handle;
+  *  - the ONE read convention: under `graft/ops` and `graft/streaming`
+  *    every artifact file set is read and written through an
+  *    `Artifacts.FileSet`, so no read infers a schema from parquet
+  *    footers. */
 class ProtocolGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -46,5 +50,15 @@ class ProtocolGuardSpec extends AnyFunSuite {
       "getFileSystem("), _ == layout)
     assert(found.isEmpty,
       s"artifact layout outside graft.ops.Artifacts (call it instead): " + found.mkString("; "))
+  }
+
+  test("graft/ops and graft/streaming read and write parquet only through Artifacts.FileSet") {
+    val layout = root.resolve("graft/ops/Artifacts.scala")
+    val scoped = Seq("graft/ops", "graft/streaming").map(root.resolve)
+    val found = hits(Seq("read.parquet(", "write.mode("),
+      p => p == layout || !scoped.exists(p.startsWith))
+    assert(found.isEmpty,
+      s"undeclared artifact read or write (declare an Artifacts.FileSet beside its writer): " +
+        found.mkString("; "))
   }
 }

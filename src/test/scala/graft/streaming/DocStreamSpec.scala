@@ -436,14 +436,12 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     // (the explicit-cents seams — the artifact layout knnGraphArtifact
     // writes, built here per-split so the quantizer freezes on `static`)
     val root = java.nio.file.Files.createTempDirectory("vecstream_graph").toString
-    Similarity.knnCents(static, 8)
-      .write.mode("overwrite").parquet(s"$root/v0_cents")
-    Similarity.knnEdgesScoredFrom(spark, static,
-        Similarity.ccRow(spark.read.parquet(s"$root/v0_cents")))
-      .write.mode("overwrite").parquet(s"$root/v0")
-    Similarity.probeCellRows(static.select("vec_id", "e"),
-        spark.read.parquet(s"$root/v0_cents"))
-      .write.mode("overwrite").parquet(s"$root/v0_cells")
+    Similarity.IvfCents.write(Similarity.knnCents(static, 8), s"$root/v0")
+    val cents = Similarity.IvfCents.read(spark, s"$root/v0")
+    Similarity.GraphEdges.write(
+      Similarity.knnEdgesScoredFrom(spark, static, Similarity.ccRow(cents)), s"$root/v0")
+    Similarity.GraphCells.write(
+      Similarity.probeCellRows(static.select("vec_id", "e"), cents), s"$root/v0")
 
     // the corpus store the folds read their baseEmb from (CoW convention:
     // each drained batch appends its raw rows after its fold lands)
@@ -484,11 +482,11 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     def key(a: Array[org.apache.spark.sql.Row]) = a.map(r =>
       (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")) ->
         ((r.getAs[Long]("outdeg"), r.getAs[Double]("cos_sim")))).toMap
-    val streamed = key(spark.read.parquet(s"$root/v$ver").collect())
+    val streamed = key(Similarity.GraphEdges.read(spark, s"$root/v$ver").collect())
     // batch differential: one rebuild over the full union under the SAME
     // frozen quantizer — transitive equivalence across any batching
     val rebuilt = key(Similarity.knnEdgesScoredFrom(spark, allE,
-      Similarity.ccRow(spark.read.parquet(s"$root/v0_cents"))).collect())
+      Similarity.ccRow(cents)).collect())
     assert(rebuilt.nonEmpty && streamed == rebuilt,
       s"streamed graph diverged: ${streamed.size} vs ${rebuilt.size} edges")
   }
@@ -656,10 +654,9 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     val root = java.nio.file.Files.createTempDirectory("docstream_cluster").toString
     // build-time artifacts: the ranked probe side + base labels
     val (ranked, btable) = DD.corpusArtifact(static)
-    ranked.write.mode("overwrite").parquet(s"$root/ranked_v0")
-    DD.clusterPairs(DD.jaccardPairs(DD.shingleDocs(static), threshold)
-        .select("a_id", "b_id"))
-      .write.mode("overwrite").parquet(s"$root/labels_v0")
+    DocStream.ClusterRanked.write(ranked, s"$root/v0")
+    DocStream.ClusterLabels.write(DD.clusterPairs(DD.jaccardPairs(DD.shingleDocs(static),
+      threshold).select("a_id", "b_id")), s"$root/v0")
     // the remaining docs arrive as forced separate micro-batches
     val dir = java.nio.file.Files.createTempDirectory("docstream_cluster_src").toString
     Seq(0, 1).foreach { m =>
@@ -673,10 +670,8 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          DocStream.clusterAppendBatch(spark,
-            s"$root/ranked_v$ver", s"$root/labels_v$ver", btable,
-            batch, threshold,
-            s"$root/ranked_v${ver + 1}", s"$root/labels_v${ver + 1}")
+          DocStream.clusterAppendBatch(spark, s"$root/v$ver", btable, batch, threshold,
+            s"$root/v${ver + 1}")
           ver += 1
         }
         ()
@@ -684,7 +679,7 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     assert(ver >= 2, s"expected ≥2 micro-batches, got $ver")
-    val streamed = spark.read.parquet(s"$root/labels_v$ver").collect()
+    val streamed = DocStream.ClusterLabels.read(spark, s"$root/v$ver").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"))).toSet
     val oneShot = DD.q53DedupClusters(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
