@@ -726,13 +726,6 @@ object Corpus {
 
   def q154CurationFunnel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    var tDbg = System.nanoTime()
-    def stageLog(tag: String): Unit = {
-      if (sys.props.contains("graft.funnel.debug")) {
-        println(f"    [funnel] $tag ${(System.nanoTime() - tDbg) / 1e9}%.2f s")
-      }
-      tDbg = System.nanoTime()
-    }
     val base = Tables.spread(s, Tables.documents(s, d), "doc_id")
       .select("doc_id", "text")
     // each stage materializes via an EAGER stage barrier
@@ -772,18 +765,14 @@ object Corpus {
       count(when(col("is_en"), 1)).as("c1"),
       count(when(col("is_en") && col("is_keep"), 1)).as("c2")).head()
     val n0 = cnts.getLong(0)
-    stageLog("n0")
     val n1 = cnts.getLong(1)
-    stageLog("n1_lang")
     val qual = ann.filter(col("is_en") && col("is_keep"))
       .select("doc_id", "text")
     val n2 = cnts.getLong(2)
-    stageLog("n2_quality")
     val uniq = Materialize.stage(qual.join(
       qual.groupBy("text").agg(min(col("doc_id")).as("doc_id")).select("doc_id"),
       Seq("doc_id"), "left_semi"))
     val n3 = uniq.count()
-    stageLog("n3_exact")
     // budgeted, not plain jaccardPairs: the funnel is the one-shot whole-
     // corpus caller the q53-at-1M diagnosis warned about — on a
     // low-entropy corpus it must refuse in seconds with the measured
@@ -794,7 +783,6 @@ object Corpus {
       FunnelPairBudget).select(col("b_id").as("doc_id")).distinct()
     val sur = Materialize.stage(uniq.join(nearDups, Seq("doc_id"), "left_anti"))
     val n4 = sur.count()
-    stageLog("n4_neardup")
     // stage 5 — EXCERPT CLEAN (q162's rule composed in, round-17 verdict
     // #6): the asymmetric population the Jaccard stage provably misses
     // (a quote of a much larger doc has tiny Jaccard, containment ≈ 1);
@@ -810,7 +798,6 @@ object Corpus {
       Dedup.excerptDrops(Dedup.shingleDocs(sur), 0.8),
       Seq("doc_id"), "left_anti"))
     val n5 = exc.count()
-    stageLog("n5_excerpt")
     def grams(df: DataFrame): DataFrame = decontGrams(
       df.select(col("doc_id"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= DecontN))
@@ -819,7 +806,6 @@ object Corpus {
     val contam = decontJoin(grams(exc), evalGrams)
       .select("doc_id").distinct()
     val n6 = exc.join(broadcast(contam), Seq("doc_id"), "left_anti").count()
-    stageLog("n6_decontam")
     Seq(
       (1L, "lang_en", n0, n0 - n1, n1),
       (2L, "quality", n1, n1 - n2, n2),

@@ -257,7 +257,9 @@ object Similarity {
         .agg(expr("transform(array_sort(collect_list(struct(i, m))), s -> s.m)").as("ce_new"))
       cents = prev.join(means, prev("cent_id") === means("cell"), "left")
         .select(prev("cent_id"), coalesce(col("ce_new"), prev("ce")).as("ce"))
-      cents.cache().count() // materialize per round; keeps lineage O(1)
+      // materialize per round so no round is recomputed; the plan still
+      // nests every earlier round (the cache does not truncate lineage)
+      cents.cache().count()
       prev.unpersist(false)
     }
     cents
@@ -295,7 +297,7 @@ object Similarity {
     * rows, corpus-size-independent (the q64 shape). The index join is an
     * equi-join on cell, and the exact-top-k comparison side is a 10-query
     * probe subset, not the corpus. */
-  /** nlist/nprobe are env-overridable SCALE LEVERS (defaults preserve the
+  /** nlist is an env-overridable SCALE LEVER (the default preserves the
     * oracle-gated catalog bit-for-bit): the corpus×corpus entries' candidate
     * volume is Σ_cell |cell|·|probes| ≈ n²·nprobe/nlist, so at large n the
     * operator raises nlist to hold per-cell blocks bounded — BASELINE.md
@@ -305,14 +307,15 @@ object Similarity {
     * Since round 12 the corpus² family no longer RELIES on the manual
     * lever: with no env override it derives nlist ≈ ⌈√n⌉ from the corpus
     * count ([[corpusNList]]); the static [[IvfNList]] below only feeds the
-    * per-query serving family, where nlist scales build cost linearly. */
+    * per-query serving family, where nlist scales build cost linearly.
+    * nprobe is the constant [[IvfNProbe]]; the oracle SQL interpolates it
+    * too. */
   // the one read of SPARK_GRAFT_NLIST: the plans and the oracle SQL below
   // all take the override from here
   private[graft] val NListOverride: Option[Int] =
     sys.env.get("SPARK_GRAFT_NLIST").map(_.toInt)
   private[graft] val IvfNList: Int = NListOverride.getOrElse(8)
-  private[graft] val IvfNProbe: Int =
-    sys.env.get("SPARK_GRAFT_NPROBE").map(_.toInt).getOrElse(2)
+  private[graft] val IvfNProbe: Int = 2
 
   /** AUTO-SIZED nlist for the CORPUS×CORPUS family (q82/q83/q84/q94 — the
     * queries whose candidate volume is ≈ n²·nprobe/nlist): `max(8, ⌈√n⌉)`.
@@ -718,9 +721,11 @@ object Similarity {
     * what differs between code tables: how a batch encodes, how a query
     * becomes per-(query, cell) probe rows, the candidate score and its
     * order, and (PQ codecs) how a rerouted member's row is rewritten. The
-    * coarse train ([[knnCents]]), the search skeleton, and the split and
-    * merge cores are written once over it; [[IvfCodec.of]] is the one
-    * place a persisted root's codec is read.
+    * coarse train ([[knnCents]]), the search skeleton, and the one
+    * rebalance rewrite ([[ivfCellSplit]], [[ivfCellMerge]] and the policy
+    * steps) are written once over it; [[IvfCodec.of]] is the one place a
+    * persisted root's codec is read, so no caller names a codec to
+    * rebalance a root.
     *
     * FROZEN-QUANTIZER CONTRACT: `cents` and (PQ) `books` are trained once
     * and never change; every batch encodes under the persisted frames, so
@@ -730,8 +735,8 @@ object Similarity {
     *    rebalance only rewrites `cell`).
     *  - [[IvfCodec.ResidualPq]] (q75) codes x − c(cell): append, delete and
     *    compaction are exact; a split or merge re-encodes every member whose
-    *    routed centroid changed, under the frozen books, and the window
-    *    audits the staged version before it can publish.
+    *    routed centroid changed, under the frozen books, and audits the
+    *    staged root before it is returned or published.
     *  - [[IvfCodec.Sq8]] (q78) codes each vector in int8 and has no books
     *    (`books` = None): append, delete and compaction are exact; it has no
     *    rebalance route. */
@@ -1120,25 +1125,15 @@ object Similarity {
     StructField("vec_id", LongType), StructField("cell", LongType),
     StructField("codes", ArrayType(LongType)))))
 
-  /** The refusal message the PLAIN split/merge raise on a residual-marked
-    * root — the re-encoding variants are the way through. */
-  private def residualRefusal(action: String): String =
-    s"residual-encoded artifact: $action reroutes members across coarse " +
-      "centroids, and residual codes encode x - c(cell) — moving a member " +
-      "without re-encoding silently corrupts every ADC distance it serves. " +
-      "Use ivfCellSplitResidual / ivfCellMergeResidual (they re-encode the " +
-      "routed members under the frozen books); compaction and appends " +
-      "remain exact on this variant."
-
   /** ARTIFACT AUDIT for the residual variant — recompute every row's
     * codes from (raw vector, routed centroid, frozen books) and count
-    * mismatching rows: 0 on a healthy artifact. THE invariant the
-    * variant rails protect ("codes = frozen-book encode of x − c(cell)
-    * for the cell the row is ROUTED to"); run after any rebalance or
-    * migration. OperatorSpec proves it is load-bearing both ways: the
-    * re-encoding split/merge audit to 0, and the PLAIN split applied to
-    * the same content audits > 0 (the corruption the refusal rail
-    * exists to prevent, made visible). */
+    * mismatching rows: 0 on a healthy artifact. THE residual invariant
+    * ("codes = frozen-book encode of x − c(cell) for the cell the row is
+    * ROUTED to"); [[IvfCodec.ResidualPq]]'s audit runs it after every
+    * split and merge of a marked root. OperatorSpec proves it is
+    * load-bearing both ways: a split or merge of the marked root audits
+    * to 0, and a split of an UNMARKED copy of the same content (read as
+    * [[IvfCodec.FlatPq]], so rerouted without re-encoding) audits > 0. */
   def residualAuditMismatches(s: SparkSession, root: String, emb: DataFrame): Long = {
     val cents = IvfCents.read(s, root)
     val books = IvfBooks.read(s, root)
@@ -1197,7 +1192,7 @@ object Similarity {
     * the versioned maintenance window with the MERGE tier armed
     * (minSharePpm = 1000000 ⇒ the [[MergeColdCells]] coldest cells fold,
     * deterministically) — the policy reads the root's codec
-    * ([[IvfCodec.of]]) and runs the one merge core with
+    * ([[IvfCodec.of]]) and runs the merge [[ivfCellMerge]] runs, with
     * [[IvfCodec.ResidualPq]]'s reroute (moved members re-encode against
     * their nearest surviving centroid under the FROZEN books), AUDITS the
     * staged version against the residual invariant before it can publish,
@@ -1234,7 +1229,7 @@ object Similarity {
     * through a published, served root): build the residual trio into a
     * version dir, mark the variant, publish, arm the SPLIT tier at 1 ppm
     * (every cell is over-tier, so the [[SplitHotCells]] hottest cells
-    * split deterministically through the one split core with
+    * split deterministically through the split [[ivfCellSplit]] runs, with
     * [[IvfCodec.ResidualPq]]'s reroute — moved AND kept members re-encode
     * against their new routed centroids under the FROZEN books), audit
     * the staged version against the residual invariant before it can
@@ -3218,35 +3213,109 @@ object Similarity {
     tombstoneUnion(s, root)
       .foreach(del => Artifacts.VecTombstones.write(del.distinct(), outRoot, "t0"))
 
-  /** Physical code rows per cell (nlist rows, driver-side metadata). */
-  private def codeOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] =
-    IvfCodes.read(s, root).groupBy("cell")
-      .agg(count(lit(1)).as("n")).collect()
+  /** Code rows per cell over the FULL cell universe: every `cent_id` with
+    * its code-row count, 0 for an empty cell (a centroid with no code rows
+    * is the q132 "empty cells silently waste nlist" finding — it must show
+    * at 0 or a merge could never reclaim it). One aggregate over the codes
+    * and the cents together; nlist rows come to the driver (index
+    * metadata). A code row routed to no centroid counts nowhere. */
+  private def cellOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] =
+    IvfCodes.read(s, root)
+      .select(col("cell").as("cent_id"), lit(1L).as("n"), lit(false).as("is_cent"))
+      .unionByName(IvfCents.read(s, root)
+        .select(col("cent_id"), lit(0L).as("n"), lit(true).as("is_cent")))
+      .groupBy("cent_id").agg(sum("n").as("n"), max("is_cent").as("is_cent"))
+      .filter(col("is_cent")).select("cent_id", "n").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  /** The split's hot pick: the `m` largest cells of `occ` by (count desc,
+    * id); an empty cell is never split. */
+  private def hottest(occ: Seq[(Long, Long)], m: Int): Seq[Long] =
+    occ.filter(_._2 > 0L).sortBy { case (c, n) => (-n, c) }.take(m).map(_._1)
+
+  /** The merge's cold pick: the `m` smallest cells of `occ` by (count,
+    * id), empty cells first. */
+  private def coldest(occ: Seq[(Long, Long)], m: Int): Seq[Long] =
+    occ.sortBy { case (c, n) => (n, c) }.take(m).map(_._1)
+
+  /** THE REBALANCE REWRITE — one body for the split and the merge, both PQ
+    * codecs, the direct entries and the policy steps — copy-on-write from
+    * `root` into `outRoot`. The `picked` cells' code rows join `emb` once
+    * into cached (cell, vec_id, e) members (only picked-cell members are
+    * ever read); `route` maps the members and the centroids that keep
+    * their rows to the members' new (vec_id, cell, e) routing, the
+    * centroid rows that replace the picked cells', and its own result. The
+    * codec rewrites the rerouted rows ([[PqCodec.reroute]]): a flat code
+    * only changes `cell`, a residual code re-encodes. Every other code and
+    * centroid row is carried byte-identical, books and the variant marker
+    * are copied as files, and tombstones transfer as their deduplicated
+    * union (a delete is vec_id keyed, independent of routing). Picked
+    * cells that hold no code rows are pure metadata: no member is read.
+    * `occ` is the caller's [[cellOccupancy]] of `root`; `kind` names the
+    * picked cells in the coverage error. */
+  private def rebalance[A](s: SparkSession, codec: PqCodec, root: String, outRoot: String,
+      emb: DataFrame, kind: String, picked: Seq[Long], occ: Seq[(Long, Long)])(
+      route: (DataFrame, DataFrame) => (DataFrame, Seq[(Long, Seq[Double])], A)): A = {
+    require(outRoot != root,
+      "a cell rebalance is copy-on-write: outRoot must be a new artifact root")
+    import s.implicits._
+    val cents = IvfCents.read(s, root)
+    val codes = IvfCodes.read(s, root)
+    val rows = codes.filter(col("cell").isin(picked: _*))
+    val pickedRows = occ.collect { case (c, n) if picked.contains(c) => n }.sum
+    val members = rows.select("vec_id", "cell")
+      .join(emb.select("vec_id", "e"), Seq("vec_id"))
+      .select("cell", "vec_id", "e")
+    if (pickedRows > 0L) {
+      members.cache()
+      // LOUD coverage check: routing needs the raw vector of EVERY picked
+      // row — an emb missing appended vec_ids would silently DROP their
+      // code rows from the rewritten artifact (the inner join above), and
+      // an emb with duplicate vec_ids would duplicate them. BOTH counts
+      // must match: total-only would let a missing id and a duplicated id
+      // cancel out (offsetting errors)
+      val cov = members.agg(count(lit(1)).as("n"),
+        countDistinct(col("vec_id")).as("d")).head()
+      require(cov.getLong(0) == pickedRows && cov.getLong(1) == pickedRows,
+        s"emb must cover every $kind-cell vec_id exactly once: joined ${cov.getLong(0)} " +
+          s"rows / ${cov.getLong(1)} distinct of $pickedRows $kind rows")
+    }
+    val kept = cents.filter(!col("cent_id").isin(picked: _*))
+    val (moved, newCents, result) = route(members, kept)
+    val centsOut = kept.unionByName(newCents.toDF("cent_id", "ce"))
+    val rerouted = if (pickedRows == 0L) rows
+      else codec.reroute(rows, moved, centsOut, IvfBooks.read(s, root))
+    IvfCents.write(centsOut, outRoot)
+    IvfCodes.write(codes.filter(!col("cell").isin(picked: _*)).unionByName(rerouted), outRoot)
+    Artifacts.copyFrozen(s, root, outRoot, IvfBooks.name, Artifacts.ResidualMarker)
+    copyTombstones(s, root, outRoot)
+    // released only after the codes write, which reads the cached members
+    members.unpersist(false)
+    result
+  }
 
   /** ARTIFACT-LEVEL HOT-CELL SPLIT — q141's maintenance action applied to
     * the persisted q74-family index (cents/books/codes under `root`),
     * copy-on-write into `outRoot`: the `splitCells` largest cells split by
-    * the SAME local fixed-point 2-means ([[localTwoMeans]], shared kernel),
-    * the codes' `cell` routing updated for MOVED rows only (the `codes`
-    * payload column is byte-identical), books byte-identical. The plain
-    * IVF-PQ artifact is split-SAFE because its PQ codes quantize raw
-    * vectors, independent of cell routing; the residual variant (q75)
-    * encodes relative to its cell centroid, so this entry refuses it —
-    * [[ivfCellSplitResidual]] runs the same core with the re-encoding
-    * reroute ([[IvfCodec.ResidualPq]]).
+    * the SAME local fixed-point 2-means ([[localTwoMeans]], shared kernel).
+    * The root's codec ([[IvfCodec.of]]) rewrites the moved rows: the flat
+    * variant keeps its codes payload byte-identical and updates `cell`
+    * (PQ codes of raw vectors are independent of routing); the residual
+    * variant (q75) re-encodes EVERY member of a split cell under the
+    * frozen books (sub-0 too: its parent centroid moved), and the staged
+    * root is audited before the call returns ([[PqCodec.audit]]). Books
+    * stay byte-identical.
     *
     * The split needs the hot cells' RAW vectors (codes are lossy): `emb`
-    * supplies them via one semi-join against the hot routing rows — only
+    * supplies them via one join against the hot routing rows — only
     * hot-cell members are ever read, ≈ splitCells·n/nlist vectors.
     *
-    * New cell ids start at max(cent_id)+1. Sub-cell 0 keeps the parent id
-    * with its UPDATED centroid (routing quality for future appends); a
-    * sub-cell that received no members writes no centroid row — covering
-    * both the single-member hot cell and the degenerate multi-member cell
-    * whose 2-means landed everything in one half (no empty cell is ever
-    * written). Tombstones, if present, transfer as their deduplicated
-    * union (delete semantics are routing-independent — vec_id keyed).
+    * New cell ids start past the largest cell id. Sub-cell 0 keeps the
+    * parent id with its UPDATED centroid (routing quality for future
+    * appends); a sub-cell that received no members writes no centroid row
+    * — covering both the single-member hot cell and the degenerate
+    * multi-member cell whose 2-means landed everything in one half (no
+    * empty cell is ever written).
     *
     * The exactness gate (OperatorSpec): FULL-PROBE serving from the split
     * artifact ≡ full-probe serving pre-split bit-for-bit — a split changes
@@ -3254,94 +3323,47 @@ object Similarity {
     * per-split mass conservation and untouched-row byte-identity. At
     * normal nprobe the split is the standard IVF approximation trade:
     * finer cells, smaller probed candidate sets. */
-  def ivfCellSplitArtifact(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, splitCells: Int = SplitHotCells): Unit =
-    splitTop(s, IvfCodec.FlatPq, residualRefusal("splitting"), root, outRoot, emb, splitCells)
-
-  /** RE-ENCODING CELL SPLIT for residual artifacts: the same core; EVERY
-    * member of a split cell re-encodes (sub-0 too: the parent moved). */
-  def ivfCellSplitResidual(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, splitCells: Int = SplitHotCells): Unit =
-    splitTop(s, IvfCodec.ResidualPq, "plain artifact: use ivfCellSplitArtifact " +
-      "(codes are routing-independent there)", root, outRoot, emb, splitCells)
-
-  // the refusal rail: a direct entry refuses a root that holds another codec
-  private def splitTop(s: SparkSession, codec: PqCodec, refusal: => String, root: String,
-      outRoot: String, emb: DataFrame, splitCells: Int): Unit = {
-    require(IvfCodec.of(s, root) == codec, refusal)
-    val occ = codeOccupancy(s, root)
-    val hotCells = occ.sortBy { case (c, n) => (-n, c) }.take(splitCells).map(_._1)
-    splitCore(s, codec, root, outRoot, emb, hotCells, occ)
+  def ivfCellSplit(s: SparkSession, root: String, outRoot: String,
+      emb: DataFrame, splitCells: Int = SplitHotCells): Unit = {
+    val codec = IvfCodec.of(s, root)
+    val occ = cellOccupancy(s, root)
+    splitHot(s, codec, root, outRoot, emb, hottest(occ, splitCells), occ)
+    codec.audit(s, outRoot, emb, "split")
   }
 
-  /** THE split body, for both PQ codecs and the policy path: `occ` is the
-    * occupancy the caller already computed (the policy's tier check reads
-    * it anyway — recomputing would scan the corpus-sized codes table
-    * twice). The hot cells' members are rerouted by the codec
-    * ([[PqCodec.reroute]]). Returns per-hot-cell (kept, moved) counts for
-    * the policy's no-progress guard. */
-  private def splitCore(s: SparkSession, codec: PqCodec, root: String, outRoot: String,
+  /** The split's routing over [[rebalance]]: each hot cell's members go
+    * to the 2-means half they landed in. Returns per-hot-cell (kept,
+    * moved) counts for the policy's no-progress guard. */
+  private def splitHot(s: SparkSession, codec: PqCodec, root: String, outRoot: String,
       emb: DataFrame, hotCells: Seq[Long], occ: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
-    require(outRoot != root,
-      "cell split is copy-on-write: outRoot must be a new artifact root")
-    import s.implicits._
-    val cents = IvfCents.read(s, root)
-    val codes = IvfCodes.read(s, root)
-    val maxId = cents.select("cent_id").collect().map(_.getLong(0)).max
+    val maxId = occ.map(_._1).max
     val newIdOf = hotCells.zipWithIndex
       .map { case (c, i) => c -> (maxId + 1 + i) }.toMap
-    val members = codes.filter(col("cell").isin(hotCells: _*))
-      .select("vec_id", "cell")
-      .join(emb.select("vec_id", "e"), Seq("vec_id"))
-      .select("cell", "vec_id", "e").cache()
-    // LOUD coverage check: the 2-means needs the raw vector of EVERY
-    // hot-cell row — an emb missing appended vec_ids would silently DROP
-    // their code rows from the rewritten artifact (the inner join above),
-    // and an emb with duplicate vec_ids would duplicate them
-    val hotRows = occ.collect { case (c, n) if hotCells.contains(c) => n }.sum
-    val cov = members.agg(count(lit(1)).as("n"),
-      countDistinct(col("vec_id")).as("d")).head()
-    // BOTH counts must match: total-only would let a missing id and a
-    // duplicated id cancel out (offsetting errors — the exact silent
-    // drop/duplication this check exists to prevent)
-    require(cov.getLong(0) == hotRows && cov.getLong(1) == hotRows,
-      s"emb must cover every hot-cell vec_id exactly once: joined ${cov.getLong(0)} " +
-        s"rows / ${cov.getLong(1)} distinct of $hotRows hot rows")
-    val (finalLocal, updCs) = localTwoMeans(members, hotCells)
-    // per-hot-cell (kept, moved) counts — a tiny agg over the CACHED hot
-    // members (never the corpus): gates which centroid rows are written
-    // below, and the policy's progress test reads them instead of
-    // re-scanning the corpus-sized staged codes table
-    val subCountRows = finalLocal.groupBy("cell", "sub").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val newIdExpr = hotCells.foldLeft(lit(-1L)) { (acc, c) =>
-      when(col("cell") === c, lit(newIdOf(c))).otherwise(acc) }
-    val moved = finalLocal.select(col("vec_id"),
-      when(col("sub") === 0, col("cell")).otherwise(newIdExpr).as("cell"), col("e"))
-    // cents': untouched rows byte-identical; parent id ← sub-0 centroid,
-    // new id ← sub-1 centroid — each written ONLY when that half received
-    // ≥ 1 member. The 2-means can land a degenerate multi-member cell
-    // entirely in one half (identical vectors, coinciding seeds); writing
-    // the other half's centroid anyway would land an EMPTY cell in cents —
-    // harmless for serving but one dead centroid accrued per partial
-    // landing, contradicting the no-empty-cell claim above.
-    val updRows: Seq[(Long, Seq[Double])] = hotCells.flatMap { c =>
-      updCs(c).collect { case (sub, ce) if subCountRows.getOrElse((c, sub), 0L) > 0 =>
-        (if (sub == 0L) c else newIdOf(c), ce) } }
-    val centsOut = cents.filter(!col("cent_id").isin(hotCells: _*))
-      .unionByName(updRows.toDF("cent_id", "ce"))
-    // codes': untouched rows byte-identical; hot rows rerouted
-    val codesOut = codes.filter(!col("cell").isin(hotCells: _*))
-      .unionByName(codec.reroute(codes.filter(col("cell").isin(hotCells: _*)), moved,
-        centsOut, IvfBooks.read(s, root)))
-    IvfCents.write(centsOut, outRoot)
-    IvfCodes.write(codesOut, outRoot)
-    Artifacts.copyFrozen(s, root, outRoot, IvfBooks.name, Artifacts.ResidualMarker)
-    copyTombstones(s, root, outRoot)
-    members.unpersist(false)
-    hotCells.map { c =>
-      c -> ((subCountRows.getOrElse((c, 0L), 0L), subCountRows.getOrElse((c, 1L), 0L)))
-    }.toMap
+    rebalance(s, codec, root, outRoot, emb, "hot", hotCells, occ) { (members, _) =>
+      val (finalLocal, updCs) = localTwoMeans(members, hotCells)
+      // per-hot-cell (kept, moved) counts — a tiny agg over the CACHED hot
+      // members (never the corpus): gates which centroid rows are written
+      // below, and the policy's progress test reads them instead of
+      // re-scanning the corpus-sized staged codes table
+      val subCountRows = finalLocal.groupBy("cell", "sub").count().collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val newIdExpr = hotCells.foldLeft(lit(-1L)) { (acc, c) =>
+        when(col("cell") === c, lit(newIdOf(c))).otherwise(acc) }
+      val moved = finalLocal.select(col("vec_id"),
+        when(col("sub") === 0, col("cell")).otherwise(newIdExpr).as("cell"), col("e"))
+      // parent id ← sub-0 centroid, new id ← sub-1 centroid — each written
+      // ONLY when that half received ≥ 1 member. The 2-means can land a
+      // degenerate multi-member cell entirely in one half (identical
+      // vectors, coinciding seeds); writing the other half's centroid
+      // anyway would land an EMPTY cell in cents — harmless for serving
+      // but one dead centroid accrued per partial landing
+      val updRows: Seq[(Long, Seq[Double])] = hotCells.flatMap { c =>
+        updCs(c).collect { case (sub, ce) if subCountRows.getOrElse((c, sub), 0L) > 0 =>
+          (if (sub == 0L) c else newIdOf(c), ce) } }
+      (moved, updRows, hotCells.map { c =>
+        c -> ((subCountRows.getOrElse((c, 0L), 0L), subCountRows.getOrElse((c, 1L), 0L)))
+      }.toMap)
+    }
   }
 
   /** SHARE-TIERED SPLIT STEP of [[maybeMaintainIvfVersioned]] — the
@@ -3356,16 +3378,15 @@ object Similarity {
     // a cell's share n·10⁶/total never exceeds 10⁶, so at the 100% tier
     // no cell can be over it: skip the corpus-sized occupancy scan
     if (maxSharePpm >= 1000000L) return false
-    val occ = codeOccupancy(s, cur)
+    val occ = cellOccupancy(s, cur)
     val total = occ.map(_._2).sum
     if (total == 0L) return false
     // hot = the top-m cells AMONG THOSE OVER THE TIER (not the global
     // top-m): the policy exists to shrink over-tier lists — splitting an
     // under-tier neighbor because the over-tier one is irreducible would
     // grow the cell count forever without touching the problem
-    val hotCells = occ
-      .filter { case (_, n) => n * 1000000L / total > maxSharePpm }
-      .sortBy { case (c, n) => (-n, c) }.take(SplitHotCells).map(_._1)
+    val hotCells = hottest(
+      occ.filter { case (_, n) => n * 1000000L / total > maxSharePpm }, SplitHotCells)
     if (hotCells.isEmpty) return false
     // REFUSAL MEMO (beside the pointer — it outlives versions): an
     // irreducible hot set (identical-vector lists — the 2-means can't
@@ -3384,7 +3405,7 @@ object Similarity {
     // the root's codec reroutes the members (a residual root re-encodes
     // them), and audits the staged version before it can publish
     val codec = IvfCodec.of(s, cur)
-    val subCounts = splitCore(s, codec, cur, out, emb, hotCells, occ)
+    val subCounts = splitHot(s, codec, cur, out, emb, hotCells, occ)
     // NO-PROGRESS GUARD, per split cell: a cell actually split iff BOTH
     // halves are non-empty (all-in-one-half means the 2-means was
     // degenerate for that cell — e.g. identical vectors, coinciding
@@ -3405,7 +3426,7 @@ object Similarity {
   private val SplitRefusedMemo = "_SPLIT_REFUSED"
 
   /** q142: THE SPLIT ARTIFACT SERVED, ORACLE-GATED — the catalog face of
-    * [[ivfCellSplitArtifact]]: build the q74-family artifacts, split the
+    * [[ivfCellSplit]]: build the q74-family artifacts, split the
     * hot cells copy-on-write, then serve top-k from the SPLIT artifact at
     * FULL PROBE (nprobe = post-split cell count). Full-probe IVF serving
     * degenerates to the flat ADC scan by construction — every cell's rows
@@ -3422,7 +3443,7 @@ object Similarity {
     * q127 convention; the probe side is the eval-sized query batch. */
   def q142SplitServed(s: SparkSession, d: String): DataFrame =
     rebalancedFullProbe(s, d, s"${Artifacts.datasetScratch(d)}/ivfsplit", "split")(
-      ivfCellSplitArtifact(s, _, _, _))
+      ivfCellSplit(s, _, _, _))
 
   /** q142/q144's shape: the q74-family artifacts built at `root`,
     * rebalanced copy-on-write into `root/out`, served at FULL probe
@@ -3452,9 +3473,13 @@ object Similarity {
     * code rows is pure dead nlist — fold into their members' NEAREST
     * SURVIVING centroid, copy-on-write into `outRoot`: one assign pass
     * ([[assignCells]], the gated q69 kernel) for the MOVED members only,
-    * the moved rows' `cell` column rewrites, codes payload byte-identical,
     * books byte-identical, untouched cells byte-immutable. Merged
-    * centroids leave `cents` — nlist actually shrinks.
+    * centroids leave `cents` — nlist actually shrinks. The root's codec
+    * ([[IvfCodec.of]]) rewrites the moved rows, as in [[ivfCellSplit]]: a
+    * flat code keeps its payload, a residual code re-encodes against the
+    * member's new centroid (survivors' centroids are untouched, so only
+    * moved members change) and the staged root is audited. Returns the
+    * merged cells.
     *
     * The merge needs the moved members' RAW vectors (codes are lossy, and
     * nearest-survivor is a per-MEMBER assignment — routing each vector by
@@ -3463,93 +3488,30 @@ object Similarity {
     * members are ever read (≈ mergeCells·n/nlist vectors, usually far
     * fewer: cold cells are cold).
     *
-    * Like the split, the plain IVF-PQ artifact is merge-SAFE because PQ
-    * codes quantize raw vectors independent of routing; the residual
-    * variant (q75) encodes relative to its cell centroid, so this entry
-    * refuses it — [[ivfCellMergeResidual]] runs the same core and
-    * re-encodes the moved members. Tombstones transfer as their
-    * deduplicated union.
-    *
     * Exactness gate (the q142 argument in reverse): FULL-PROBE serving
     * from the merged artifact ≡ full-probe pre-merge bit-for-bit — a merge
     * changes only WHERE rows are routed, never what the index contains.
     * At normal nprobe it is the standard coarse-quantization trade in the
     * opposite direction (coarser where the corpus is thin — exactly where
     * the probe budget was being wasted on near-empty lists). */
-  def ivfCellMergeArtifact(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, mergeCells: Int = MergeColdCells): Seq[Long] =
-    mergeBottom(s, IvfCodec.FlatPq, residualRefusal("merging"), root, outRoot, emb, mergeCells)
-
-  /** RE-ENCODING CELL MERGE for residual artifacts: the same core; only
-    * the moved members re-encode (survivors' centroids are untouched). */
-  def ivfCellMergeResidual(s: SparkSession, root: String, outRoot: String,
-      emb: DataFrame, mergeCells: Int = MergeColdCells): Seq[Long] =
-    mergeBottom(s, IvfCodec.ResidualPq, "plain artifact: use ivfCellMergeArtifact " +
-      "(codes are routing-independent there)", root, outRoot, emb, mergeCells)
-
-  // the refusal rail, as splitTop's
-  private def mergeBottom(s: SparkSession, codec: PqCodec, refusal: => String, root: String,
-      outRoot: String, emb: DataFrame, mergeCells: Int): Seq[Long] = {
-    require(IvfCodec.of(s, root) == codec, refusal)
-    val occ = mergeOccupancy(s, root)
-    val cold = occ.sortBy { case (c, n) => (n, c) }.take(mergeCells).map(_._1)
-    mergeCore(s, codec, root, outRoot, emb, cold, occ)
+  def ivfCellMerge(s: SparkSession, root: String, outRoot: String,
+      emb: DataFrame, mergeCells: Int = MergeColdCells): Seq[Long] = {
+    val codec = IvfCodec.of(s, root)
+    val occ = cellOccupancy(s, root)
+    val cold = coldest(occ, mergeCells)
+    mergeCold(s, codec, root, outRoot, emb, cold, occ)
+    codec.audit(s, outRoot, emb, "merge")
     cold
   }
 
-  /** Occupancy over the FULL cell universe (cents left-joined with codes):
-    * a centroid with zero code rows — the q132 "empty cells silently waste
-    * nlist" finding — must appear at count 0 or it could never be
-    * reclaimed. nlist rows, driver-side (index metadata). */
-  private def mergeOccupancy(s: SparkSession, root: String): Seq[(Long, Long)] = {
-    val counts = codeOccupancy(s, root).toMap
-    IvfCents.read(s, root).select("cent_id").collect()
-      .map(_.getLong(0)).toSeq.sorted
-      .map(c => (c, counts.getOrElse(c, 0L)))
-  }
-
-  /** THE merge body, for both PQ codecs and the policy path (the
-    * [[splitCore]] convention): `occ` is the full-universe occupancy the
-    * caller already computed; the codec reroutes the moved members. */
-  private def mergeCore(s: SparkSession, codec: PqCodec, root: String, outRoot: String,
+  /** The merge's routing over [[rebalance]]: each cold member goes to its
+    * nearest surviving centroid. */
+  private def mergeCold(s: SparkSession, codec: PqCodec, root: String, outRoot: String,
       emb: DataFrame, coldCells: Seq[Long], occ: Seq[(Long, Long)]): Unit = {
-    require(outRoot != root,
-      "cell merge is copy-on-write: outRoot must be a new artifact root")
-    if (coldCells.isEmpty) return
-    val occMap = occ.toMap
-    require(coldCells.forall(occMap.contains),
-      s"unknown cells: ${coldCells.filterNot(occMap.contains)}")
-    val survivorIds = occ.map(_._1).filterNot(coldCells.contains)
-    require(survivorIds.nonEmpty,
+    require(occ.exists { case (c, _) => !coldCells.contains(c) },
       "cell merge needs >= 1 surviving cell: refusing to fold the whole index")
-    val cents = IvfCents.read(s, root)
-    val codes = IvfCodes.read(s, root)
-    val survivors = cents.filter(!col("cent_id").isin(coldCells: _*))
-    val coldRows = occ.collect { case (c, n) if coldCells.contains(c) => n }.sum
-    val cold = codes.filter(col("cell").isin(coldCells: _*))
-    // every cold cell EMPTY: pure metadata reclamation, no assign
-    val members = if (coldRows == 0L) None else Some(
-      cold.select("vec_id").join(emb.select("vec_id", "e"), Seq("vec_id")).cache())
-    members.foreach { m =>
-      // the splitCore coverage check, same offsetting-errors argument: a
-      // missing vec_id silently DROPS its code row; a duplicate
-      // duplicates it — both counts must match the physical cold mass
-      val cov = m.agg(count(lit(1)).as("n"), countDistinct(col("vec_id")).as("d")).head()
-      require(cov.getLong(0) == coldRows && cov.getLong(1) == coldRows,
-        s"emb must cover every cold-cell vec_id exactly once: joined ${cov.getLong(0)} " +
-          s"rows / ${cov.getLong(1)} distinct of $coldRows cold rows")
-    }
-    val movedOut = members.fold(cold) { m =>
-      codec.reroute(cold, assignCells(m, survivors).select("vec_id", "cell", "e"),
-        survivors, IvfBooks.read(s, root))
-    }
-    IvfCodes.write(codes.filter(!col("cell").isin(coldCells: _*)).unionByName(movedOut),
-      outRoot)
-    IvfCents.write(survivors, outRoot)
-    Artifacts.copyFrozen(s, root, outRoot, IvfBooks.name, Artifacts.ResidualMarker)
-    copyTombstones(s, root, outRoot)
-    // released only after the codes write, which reads the cached members
-    members.foreach(_.unpersist(false))
+    rebalance(s, codec, root, outRoot, emb, "cold", coldCells, occ) { (members, survivors) =>
+      (assignCells(members, survivors).select("vec_id", "cell", "e"), Nil, ()) }
   }
 
   /** SHARE-TIERED MERGE STEP of [[maybeMaintainIvfVersioned]] — the
@@ -3563,22 +3525,21 @@ object Similarity {
     * staged. */
   private def mergeStep(s: SparkSession, cur: String, out: String,
       emb: DataFrame, minSharePpm: Long): Boolean = {
-    val occ = mergeOccupancy(s, cur)
+    val occ = cellOccupancy(s, cur)
     val total = occ.map(_._2).sum
     if (total == 0L) return false
-    val cold = occ
-      .filter { case (_, n) => n * 1000000L / total < minSharePpm }
-      .sortBy { case (c, n) => (n, c) }.take(MergeColdCells).map(_._1)
+    val cold = coldest(
+      occ.filter { case (_, n) => n * 1000000L / total < minSharePpm }, MergeColdCells)
     if (cold.isEmpty) return false
     if (cold.size == occ.size) return false // all-cold: merge is the wrong lever
     val codec = IvfCodec.of(s, cur)
-    mergeCore(s, codec, cur, out, emb, cold, occ)
+    mergeCold(s, codec, cur, out, emb, cold, occ)
     codec.audit(s, out, emb, "merge")
     true
   }
 
   /** q144: THE MERGE ARTIFACT SERVED, ORACLE-GATED — the catalog face of
-    * [[ivfCellMergeArtifact]], closing the index lifecycle's algebra
+    * [[ivfCellMerge]], closing the index lifecycle's algebra
     * (append q70 / delete q127 / compact / split q142 / MERGE): build the
     * q74-family artifacts, fold the [[MergeColdCells]] coldest cells into
     * their nearest survivors copy-on-write, then serve top-k from the
@@ -3592,7 +3553,7 @@ object Similarity {
     * Eager writes, the q127/q142 convention. */
   def q144MergeServed(s: SparkSession, d: String): DataFrame =
     rebalancedFullProbe(s, d, s"${Artifacts.datasetScratch(d)}/ivfmerge", "merged") {
-      (root, out, emb) => ivfCellMergeArtifact(s, root, out, emb); () }
+      (root, out, emb) => ivfCellMerge(s, root, out, emb); () }
 
   // --------------------------------------------------------------- q158
   /** q158: FLEET-FORM VERSIONED IVF MAINTENANCE, ORACLE-GATED — the
@@ -4297,7 +4258,7 @@ object Similarity {
     * the final audit is the q132 rollup over nlist+m rows. At 100 TB a
     * nightly split pass costs one scan of the hot lists, not a retrain. */
   /** Local fixed-point 2-means inside each hot cell — q141's kernel,
-    * shared with [[ivfCellSplitArtifact]] so the gated entry and the
+    * shared with [[ivfCellSplit]] so the gated entry and the
     * artifact maintenance can never split differently. `members` must
     * carry (cell, vec_id, e) for hot-cell rows only, cached by the caller
     * (scanned three times: seed agg, update agg, final assign). Returns

@@ -2698,6 +2698,21 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     assert(folded.jobs == 0, s"planning a graph fold ran ${folded.jobs} jobs")
   }
 
+  test("flat split and merge of the q74 trio: one occupancy scan each, traced jobs pinned") {
+    graft.functions.VectorFunctions.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_rebalance_jobs").toString
+    val emb = Similarity.embWithNorm(spark, sf).select("vec_id", "e")
+    // split: occupancy, coverage, the 2-means seed and mean aggs, the
+    // sub-counts, the cents and codes writes; merge: occupancy, coverage,
+    // the cents and codes writes (the flat codec audits nothing)
+    val (_, split) = Trace(spark.sparkContext)(
+      Similarity.ivfCellSplit(spark, flatTrioDir, s"$dir/split", emb))
+    assert(split.jobs <= 16, s"a flat two-cell split ran ${split.jobs} Spark jobs")
+    val (_, merge) = Trace(spark.sparkContext)(
+      Similarity.ivfCellMerge(spark, flatTrioDir, s"$dir/merge", emb))
+    assert(merge.jobs <= 12, s"a flat two-cell merge ran ${merge.jobs} Spark jobs")
+  }
+
   test("q119 query likelihood: scores match a plain-Scala Dirichlet recompute (sum-form identity)") {
     import graft.ops.Retrieval
     val toks = Tables.documents(spark, sf).select("doc_id", "text").collect()
@@ -3103,13 +3118,13 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val emb = Similarity.embWithNorm(spark, sf).select("vec_id", "e")
     Seq(IvfCents, IvfBooks, IvfCodes).foreach(written(_, flatTrioDir, residualTrioDir))
     Similarity.ivfCodesCompact(spark, flatTrioDir, s"$ivfw/compact")
-    Similarity.ivfCellSplitArtifact(spark, flatTrioDir, s"$ivfw/split", emb)
-    Similarity.ivfCellMergeArtifact(spark, flatTrioDir, s"$ivfw/merge", emb)
+    Similarity.ivfCellSplit(spark, flatTrioDir, s"$ivfw/split", emb)
+    Similarity.ivfCellMerge(spark, flatTrioDir, s"$ivfw/merge", emb)
     val (rc, rb, rcodes) = residualTrio
     Similarity.writeIvfArtifacts(s"$ivfw/r", rc, rb, rcodes)
     Artifacts.markResidual(spark, s"$ivfw/r")
-    Similarity.ivfCellSplitResidual(spark, s"$ivfw/r", s"$ivfw/rsplit", emb)
-    Similarity.ivfCellMergeResidual(spark, s"$ivfw/r", s"$ivfw/rmerge", emb)
+    Similarity.ivfCellSplit(spark, s"$ivfw/r", s"$ivfw/rsplit", emb)
+    Similarity.ivfCellMerge(spark, s"$ivfw/r", s"$ivfw/rmerge", emb)
     val (fc, fb, fcodes) = flatTrio
     Similarity.writeIvfArtifacts(s"$ivfw/app", fc, fb, fcodes.filter(col("vec_id") % 5 =!= 0))
     graft.streaming.VecStream.indexAppendBatch(Tables.embeddings(spark, sf)
@@ -3610,7 +3625,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       s"separator violation must name the contract: ${ex.getMessage}")
   }
 
-  test("residual artifacts: parquet round-trip serves bit-identically; append equals rebuild; split/merge refuse the marked root") {
+  test("residual artifacts: parquet round-trip serves bit-identically; append equals rebuild; split/merge of the marked root keep the invariant") {
     val s = spark
     val (cents, books, codeTable) = residualTrio
     val dir = java.nio.file.Files.createTempDirectory("graft_resid_idx").toString
@@ -3659,18 +3674,15 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       "a streamed append must keep the residual invariant on a marked root")
     assert(codeRows(s.read.parquet(s"$app/codes").filter(col("vec_id") % 5 === 0)) == rebuilt,
       "streamed residual append diverged from the full rebuild")
-    // the geometry-changing policies must refuse the marked root LOUDLY:
-    // rerouting a member without re-encoding corrupts x - c(cell) codes
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfCellSplitArtifact(s, dir, s"$dir/split", emb)
-    }
-    assert(ex.getMessage.contains("re-encoding") || ex.getMessage.contains("re-encode"),
-      s"split refusal must explain the residual invalidation: ${ex.getMessage}")
-    val ex2 = intercept[IllegalArgumentException] {
-      Similarity.ivfCellMergeArtifact(s, dir, s"$dir/merge", emb)
-    }
-    assert(ex2.getMessage.contains("residual"),
-      s"merge refusal must name the variant: ${ex2.getMessage}")
+    // the rebalance entries read the marker: a split or merge of the
+    // marked root re-encodes the members it reroutes, so the x - c(cell)
+    // codes stay exact
+    Similarity.ivfCellSplit(s, dir, s"$dir/split", emb)
+    assert(Similarity.residualAuditMismatches(s, s"$dir/split", emb) == 0L,
+      "a split of the marked root must keep the residual invariant")
+    Similarity.ivfCellMerge(s, dir, s"$dir/merge", emb)
+    assert(Similarity.residualAuditMismatches(s, s"$dir/merge", emb) == 0L,
+      "a merge of the marked root must keep the residual invariant")
   }
 
   test("residual rebalance: re-encoding split/merge audit clean; the PLAIN split on the same content audits corrupt") {
@@ -3691,7 +3703,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
       "fresh residual build must satisfy the artifact invariant")
     // re-encoding split: invariant holds on every row afterwards, nlist
     // grows, mass conserved, untouched cells byte-identical
-    Similarity.ivfCellSplitResidual(s, root, s"$dir/split", emb)
+    Similarity.ivfCellSplit(s, root, s"$dir/split", emb)
     assert(Similarity.residualAuditMismatches(s, s"$dir/split", emb) == 0L,
       "re-encoding split must leave codes = encode(x - c(routed cell))")
     assert(nlist(s"$dir/split") > nlist(root) && mass(s"$dir/split") == mass(root))
@@ -3707,16 +3719,17 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
           .agg(max(col("cent_id"))).head().getLong(0))
       .collect().map(_.toString).sorted.toSeq
     assert(afterCold == beforeCold, "untouched cells must stay byte-identical")
-    // the PLAIN split applied to the SAME content (marker absent) breaks
-    // the invariant — the corruption the refusal rail exists to prevent,
-    // made visible: routed-without-re-encode rows audit as mismatches
+    // the PLAIN split applied to the SAME content (marker absent, so the
+    // root reads as flat) breaks the invariant — the corruption reading
+    // the codec from the root prevents, made visible: routed-without-
+    // re-encode rows audit as mismatches
     val plainRoot = write("p", mark = false)
-    Similarity.ivfCellSplitArtifact(s, plainRoot, s"$dir/psplit", emb)
+    Similarity.ivfCellSplit(s, plainRoot, s"$dir/psplit", emb)
     assert(Similarity.residualAuditMismatches(s, s"$dir/psplit", emb) > 0L,
-      "the plain split must corrupt residual codes — otherwise the rail is theater")
+      "the plain split must corrupt residual codes — otherwise the audit is theater")
     // re-encoding merge on the split output: nlist shrinks, mass
     // conserved, invariant still clean, and the serve path still works
-    val merged = Similarity.ivfCellMergeResidual(s, s"$dir/split", s"$dir/merge", emb)
+    val merged = Similarity.ivfCellMerge(s, s"$dir/split", s"$dir/merge", emb)
     assert(merged.nonEmpty && nlist(s"$dir/merge") < nlist(s"$dir/split"))
     assert(mass(s"$dir/merge") == mass(root))
     assert(Similarity.residualAuditMismatches(s, s"$dir/merge", emb) == 0L,
@@ -3848,7 +3861,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val dir = java.nio.file.Files.createTempDirectory("graft_ressplit_d").toString
     Similarity.writeIvfArtifacts(dir, cents, books, codes)
     Artifacts.markResidual(s, dir)
-    Similarity.ivfCellSplitResidual(s, dir, s"$dir/split", emb)
+    Similarity.ivfCellSplit(s, dir, s"$dir/split", emb)
     val direct = serve(s"$dir/split")
     // (b) the versioned window (q165's shape): publish, arm the split
     // tier, pre-publish audit inside, publish the staged version, reader
@@ -4423,13 +4436,13 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     assert(rank(RootPointer.resolve(s, art2)) == expected, "intact artifact untouched by the cleanup")
   }
 
-  test("ivfCellSplitArtifact: full-probe serve bit-identical, mass conserved, untouched rows byte-equal") {
+  test("ivfCellSplit: full-probe serve bit-identical, mass conserved, untouched rows byte-equal") {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     val base = java.nio.file.Files.createTempDirectory("ivf_split").toString
     val root = flatTrioDir; val out = s"$base/art2"
     val (emb, _, _) = Similarity.pqParts(s, sf)
-    Similarity.ivfCellSplitArtifact(s, root, out, emb.select("vec_id", "e"))
+    Similarity.ivfCellSplit(s, root, out, emb.select("vec_id", "e"))
     // a split changes only WHERE rows are routed, never what the index
     // contains: probing every cell on both sides must return identical rows
     val queries = emb.filter(col("vec_id") < 10).select("vec_id", "e")
@@ -4522,7 +4535,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // crash window 1: the split was fully staged but never published —
     // readers resolve the unsplit root, which is consistent as it stands
     val base2 = s"$dir/a2"; publishArt(base2)
-    Similarity.ivfCellSplitArtifact(s, s"$base2/v00001", s"$base2/v00002", emb)
+    Similarity.ivfCellSplit(s, s"$base2/v00001", s"$base2/v00002", emb)
     assert(RootPointer.resolve(s, base2) == s"$base2/v00001")
     consistent(RootPointer.resolve(s, base2), split = false)
     assert(split(base2, 500000), "the next window must split and publish")
@@ -4573,7 +4586,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     Similarity.writeIvfArtifacts(s"$base1/v00001", rcents, rbooks, rcodes)
     RootPointer.publish(s, base1, "v00001")
     val allIds = all.select("vec_id").collect().map(_.getLong(0)).toSet
-    Similarity.ivfCellSplitArtifact(s, s"$base1/v00001", s"$base1/v00002", all)
+    Similarity.ivfCellSplit(s, s"$base1/v00001", s"$base1/v00002", all)
     val v0 = all.orderBy("vec_id").select("e").head().getSeq[Double](0)
     val freshBatch = Seq(900L, 901L).map(id =>
       (id, v0.map(x => (x * (1.0 + id * 1e-5)).toFloat)))
@@ -4588,7 +4601,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // (2) a crashed split must not wedge the COMPACTOR: its remnant is
     // discarded and the compaction step reads the published root
     val base2 = s"$dir/a2"; publishArt(base2)
-    Similarity.ivfCellSplitArtifact(s, s"$base2/v00001", s"$base2/v00002", emb)
+    Similarity.ivfCellSplit(s, s"$base2/v00001", s"$base2/v00002", emb)
     s.range(5).select(col("id").as("vec_id")).write.parquet(s"$base2/v00001/tombstones/t0")
     s.range(5, 9).select(col("id").as("vec_id")).write.parquet(s"$base2/v00001/tombstones/t1")
     assert(Similarity.maybeMaintainIvfVersioned(s, base2, emb,
@@ -4657,7 +4670,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     val root4 = s"$dir/a4"; writeArt(root4)
     val embPartial = emb.filter(col("vec_id") >= 40)
     val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfCellSplitArtifact(s, root4, s"$root4/out", embPartial)
+      Similarity.ivfCellSplit(s, root4, s"$root4/out", embPartial)
     }
     assert(ex.getMessage.contains("cover every hot-cell vec_id"), ex.getMessage)
   }
@@ -4696,13 +4709,13 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     assert(Artifacts.VecTombstones.count(s, cur) == 0)
   }
 
-  test("ivfCellMergeArtifact: full-probe serve bit-identical, mass conserved, cold rows rerouted, merged centroids gone") {
+  test("ivfCellMerge: full-probe serve bit-identical, mass conserved, cold rows rerouted, merged centroids gone") {
     val s = spark
     graft.functions.VectorFunctions.register(s)
     val base = java.nio.file.Files.createTempDirectory("ivf_merge").toString
     val root = flatTrioDir; val out = s"$base/art2"
     val (emb, _, _) = Similarity.pqParts(s, sf)
-    val cold = Similarity.ivfCellMergeArtifact(s, root, out, emb.select("vec_id", "e")).toSet
+    val cold = Similarity.ivfCellMerge(s, root, out, emb.select("vec_id", "e")).toSet
     // a merge changes only WHERE rows are routed, never what the index
     // contains: probing every cell on both sides must return identical rows
     val queries = emb.filter(col("vec_id") < 10).select("vec_id", "e")
@@ -4797,7 +4810,7 @@ class OperatorSpec extends AnyFunSuite with CacheHygiene {
     // crash window: a merge staged but never published — readers keep the
     // unmerged root, and the next window discards the remnant and merges
     val base3 = s"$dir/a3"; publishArt(base3, 4)
-    Similarity.ivfCellMergeArtifact(s, s"$base3/v00001", s"$base3/v00002", emb)
+    Similarity.ivfCellMerge(s, s"$base3/v00001", s"$base3/v00002", emb)
     assert(RootPointer.resolve(s, base3) == s"$base3/v00001" &&
       cur(base3, "cents").count() == 4L, "an unpublished merge must not be visible")
     assert(merge(base3, 50000), "the next window must merge and publish")

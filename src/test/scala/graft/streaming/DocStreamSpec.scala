@@ -12,6 +12,30 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
   private val sf = "/root/testdata/sf0.001"
   private val threshold = 0.6
 
+  /** The q74 quantizer (cents, books) trained ONCE per run on the full
+    * embedding corpus (dense 0..k-1 seed ids — the LUT decode assumes
+    * them) and persisted to a temp dir; the self-maintaining ANN drains
+    * read it back and write their own roots from it. */
+  private lazy val fullQuantizerDir: String = {
+    import graft.ops.Similarity
+    val dir = java.nio.file.Files.createTempDirectory("docstream_q74").toString
+    val all = embeddings
+    val (subs, seeds) = Similarity.subSplit(all)
+    val (cents, books, _) = Similarity.ivfPqIndex(all, subs, seeds)
+    Similarity.IvfCents.write(cents, dir)
+    Similarity.IvfBooks.write(books, dir)
+    dir
+  }
+
+  private def fullQuantizer = {
+    import graft.ops.Similarity
+    (Similarity.IvfCents.read(TestSpark.spark, fullQuantizerDir),
+      Similarity.IvfBooks.read(TestSpark.spark, fullQuantizerDir))
+  }
+
+  private def embeddings = Tables.embeddings(TestSpark.spark, sf)
+    .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")
+
   test("streamed near-dup matches against a static corpus equal brute force") {
     val spark = TestSpark.spark
     val all = Tables.documents(spark, sf).select("doc_id", "text")
@@ -692,15 +716,12 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     val spark = TestSpark.spark
     import graft.ops.{RootPointer, Similarity}
     graft.functions.VectorFunctions.register(spark)
-    val all = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")
+    val all = embeddings
     val static = all.filter(col("vec_id") % 5 =!= 0)
-    // train on the full corpus (dense 0..k-1 seed ids — the LUT decode
-    // assumes them), encode the static subset as the initial code table;
-    // two identical artifacts: a versioned one drained under the policy,
-    // and a policy-free plain root
-    val (subs, seeds) = Similarity.subSplit(all)
-    val (cents, books, _) = Similarity.ivfPqIndex(all, subs, seeds)
+    // the full-corpus quantizer encodes the static subset as the initial
+    // code table; two identical artifacts: a versioned one drained under
+    // the policy, and a policy-free plain root
+    val (cents, books) = fullQuantizer
     val codes0 = Similarity.ivfPqAppend(cents, books, static)
     val base = java.nio.file.Files.createTempDirectory("vecstream_split").toString
     Seq(s"$base/polv/v00001", s"$base/ctl").foreach { r =>
@@ -764,11 +785,9 @@ class DocStreamSpec extends AnyFunSuite with graft.CacheHygiene {
     import graft.ops.{RootPointer, Similarity}
     graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
-    val all = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")
+    val all = embeddings
     val static = all.filter(col("vec_id") % 5 =!= 0)
-    val (subs, seeds) = Similarity.subSplit(all)
-    val (cents0, books, _) = Similarity.ivfPqIndex(all, subs, seeds)
+    val (cents0, books) = fullQuantizer
     // plant a DEAD centroid far from every vector: a list no append will
     // ever route to — the q132 empty-cell finding, injected
     val dim = cents0.select("ce").head().getSeq[Double](0).size
